@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.queries.SqlFragments.snap
+
 /** Windowed word co-occurrence counts + pointwise mutual information —
   * the association-mining pass behind embedding-prep pipelines
   * (word2vec-style contexts, collocation extraction, topic seeding).
@@ -129,8 +131,6 @@ object Cooccur {
     * Output: (w_a, w_b, o11, g2) for bigrams with o11 ≥ minCount.
     */
   def collocationG2(docs: DataFrame, minCount: Long = 5L): DataFrame = {
-    val grid = 1073741824.0
-    def snap(c: Column) = floor(c * lit(grid) + lit(0.5)) / lit(grid)
     // O·ln(O/E) with 0·ln0 = 0, each term snapped
     def term(o: Column, e: Column) =
       when(o === 0L, 0.0).otherwise(snap(o.cast("double") * log(o.cast("double") / e)))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.queries.SqlFragments.snap
+
 /** Distribution-drift and robust-outlier monitoring — the checks a
   * training pipeline runs per ingest shard before letting new data near
   * the corpus mix. Both are exact and relational: ECDFs are window
@@ -172,8 +174,6 @@ object Drift {
     * quantization posture).
     */
   def jsVsRest(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    val grid30 = 1073741824.0 // 2^30
-    def snap(c: org.apache.spark.sql.Column) = floor(c * grid30 + 0.5) / grid30
     val counts = df
       .groupBy(col(groupCol), col(valueCol).as("v"))
       .agg(count(lit(1)).as("c"))
@@ -230,8 +230,6 @@ object Drift {
       alpha: Double = 0.05
   ): DataFrame = {
     require(alpha > 0 && alpha < 1, "alpha must be in (0, 1)")
-    val grid30 = 1073741824.0
-    def snap(c: org.apache.spark.sql.Column) = floor(c * grid30 + 0.5) / grid30
     val ks = ksVsRest(df, groupCol, valueCol).localCheckpoint()
     val tot = ks.agg(sum(col("n")).as("n_all"), count(lit(1)).as("m"))
     val lam2 = col("lam") * col("lam")

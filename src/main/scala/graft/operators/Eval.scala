@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.queries.SqlFragments.snap
+
 /** Classifier/feature EVALUATION metrics — the measurement half of the
   * quality-filtering loop ([[TextAnalysis.classifierScore]] produces
   * scores; these grade them). Both are exact-count formulations: integer
@@ -407,9 +409,6 @@ object Eval {
       alpha: Double = 0.05
   ): DataFrame = {
     require(alpha > 0 && alpha < 1, "alpha in (0,1)")
-    val grid = 1073741824.0
-    def snap(c: org.apache.spark.sql.Column) =
-      floor(c * lit(grid) + lit(0.5)) / lit(grid)
     val base = events.select(
       (unix_micros(col("ts")).cast("long") / lit(86400000000L)).cast("long").as("day"),
       (col("user_id") % 2).cast("long").as("arm"),
@@ -492,9 +491,6 @@ object Eval {
     * Output: (n, n_contexts, match_rate, logged_value, ips_value).
     */
   def ipsOffPolicy(events: DataFrame, valCol: String = "value"): DataFrame = {
-    val grid = 1073741824.0
-    def snap(c: org.apache.spark.sql.Column) =
-      floor(c * lit(grid) + lit(0.5)) / lit(grid)
     val base = events.select(
       ((unix_micros(col("ts")).cast("long") / lit(3600000000L)).cast("long") % 24L).as("x"),
       col("event_type").as("a"),
@@ -557,9 +553,6 @@ object Eval {
       idCol: String,
       labelCol: String
   ): DataFrame = {
-    val grid = 1073741824.0
-    def snap(c: org.apache.spark.sql.Column) =
-      floor(c * lit(grid) + lit(0.5)) / lit(grid)
     val w = Window.partitionBy(col(groupCol))
       .orderBy(col(scoreCol).desc, col(idCol).asc)
       .rowsBetween(Window.unboundedPreceding, 0)
@@ -605,9 +598,6 @@ object Eval {
       exposure: org.apache.spark.sql.Column,
       outcome: org.apache.spark.sql.Column
   ): DataFrame = {
-    val grid = 1073741824.0
-    def snap(c: org.apache.spark.sql.Column) =
-      floor(c * lit(grid) + lit(0.5)) / lit(grid)
     val cells = df
       .select(strataCol.as("s"), exposure.cast("boolean").as("e"),
         outcome.cast("boolean").as("o"))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.queries.SqlFragments.snap
+
 /** Isotonic (monotone non-decreasing) regression over score bins — the
   * calibration step between a raw model score and a usable probability
   * (Zadrozny & Elkan '02 use PAVA; sklearn's IsotonicRegression is the
@@ -35,10 +37,6 @@ import org.apache.spark.sql.functions._
   * it and the pooled-average equality on violator runs).
   */
 object Isotonic {
-
-  private val Grid = 1073741824.0 // 2^30
-
-  private def snap(c: Column): Column = floor(c * Grid + lit(0.5)) / Grid
 
   /** Isotonic fit of P(label | bin) as a function of the integer bin.
     *

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.queries.SqlFragments.snap
+
 /** Multinomial naive Bayes trained IN the engine — the classic
   * fastText-style quality/domain classifier trained from label counts
   * with add-one smoothing, then applied back to the corpus
@@ -36,9 +38,6 @@ object NaiveBayes {
     * are omitted (callers LEFT-join if they need them).
     */
   def predictions(docs: DataFrame, labelCol: String = "source"): DataFrame = {
-    val grid = 1073741824.0
-    def snap(c: org.apache.spark.sql.Column) =
-      floor(c * lit(grid) + lit(0.5)) / lit(grid)
 
     val tokens = docs
       .select(col("doc_id"), col(labelCol).as("label"),

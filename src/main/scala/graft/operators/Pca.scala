@@ -29,6 +29,7 @@ import org.apache.spark.sql.functions._
   */
 object Pca {
 
+  // Truncates onto 2^20 (no +½), unlike SqlFragments' rounding 2^30 snap.
   private val Grid = 1048576.0 // 2^20
   private def snap(x: Double): Double = math.floor(x * Grid) / Grid
 

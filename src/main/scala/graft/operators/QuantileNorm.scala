@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.queries.SqlFragments.snap
 
 /** Quantile normalization across groups — the batch-effect correction
   * that maps every group's score distribution onto the POOLED reference
@@ -11,9 +13,6 @@ import org.apache.spark.sql.functions._
   * technique, standard for cross-shard quality-score calibration).
   */
 object QuantileNorm {
-
-  private val grid30 = 1073741824.0 // 2^30
-  private def snap(c: Column) = floor(c * grid30 + 0.5) / grid30
 
   /** Map each row's value to the pooled distribution's quantile at the
     * row's within-group percent position p = (rank−1)/(n_g−1):

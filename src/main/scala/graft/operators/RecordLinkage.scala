@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.queries.SqlFragments.{Grid30, snap}
 
 /** Fellegi–Sunter probabilistic record linkage (the 1969 decision
   * model under conditional independence — the scorer inside Splink and
@@ -32,10 +34,7 @@ import org.apache.spark.sql.functions._
   */
 object RecordLinkage {
 
-  private val Grid = 1073741824.0 // 2^30
-  private val Eps = 1.0 / Grid
-
-  private def snap(c: Column): Column = floor(c * Grid + lit(0.5)) / Grid
+  private val Eps = 1.0 / Grid30
 
   /** @param a, b     the two sides, pre-projected to (blockCol, fields...)
     * @param blockCol exact blocking key

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.queries.SqlFragments.{Grid30, snap, snapD}
+
 /** Batch sessionization + marketing-style attribution over an event
   * stream — the gaps-and-islands twin of the streaming session windows
   * (q48/q68), taken one step further to the attribution report.
@@ -106,8 +108,6 @@ object Sessionize {
     */
   def positionAttribution(events: DataFrame, gapSec: Long = 1800): DataFrame = {
     require(gapSec > 0, "gapSec must be positive")
-    val grid = 1073741824.0
-    def snap(c: org.apache.spark.sql.Column) = floor(c * grid + lit(0.5)) / grid
     val byUser = Window
       .partitionBy(col("user_id"))
       .orderBy(col("us"), col("event_id"))
@@ -296,8 +296,6 @@ object Sessionize {
       iters: Int = 12
   ): DataFrame = {
     require(gapSec > 0 && iters >= 1, "bad parameters")
-    val grid30 = 1073741824.0
-    def snap(x: Double): Double = math.floor(x * grid30 + 0.5) / grid30
     val byUser = Window
       .partitionBy(col("user_id"))
       .orderBy(col("us"), col("event_id"))
@@ -358,7 +356,7 @@ object Sessionize {
               .filter(t => t != "start" && !removed.contains(t))
               .map(t => prob.getOrElse((s, t), 0.0) * p(t))
               .sum
-          s -> snap(acc)
+          s -> snapD(acc)
         }.toMap
       }
       p("start")
@@ -394,7 +392,6 @@ object Sessionize {
     * Output per (cur, nxt): (cur, nxt, n_transitions, p, cur_entropy).
     */
   def transitionMatrix(events: DataFrame): DataFrame = {
-    val grid30 = 1073741824.0
     val byUser = Window
       .partitionBy(col("user_id"))
       .orderBy(col("us"), col("event_id"))
@@ -417,7 +414,7 @@ object Sessionize {
     val entropy = withP
       .groupBy(col("cur"))
       .agg(
-        round(-sum(floor(col("p") * log(col("p")) * grid30 + 0.5) / grid30), 6)
+        round(-sum(floor(col("p") * log(col("p")) * Grid30 + 0.5) / Grid30), 6)
           .as("cur_entropy"))
     withP
       .join(entropy, Seq("cur"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.queries.SqlFragments.snapD
+
 /** Exact Shapley-value multi-touch attribution.
   *
   * Complements the Markov removal-effect model
@@ -37,9 +39,6 @@ object Shapley {
 
   /** Hard cap on the channel alphabet — 2^n coalition enumeration. */
   val MaxChannels = 8
-
-  private val Grid = 1073741824.0 // 2^30
-  private def snap(x: Double): Double = math.floor(x * Grid + 0.5) / Grid
 
   private def fact(n: Int): Long = (1 to n).foldLeft(1L)(_ * _)
 
@@ -96,11 +95,11 @@ object Shapley {
         val members = channels.indices.filter(i => (mask & (1 << i)) != 0).map(channels)
         if (members.contains(ch)) {
           val w = fact(members.size - 1) * fact(n - members.size) / nFact
-          val term = snap((v(members) - v(members.filterNot(_ == ch))) * w)
+          val term = snapD((v(members) - v(members.filterNot(_ == ch))) * w)
           phi += term // exact: dyadic terms, |phi| < 2^3
         }
       }
-      Row(ch, touched(ch), snap(phi))
+      Row(ch, touched(ch), snapD(phi))
     }
 
     spark.createDataFrame(

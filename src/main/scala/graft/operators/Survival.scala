@@ -4,14 +4,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.queries.SqlFragments.snap
+
 /** Right-censored survival analysis over an event stream — "how long do
   * users stay active?", answered without the bias of treating
   * still-active users as churned.
   */
 object Survival {
-
-  private val grid30 = 1073741824.0 // 2^30
-  private def snap(c: org.apache.spark.sql.Column) = floor(c * grid30 + 0.5) / grid30
 
   /** Kaplan–Meier survival estimator over per-user observed lifetimes.
     *

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.queries.SqlFragments.snap
+
 /** Text-analysis operators for a large-scale training-data pipeline:
   * quality scoring, token counting, and heuristic language ID over the
   * `documents` table. Pure column expressions (codegen'd, no UDFs), so at
@@ -587,8 +589,6 @@ object TextAnalysis {
     */
   def heapsLaw(docs: DataFrame, buckets: Int = 10): DataFrame = {
     require(buckets >= 2, "need >= 2 checkpoints")
-    val grid30 = 1073741824.0
-    def snap(c: Column) = floor(c * grid30 + 0.5) / grid30
     val bounds = docs.agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
     def bucketOf(idCol: String) =
       expr(s"(($idCol - mn) * $buckets) div (mx - mn + 1)").cast("long") + 1

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.queries.SqlFragments.{snap, snapD}
+
 /** Per-key time-series smoothing. The engine's other temporal tools are
   * calendar-shaped (gap fill, seasonal baselines in [[Drift]]); this one
   * is the classic signal smoother a metrics pipeline runs before
@@ -382,8 +384,6 @@ object Timeseries {
     */
   def burstViterbi(events: DataFrame, scale: Double = 3.0): DataFrame = {
     require(scale > 1.0, "burst rate must exceed baseline")
-    val grid = 1073741824.0
-    def snap(x: Double): Double = math.floor(x * grid + 0.5) / grid
     val spark = events.sparkSession
     val series = hourlySeries(events).orderBy(col("idx")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -392,10 +392,10 @@ object Timeseries {
     val total = series.map(_._2).sum
     val lam0 = total.toDouble / t.toDouble
     val lam1 = scale * lam0
-    val gamma = snap(math.log(t.toDouble))
+    val gamma = snapD(math.log(t.toDouble))
     def emit(i: Int, x: Long): Double = {
       val l = if (i == 0) lam0 else lam1
-      snap(l - x.toDouble * math.log(l))
+      snapD(l - x.toDouble * math.log(l))
     }
     // forward: F_t(i); switching 0->1 costs gamma, 1->0 free
     val f = Array.ofDim[Double](t, 2)
@@ -673,8 +673,6 @@ object Timeseries {
     */
   def saxWords(events: DataFrame, keyCol: String, frameDays: Int = 5): DataFrame = {
     require(frameDays >= 1, "frameDays must be >= 1")
-    val grid = 1073741824.0
-    def snap(c: org.apache.spark.sql.Column) = floor(c * grid + lit(0.5)) / grid
     val bp = 0.6744897501960817
     val span = events.agg(
       min(to_date(col("ts"))).as("d0"), max(to_date(col("ts"))).as("d1"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-10 additions (q339+): rank-correlation and rank-ANOVA tests,
@@ -12,10 +13,6 @@ import graft.sources.Tables
   * not, every oracle a verbatim relational replay in DuckDB.
   */
 object Round10 {
-
-  private val grid = 1073741824.0 // 2^30
-  private def snap(c: org.apache.spark.sql.Column) =
-    floor(c * grid + lit(0.5)) / grid
 
   /** Kendall τ-b rank correlation between the weekly order count and
     * the weekly revenue (exact cents) — the concordant/discordant pair

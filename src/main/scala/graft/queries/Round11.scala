@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-11 additions (q380+): a TPC-H-shaped DECORRELATION suite —
@@ -669,7 +670,6 @@ object Round11 {
     // 1073741824.0 is DECIMAL(11,1) to its parser, so BIGINT/DECIMAL made the
     // whole weight chain (and the rounded outputs) DECIMAL(28,6) while the
     // DuckDB oracle emits DOUBLE — the r7 hash-fail class. Values unchanged.
-    def snap(x: String) = s"floor(($x) * 1073741824.0 + 0.5) / CAST(1073741824 AS DOUBLE)"
     s"""
       WITH c AS (SELECT event_type et, $dw dw, CAST(count(*) AS BIGINT) n
                  FROM $tbl GROUP BY 1, 2),
@@ -730,7 +730,6 @@ object Round11 {
     // divisor CAST AS DOUBLE: floor() is BIGINT in Spark and a bare
     // 1073741824.0 is DECIMAL — BIGINT/DECIMAL drags the chain (and the
     // final round()) into DECIMAL output, the r7 hash-fail class
-    def snap(x: String) = s"floor(($x) * 1073741824.0 + 0.5) / CAST(1073741824 AS DOUBLE)"
     def irls(prev: String, i: Int): String =
       s"""
       i$i AS (SELECT x.et, x.v,
@@ -1043,7 +1042,6 @@ object Round11 {
     // divisor CAST AS DOUBLE: floor() is BIGINT in Spark and a bare
     // 1073741824.0 is DECIMAL — BIGINT/DECIMAL drags the chain (and the
     // final round()) into DECIMAL output, the r7 hash-fail class
-    def snap(x: String) = s"floor(($x) * 1073741824.0 + 0.5) / CAST(1073741824 AS DOUBLE)"
     s"""
       WITH g AS (
         SELECT s_nationkey nk,
@@ -1137,7 +1135,6 @@ object Round11 {
     // divisor CAST AS DOUBLE: floor() is BIGINT in Spark and a bare
     // 1073741824.0 is DECIMAL — BIGINT/DECIMAL drags the chain (and the
     // final round()) into DECIMAL output, the r7 hash-fail class
-    def snap(x: String) = s"floor(($x) * 1073741824.0 + 0.5) / CAST(1073741824 AS DOUBLE)"
     s"""
       WITH d AS (SELECT $day dd, CAST(count(*) AS BIGINT) n,
                         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.{Window => W}
 import org.apache.spark.sql.functions._
 
 import graft.plans.{GraftExtensions, Top1WindowRewrite}
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-12 additions (q401+): the `row_number()=1` → argmin-aggregate
@@ -15,15 +16,6 @@ import graft.sources.Tables
   * scan + keyed aggregates.
   */
 object Round12 {
-
-  /** floor(x·2³⁰ + ½)/2³⁰ — identical text in Spark SQL and DuckDB.
-    * The result is parenthesized so `${snap(...)}` composes safely
-    * inside larger expressions (an unparenthesized `a / floor(...) /
-    * 2^30` left-associates and silently divides twice — caught by
-    * Round12PropertySpec on hill_q2).
-    */
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
 
   /** Latest order per customer, written the way every analyst writes it
     * — `row_number() OVER (PARTITION BY … ORDER BY … DESC) = 1` — and
@@ -104,8 +96,6 @@ object Round12 {
         .filter(!_.isNullAt(3))
         .map(r => r.getLong(0) -> r.getDouble(3))
         .toMap
-      def snapD(x: Double): Double =
-        math.floor(x * 1073741824.0 + 0.5) / 1073741824.0
       // Every addend lands on the 2^-30 grid with small magnitude, so
       // the sums below are EXACT in IEEE doubles — iteration order
       // cannot change them, and DuckDB's aggregation order matches.
@@ -208,22 +198,7 @@ object Round12 {
 
   private def rakeSql(spark: Boolean): String = {
     val tbl = if (spark) "r12_documents" else "documents"
-    val words =
-      if (spark)
-        s"""SELECT doc_id, pos, word
-            FROM (SELECT doc_id,
-                         posexplode(split(lower(text), '[^a-z]+')) AS (pos, word)
-                  FROM $tbl) x
-            WHERE word <> ''"""
-      else
-        s"""SELECT doc_id, pos, word
-            FROM (SELECT doc_id,
-                         CAST(unnest(generate_series(1, len(parts))) AS INT) - 1 AS pos,
-                         unnest(parts) AS word
-                  FROM (SELECT doc_id,
-                               string_split_regex(lower(text), '[^a-z]+') AS parts
-                        FROM $tbl)) x
-            WHERE word <> ''"""
+    val words = posTokens(tbl, spark, "doc_id")
     s"""WITH w AS ($words),
         nw AS (
           SELECT doc_id, pos, word,

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-13 additions (q406+): the training-data curation operators a
@@ -16,36 +17,6 @@ import graft.sources.Tables
   * can never split the engines.
   */
 object Round13 {
-
-  /** floor(x·2³⁰ + ½)/2³⁰, parenthesized so it composes (see Round12).
-    * The grid constant is CAST to DOUBLE: a bare `1073741824.0` parses
-    * as DECIMAL in Spark, and `bigint / decimal` collapses to ~6-digit
-    * scale under composition while DuckDB computes exact dyadic doubles
-    * — caught by the oracle on q409/q410.
-    */
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  /** (doc_id, pos, word) token stream — posexplode semantics on both
-    * engines (positions count split()'s boundary empties, then the
-    * empty tokens drop). Shared by q406/q409/q410.
-    */
-  private def tokenCte(tbl: String, spark: Boolean): String =
-    if (spark)
-      s"""SELECT doc_id, pos, word
-          FROM (SELECT doc_id,
-                       posexplode(split(lower(text), '[^a-z]+')) AS (pos, word)
-                FROM $tbl) x
-          WHERE word <> ''"""
-    else
-      s"""SELECT doc_id, pos, word
-          FROM (SELECT doc_id,
-                       CAST(unnest(generate_series(1, len(parts))) AS INT) - 1 AS pos,
-                       unnest(parts) AS word
-                FROM (SELECT doc_id,
-                             string_split_regex(lower(text), '[^a-z]+') AS parts
-                      FROM $tbl)) x
-          WHERE word <> ''"""
 
   // ---------------------------------------------------------------- q406
 
@@ -81,7 +52,7 @@ object Round13 {
       if (spark) "substring(max_by(gram, pos), instr(max_by(gram, pos), ' ') + 1)"
       else "substring(max_by(gram, pos), strpos(max_by(gram, pos), ' ') + 1)"
     val w = "OVER (PARTITION BY doc_id ORDER BY pos)"
-    s"""WITH tok AS (${tokenCte(tbl, spark)}),
+    s"""WITH tok AS (${posTokens(tbl, spark, "doc_id")}),
         grams AS (
           SELECT doc_id, pos, word, gram
           FROM (SELECT doc_id, pos, word,
@@ -252,8 +223,6 @@ object Round13 {
     (s, dir) => {
       import s.implicits._
       Tables.documents(s, dir).createOrReplaceTempView("r13_documents")
-      def snapD(x: Double): Double =
-        math.floor(x * 1073741824.0 + 0.5) / 1073741824.0
       // corpus-sized half: one job, #domains rows back
       val hd = s.sql(doremiHdSql(spark = true)).collect()
         .map(r => r.getString(0) -> r.getDouble(1)).toMap
@@ -398,7 +367,7 @@ object Round13 {
   private def perplexitySql(spark: Boolean): String = {
     val tbl = if (spark) "r13_documents" else "documents"
     val mat = if (spark) "" else "MATERIALIZED "
-    s"""WITH tok AS (${tokenCte(tbl, spark)}),
+    s"""WITH tok AS (${posTokens(tbl, spark, "doc_id")}),
         docmeta AS (SELECT doc_id, lang FROM $tbl),
         bi AS ${mat}(
           SELECT doc_id, a, b

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-14 additions (q411+): the budget-planning layer of a training
@@ -14,14 +15,6 @@ import graft.sources.Tables
   * only wide shuffles are partial-aggregable keyed aggregates.
   */
 object Round14 {
-
-  /** floor(x·2³⁰ + ½)/2³⁰, parenthesized so it composes; grid constant
-    * CAST to DOUBLE (Spark parses bare `1073741824.0` as DECIMAL and
-    * `bigint / decimal` collapses scale under composition — see
-    * Round13.snap).
-    */
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
 
   /** Per-source exact token accounting: total word tokens (with
     * duplicate documents) and unique tokens (after exact text dedup
@@ -162,6 +155,7 @@ object Round14 {
   private def logisticSql(spark: Boolean): String = {
     val tbl = if (spark) "r14_documents" else "documents"
     val mat = if (spark) "" else "MATERIALIZED "
+    // bag of words with lang, empties kept — not SqlFragments' positional tokenizers
     val tokCte =
       if (spark)
         s"""SELECT doc_id, lang, explode(split(lower(text), '[^a-z]+')) AS word
@@ -171,8 +165,6 @@ object Round14 {
                    unnest(string_split_regex(lower(text), '[^a-z]+')) AS word
             FROM $tbl"""
     val stop = "('the','a','an','and','or','of','to','in','is','it')"
-    // micro-unit quantizer: exact BIGINT carrier for per-row float stats
-    def qi(x: String) = s"CAST(floor(($x) * 1048576.0 + 0.5) AS BIGINT)"
     def deq(c: String) = s"(CAST(sum($c) AS DOUBLE) / 1048576.0)"
     val iters = (0 until 3)
       .map { k =>

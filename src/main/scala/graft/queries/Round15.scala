@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-15 additions (q416+): the corpus-quality audits between dedup
@@ -16,56 +17,6 @@ import graft.sources.Tables
   * 2⁻³⁰ grid.
   */
 object Round15 {
-
-  /** floor(x·2³⁰ + ½)/2³⁰, parenthesized so it composes; grid constant
-    * CAST to DOUBLE (see Round13.snap for the DECIMAL-collapse trap).
-    */
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  /** floor(x·2²⁰ + ½) AS BIGINT — the exact-integer carrier for per-row
-    * float statistics (sums of these are aggregation-order-exact).
-    */
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
-
-  /** (source, doc_id, rnk, word): kept tokens with their contiguous
-    * per-doc rank (0-based over kept order — boundary empties from the
-    * split don't leave gaps). Shared by q416/q419/q420.
-    *
-    * PRECONDITION (r13 advisor note, documented r14): the Spark branch
-    * derives rnk from the per-row array position while the oracle
-    * branch windows by doc_id alone — equivalent only while doc_id is
-    * unique in `$tbl`. True of the documents fixture at every SF
-    * (500/500 distinct); a future fixture unioning sources with
-    * colliding doc_ids must partition the oracle window by every
-    * identity column too.
-    */
-  private def tokCte(tbl: String, spark: Boolean): String =
-    if (spark)
-      // r13 optimization (guide §2): `pos` of the EMPTY-FILTERED array is
-      // exactly the old `row_number() OVER (PARTITION BY doc_id ORDER BY
-      // pos) - 1` — the window only re-numbered the surviving words in
-      // their original order — so filtering inside the array before
-      // posexplode removes one full Exchange+Sort+Window pass over the
-      // exploded token stream from every consumer. Same rows, same rnk.
-      s"""SELECT source, doc_id, CAST(pos AS BIGINT) AS rnk, word
-          FROM (SELECT source, doc_id,
-                       posexplode(filter(split(lower(text), '[^a-z]+'),
-                                         w -> w <> '')) AS (pos, word)
-                FROM $tbl) x"""
-    else
-      s"""SELECT source, doc_id,
-                 CAST(row_number() OVER (PARTITION BY doc_id ORDER BY pos) - 1
-                      AS BIGINT) AS rnk,
-                 word
-          FROM (SELECT source, doc_id,
-                       CAST(unnest(generate_series(1, len(parts))) AS INT) - 1 AS pos,
-                       unnest(parts) AS word
-                FROM (SELECT source, doc_id,
-                             string_split_regex(lower(text), '[^a-z]+') AS parts
-                      FROM $tbl)) x
-          WHERE word <> ''"""
 
   /** (label, dim, m): per-label centroid of the embeddings table with
     * exact arithmetic — every float component quantizes to the 2²⁰
@@ -120,7 +71,7 @@ object Round15 {
       if (spark)
         "array_join(transform(array_sort(array_agg(struct(rnk, word))), t -> t.word), ' ')"
       else "string_agg(word, ' ' ORDER BY rnk)"
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${rankTokens(tbl, spark, "source", "doc_id")}),
         seg AS (
           SELECT source, doc_id,
                  CAST(floor(rnk / 16.0) AS BIGINT) AS seg_id,
@@ -271,7 +222,7 @@ object Round15 {
   private def zipfSql(spark: Boolean): String = {
     val tbl = if (spark) "r15_documents" else "documents"
     val deq = "CAST(1048576 AS DOUBLE)"
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${rankTokens(tbl, spark, "source", "doc_id")}),
         wc AS (
           SELECT source, word, CAST(count(*) AS BIGINT) AS c
           FROM tok GROUP BY 1, 2),

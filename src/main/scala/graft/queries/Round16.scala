@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-16 additions (q421+): corpus-dynamics audits — the n-gram
@@ -13,30 +14,6 @@ import graft.sources.Tables
   * final ratios snap to the dyadic 2⁻³⁰ grid.
   */
 object Round16 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
-
-  /** (doc_id-ordered) word stream per doc — Round13's tokenizer. */
-  private def tokCte(tbl: String, spark: Boolean): String =
-    if (spark)
-      s"""SELECT doc_id, source, pos, word
-          FROM (SELECT doc_id, source,
-                       posexplode(split(lower(text), '[^a-z]+')) AS (pos, word)
-                FROM $tbl) x
-          WHERE word <> ''"""
-    else
-      s"""SELECT doc_id, source, pos, word
-          FROM (SELECT doc_id, source,
-                       CAST(unnest(generate_series(1, len(parts))) AS INT) - 1 AS pos,
-                       unnest(parts) AS word
-                FROM (SELECT doc_id, source,
-                             string_split_regex(lower(text), '[^a-z]+') AS parts
-                      FROM $tbl)) x
-          WHERE word <> ''"""
 
   // ---------------------------------------------------------------- q421
 
@@ -64,7 +41,7 @@ object Round16 {
     val tbl = if (spark) "r16_documents" else "documents"
     val w = "OVER (PARTITION BY doc_id ORDER BY pos)"
     s"""WITH nmax AS (SELECT max(doc_id) + 1 AS n FROM $tbl),
-        tok AS (${tokCte(tbl, spark)}),
+        tok AS (${posTokens(tbl, spark, "doc_id", "source")}),
         grams AS (
           SELECT CAST(floor(doc_id * 10.0 / n) AS INT) AS batch,
                  md5(word || ' ' || lead(word, 1) $w || ' ' || lead(word, 2) $w) AS g
@@ -180,7 +157,7 @@ object Round16 {
 
   private def vocabDuelSql(spark: Boolean): String = {
     val tbl = if (spark) "r16_documents" else "documents"
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${posTokens(tbl, spark, "doc_id", "source")}),
         freq AS (
           SELECT word,
                  CAST(row_number() OVER (ORDER BY c DESC, word) AS BIGINT) AS rnk

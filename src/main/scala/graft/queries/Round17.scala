@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-17 additions (q426+): corpus-composition forensics — the
@@ -13,30 +14,6 @@ import graft.sources.Tables
   * BIGINT sums; final ratios snap to the dyadic 2⁻³⁰ grid.
   */
 object Round17 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
-
-  /** (source, doc_id, pos, word) kept-token stream (Round13 tokenizer). */
-  private def tokCte(tbl: String, spark: Boolean): String =
-    if (spark)
-      s"""SELECT source, doc_id, pos, word
-          FROM (SELECT source, doc_id,
-                       posexplode(split(lower(text), '[^a-z]+')) AS (pos, word)
-                FROM $tbl) x
-          WHERE word <> ''"""
-    else
-      s"""SELECT source, doc_id, pos, word
-          FROM (SELECT source, doc_id,
-                       CAST(unnest(generate_series(1, len(parts))) AS INT) - 1 AS pos,
-                       unnest(parts) AS word
-                FROM (SELECT source, doc_id,
-                             string_split_regex(lower(text), '[^a-z]+') AS parts
-                      FROM $tbl)) x
-          WHERE word <> ''"""
 
   // ---------------------------------------------------------------- q426
 
@@ -61,7 +38,7 @@ object Round17 {
   private def overlapSql(spark: Boolean): String = {
     val tbl = if (spark) "r17_documents" else "documents"
     val w = "OVER (PARTITION BY doc_id ORDER BY pos)"
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${posTokens(tbl, spark, "source", "doc_id")}),
         grams AS (
           SELECT source,
                  md5(word || ' ' || lead(word, 1) $w || ' ' || lead(word, 2) $w
@@ -108,7 +85,7 @@ object Round17 {
   private def heapsSql(spark: Boolean): String = {
     val tbl = if (spark) "r17_documents" else "documents"
     s"""WITH nmax AS (SELECT max(doc_id) + 1 AS n FROM $tbl),
-        tok AS (${tokCte(tbl, spark)}),
+        tok AS (${posTokens(tbl, spark, "source", "doc_id")}),
         dec AS (
           SELECT source, CAST(floor(doc_id * 10.0 / n) AS INT) AS d, word
           FROM tok CROSS JOIN nmax),
@@ -177,7 +154,7 @@ object Round17 {
 
   private def burstinessSql(spark: Boolean): String = {
     val tbl = if (spark) "r17_documents" else "documents"
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${posTokens(tbl, spark, "source", "doc_id")}),
         d AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS nd FROM $tbl),
         wstats AS (
           SELECT word,
@@ -223,7 +200,7 @@ object Round17 {
       s"""SELECT source, CAST($n AS INT) AS n, md5($gram) AS g
           FROM tok"""
     }
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${posTokens(tbl, spark, "source", "doc_id")}),
         grams AS (${(1 to 4).map(level).mkString("\n UNION ALL \n")})
         SELECT source, n,
                CAST(count(g) AS BIGINT) AS n_grams,

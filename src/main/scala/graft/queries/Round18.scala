@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-18 additions (q431+): selection and structure audits — greedy
@@ -14,30 +15,6 @@ import graft.sources.Tables
   * BIGINT sums; final ratios snap to the dyadic 2⁻³⁰ grid.
   */
 object Round18 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
-
-  /** (source, doc_id, pos, word) kept-token stream (Round13 tokenizer). */
-  private def tokCte(tbl: String, spark: Boolean): String =
-    if (spark)
-      s"""SELECT source, doc_id, pos, word
-          FROM (SELECT source, doc_id,
-                       posexplode(split(lower(text), '[^a-z]+')) AS (pos, word)
-                FROM $tbl) x
-          WHERE word <> ''"""
-    else
-      s"""SELECT source, doc_id, pos, word
-          FROM (SELECT source, doc_id,
-                       CAST(unnest(generate_series(1, len(parts))) AS INT) - 1 AS pos,
-                       unnest(parts) AS word
-                FROM (SELECT source, doc_id,
-                             string_split_regex(lower(text), '[^a-z]+') AS parts
-                      FROM $tbl)) x
-          WHERE word <> ''"""
 
   // ---------------------------------------------------------------- q431
 
@@ -179,7 +156,7 @@ object Round18 {
       if (spark)
         "array_join(transform(array_sort(array_agg(struct(pos, word))), t -> t.word), ' ')"
       else "string_agg(word, ' ' ORDER BY pos)"
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${posTokens(tbl, spark, "source", "doc_id")}),
         ranked AS (
           SELECT doc_id, pos, word,
                  row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS rhead,
@@ -269,7 +246,7 @@ object Round18 {
                  CAST(sum(${qi(s"-(CAST($cnt AS DOUBLE) / $tot) * ln(CAST($cnt AS DOUBLE) / $tot)")})
                       AS DOUBLE) / 1048576.0 AS h
           FROM $cte GROUP BY source"""
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${posTokens(tbl, spark, "source", "doc_id")}),
         uni AS (
           SELECT source, word, CAST(count(*) AS BIGINT) AS c,
                  CAST(sum(count(*)) OVER (PARTITION BY source) AS BIGINT) AS t
@@ -311,7 +288,7 @@ object Round18 {
 
   private def positionalSql(spark: Boolean): String = {
     val tbl = if (spark) "r18_documents" else "documents"
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${posTokens(tbl, spark, "source", "doc_id")}),
         uni AS (
           SELECT source, word, CAST(count(*) AS BIGINT) AS c
           FROM tok GROUP BY 1, 2),

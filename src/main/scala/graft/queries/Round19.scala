@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-19 additions (q436+): the production-ingest shapes — an
@@ -13,38 +14,6 @@ import graft.sources.Tables
   */
 object Round19 {
 
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  /** (source, doc_id, rnk, word) kept tokens with contiguous per-doc
-    * rank (Round15 tokenizer).
-    */
-  private def tokCte(tbl: String, spark: Boolean): String =
-    if (spark)
-      // r13 optimization (guide §2): `pos` of the EMPTY-FILTERED array is
-      // exactly the old `row_number() OVER (PARTITION BY doc_id ORDER BY
-      // pos) - 1` — the window only re-numbered the surviving words in
-      // their original order — so filtering inside the array before
-      // posexplode removes one full Exchange+Sort+Window pass over the
-      // exploded token stream from every consumer. Same rows, same rnk.
-      s"""SELECT source, doc_id, CAST(pos AS BIGINT) AS rnk, word
-          FROM (SELECT source, doc_id,
-                       posexplode(filter(split(lower(text), '[^a-z]+'),
-                                         w -> w <> '')) AS (pos, word)
-                FROM $tbl) x"""
-    else
-      s"""SELECT source, doc_id,
-                 CAST(row_number() OVER (PARTITION BY doc_id ORDER BY pos) - 1
-                      AS BIGINT) AS rnk,
-                 word
-          FROM (SELECT source, doc_id,
-                       CAST(unnest(generate_series(1, len(parts))) AS INT) - 1 AS pos,
-                       unnest(parts) AS word
-                FROM (SELECT source, doc_id,
-                             string_split_regex(lower(text), '[^a-z]+') AS parts
-                      FROM $tbl)) x
-          WHERE word <> ''"""
-
   /** (doc_id, source, seg_id, h): md5 of each doc's consecutive
     * 16-token segment (Round15's q416 unit). Shared by q437/q438/q440.
     */
@@ -56,10 +25,9 @@ object Round19 {
     s"""SELECT doc_id, source,
                CAST(floor(rnk / 16.0) AS BIGINT) AS seg_id,
                md5($phrase) AS h
-        FROM (${tokCte(tbl, spark)}) tk
+        FROM (${rankTokens(tbl, spark, "source", "doc_id")}) tk
         GROUP BY doc_id, source, CAST(floor(rnk / 16.0) AS BIGINT)"""
   }
-
 
   /** md5 doc bucket in [0,10) — the deterministic split both engines
     * replay (doc_id %% 10 would alias the synthetic corpus's
@@ -255,7 +223,7 @@ object Round19 {
     val tbl = if (spark) "r19_documents" else "documents"
     val bk = bucket(":ver", spark)
     s"""WITH lab AS (SELECT doc_id, $bk < 9 AS in_a FROM $tbl),
-        tok AS (${tokCte(tbl, spark)}),
+        tok AS (${rankTokens(tbl, spark, "source", "doc_id")}),
         marked AS (
           SELECT t.source, t.word, lab.in_a
           FROM tok t JOIN lab ON lab.doc_id = t.doc_id),

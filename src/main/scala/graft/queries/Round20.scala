@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-20 additions (q441+): embedding-quality and transfer audits —
@@ -14,12 +15,6 @@ import graft.sources.Tables
   * snap to the dyadic 2⁻³⁰ grid.
   */
 object Round20 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
 
   /** (vec_id, label, dim, v) exploded embeddings; Spark dim is 0-based,
     * DuckDB 1-based — dims only join within one engine, and the
@@ -278,22 +273,7 @@ object Round20 {
   private def holdoutSql(spark: Boolean): String = {
     val tbl = if (spark) "r20_documents" else "documents"
     val w = "OVER (PARTITION BY doc_id ORDER BY pos)"
-    val tok =
-      if (spark)
-        s"""SELECT source, doc_id, pos, word
-            FROM (SELECT source, doc_id,
-                         posexplode(split(lower(text), '[^a-z]+')) AS (pos, word)
-                  FROM $tbl) x
-            WHERE word <> ''"""
-      else
-        s"""SELECT source, doc_id, pos, word
-            FROM (SELECT source, doc_id,
-                         CAST(unnest(generate_series(1, len(parts))) AS INT) - 1 AS pos,
-                         unnest(parts) AS word
-                  FROM (SELECT source, doc_id,
-                               string_split_regex(lower(text), '[^a-z]+') AS parts
-                        FROM $tbl)) x
-            WHERE word <> ''"""
+    val tok = posTokens(tbl, spark, "source", "doc_id")
     s"""WITH tok AS ($tok),
         bi AS (
           SELECT source, a, b

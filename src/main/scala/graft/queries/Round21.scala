@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-21 additions (q446+): curation-policy analytics — duplicate-
@@ -15,36 +16,6 @@ import graft.sources.Tables
   */
 object Round21 {
 
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  /** (source, doc_id, rnk, word) kept tokens (Round15 tokenizer). */
-  private def tokCte(tbl: String, spark: Boolean): String =
-    if (spark)
-      // r13 optimization (guide §2): `pos` of the EMPTY-FILTERED array is
-      // exactly the old `row_number() OVER (PARTITION BY doc_id ORDER BY
-      // pos) - 1` — the window only re-numbered the surviving words in
-      // their original order — so filtering inside the array before
-      // posexplode removes one full Exchange+Sort+Window pass over the
-      // exploded token stream from every consumer. Same rows, same rnk.
-      s"""SELECT source, doc_id, CAST(pos AS BIGINT) AS rnk, word
-          FROM (SELECT source, doc_id,
-                       posexplode(filter(split(lower(text), '[^a-z]+'),
-                                         w -> w <> '')) AS (pos, word)
-                FROM $tbl) x"""
-    else
-      s"""SELECT source, doc_id,
-                 CAST(row_number() OVER (PARTITION BY doc_id ORDER BY pos) - 1
-                      AS BIGINT) AS rnk,
-                 word
-          FROM (SELECT source, doc_id,
-                       CAST(unnest(generate_series(1, len(parts))) AS INT) - 1 AS pos,
-                       unnest(parts) AS word
-                FROM (SELECT source, doc_id,
-                             string_split_regex(lower(text), '[^a-z]+') AS parts
-                      FROM $tbl)) x
-          WHERE word <> ''"""
-
   /** (doc_id, source, seg_id, h) 16-token segment hashes (q416 unit). */
   private def segCte(tbl: String, spark: Boolean): String = {
     val phrase =
@@ -55,7 +26,7 @@ object Round21 {
                CAST(floor(rnk / 16.0) AS BIGINT) AS seg_id,
                md5($phrase) AS h,
                CAST(count(*) AS BIGINT) AS n_tok
-        FROM (${tokCte(tbl, spark)}) tk
+        FROM (${rankTokens(tbl, spark, "source", "doc_id")}) tk
         GROUP BY doc_id, source, CAST(floor(rnk / 16.0) AS BIGINT)"""
   }
 
@@ -133,7 +104,7 @@ object Round21 {
           SELECT t.doc_id,
                  CAST(count(*) AS BIGINT) AS nw,
                  CAST(count(DISTINCT t.word) AS BIGINT) AS nv
-          FROM (${tokCte(tbl, spark)}) t
+          FROM (${rankTokens(tbl, spark, "source", "doc_id")}) t
           GROUP BY t.doc_id),
         mask AS (
           SELECT (CASE WHEN f.nw >= 150 THEN 4 ELSE 0 END) +
@@ -221,7 +192,7 @@ object Round21 {
   private def rareGramSql(spark: Boolean): String = {
     val tbl = if (spark) "r21_documents" else "documents"
     val w = "OVER (PARTITION BY doc_id ORDER BY rnk)"
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${rankTokens(tbl, spark, "source", "doc_id")}),
         grams AS (
           SELECT source, doc_id, g
           FROM (SELECT source, doc_id,

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-22 additions (q451+): mining and profiling — rare-word-blocked
@@ -13,39 +14,6 @@ import graft.sources.Tables
   * leads with. House invariants as Round13-21.
   */
 object Round22 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
-
-  /** (source, doc_id, rnk, word) kept tokens (Round15 tokenizer). */
-  private def tokCte(tbl: String, spark: Boolean): String =
-    if (spark)
-      // r13 optimization (guide §2): `pos` of the EMPTY-FILTERED array is
-      // exactly the old `row_number() OVER (PARTITION BY doc_id ORDER BY
-      // pos) - 1` — the window only re-numbered the surviving words in
-      // their original order — so filtering inside the array before
-      // posexplode removes one full Exchange+Sort+Window pass over the
-      // exploded token stream from every consumer. Same rows, same rnk.
-      s"""SELECT source, doc_id, CAST(pos AS BIGINT) AS rnk, word
-          FROM (SELECT source, doc_id,
-                       posexplode(filter(split(lower(text), '[^a-z]+'),
-                                         w -> w <> '')) AS (pos, word)
-                FROM $tbl) x"""
-    else
-      s"""SELECT source, doc_id,
-                 CAST(row_number() OVER (PARTITION BY doc_id ORDER BY pos) - 1
-                      AS BIGINT) AS rnk,
-                 word
-          FROM (SELECT source, doc_id,
-                       CAST(unnest(generate_series(1, len(parts))) AS INT) - 1 AS pos,
-                       unnest(parts) AS word
-                FROM (SELECT source, doc_id,
-                             string_split_regex(lower(text), '[^a-z]+') AS parts
-                      FROM $tbl)) x
-          WHERE word <> ''"""
 
   // ---------------------------------------------------------------- q451
 
@@ -71,7 +39,7 @@ object Round22 {
   private def bitextSql(spark: Boolean): String = {
     val tbl = if (spark) "r22_documents" else "documents"
     val w = "OVER (PARTITION BY doc_id ORDER BY rnk)"
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${rankTokens(tbl, spark, "source", "doc_id")}),
         wc AS (
           SELECT doc_id, word, CAST(count(*) AS BIGINT) AS c
           FROM tok GROUP BY 1, 2),
@@ -245,7 +213,7 @@ object Round22 {
 
   private def msttrSql(spark: Boolean): String = {
     val tbl = if (spark) "r22_documents" else "documents"
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${rankTokens(tbl, spark, "source", "doc_id")}),
         seg AS (
           SELECT source, doc_id,
                  CAST(floor(rnk / 50.0) AS BIGINT) AS seg_id,
@@ -291,7 +259,7 @@ object Round22 {
           SELECT doc_id,
                  CAST(floor(rnk / 16.0) AS BIGINT) AS seg_id,
                  md5($phrase) AS h
-          FROM (${tokCte(tbl, spark)}) tk
+          FROM (${rankTokens(tbl, spark, "source", "doc_id")}) tk
           GROUP BY doc_id, CAST(floor(rnk / 16.0) AS BIGINT)),
         classes AS (
           SELECT h, CAST(count(*) AS BIGINT) AS m FROM seg GROUP BY 1),

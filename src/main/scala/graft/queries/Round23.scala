@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-23 additions (q456+): corpus filtering & structure — one-pass
@@ -21,45 +22,11 @@ import graft.sources.Tables
   */
 object Round23 {
 
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  /** 2²⁰-grid integer quantization (micro-units). */
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
-
   /** 2⁴⁰-grid quantization for small squared deviations (σ² terms that a
     * 2²⁰ grid would flush to zero).
     */
   private def qi40(x: String): String =
     s"CAST(floor(($x) * CAST(1099511627776 AS DOUBLE) + 0.5) AS BIGINT)"
-
-  /** (doc_id, source, rnk, word) token stream — the Round15 tokenizer. */
-  private def tokCte(tbl: String, spark: Boolean): String =
-    if (spark)
-      // r13 optimization (guide §2): `pos` of the EMPTY-FILTERED array is
-      // exactly the old `row_number() OVER (PARTITION BY doc_id ORDER BY
-      // pos) - 1` — the window only re-numbered the surviving words in
-      // their original order — so filtering inside the array before
-      // posexplode removes one full Exchange+Sort+Window pass over the
-      // exploded token stream from every consumer. Same rows, same rnk.
-      s"""SELECT doc_id, source, CAST(pos AS BIGINT) AS rnk, word
-          FROM (SELECT doc_id, source,
-                       posexplode(filter(split(lower(text), '[^a-z]+'),
-                                         w -> w <> '')) AS (pos, word)
-                FROM $tbl) x"""
-    else
-      s"""SELECT doc_id, source,
-                 CAST(row_number() OVER (PARTITION BY doc_id ORDER BY pos) - 1
-                      AS BIGINT) AS rnk,
-                 word
-          FROM (SELECT doc_id, source,
-                       CAST(unnest(generate_series(1, len(parts))) AS INT) - 1 AS pos,
-                       unnest(parts) AS word
-                FROM (SELECT doc_id, source,
-                             string_split_regex(lower(text), '[^a-z]+') AS parts
-                      FROM $tbl)) x
-          WHERE word <> ''"""
 
   // ---------------------------------------------------------------- q456
 
@@ -149,7 +116,7 @@ object Round23 {
 
   private def tilingSql(spark: Boolean): String = {
     val tbl = if (spark) "r23_documents" else "documents"
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${rankTokens(tbl, spark, "doc_id", "source")}),
         c AS (
           SELECT doc_id, CAST(floor(rnk / 10.0) AS BIGINT) AS blk, word,
                  CAST(count(*) AS BIGINT) AS n
@@ -268,7 +235,7 @@ object Round23 {
 
   private def burrowsSql(spark: Boolean): String = {
     val tbl = if (spark) "r23_documents" else "documents"
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${rankTokens(tbl, spark, "doc_id", "source")}),
         cw AS (SELECT word, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1),
         topw AS (SELECT word FROM cw ORDER BY c DESC, word LIMIT 16),
         st AS (SELECT source, CAST(count(*) AS BIGINT) AS tot FROM tok GROUP BY 1),
@@ -391,7 +358,7 @@ object Round23 {
             JOIN $prev ON $prev.v = e.a
             JOIN deg ON deg.v = e.a
             GROUP BY 1)"""
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${rankTokens(tbl, spark, "doc_id", "source")}),
         bg AS (
           SELECT t1.word AS a, t2.word AS b, CAST(count(*) AS BIGINT) AS w
           FROM tok t1 JOIN tok t2
@@ -600,7 +567,7 @@ object Round23 {
                      (SELECT CAST(count(*) AS BIGINT)
                       FROM te$n WHERE gram IN (SELECT gram FROM tr$n)) AS n_covered)"""
       }
-      s"""WITH base AS (${tokCte(tbl, spark)}),
+      s"""WITH base AS (${rankTokens(tbl, spark, "doc_id", "source")}),
           sp AS (SELECT doc_id,
                         CASE WHEN $fold = 0 THEN 'test' ELSE 'train' END AS split
                  FROM (SELECT DISTINCT doc_id FROM base) dd),

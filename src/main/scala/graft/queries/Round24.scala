@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-24 additions (q462+): retrieval & evaluation machinery —
@@ -14,35 +15,6 @@ import graft.sources.Tables
   * House invariants as Round13-23.
   */
 object Round24 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  /** (doc_id, rnk, word) token stream — the Round15 tokenizer. */
-  private def tokCte(tbl: String, spark: Boolean): String =
-    if (spark)
-      // r13 optimization (guide §2): `pos` of the EMPTY-FILTERED array is
-      // exactly the old `row_number() OVER (PARTITION BY doc_id ORDER BY
-      // pos) - 1` — the window only re-numbered the surviving words in
-      // their original order — so filtering inside the array before
-      // posexplode removes one full Exchange+Sort+Window pass over the
-      // exploded token stream from every consumer. Same rows, same rnk.
-      s"""SELECT doc_id, CAST(pos AS BIGINT) AS rnk, word
-          FROM (SELECT doc_id, posexplode(filter(split(lower(text), '[^a-z]+'),
-                                                 w -> w <> '')) AS (pos, word)
-                FROM $tbl) x"""
-    else
-      s"""SELECT doc_id,
-                 CAST(row_number() OVER (PARTITION BY doc_id ORDER BY pos) - 1
-                      AS BIGINT) AS rnk,
-                 word
-          FROM (SELECT doc_id,
-                       CAST(unnest(generate_series(1, len(parts))) AS INT) - 1 AS pos,
-                       unnest(parts) AS word
-                FROM (SELECT doc_id,
-                             string_split_regex(lower(text), '[^a-z]+') AS parts
-                      FROM $tbl)) x
-          WHERE word <> ''"""
 
   // ---------------------------------------------------------------- q462
 
@@ -256,7 +228,7 @@ object Round24 {
         ORDER BY 1"""
 
   /** POSITIONLESS tokens — MaxScore needs only (doc_id, word). The
-    * ordered tokCte's per-doc row_number window costs ~3x the explode
+    * ordered rank tokenizer's per-doc row_number window costs ~3x the explode
     * itself and Spark re-inlines the CTE at every reference; a bag of
     * words keeps all four references scan-cheap.
     */

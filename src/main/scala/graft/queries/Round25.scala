@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-25 additions (q466+): generation-quality forensics — Self-BLEU
@@ -12,36 +13,6 @@ import graft.sources.Tables
   * outputs, corpus work = scans + keyed joins/windows.
   */
 object Round25 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  /** (doc_id, source, rnk, word) token stream — the Round15 tokenizer. */
-  private def tokCte(tbl: String, spark: Boolean): String =
-    if (spark)
-      // r13 optimization (guide §2): `pos` of the EMPTY-FILTERED array is
-      // exactly the old `row_number() OVER (PARTITION BY doc_id ORDER BY
-      // pos) - 1` — the window only re-numbered the surviving words in
-      // their original order — so filtering inside the array before
-      // posexplode removes one full Exchange+Sort+Window pass over the
-      // exploded token stream from every consumer. Same rows, same rnk.
-      s"""SELECT doc_id, source, CAST(pos AS BIGINT) AS rnk, word
-          FROM (SELECT doc_id, source,
-                       posexplode(filter(split(lower(text), '[^a-z]+'),
-                                         w -> w <> '')) AS (pos, word)
-                FROM $tbl) x"""
-    else
-      s"""SELECT doc_id, source,
-                 CAST(row_number() OVER (PARTITION BY doc_id ORDER BY pos) - 1
-                      AS BIGINT) AS rnk,
-                 word
-          FROM (SELECT doc_id, source,
-                       CAST(unnest(generate_series(1, len(parts))) AS INT) - 1 AS pos,
-                       unnest(parts) AS word
-                FROM (SELECT doc_id, source,
-                             string_split_regex(lower(text), '[^a-z]+') AS parts
-                      FROM $tbl)) x
-          WHERE word <> ''"""
 
   // ---------------------------------------------------------------- q466
 
@@ -88,7 +59,7 @@ object Round25 {
                      sum(x.tf)""")} AS p
             FROM $gr x JOIN top_$out t ON t.g = x.g
             GROUP BY 1, 2)"""
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${rankTokens(tbl, spark, "doc_id", "source")}),
         g1 AS (
           SELECT doc_id, source, word AS g, CAST(count(*) AS BIGINT) AS tf
           FROM tok GROUP BY 1, 2, 3),
@@ -148,7 +119,7 @@ object Round25 {
       else
         """CAST(('0x' || substring(md5(a.word || '|' || b.word), 32, 1))
              AS BIGINT) % 2"""
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${rankTokens(tbl, spark, "doc_id", "source")}),
         tr AS (
           SELECT a.doc_id, a.source,
                  CAST(count(*) AS BIGINT) AS n,
@@ -205,7 +176,7 @@ object Round25 {
         val e = expr.replace("t.word", "word")
         s"md5(string_agg($e, ',' ORDER BY rnk))"
       }
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${rankTokens(tbl, spark, "doc_id", "source")}),
         seg AS (
           -- complete 16-token windows only: ragged tail segments have
           -- near-trivial shapes (a lone length digit) that would flood

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-26 additions (q469+): privacy & representation health —
@@ -13,13 +14,6 @@ import graft.sources.Tables
   * corpus work = scans + keyed joins.
   */
 object Round26 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  /** 2²⁰-grid integer quantization. */
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
 
   // ---------------------------------------------------------------- q469
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-27 additions (q472+): multi-probe ANN — the probe-vs-tables
@@ -13,9 +14,6 @@ import graft.sources.Tables
   * force for single-probe vs 3-probe on the SAME 4-table index.
   */
 object Round27 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
 
   // ---------------------------------------------------------------- q472
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-28 additions (q474+): structure-quality audits — external
@@ -14,9 +15,6 @@ import graft.sources.Tables
   * to snowball). House invariants as Round13-27.
   */
 object Round28 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
 
   // ---------------------------------------------------------------- q474
 

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-29 additions (q476+): inference-economics audits —
@@ -11,36 +12,6 @@ import graft.sources.Tables
   * as Round13-28.
   */
 object Round29 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  /** (doc_id, source, rnk, word) token stream — the Round15 tokenizer. */
-  private def tokCte(tbl: String, spark: Boolean): String =
-    if (spark)
-      // r13 optimization (guide §2): `pos` of the EMPTY-FILTERED array is
-      // exactly the old `row_number() OVER (PARTITION BY doc_id ORDER BY
-      // pos) - 1` — the window only re-numbered the surviving words in
-      // their original order — so filtering inside the array before
-      // posexplode removes one full Exchange+Sort+Window pass over the
-      // exploded token stream from every consumer. Same rows, same rnk.
-      s"""SELECT doc_id, source, CAST(pos AS BIGINT) AS rnk, word
-          FROM (SELECT doc_id, source,
-                       posexplode(filter(split(lower(text), '[^a-z]+'),
-                                         w -> w <> '')) AS (pos, word)
-                FROM $tbl) x"""
-    else
-      s"""SELECT doc_id, source,
-                 CAST(row_number() OVER (PARTITION BY doc_id ORDER BY pos) - 1
-                      AS BIGINT) AS rnk,
-                 word
-          FROM (SELECT doc_id, source,
-                       CAST(unnest(generate_series(1, len(parts))) AS INT) - 1 AS pos,
-                       unnest(parts) AS word
-                FROM (SELECT doc_id, source,
-                             string_split_regex(lower(text), '[^a-z]+') AS parts
-                      FROM $tbl)) x
-          WHERE word <> ''"""
 
   // ---------------------------------------------------------------- q476
 
@@ -65,7 +36,7 @@ object Round29 {
 
   private def speculativeSql(spark: Boolean): String = {
     val tbl = if (spark) "r29_documents" else "documents"
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${rankTokens(tbl, spark, "doc_id", "source")}),
         tr AS (
           SELECT a.source, a.word AS prev, b.word AS nxt
           FROM tok a JOIN tok b
@@ -136,7 +107,7 @@ object Round29 {
                    CAST($d * (count(*) - count(DISTINCT ph)) AS BIGINT)
                      AS saved_tokens
             FROM p$d)"""
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${rankTokens(tbl, spark, "doc_id", "source")}),
         tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM tok),
         ${depthBlock(8)},
         ${depthBlock(16)},

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-30 additions (q478+): serving-capacity and spectral audits —
@@ -19,39 +20,6 @@ import graft.sources.Tables
   * double, identical SQL text in both engines.
   */
 object Round30 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
-
-  /** (doc_id, source, rnk, word) token stream — the Round15 tokenizer. */
-  private def tokCte(tbl: String, spark: Boolean): String =
-    if (spark)
-      // r13 optimization (guide §2): `pos` of the EMPTY-FILTERED array is
-      // exactly the old `row_number() OVER (PARTITION BY doc_id ORDER BY
-      // pos) - 1` — the window only re-numbered the surviving words in
-      // their original order — so filtering inside the array before
-      // posexplode removes one full Exchange+Sort+Window pass over the
-      // exploded token stream from every consumer. Same rows, same rnk.
-      s"""SELECT doc_id, source, CAST(pos AS BIGINT) AS rnk, word
-          FROM (SELECT doc_id, source,
-                       posexplode(filter(split(lower(text), '[^a-z]+'),
-                                         w -> w <> '')) AS (pos, word)
-                FROM $tbl) x"""
-    else
-      s"""SELECT doc_id, source,
-                 CAST(row_number() OVER (PARTITION BY doc_id ORDER BY pos) - 1
-                      AS BIGINT) AS rnk,
-                 word
-          FROM (SELECT doc_id, source,
-                       CAST(unnest(generate_series(1, len(parts))) AS INT) - 1 AS pos,
-                       unnest(parts) AS word
-                FROM (SELECT doc_id, source,
-                             string_split_regex(lower(text), '[^a-z]+') AS parts
-                      FROM $tbl)) x
-          WHERE word <> ''"""
 
   // ---------------------------------------------------------------- q478
 
@@ -165,9 +133,6 @@ object Round30 {
       val g = gram.collect()
         .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
       val dims = g.keys.map(_._1).toSeq.distinct.sorted
-      def snapD(x: Double): Double =
-        math.floor(x * 1073741824.0 + 0.5) / 1073741824.0
-      def qiL(x: Double): Long = math.floor(x * 1048576.0 + 0.5).toLong
       var x = dims.map(_ -> 0.125).toMap
       for (_ <- 1 to 8) {
         val y = dims.map { i =>
@@ -282,7 +247,7 @@ object Round30 {
     val ks =
       if (spark) "SELECT CAST(kk AS BIGINT) AS k FROM (SELECT explode(array(1, 2, 4, 8)) AS kk)"
       else "SELECT CAST(unnest([1, 2, 4, 8]) AS BIGINT) AS k"
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${rankTokens(tbl, spark, "doc_id", "source")}),
         tr AS (
           SELECT a.doc_id, a.rnk, a.word AS prev, b.word AS nxt
           FROM tok a JOIN tok b

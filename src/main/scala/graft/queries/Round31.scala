@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-31 additions (q481+): protection & annotation-QA audits —
@@ -15,12 +16,6 @@ import graft.sources.Tables
   * Round13-30.
   */
 object Round31 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
 
   // ---------------------------------------------------------------- q481
 

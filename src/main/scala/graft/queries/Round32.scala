@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.operators.Packing
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-32 additions (q484+): training-efficiency and reliability
@@ -17,12 +18,6 @@ import graft.sources.Tables
   * q294's 1-D EMD). House invariants as Round13-31.
   */
 object Round32 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
 
   // ---------------------------------------------------------------- q484
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.SqlFragments._
 import graft.sources.{BucketedTables, Tables}
 
 /** Round-34 additions (q490+): storage-layout and curation-planning
@@ -13,9 +14,6 @@ import graft.sources.{BucketedTables, Tables}
   * planning sheet). House invariants as Round13-33.
   */
 object Round34 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
 
   // ---------------------------------------------------------------- q490
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-35 additions (q492+): robust time-series matching — dynamic
@@ -14,12 +15,6 @@ import graft.sources.Tables
   * BIGINT DP/inlier arithmetic, dyadic snaps on emitted doubles.
   */
 object Round35 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
 
   // ---------------------------------------------------------------- q492
 
@@ -44,7 +39,6 @@ object Round35 {
         series.filter(_._1 == side).sortBy(_._2).map(_._3)
       val a = curve("a")
       val b = curve("b")
-      def qiL(x: Double): Long = math.floor(x * 1048576.0 + 0.5).toLong
       val n = a.length; val m = b.length
       val d = Array.ofDim[Long](n + 1, m + 1)
       for (i <- 0 to n; j <- 0 to m)
@@ -56,8 +50,6 @@ object Round35 {
         d(i)(j) = c + math.min(d(i - 1)(j), math.min(d(i)(j - 1), d(i - 1)(j - 1)))
       }
       val lockstep = (0 until math.min(n, m)).map(i => qiL(math.abs(a(i) - b(i)))).sum
-      def snapD(x: Double): Double =
-        math.floor(x * 1073741824.0 + 0.5) / 1073741824.0
       import s.implicits._
       Seq((n.toLong, m.toLong,
         snapD(d(n)(m).toDouble / 1048576.0 / (n + m)),

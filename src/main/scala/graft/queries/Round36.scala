@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-36 additions (q494+): serving-math, local-privacy and layout
@@ -17,9 +18,6 @@ import graft.sources.Tables
   * Round13-35.
   */
 object Round36 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
 
   // ---------------------------------------------------------------- q494
 
@@ -98,9 +96,6 @@ object Round36 {
 
   private def rrSql(spark: Boolean): String = {
     val tbl = if (spark) "r36_events" else "events"
-    def md5i(seed: String): String =
-      if (spark) s"CAST(conv(substring(md5($seed), 1, 8), 16, 10) AS BIGINT)"
-      else s"CAST(('0x' || substring(md5($seed), 1, 8)) AS BIGINT)"
     val str = if (spark) "STRING" else "VARCHAR"
     s"""WITH modal AS (
           SELECT user_id, event_type AS true_cat FROM (
@@ -116,8 +111,8 @@ object Round36 {
         k AS (SELECT CAST(count(*) AS BIGINT) AS k FROM cats),
         coins AS (
           SELECT m.user_id, m.true_cat,
-                 ${md5i(s"'rr:keep:' || CAST(m.user_id AS $str)")} % 4 AS keep_coin,
-                 ${md5i(s"'rr:pick:' || CAST(m.user_id AS $str)")} % (SELECT k FROM k)
+                 ${md5i(s"'rr:keep:' || CAST(m.user_id AS $str)", spark)} % 4 AS keep_coin,
+                 ${md5i(s"'rr:pick:' || CAST(m.user_id AS $str)", spark)} % (SELECT k FROM k)
                    AS pick_ci
           FROM modal m),
         perturbed AS (
@@ -205,6 +200,7 @@ object Round36 {
         .orderBy(F.col("n_vn"))
     },
     Some {
+      // 12 hex digits (48 bits), not SqlFragments.md5i's 8 — a different hash
       def md5i(seed: String): String =
         s"CAST(('0x' || substring(md5($seed), 1, 12)) AS BIGINT)"
       s"""WITH keys AS (

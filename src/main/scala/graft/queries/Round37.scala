@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-37 additions (q497+): evaluation-budget and trajectory
@@ -12,12 +13,6 @@ import graft.sources.Tables
   * is heading). House invariants as Round13-36.
   */
 object Round37 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
 
   // ---------------------------------------------------------------- q497
 
@@ -42,9 +37,6 @@ object Round37 {
 
   private def halvingSql(spark: Boolean): String = {
     val tbl = if (spark) "r37_events" else "events"
-    def md5i(seed: String): String =
-      if (spark) s"CAST(conv(substring(md5($seed), 1, 8), 16, 10) AS BIGINT)"
-      else s"CAST(('0x' || substring(md5($seed), 1, 8)) AS BIGINT)"
     val str = if (spark) "STRING" else "VARCHAR"
     // survivors after each selection stage, over the bounded means table
     def stage(k: Int, prev: String, budgetIdx: Int, keep: Int): String =
@@ -55,10 +47,10 @@ object Round37 {
               FROM means m JOIN $prev p ON p.arm = m.arm) r
             WHERE rn <= $keep)"""
     s"""WITH pulls AS (
-          SELECT ${md5i(s"'arm:' || CAST(user_id AS $str)")} % 16 AS arm,
+          SELECT ${md5i(s"'arm:' || CAST(user_id AS $str)", spark)} % 16 AS arm,
                  CAST(round(value * 100) AS BIGINT) AS cents,
                  row_number() OVER (
-                   PARTITION BY ${md5i(s"'arm:' || CAST(user_id AS $str)")} % 16
+                   PARTITION BY ${md5i(s"'arm:' || CAST(user_id AS $str)", spark)} % 16
                    ORDER BY ts, event_id) AS pull
           FROM $tbl),
         means AS (

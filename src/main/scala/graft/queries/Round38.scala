@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-38 additions (q499+): language-model interpolation and the
@@ -14,12 +15,6 @@ import graft.sources.Tables
   * the entire pipeline. House invariants as Round13-37.
   */
 object Round38 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
 
   // ---------------------------------------------------------------- q499
 
@@ -44,29 +39,14 @@ object Round38 {
 
   private def jmSql(spark: Boolean): String = {
     val tbl = if (spark) "r38_documents" else "documents"
-    def md5i(seed: String): String =
-      if (spark) s"CAST(conv(substring(md5($seed), 1, 8), 16, 10) AS BIGINT)"
-      else s"CAST(('0x' || substring(md5($seed), 1, 8)) AS BIGINT)"
     val str = if (spark) "STRING" else "VARCHAR"
-    val toks =
-      if (spark)
-        s"""SELECT doc_id, pos, word
-            FROM (SELECT doc_id, posexplode(split(lower(text), '[^a-z]+')) AS (pos, word)
-                  FROM $tbl) x WHERE word <> ''"""
-      else
-        s"""SELECT doc_id, pos, word
-            FROM (SELECT doc_id,
-                         CAST(unnest(generate_series(1, len(parts))) AS INT) - 1 AS pos,
-                         unnest(parts) AS word
-                  FROM (SELECT doc_id,
-                               string_split_regex(lower(text), '[^a-z]+') AS parts
-                        FROM $tbl)) x WHERE word <> ''"""
+    val toks = posTokens(tbl, spark, "doc_id")
     val lambdas =
       if (spark) "SELECT CAST(ll AS DOUBLE) / 4.0 AS lam FROM (SELECT explode(array(1, 2, 3)) AS ll)"
       else "SELECT CAST(ll AS DOUBLE) / 4.0 AS lam FROM (SELECT unnest([1, 2, 3]) AS ll)"
     s"""WITH split AS (
           SELECT doc_id,
-                 CASE WHEN ${md5i(s"'jm:' || CAST(doc_id AS $str)")} % 5 = 0
+                 CASE WHEN ${md5i(s"'jm:' || CAST(doc_id AS $str)", spark)} % 5 = 0
                       THEN 'test' ELSE 'train' END AS slice
           FROM $tbl),
         tok AS (

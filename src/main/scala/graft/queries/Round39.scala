@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-39 additions (q501+): the serving/training audits the first 38
@@ -18,33 +19,6 @@ import graft.sources.Tables
   * the corpus).
   */
 object Round39 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
-
-  private def md5i(seed: String, spark: Boolean): String =
-    if (spark) s"CAST(conv(substring(md5($seed), 1, 8), 16, 10) AS BIGINT)"
-    else s"CAST(('0x' || substring(md5($seed), 1, 8)) AS BIGINT)"
-
-  /** Kept-token relation (doc_id, pos, word): the catalogue's standard
-    * lower/[^a-z]+ tokenizer, both flavors.
-    */
-  private def tokCte(tbl: String, spark: Boolean): String =
-    if (spark)
-      s"""SELECT doc_id, pos, word
-          FROM (SELECT doc_id, posexplode(split(lower(text), '[^a-z]+')) AS (pos, word)
-                FROM $tbl) x WHERE word <> ''"""
-    else
-      s"""SELECT doc_id, pos, word
-          FROM (SELECT doc_id,
-                       CAST(unnest(generate_series(1, len(parts))) AS INT) - 1 AS pos,
-                       unnest(parts) AS word
-                FROM (SELECT doc_id,
-                             string_split_regex(lower(text), '[^a-z]+') AS parts
-                      FROM $tbl)) x WHERE word <> ''"""
 
   /** Per-document kept-token count, both flavors. */
   private def ntokExpr(spark: Boolean): String =
@@ -80,7 +54,7 @@ object Round39 {
     val ex =
       if (spark) "SELECT explode(sequence(0, 7)) AS e"
       else "SELECT unnest(range(0, 8)) AS e"
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${posTokens(tbl, spark, "doc_id")}),
         nt AS (SELECT CAST(count(*) AS BIGINT) AS n FROM tok),
         ex AS ($ex),
         gate AS (

@@ -281,7 +281,7 @@ object Round4 {
       graft.sources.LakeLog.overwrite(orders.filter(col("o_orderkey") % 2 === 1), path)
       graft.sources.LakeLog.append(orders.filter(col("o_orderkey") % 2 === 0), path)
       graft.sources.LakeLog.overwrite(orders.filter(col("o_orderstatus") === "F"), path)
-      def snap(v: Long) =
+      def snapshot(v: Long) =
         graft.sources.LakeLog
           .read(s, path, v)
           .agg(
@@ -289,7 +289,7 @@ object Round4 {
             sum(col("o_orderkey")).as("key_sum"),
             round(sum(col("o_totalprice")), 2).as("price_sum"))
           .select(lit(v).as("version"), col("n"), col("key_sum"), col("price_sum"))
-      snap(1).unionByName(snap(2)).unionByName(snap(3))
+      snapshot(1).unionByName(snapshot(2)).unionByName(snapshot(3))
     },
     Some("""SELECT CAST(v AS BIGINT) AS version, count(*) AS n,
                    CAST(sum(o_orderkey) AS BIGINT) AS key_sum,

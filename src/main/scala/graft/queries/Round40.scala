@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-40 additions (q507+): trend/weighting/masking audits that
@@ -16,31 +17,6 @@ import graft.sources.Tables
   * single-partition window).
   */
 object Round40 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
-
-  private def md5i(seed: String, spark: Boolean): String =
-    if (spark) s"CAST(conv(substring(md5($seed), 1, 8), 16, 10) AS BIGINT)"
-    else s"CAST(('0x' || substring(md5($seed), 1, 8)) AS BIGINT)"
-
-  private def tokCte(tbl: String, spark: Boolean): String =
-    if (spark)
-      s"""SELECT source, doc_id, pos, word
-          FROM (SELECT source, doc_id,
-                       posexplode(split(lower(text), '[^a-z]+')) AS (pos, word)
-                FROM $tbl) x WHERE word <> ''"""
-    else
-      s"""SELECT source, doc_id, pos, word
-          FROM (SELECT source, doc_id,
-                       CAST(unnest(generate_series(1, len(parts))) AS INT) - 1 AS pos,
-                       unnest(parts) AS word
-                FROM (SELECT source, doc_id,
-                             string_split_regex(lower(text), '[^a-z]+') AS parts
-                      FROM $tbl)) x WHERE word <> ''"""
 
   // ---------------------------------------------------------------- q507
 
@@ -199,7 +175,7 @@ object Round40 {
   private def spanCorruptionSql(spark: Boolean): String = {
     val tbl = if (spark) "r40_documents" else "documents"
     val str = if (spark) "STRING" else "VARCHAR"
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${posTokens(tbl, spark, "source", "doc_id")}),
         marked AS (
           SELECT source, doc_id, pos
           FROM tok
@@ -316,7 +292,7 @@ object Round40 {
     val etas =
       if (spark) "SELECT explode(array(1, 4)) AS eta"
       else "SELECT unnest([1, 4]) AS eta"
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+    s"""WITH tok AS (${posTokens(tbl, spark, "source", "doc_id")}),
         cw AS (SELECT word, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1),
         tt AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM cw),
         sl AS (

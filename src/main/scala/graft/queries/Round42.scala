@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.operators.Dedup
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-42 additions (q519+): survey-design, spatial and
@@ -15,16 +16,6 @@ import graft.sources.Tables
   * actually tested). House invariants as Round13-41.
   */
 object Round42 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
-
-  private def md5i(seed: String, spark: Boolean): String =
-    if (spark) s"CAST(conv(substring(md5($seed), 1, 8), 16, 10) AS BIGINT)"
-    else s"CAST(('0x' || substring(md5($seed), 1, 8)) AS BIGINT)"
 
   // ---------------------------------------------------------------- q519
 
@@ -295,19 +286,7 @@ object Round42 {
   private def positionalSql(spark: Boolean): String = {
     val tbl = if (spark) "r42_documents" else "documents"
     val idiv = if (spark) "div" else "//"
-    val toks =
-      if (spark)
-        s"""SELECT doc_id, pos, word
-            FROM (SELECT doc_id, posexplode(split(lower(text), '[^a-z]+')) AS (pos, word)
-                  FROM $tbl) x WHERE word <> ''"""
-      else
-        s"""SELECT doc_id, pos, word
-            FROM (SELECT doc_id,
-                         CAST(unnest(generate_series(1, len(parts))) AS INT) - 1 AS pos,
-                         unnest(parts) AS word
-                  FROM (SELECT doc_id,
-                               string_split_regex(lower(text), '[^a-z]+') AS parts
-                        FROM $tbl)) x WHERE word <> ''"""
+    val toks = posTokens(tbl, spark, "doc_id")
     s"""WITH tok AS ($toks),
         rt AS (SELECT doc_id, word,
                       CAST(row_number() OVER (PARTITION BY doc_id ORDER BY pos) - 1

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions.col
 
 import graft.operators.Similarity
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-44 additions (q530+): the serving-side retrieval funnel
@@ -16,16 +17,6 @@ import graft.sources.Tables
   * ordered positional fold contract as the q46/q99 replay oracles.
   */
 object Round44 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
-
-  private def md5i(seed: String, spark: Boolean): String =
-    if (spark) s"CAST(conv(substring(md5($seed), 1, 8), 16, 10) AS BIGINT)"
-    else s"CAST(('0x' || substring(md5($seed), 1, 8)) AS BIGINT)"
 
   // ---------------------------------------------------------------- q530
 

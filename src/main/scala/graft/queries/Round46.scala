@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-46 additions (q542+): long-memory, inventory, econometrics,
@@ -13,16 +14,6 @@ import graft.sources.Tables
   * permutations. House invariants as Round13-45.
   */
 object Round46 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
-
-  private def md5i(seed: String, spark: Boolean): String =
-    if (spark) s"CAST(conv(substring(md5($seed), 1, 8), 16, 10) AS BIGINT)"
-    else s"CAST(('0x' || substring(md5($seed), 1, 8)) AS BIGINT)"
 
   // ---------------------------------------------------------------- q542
 

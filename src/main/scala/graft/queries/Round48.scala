@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-48 additions (q554+): extremes, cointegration, survival,
@@ -15,12 +16,6 @@ import graft.sources.Tables
   * groupings. House invariants as Round13-47.
   */
 object Round48 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
 
   // ---------------------------------------------------------------- q554
 
@@ -342,8 +337,6 @@ object Round48 {
     "q558_erlang_b_curve",
     (s, dir) => {
       import org.apache.spark.sql.{functions => F}
-      def snapD(x: Double): Double =
-        math.floor(x * 1073741824.0 + 0.5) / 1073741824.0
       val row = Tables.events(s, dir)
         .selectExpr("unix_micros(ts) AS t")
         .agg(F.count(F.lit(1)).cast("double").as("n"),

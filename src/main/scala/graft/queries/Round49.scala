@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-49 additions (q560+): corpus frequency-spectrum and
@@ -18,15 +19,10 @@ import graft.sources.Tables
   */
 object Round49 {
 
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
-
   /** Per-source (source, word) token stream — the q419/q427 lowercase
     * alpha-run convention so every spectrum query shares one notion of
-    * "word" with the established Zipf/Heaps sheets.
+    * "word" with the established Zipf/Heaps sheets. Kept local: an
+    * unfiltered, positionless word stream, unlike [[SqlFragments]]'.
     */
   private def tokCte(tbl: String, spark: Boolean): String =
     if (spark)

@@ -842,7 +842,7 @@ object Round5 {
   )
 
   /** STREAM-STREAM FULL OUTER join
-    * ([[graft.streaming.StreamingOps.clickPurchaseAttributionFullOuter]])
+    * ([[graft.streaming.StreamingOps.clickPurchaseAttribution]], "fullOuter")
     * — completes the streaming join matrix (inner q66, left q78):
     * unmatched rows on BOTH sides surface after watermark proof. Oracle:
     * the equivalent batch full θ-join.

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-52 additions (q571+): lake-health audits — the checks a data
@@ -13,9 +14,6 @@ import graft.sources.Tables
   * reported rates. House invariants as Round13–51.
   */
 object Round52 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
 
   // ---------------------------------------------------------------- q571
 

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-53 additions (q575+): robust-fit and equity audits — an EXACT
@@ -14,12 +15,6 @@ import graft.sources.Tables
   * Round13–52.
   */
 object Round53 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
 
   // ---------------------------------------------------------------- q575
 

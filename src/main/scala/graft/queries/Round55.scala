@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-55 additions (q582+): measurement-reliability panel — Cronbach's
@@ -15,9 +16,6 @@ import graft.sources.Tables
   * snapped doubles only at the final projection.
   */
 object Round55 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
 
   // ---------------------------------------------------------------- q582
 

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-57 additions (q588+): inequality-decomposition panel over
@@ -16,12 +17,6 @@ import graft.sources.Tables
   * every aggregation level, snapped doubles only in the projection.
   */
 object Round57 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
 
   /** Per-customer spend cents joined to nation — shared by all three. */
   private def spendCte(tbl: String): String =

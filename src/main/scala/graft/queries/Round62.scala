@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-62 additions (q602+): physical-design advisor panel — the three
@@ -15,9 +16,6 @@ import graft.sources.Tables
   * ln 2. House invariants as Round13–61.
   */
 object Round62 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
 
   // ---------------------------------------------------------------- q602
 

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-63 additions (q605+): forecast-evaluation panel over the daily
@@ -16,12 +17,6 @@ import graft.sources.Tables
   * seasonal-naive MASE. House invariants as Round13–62.
   */
 object Round63 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
-
-  private def qi(x: String): String =
-    s"CAST(floor(($x) * CAST(1048576 AS DOUBLE) + 0.5) AS BIGINT)"
 
   /** Zero-filled daily series with naive/seasonal lags and the
     * last-7-days holdout marker — shared by all three queries.

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Graph}
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-64 additions (q608+): engine-depth trio (VERDICT r12 ask #7 —
@@ -31,9 +32,6 @@ import graft.sources.Tables
   * sweep per query.
   */
 object Round64 {
-
-  private def snap(x: String): String =
-    s"(floor(($x) * CAST(1073741824 AS DOUBLE) + 0.5) / CAST(1073741824 AS DOUBLE))"
 
   // ---------------------------------------------------------------- q608
 

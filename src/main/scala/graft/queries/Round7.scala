@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Drift, Graph, QuantileNorm, Retrieval, Sessionize, Survival, Timeseries}
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-7 additions (q191+): survival analysis, exact time-series
@@ -1052,7 +1053,6 @@ object Round7 {
   val q219JoinCardinality: QueryDef = QueryDef(
     "q219_join_cardinality",
     (s, dir) => {
-      val grid30 = 1073741824.0
       val perKey = Tables
         .lineitem(s, dir)
         .groupBy(col("l_partkey"))
@@ -1068,8 +1068,8 @@ object Round7 {
         .agg(
           sum(
             floor(
-              (col("nb") * col("nb")).cast("double") / col("db").cast("double") * grid30 +
-                0.5) / grid30).as("est_bucket"))
+              (col("nb") * col("nb")).cast("double") / col("db").cast("double") * Grid30 +
+                0.5) / Grid30).as("est_bucket"))
       glob
         .crossJoin(broadcast(bucketEst))
         .select(
@@ -1314,8 +1314,6 @@ object Round7 {
   val q224BrierDecomp: QueryDef = QueryDef(
     "q224_brier_decomp",
     (s, dir) => {
-      val grid30 = 1073741824.0
-      def snap(c: org.apache.spark.sql.Column) = floor(c * grid30 + 0.5) / grid30
       val scored = Tables
         .documents(s, dir)
         .select(
@@ -1894,8 +1892,6 @@ object Round7 {
   val q235RetrievalEval: QueryDef = QueryDef(
     "q235_retrieval_eval",
     (s, dir) => {
-      val grid30 = 1073741824.0
-      def snap(c: org.apache.spark.sql.Column) = floor(c * grid30 + 0.5) / grid30
       val emb = Tables.embeddings(s, dir)
       val ranked = graft.operators.Similarity
         .bruteTopK(emb, emb.filter(col("vec_id") < 10), k = 10)
@@ -2171,8 +2167,6 @@ object Round7 {
   val q240EmbeddingQa: QueryDef = QueryDef(
     "q240_embedding_qa",
     (s, dir) => {
-      val grid30 = 1073741824.0
-      def snap(c: org.apache.spark.sql.Column) = floor(c * grid30 + 0.5) / grid30
       Tables
         .embeddings(s, dir)
         .select(
@@ -2717,8 +2711,6 @@ object Round7 {
     "q250_rbo",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val grid30 = 1073741824.0
-      def snap(c: org.apache.spark.sql.Column) = floor(c * grid30 + 0.5) / grid30
       val sparse = graft.operators.TextAnalysis
         .bm25Scores(Tables.documents(s, dir), Seq("data", "query", "stream"))
         .orderBy(col("bm25").desc, col("doc_id").asc)
@@ -2884,8 +2876,6 @@ object Round7 {
     "q253_zipf_fit",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val grid30 = 1073741824.0
-      def snap(c: org.apache.spark.sql.Column) = floor(c * grid30 + 0.5) / grid30
       val top = Tables
         .documents(s, dir)
         .select(explode(split(col("text"), " ")).as("word"))
@@ -3397,8 +3387,6 @@ object Round7 {
   val q264SupplierHhi: QueryDef = QueryDef(
     "q264_supplier_hhi",
     (s, dir) => {
-      val grid30 = 1073741824.0
-      def snap(c: org.apache.spark.sql.Column) = floor(c * grid30 + 0.5) / grid30
       val rev = Tables
         .lineitem(s, dir)
         .join(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Cooccur, Eval, Intervals, Jenks, NaiveBayes, Pii, ReuseDistance, Sessionize, Shapley, Timeseries}
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-8 additions (q270+): the remaining attribution model (exact
@@ -295,9 +296,6 @@ object Round8 {
   val q276InfoGain: QueryDef = QueryDef(
     "q276_info_gain",
     (s, dir) => {
-      val grid = 1073741824.0
-      def snap(c: org.apache.spark.sql.Column) =
-        floor(c * lit(grid) + lit(0.5)) / lit(grid)
       // H(pos, n) with 0·ln0 = 0, as a reusable snapped expression
       def ent(pos: org.apache.spark.sql.Column, n: org.apache.spark.sql.Column) = {
         val p = pos.cast("double") / n.cast("double")
@@ -912,11 +910,10 @@ object Round8 {
       val agg = gaps.agg(count(lit(1)).as("n"), sum(col("dt")).as("sdt"))
       val byGap = gaps.groupBy(col("dt")).agg(count(lit(1)).as("c"))
       val wOrd = Window.orderBy(col("dt")).rowsBetween(Window.unboundedPreceding, 0)
-      val grid = 1073741824.0
       val lam = col("n").cast("double") / col("sdt").cast("double") // per µs
       val ftheo = floor(
         (lit(1.0) - exp(-(col("n").cast("double") / col("sdt").cast("double")) *
-          col("dt").cast("double"))) * lit(grid) + lit(0.5)) / lit(grid)
+          col("dt").cast("double"))) * lit(Grid30) + lit(0.5)) / lit(Grid30)
       val steps = byGap
         .withColumn("cumc", sum(col("c")).over(wOrd))
         .crossJoin(broadcast(agg))
@@ -1174,7 +1171,6 @@ object Round8 {
   val q293WordBurstiness: QueryDef = QueryDef(
     "q293_word_burstiness",
     (s, dir) => {
-      val grid = 1073741824.0
       val toks = Tables.documents(s, dir)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
         .filter(length(col("word")) > 0)
@@ -1184,7 +1180,7 @@ object Round8 {
       val expectedDf = floor(
         col("n_docs").cast("double") *
           (lit(1.0) - exp(-(col("cf").cast("double") / col("n_docs").cast("double")))) *
-          lit(grid) + lit(0.5)) / lit(grid)
+          lit(Grid30) + lit(0.5)) / lit(Grid30)
       stats
         .crossJoin(broadcast(n))
         .select(
@@ -1398,9 +1394,6 @@ object Round8 {
   val q297EbShrinkage: QueryDef = QueryDef(
     "q297_eb_shrinkage",
     (s, dir) => {
-      val grid = 1073741824.0
-      def snap(c: org.apache.spark.sql.Column) =
-        floor(c * lit(grid) + lit(0.5)) / lit(grid)
       val perUser = Tables.events(s, dir)
         .groupBy(col("user_id"))
         .agg(
@@ -1461,7 +1454,6 @@ object Round8 {
   val q298HillTail: QueryDef = QueryDef(
     "q298_hill_tail",
     (s, dir) => {
-      val grid = 1073741824.0
       val k = 500
       val w = Window.orderBy(col("v").desc, col("o_orderkey").asc)
       val ranked = Tables.orders(s, dir)
@@ -1473,8 +1465,8 @@ object Round8 {
         .filter(col("rk") <= k)
         .crossJoin(broadcast(ref))
         .select(
-          (floor(log(col("v").cast("double") / col("vref").cast("double")) * lit(grid)
-            + lit(0.5)) / lit(grid)).as("term"),
+          (floor(log(col("v").cast("double") / col("vref").cast("double")) * lit(Grid30)
+            + lit(0.5)) / lit(Grid30)).as("term"),
           col("vref"))
         .groupBy(col("vref"))
         .agg(count(lit(1)).as("k"), sum(col("term")).as("tsum"))
@@ -1507,9 +1499,6 @@ object Round8 {
   val q299TreeDepth2: QueryDef = QueryDef(
     "q299_tree_depth2",
     (s, dir) => {
-      val grid = 1073741824.0
-      def snap(c: org.apache.spark.sql.Column) =
-        floor(c * lit(grid) + lit(0.5)) / lit(grid)
       def ent(pos: org.apache.spark.sql.Column, n: org.apache.spark.sql.Column) = {
         val p = pos.cast("double") / n.cast("double")
         snap(when(pos === 0L || pos === n, 0.0)
@@ -1679,9 +1668,6 @@ object Round8 {
   val q300DrOffpolicy: QueryDef = QueryDef(
     "q300_dr_offpolicy",
     (s, dir) => {
-      val grid = 1073741824.0
-      def snap(c: org.apache.spark.sql.Column) =
-        floor(c * lit(grid) + lit(0.5)) / lit(grid)
       val base = Tables.events(s, dir).select(
         ((unix_micros(col("ts")).cast("long") / lit(3600000000L)).cast("long") % 24L).as("x"),
         col("event_type").as("a"),
@@ -2113,9 +2099,6 @@ object Round8 {
   val q306Chi2Independence: QueryDef = QueryDef(
     "q306_chi2_independence",
     (s, dir) => {
-      val grid = 1073741824.0
-      def snap(c: org.apache.spark.sql.Column) =
-        floor(c * lit(grid) + lit(0.5)) / lit(grid)
       val cells = Tables.customer(s, dir)
         .groupBy(col("c_nationkey").cast("long").as("nk"), col("c_mktsegment").as("seg"))
         .agg(count(lit(1)).as("o"))

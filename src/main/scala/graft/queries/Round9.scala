@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.operators.{EncodingAdvisor, Eval, Graph, Isotonic, Matching, Sessionize, Timeseries}
+import graft.queries.SqlFragments._
 import graft.sources.Tables
 
 /** Round-9 additions (q308+): weighted shortest paths, model
@@ -1065,8 +1066,6 @@ object Round9 {
   val q331LshPlanner: QueryDef = QueryDef(
     "q331_lsh_planner",
     (s, dir) => {
-      val grid = 1073741824.0
-      def snap(c: org.apache.spark.sql.Column) = floor(c * grid + lit(0.5)) / grid
       val combos = s.range(1, 7).select(expr("shiftleft(CAST(1 AS BIGINT), CAST(id AS INT))").as("b"))
         .select(col("b"), (lit(64L) / col("b")).cast("long").as("r"))
       def pCurve(sim: Double) =
@@ -1315,8 +1314,6 @@ object Round9 {
   val q337TheilDecomposition: QueryDef = QueryDef(
     "q337_theil",
     (s, dir) => {
-      val grid = 1073741824.0
-      def snap(c: org.apache.spark.sql.Column) = floor(c * grid + lit(0.5)) / grid
       val users = Tables.events(s, dir)
         .groupBy((col("user_id") % 5).as("g"), col("user_id"))
         .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("x"))
@@ -1373,8 +1370,6 @@ object Round9 {
   val q338Psi: QueryDef = QueryDef(
     "q338_psi",
     (s, dir) => {
-      val grid = 1073741824.0
-      def snap(c: org.apache.spark.sql.Column) = floor(c * grid + lit(0.5)) / grid
       val d0 = Tables.events(s, dir).agg(min(to_date(col("ts"))).as("d0"))
       val banded = Tables.events(s, dir)
         .crossJoin(broadcast(d0))

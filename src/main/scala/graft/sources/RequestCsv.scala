@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.model.SimRequest
 
@@ -28,7 +27,11 @@ object RequestCsv {
 
   implicit private val reqEnc: Encoder[SimRequest] = Encoders.product[SimRequest]
 
-  def read(spark: SparkSession, path: String): Dataset[SimRequest] = {
+  /** Header check plus the typed-cast projection both readers share:
+    * the raw columns ride along for error reports, and `ts` / `proc` are
+    * NULL where the value does not parse.
+    */
+  private def parse(spark: SparkSession, path: String): DataFrame = {
     val raw = spark.read
       .option("header", "true")
       .csv(path)
@@ -41,7 +44,7 @@ object RequestCsv {
     // Normalize trailing Z, parse both zoned and naive ISO-8601 (the
     // reference accepts no-Z values as naive local = UTC here, :54-59).
     val tsStr = regexp_replace(col("request_time"), "Z$", "+00:00")
-    val parsed = raw.select(
+    raw.select(
       col("user_id"),
       col("request_time").as("raw_ts"),
       col("processing_time").as("raw_proc"),
@@ -59,10 +62,26 @@ object RequestCsv {
       expr("try_cast(processing_time AS DOUBLE)").as("proc"),
       monotonically_increasing_id().as("seq")
     )
+  }
 
+  private val badTs = col("ts").isNull && col("raw_ts").isNotNull
+  private val badProc = col("proc").isNull && col("raw_proc").isNotNull
+
+  private def typed(parsed: DataFrame): Dataset[SimRequest] =
+    parsed
+      .select(
+        col("user_id").as("userId"),
+        unix_micros(col("ts")).as("requestTimeMicros"),
+        col("proc").as("processingTime"),
+        ((unix_micros(col("ts")) - lit(SimStartMicros)) / lit(1000000.0)).as("simArrivalTime"),
+        col("seq")
+      )
+      .as[SimRequest]
+
+  def read(spark: SparkSession, path: String): Dataset[SimRequest] = {
+    val parsed = parse(spark, path)
     val bad = parsed
-      .filter((col("ts").isNull && col("raw_ts").isNotNull) ||
-        (col("proc").isNull && col("raw_proc").isNotNull))
+      .filter(badTs || badProc)
       .orderBy("seq")
       .limit(1)
       .collect()
@@ -79,16 +98,7 @@ object RequestCsv {
         else s"float '${r.getAs[String]("raw_proc")}'"
       throw CsvParseException(s"Malformed $what at data row $rowNo")
     }
-
-    parsed
-      .select(
-        col("user_id").as("userId"),
-        unix_micros(col("ts")).as("requestTimeMicros"),
-        col("proc").as("processingTime"),
-        ((unix_micros(col("ts")) - lit(SimStartMicros)) / lit(1000000.0)).as("simArrivalTime"),
-        col("seq")
-      )
-      .as[SimRequest]
+    typed(parsed)
   }
 
   /** LENIENT lake-ingest variant of the same contract: instead of failing
@@ -104,41 +114,7 @@ object RequestCsv {
     * entirely distributed (no driver-side failure probe).
     */
   def readLenient(spark: SparkSession, path: String): (Dataset[SimRequest], DataFrame) = {
-    val raw = spark.read
-      .option("header", "true")
-      .csv(path)
-    val required = Seq("user_id", "request_time", "processing_time")
-    val missing = required.filterNot(raw.columns.contains)
-    if (missing.nonEmpty)
-      throw CsvParseException(s"CSV is missing required column(s): ${missing.mkString(", ")}")
-
-    val tsStr = regexp_replace(col("request_time"), "Z$", "+00:00")
-    val parsed = raw.select(
-      col("user_id"),
-      col("request_time").as("raw_ts"),
-      col("processing_time").as("raw_proc"),
-      coalesce(
-        try_to_timestamp(tsStr, lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")),
-        try_to_timestamp(tsStr, lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
-        try_to_timestamp(col("request_time"), lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")),
-        try_to_timestamp(col("request_time"), lit("yyyy-MM-dd'T'HH:mm:ss")),
-        try_to_timestamp(tsStr)
-      ).as("ts"),
-      expr("try_cast(processing_time AS DOUBLE)").as("proc"),
-      monotonically_increasing_id().as("seq")
-    )
-    val badTs = col("ts").isNull && col("raw_ts").isNotNull
-    val badProc = col("proc").isNull && col("raw_proc").isNotNull
-    val clean = parsed
-      .filter(!badTs && !badProc)
-      .select(
-        col("user_id").as("userId"),
-        unix_micros(col("ts")).as("requestTimeMicros"),
-        col("proc").as("processingTime"),
-        ((unix_micros(col("ts")) - lit(SimStartMicros)) / lit(1000000.0)).as("simArrivalTime"),
-        col("seq")
-      )
-      .as[SimRequest]
+    val parsed = parse(spark, path)
     val quarantined = parsed
       .filter(badTs || badProc)
       .select(
@@ -147,6 +123,6 @@ object RequestCsv {
         col("raw_proc").as("processing_time"),
         when(badTs, "malformed_timestamp").otherwise("malformed_float").as("reason")
       )
-    (clean, quarantined)
+    (typed(parsed.filter(!badTs && !badProc)), quarantined)
   }
 }

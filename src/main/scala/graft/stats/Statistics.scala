@@ -19,12 +19,10 @@ object Statistics {
   /** snake_case DataFrame view of the completed set (engine-facing schema,
     * SURVEY §1.4).
     */
-  def toDF(completed: Dataset[SimCompleted]): DataFrame =
-    completed.toDF(
-      "user_id", "request_time_micros", "processing_time", "sim_arrival_time",
-      "arrival_time_in_queue", "start_time", "finish_time", "used_api_id",
-      "queue", "status", "seq"
-    )
+  def toDF(completed: Dataset[SimCompleted]): DataFrame = {
+    val snake = SnakeRenames.toMap
+    completed.toDF(completed.columns.toIndexedSeq.map(c => snake.getOrElse(c, c)): _*)
+  }
 
   /** camelCase → snake_case rename for DataFrames derived from
     * [[SimCompleted]] structs (e.g. the scenario fan-out's nested column).
@@ -75,18 +73,12 @@ object Statistics {
     )
   }
 
-  def summary(completedDF: DataFrame): DataFrame =
-    completedDF
-      .select(
-        processedPred.as("is_processed"),
-        queuingTime.as("qt"),
-        col("queue")
-      )
-      .agg(summaryAggs.head, summaryAggs.tail: _*)
+  def summary(completedDF: DataFrame): DataFrame = summaryByGroup(completedDF, Nil)
 
   /** Per-group summary (e.g. per scenario of a fan-out run) — the same
     * one-pass aggregate with a grouping key; scales to any number of
-    * concurrent scenarios with a single shuffle.
+    * concurrent scenarios with a single shuffle. No keys is [[summary]]
+    * (`Dataset.agg` is `groupBy().agg`).
     */
   def summaryByGroup(completedDF: DataFrame, groupCols: Seq[String]): DataFrame =
     completedDF

@@ -35,6 +35,7 @@ object GenStream {
         max(col("score")).as("max_score"))
     val name = s"gen_stream_${System.nanoTime()}"
     var batches = 0
+    // Not Drain.toMemory: the batch count is read off the live query's progress.
     StreamingOps.withStatePartitions(spark) {
       val q = agg.writeStream
         .outputMode("complete")

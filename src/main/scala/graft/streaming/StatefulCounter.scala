@@ -158,29 +158,10 @@ object StatefulCounter {
     * query.
     */
   def runTypeCounts(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val name = s"tws_typecounts_${System.nanoTime()}"
-      StreamingOps.withStatePartitions(spark) {
-        val q = typeCounts(StreamingOps.eventsStream(spark, sfDir))
-          .writeStream
-          .outputMode("update")
-          .format("memory")
-          .queryName(name)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-      spark.table(name)
-        .groupBy(col("user_id"), col("event_type"))
-        .agg(max(col("n")).as("n"))
-    } finally {
-      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    }
+    val events = StreamingOps.eventsStream(spark, sfDir)
+    Drain.withRocksDb(spark)(Drain.toMemory(spark, "tws_typecounts", typeCounts(events).toDF(), "update"))
+      .groupBy(col("user_id"), col("event_type"))
+      .agg(max(col("n")).as("n"))
   }
 
   /** The streaming transform: keyed by user, update-mode emissions. */
@@ -198,30 +179,11 @@ object StatefulCounter {
     * final running total. RocksDB provider scoped to this query.
     */
   def run(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val name = s"tws_totals_${System.nanoTime()}"
-      StreamingOps.withStatePartitions(spark) {
-        val q = runningTotals(StreamingOps.eventsStream(spark, sfDir))
-          .writeStream
-          .outputMode("update")
-          .format("memory")
-          .queryName(name)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
+    val events = StreamingOps.eventsStream(spark, sfDir)
+    Drain.withRocksDb(spark)(Drain.toMemory(spark, "tws_totals", runningTotals(events).toDF(), "update"))
       // keep the final emission per user (running count is monotonic)
-      spark.table(name)
-        .groupBy(col("user_id"))
-        .agg(max(struct(col("n_events"), col("total_value"))).as("t"))
-        .select(col("user_id"), col("t.n_events"), col("t.total_value"))
-    } finally {
-      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    }
+      .groupBy(col("user_id"))
+      .agg(max(struct(col("n_events"), col("total_value"))).as("t"))
+      .select(col("user_id"), col("t.n_events"), col("t.total_value"))
   }
 }

@@ -11,10 +11,8 @@ import org.apache.spark.sql.streaming.{
   TTLConfig,
   TimeMode,
   TimerValues,
-  Trigger,
   ValueState
 }
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 /** Typed rows for the transformWithState user-profile operator. */
 case class TwsEvent(user_id: Long, event_type: String, cents: Long, us: Long)
@@ -322,8 +320,6 @@ object StatefulProfile {
   /** 30 minutes, in micros — matches the session-window family's gap. */
   val SessionGapUs: Long = 30L * 60 * 1000000
 
-  private val SentinelUser = -1L
-
   /** The timer-session pipeline over an event stream carrying a `ts`
     * watermark column. The 1-hour delay ≥ the 30-minute gap — the
     * condition under which timer closes agree with batch
@@ -352,56 +348,15 @@ object StatefulProfile {
     * key is filtered out.
     */
   def runTimerSessions(spark: SparkSession, sfDir: String): DataFrame = {
-    val sentinelDir = java.nio.file.Files
-      .createTempDirectory("graft_tws_sentinel").resolve("data").toString
-    import spark.implicits._
-    val rawSchema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", LongType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType),
-      StructField("props", StringType)))
-    // raw nanos-since-epoch sentinel (year ~2200), own source directory
-    Seq((-1L, 7258118400000000000L, SentinelUser, "sentinel", 0.0, "{}"))
-      .toDF(rawSchema.fieldNames.toIndexedSeq: _*)
-      .coalesce(1).write.parquet(sentinelDir)
-    val sentinel = spark.readStream
-      .schema(rawSchema)
-      .parquet(sentinelDir)
-      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    val stream = StreamingOps.eventsStream(spark, sfDir).unionByName(sentinel)
+    val stream = StreamingOps.eventsStream(spark, sfDir)
+      .unionByName(StreamingOps.sentinelEvents(spark, "sentinel"))
     drainUpdate(spark, sessionTimerStream(stream))
-      .filter(col("user_id") =!= SentinelUser)
+      .filter(col("user_id") =!= StreamingOps.SentinelUser)
   }
 
   /** Update-mode AvailableNow drain into a memory sink under the RocksDB
     * provider.
     */
-  def drainUpdate(spark: SparkSession, df: DataFrame): DataFrame = {
-    val name = s"tws_${System.nanoTime()}"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(
-      provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      StreamingOps.withStatePartitions(spark) {
-        val q = df.writeStream
-          .outputMode("update")
-          .format("memory")
-          .queryName(name)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
-      }
-    }
-    spark.table(name)
-  }
+  def drainUpdate(spark: SparkSession, df: DataFrame): DataFrame =
+    Drain.withRocksDb(spark)(Drain.toMemory(spark, "tws", df, "update"))
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.{MinHashSignature, TokenShingleHashes}
 import graft.operators.Dedup
@@ -143,19 +143,9 @@ object StreamingNearDup {
         ).as("jaccard")
       )
       .filter(col("jaccard") >= threshold)
-    val name = s"stream_neardup_${System.nanoTime()}"
-    StreamingOps.withStatePartitions(spark, stateParts) {
-      val q = verified.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
+    val drained = Drain.toMemory(spark, "stream_neardup", verified, "append", stateParts)
     // The memory sink holds the drained rows; the shingle cache is done.
     sh.unpersist()
-    spark.table(name).distinct()
+    drained.distinct()
   }
 }

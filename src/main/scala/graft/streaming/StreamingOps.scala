@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
+import graft.queries.SqlFragments.snap
+
 /** Structured Streaming surface of the engine (SURVEY §2.2 streaming rows).
   *
   * The lake's `events` table doubles as a replayable stream: `readStream`
@@ -83,7 +85,7 @@ object StreamingOps {
     * input).
     */
   def runHourlyWindowAgg(spark: SparkSession, sfDir: String): DataFrame =
-    drainComplete(spark, "stream_hourly", hourlyWindowAgg(eventsStream(spark, sfDir)))
+    Drain.toMemory(spark, "stream_hourly", hourlyWindowAgg(eventsStream(spark, sfDir)))
 
   private val documentsSchema = StructType(Seq(
     StructField("doc_id", LongType),
@@ -121,7 +123,7 @@ object StreamingOps {
 
   /** Run the streaming dedup to completion over the bounded parquet stream. */
   def runStreamingDedup(spark: SparkSession, sfDir: String): DataFrame =
-    drainComplete(spark, "stream_dedup", streamingDedupGroups(documentsStream(spark, sfDir)))
+    Drain.toMemory(spark, "stream_dedup", streamingDedupGroups(documentsStream(spark, sfDir)))
 
   /** STREAMING HyperLogLog: per-event-type distinct-user registers
     * maintained as ONE stateful aggregation over the event stream —
@@ -144,7 +146,7 @@ object StreamingOps {
       .groupBy(col("event_type"), col("bucket"))
       .agg(max(col("rho")).as("mj"))
     Hll.estimateFromRegisters(
-      drainComplete(spark, "stream_hll", regs),
+      Drain.toMemory(spark, "stream_hll", regs),
       "event_type",
       512)
   }
@@ -174,7 +176,7 @@ object StreamingOps {
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("true_cnt"))
     CountMin.probeCounters(
-      drainComplete(spark, "stream_cms", counters), probes, "user_id", d, w)
+      Drain.toMemory(spark, "stream_cms", counters), probes, "user_id", d, w)
   }
 
   /** STREAMING DDSketch: per-type log-γ bin counts maintained as ONE
@@ -195,7 +197,7 @@ object StreamingOps {
       .groupBy(col("event_type"), col("i"))
       .agg(count(lit(1)).as("cnt"))
     DdSketch.estimateFromBins(
-      drainComplete(spark, "stream_ddsketch", bins), "event_type")
+      Drain.toMemory(spark, "stream_ddsketch", bins), "event_type")
   }
 
   /** STREAMING MOMENTS: per-type (n, Σc, Σc², max) in integer cents as
@@ -224,7 +226,7 @@ object StreamingOps {
         sum(col("c")).as("s"),
         sum(col("c") * col("c")).as("s2"),
         max(col("c")).as("mx"))
-    drainComplete(spark, "stream_moments", moments)
+    Drain.toMemory(spark, "stream_moments", moments)
       .withColumn("varnum", col("n") * col("s2") - col("s") * col("s"))
       .select(
         col("event_type"),
@@ -257,41 +259,9 @@ object StreamingOps {
     val deduped = eventsStream(spark, sfDir)
       .withWatermark("ts", "365 days")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
-    val name = s"stream_dedup_wm_${System.nanoTime()}"
-    withStatePartitions(spark) {
-      val q = deduped.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name)
+    Drain.toMemory(spark, "stream_dedup_wm", deduped, "append")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_keys"))
-  }
-
-  /** Drain a complete-mode streaming aggregation over a bounded source
-    * into a memory sink and hand back the final table.
-    */
-  private def drainComplete(spark: SparkSession, prefix: String, df: DataFrame): DataFrame = {
-    val name = s"${prefix}_${System.nanoTime()}"
-    withStatePartitions(spark) {
-      val q = df.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    spark.table(name)
   }
 
   /** Incremental lake ingest: drain a streaming DataFrame into a
@@ -412,37 +382,39 @@ object StreamingOps {
         col("n_events"),
         col("sum_value"))
 
-  private val SentinelUser = -1L
+  /** Reserved user id of the bounded-replay sentinel events. */
+  private[streaming] val SentinelUser = -1L
+
+  /** Far-future SENTINEL events (raw ts year ~2286), one per event type,
+    * streamed from their own side directory. Unioned into a bounded
+    * events replay, the batch holding them jumps the watermark past every
+    * real event, so the trailing no-data micro-batch flushes whatever the
+    * watermark was still holding back; callers filter the sentinels' own
+    * output by [[SentinelUser]].
+    */
+  private[streaming] def sentinelEvents(spark: SparkSession, eventTypes: String*): DataFrame = {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_sentinel").resolve("data").toString
+    import spark.implicits._
+    eventTypes.zipWithIndex
+      .map { case (t, i) => (-1L - i, 7258118400000000000L, SentinelUser, t, 0.0, "{}") }
+      .toDF(eventsRawSchema.fieldNames.toIndexedSeq: _*)
+      .coalesce(1).write.parquet(dir)
+    spark.readStream
+      .schema(eventsRawSchema)
+      .parquet(dir)
+      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
+  }
 
   /** Drain the streaming session aggregation over the bounded events
     * replay (sentinel-flushed; see [[sessionAgg]]) — row-identical to the
     * batch q48 session_window query.
     */
   def runStreamingSessionAgg(spark: SparkSession, sfDir: String): DataFrame = {
-    val sentinelDir = java.nio.file.Files
-      .createTempDirectory("graft_sentinel").resolve("data").toString
-    import spark.implicits._
-    // raw events shape: ts as nanos-since-epoch long (year ~2286)
-    Seq((-1L, 7258118400000000000L, SentinelUser, "sentinel", 0.0, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.parquet(sentinelDir)
-    val sentinel = spark.readStream
-      .schema(eventsRawSchema)
-      .parquet(sentinelDir)
-      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    val agg = sessionAgg(eventsStream(spark, sfDir).unionByName(sentinel))
-    val name = s"stream_session_${System.nanoTime()}"
-    withStatePartitions(spark) {
-      val q = agg.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name).filter(col("user_id") =!= SentinelUser)
+    val agg = sessionAgg(
+      eventsStream(spark, sfDir).unionByName(sentinelEvents(spark, "sentinel")))
+    Drain.toMemory(spark, "stream_session", agg, "append")
+      .filter(col("user_id") =!= SentinelUser)
   }
 
   /** STREAM-STREAM inner join with event-time range bounds: every purchase
@@ -459,12 +431,21 @@ object StreamingOps {
     * Inner-join matches emit as they are found (append mode) — only state
     * EVICTION waits for the watermark, so a bounded replay drains
     * completely.
+    *
+    * `joinType` also takes "leftOuter" (see
+    * [[clickPurchaseAttributionLeftOuter]]) and "fullOuter": unmatched
+    * CLICKS null-extend like the left join, and unmatched PURCHASES also
+    * surface once their side's watermark proves no in-window click can
+    * arrive. Same state bound as the inner join; under a full outer join
+    * the user key is coalesced across sides so every output row names its
+    * entity.
     */
   def clickPurchaseAttribution(
       clicks: DataFrame,
       purchases: DataFrame,
       windowMinutes: Int = 30,
-      watermarkDelay: String = "1 hour"
+      watermarkDelay: String = "1 hour",
+      joinType: String = "inner"
   ): DataFrame = {
     val c = clicks
       .select(
@@ -484,11 +465,12 @@ object StreamingOps {
         col("user_id") === col("p_user_id") &&
           col("purchase_ts") >= col("click_ts") &&
           col("purchase_ts") <= col("click_ts") + expr(s"INTERVAL $windowMinutes MINUTES"),
-        "inner")
+        joinType)
       .select(
         col("click_id"),
         col("purchase_id"),
-        col("user_id"),
+        if (joinType == "fullOuter") coalesce(col("user_id"), col("p_user_id")).as("user_id")
+        else col("user_id"),
         unix_micros(col("click_ts")).as("click_ts_us"),
         unix_micros(col("purchase_ts")).as("purchase_ts_us"),
         col("purchase_value"))
@@ -514,34 +496,8 @@ object StreamingOps {
       purchases: DataFrame,
       windowMinutes: Int = 30,
       watermarkDelay: String = "1 hour"
-  ): DataFrame = {
-    val c = clicks
-      .select(
-        col("event_id").as("click_id"),
-        col("user_id"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", watermarkDelay)
-    val p = purchases
-      .select(
-        col("event_id").as("purchase_id"),
-        col("user_id").as("p_user_id"),
-        col("ts").as("purchase_ts"),
-        col("value").as("purchase_value"))
-      .withWatermark("purchase_ts", watermarkDelay)
-    c.join(
-        p,
-        col("user_id") === col("p_user_id") &&
-          col("purchase_ts") >= col("click_ts") &&
-          col("purchase_ts") <= col("click_ts") + expr(s"INTERVAL $windowMinutes MINUTES"),
-        "leftOuter")
-      .select(
-        col("click_id"),
-        col("purchase_id"),
-        col("user_id"),
-        unix_micros(col("click_ts")).as("click_ts_us"),
-        unix_micros(col("purchase_ts")).as("purchase_ts_us"),
-        col("purchase_value"))
-  }
+  ): DataFrame =
+    clickPurchaseAttribution(clicks, purchases, windowMinutes, watermarkDelay, "leftOuter")
 
   /** STREAMING MATERIALIZED VIEW: every micro-batch's partial aggregate
     * ([[graft.sources.MaterializedAgg.aggOf]]) merges into a
@@ -627,8 +583,6 @@ object StreamingOps {
     * PSI — which is exactly the oracle.
     */
   def runStreamPsi(spark: SparkSession, sfDir: String): DataFrame = {
-    val grid = 1073741824.0
-    def snap(c: org.apache.spark.sql.Column) = floor(c * grid + lit(0.5)) / grid
     def band = least(lit(9L), expr("CAST(round(value * 100) AS BIGINT) div 5000"))
     // d0 is static reference config — resolved once, then a plain
     // literal filter on the stream (no stream-static cross needed)
@@ -637,23 +591,12 @@ object StreamingOps {
     val ref = graft.sources.Tables.events(spark, sfDir)
       .filter(datediff(to_date(col("ts")), lit(d0)) < 15)
       .groupBy(band.as("band")).agg(count(lit(1)).as("ca"))
-    val name = s"stream_psi_${System.nanoTime()}"
-    withStatePartitions(spark) {
-      val q = eventsStream(spark, sfDir)
-        .filter(datediff(to_date(col("ts")), lit(d0)) >= 15)
-        .groupBy(band.as("band"))
-        .agg(count(lit(1)).as("cb"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
+    val live = eventsStream(spark, sfDir)
+      .filter(datediff(to_date(col("ts")), lit(d0)) >= 15)
+      .groupBy(band.as("band"))
+      .agg(count(lit(1)).as("cb"))
     val banded = ref
-      .join(spark.table(name), Seq("band"), "full_outer")
+      .join(Drain.toMemory(spark, "stream_psi", live), Seq("band"), "full_outer")
       .select(col("band"), coalesce(col("ca"), lit(0L)).as("ca"),
         coalesce(col("cb"), lit(0L)).as("cb"))
     val tots = banded.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
@@ -686,160 +629,57 @@ object StreamingOps {
         col("c_mktsegment").as("segment"))
     val enriched = eventsStream(spark, sfDir)
       .join(broadcast(users), col("user_id") === col("user_key"), "inner")
-    val name = s"stream_static_${System.nanoTime()}"
-    // ~25 aggregate keys: scope state partitions down like every other
-    // drain here — per-store open/commit is the floor at this keyspace
-    withStatePartitions(spark) {
-      val q = enriched
+    // ~25 aggregate keys: the drain's default state partitions suit it —
+    // per-store open/commit is the floor at this keyspace
+    Drain.toMemory(
+      spark,
+      "stream_static",
+      enriched
         .groupBy(col("segment"), col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("val_sum"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name)
-  }
-
-  /** FULL OUTER stream-stream join — completes the attribution matrix
-    * (inner / left / full): unmatched CLICKS null-extend like the left
-    * join, and unmatched PURCHASES also surface once their side's
-    * watermark proves no in-window click can arrive. Same state bound as
-    * the inner join; the user key is coalesced across sides so every
-    * output row names its entity.
-    */
-  def clickPurchaseAttributionFullOuter(
-      clicks: DataFrame,
-      purchases: DataFrame,
-      windowMinutes: Int = 30,
-      watermarkDelay: String = "1 hour"
-  ): DataFrame = {
-    val c = clicks
-      .select(
-        col("event_id").as("click_id"),
-        col("user_id"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", watermarkDelay)
-    val p = purchases
-      .select(
-        col("event_id").as("purchase_id"),
-        col("user_id").as("p_user_id"),
-        col("ts").as("purchase_ts"),
-        col("value").as("purchase_value"))
-      .withWatermark("purchase_ts", watermarkDelay)
-    c.join(
-        p,
-        col("user_id") === col("p_user_id") &&
-          col("purchase_ts") >= col("click_ts") &&
-          col("purchase_ts") <= col("click_ts") + expr(s"INTERVAL $windowMinutes MINUTES"),
-        "fullOuter")
-      .select(
-        col("click_id"),
-        col("purchase_id"),
-        coalesce(col("user_id"), col("p_user_id")).as("user_id"),
-        unix_micros(col("click_ts")).as("click_ts_us"),
-        unix_micros(col("purchase_ts")).as("purchase_ts_us"),
-        col("purchase_value"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("val_sum")))
   }
 
   /** Drain the full-outer attribution join over the bounded replay; the
     * sentinel pair matches itself and is filtered by the reserved user.
     */
-  def runClickPurchaseAttributionFullOuter(spark: SparkSession, sfDir: String): DataFrame = {
-    val sentinelDir = java.nio.file.Files
-      .createTempDirectory("graft_sentinel").resolve("data").toString
-    import spark.implicits._
-    Seq(
-      (-1L, 7258118400000000000L, SentinelUser, "click", 0.0, "{}"),
-      (-2L, 7258118400000000000L, SentinelUser, "purchase", 0.0, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.parquet(sentinelDir)
-    val sentinel = spark.readStream
-      .schema(eventsRawSchema)
-      .parquet(sentinelDir)
-      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    val events = eventsStream(spark, sfDir).unionByName(sentinel)
-    val joined = clickPurchaseAttributionFullOuter(
-      events.filter(col("event_type") === "click"),
-      events.filter(col("event_type") === "purchase"))
-    val name = s"stream_attr_fo_${System.nanoTime()}"
-    withStatePartitions(spark, 4) {
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name).filter(col("user_id") =!= SentinelUser)
-  }
+  def runClickPurchaseAttributionFullOuter(spark: SparkSession, sfDir: String): DataFrame =
+    drainAttribution(spark, sfDir, "fullOuter", "stream_attr_fo")
 
   /** Drain the left-outer attribution join over the bounded events replay.
     * Sentinel rows pass both type filters (one "click", one "purchase")
     * so each side's watermark node sees the far-future timestamp; their
     * own output rows are filtered by the reserved user id.
     */
-  def runClickPurchaseAttributionLeftOuter(spark: SparkSession, sfDir: String): DataFrame = {
-    val sentinelDir = java.nio.file.Files
-      .createTempDirectory("graft_sentinel").resolve("data").toString
-    import spark.implicits._
-    Seq(
-      (-1L, 7258118400000000000L, SentinelUser, "click", 0.0, "{}"),
-      (-2L, 7258118400000000000L, SentinelUser, "purchase", 0.0, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.parquet(sentinelDir)
-    val sentinel = spark.readStream
-      .schema(eventsRawSchema)
-      .parquet(sentinelDir)
-      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    val events = eventsStream(spark, sfDir).unionByName(sentinel)
-    val joined = clickPurchaseAttributionLeftOuter(
-      events.filter(col("event_type") === "click"),
-      events.filter(col("event_type") === "purchase"))
-    val name = s"stream_attr_lo_${System.nanoTime()}"
-    withStatePartitions(spark, 4) {
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name).filter(col("user_id") =!= SentinelUser)
-  }
+  def runClickPurchaseAttributionLeftOuter(spark: SparkSession, sfDir: String): DataFrame =
+    drainAttribution(spark, sfDir, "leftOuter", "stream_attr_lo")
 
-  /** Run the attribution join over two independent bounded replays of the
-    * events table and return the drained match set.
+  /** Run the inner attribution join over the bounded events replay and
+    * return the drained match set.
     */
-  def runClickPurchaseAttribution(spark: SparkSession, sfDir: String): DataFrame = {
+  def runClickPurchaseAttribution(spark: SparkSession, sfDir: String): DataFrame =
+    drainAttribution(spark, sfDir, "inner", "stream_attr")
+
+  private def drainAttribution(
+      spark: SparkSession,
+      sfDir: String,
+      joinType: String,
+      prefix: String): DataFrame = {
+    // outer joins emit null-extended rows only once the watermark passes,
+    // so their bounded replay needs the sentinel flush
+    val outer = joinType != "inner"
     // ONE source, two filtered branches: a streaming self-join tracks a
     // single file source (one listing + one offset log) instead of two
-    val events = eventsStream(spark, sfDir)
+    val events =
+      if (outer) eventsStream(spark, sfDir).unionByName(sentinelEvents(spark, "click", "purchase"))
+      else eventsStream(spark, sfDir)
     val joined = clickPurchaseAttribution(
       events.filter(col("event_type") === "click"),
-      events.filter(col("event_type") === "purchase"))
-    val name = s"stream_attr_${System.nanoTime()}"
+      events.filter(col("event_type") === "purchase"),
+      joinType = joinType)
     // a stream-stream join keeps FOUR state stores per partition (two per
     // side); at this keyspace fewer, fatter state partitions beat the
     // default — per-store open/commit is the floor, not the join work
-    withStatePartitions(spark, 4) {
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name)
+    val out = Drain.toMemory(spark, prefix, joined, "append", stateParts = 4)
+    if (outer) out.filter(col("user_id") =!= SentinelUser) else out
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.model.{SimCompleted, SimConfig, SimRequest}
 import graft.sim.SimCore
@@ -87,20 +87,11 @@ object StreamingSim {
         simulateGroup(cfg, flushPerBatch)
       )
 
-    val name = s"stream_sim_${System.nanoTime()}"
-    StreamingOps.withStatePartitions(spark, stateParts) {
-      val q = completed
-        .toDF("scenario", "completed")
-        .select(col("scenario"), col("completed.*"))
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name)
+    Drain.toMemory(
+      spark,
+      "stream_sim",
+      completed.toDF("scenario", "completed").select(col("scenario"), col("completed.*")),
+      "append",
+      stateParts)
   }
 }

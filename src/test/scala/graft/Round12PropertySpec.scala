@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.queries.{Round11, Round12}
+import graft.queries.{Round11, Round12, SqlFragments}
 import graft.sources.Tables
 
 /** Differential checks for the round-11/12 additions, matching the
@@ -37,6 +37,48 @@ class Round12PropertySpec extends AnyFunSuite {
     */
   private def closeTo(got: Double, want: Double): Boolean =
     math.abs(got - want) <= 1e-9 * math.max(1.0, math.max(math.abs(got), math.abs(want)))
+
+  // ------------------------------------------------- shared SQL fragments
+
+  private val probes =
+    Seq(0.1, 1.0 / 3, 2.5e-7, 0.75, 123.456789, -0.7, -1.0 / 7, 1e6 + 0.3)
+
+  test("SqlFragments.snap composes as one operand: 1/snap(x) and snap(x)*2 equal driver snapD") {
+    val ss = spark
+    import ss.implicits._
+    val rows = probes.toDF("x")
+      .selectExpr("x",
+        s"1.0 / ${SqlFragments.snap("x")} AS inv",
+        s"${SqlFragments.snap("x")} * 2 AS dbl",
+        s"${SqlFragments.snap("x")} AS sx")
+      .collect()
+    assert(rows.length == probes.size)
+    rows.foreach { r =>
+      val x = r.getDouble(0)
+      assert(r.getDouble(3) == SqlFragments.snapD(x), s"snap($x)")
+      assert(r.getDouble(1) == 1.0 / SqlFragments.snapD(x), s"1.0 / snap($x)")
+      assert(r.getDouble(2) == SqlFragments.snapD(x) * 2, s"snap($x) * 2")
+    }
+    val viaColumn = probes.toDF("x").select(SqlFragments.snap(col("x"))).as[Double].collect()
+    assert(viaColumn.toSeq == probes.map(SqlFragments.snapD))
+  }
+
+  test("SqlFragments.qi equals driver qiL; md5i equals the driver-side md5 prefix") {
+    val ss = spark
+    import ss.implicits._
+    val q = probes.toDF("x").selectExpr("x", s"${SqlFragments.qi("x")} AS q").collect()
+    q.foreach(r => assert(r.getLong(1) == SqlFragments.qiL(r.getDouble(0)), s"qi(${r.getDouble(0)})"))
+
+    val seeds = Seq("", "a", "rr:keep:42", "jm:7", "key:123456789")
+    val got = seeds.toDF("s")
+      .selectExpr("s", s"${SqlFragments.md5i("s", spark = true)} AS h")
+      .as[(String, Long)].collect().toMap
+    seeds.foreach { seed =>
+      val hex = java.security.MessageDigest.getInstance("MD5")
+        .digest(seed.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+      assert(got(seed) == java.lang.Long.parseLong(hex.take(8), 16), s"md5i('$seed')")
+    }
+  }
 
   // ---------------------------------------------------------------- q402
 

@@ -172,6 +172,18 @@ class SourcesSpec extends AnyFunSuite {
     assert(back.forall(r => r.simArrivalTime > 0 && r.processingTime >= 1.0))
   }
 
+  test("documents.doc_id is unique at every SF (precondition of the shared rank tokenizer)") {
+    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
+      val dir = s"/root/testdata/$sf"
+      assume(new java.io.File(dir).isDirectory, s"$dir not present")
+      val row = graft.sources.Tables.documents(spark, dir)
+        .agg(count(lit(1)), countDistinct(col("doc_id")), count(col("doc_id")))
+        .head()
+      assert(row.getLong(0) == row.getLong(1), s"$sf: duplicate doc_id")
+      assert(row.getLong(0) == row.getLong(2), s"$sf: NULL doc_id")
+    }
+  }
+
   test("32-combo grid fan-out ≡ 32 independent full-stream simulations") {
     import spark.implicits._
     val grid = graft.queries.SimQueries.grid32
