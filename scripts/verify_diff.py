@@ -11,9 +11,16 @@ every query matches; a refactor that must not change results (same
 generated SQL, same plans) is checked by diffing the output of the parent
 commit against the output of the change.
 
-Prints one line per differing or one-sided query, then a summary line
-`<n> queries compared, <d> differ`. Exit status 1 if any query differs.
+It also compares the two outputs' `oracle_sql.json`: the same set of
+oracle names, and identical SQL text for each name.
+
+Prints one line per differing or one-sided query and per differing or
+one-sided oracle text, then the summary lines `<n> queries compared, <d>
+differ` and `<n> oracle texts compared, <d> differ`. The exit status is
+the number of differences of both kinds (capped at 255): 0 when the two
+outputs agree.
 """
+import json
 import sys
 from pathlib import Path
 
@@ -32,6 +39,26 @@ def fingerprint(con, qdir):
         f"SELECT count(*), sum(hash(t)::HUGEINT) % 18446744073709551616 "
         f"FROM {src} t").fetchone()
     return [(c[0], c[1]) for c in schema], n, digest
+
+
+def oracle_diff(a, b):
+    """Compare the oracle_sql.json of outputs a and b; print each oracle
+    name whose SQL text differs or exists on one side only, and return
+    (names compared, names differing)."""
+    oa = json.loads((Path(a) / "oracle_sql.json").read_text())
+    ob = json.loads((Path(b) / "oracle_sql.json").read_text())
+    names = oa.keys() | ob.keys()
+    n_diff = 0
+    for name in sorted(names):
+        if name not in oa or name not in ob:
+            side = a if name not in oa else b
+            print(f"ORACLE {name}: missing from {side}")
+        elif oa[name] != ob[name]:
+            print(f"ORACLE {name}: SQL text differs")
+        else:
+            continue
+        n_diff += 1
+    return len(names), n_diff
 
 
 def main():
@@ -58,7 +85,9 @@ def main():
             continue
         n_diff += 1
     print(f"{len(a.keys() | b.keys())} queries compared, {n_diff} differ")
-    sys.exit(1 if n_diff else 0)
+    n_oracles, n_oracle_diff = oracle_diff(sys.argv[1], sys.argv[2])
+    print(f"{n_oracles} oracle texts compared, {n_oracle_diff} differ")
+    sys.exit(min(n_diff + n_oracle_diff, 255))
 
 
 if __name__ == "__main__":

@@ -79,20 +79,3 @@ final case class SimConfig(
     rateWindowSeconds: Double = 60.0,
     rngSeed: Long = 42L
 )
-
-/** One-row summary produced by the statistics layer
-  * (reference: src/statistics.py:77-154). NaN (not null) marks
-  * empty-aggregate results for parity with `np.nan`.
-  */
-final case class SimSummary(
-    totalRequestsProcessed: Long,
-    totalRequestsRejected: Long,
-    averageQueuingTime: Double,
-    p50: Double,
-    p75: Double,
-    p90: Double,
-    p99: Double,
-    apiUsageCounts: Map[String, Long],
-    priorityQueueEnqueuedTotal: Long,
-    normalQueueEnqueuedTotal: Long
-)

@@ -77,19 +77,6 @@ object Dedup {
 
   // ------------------------------------------------------------- shingles
 
-  /** Distinct character n-gram shingle set per document (codegen'd HOF —
-    * sequence/transform/array_distinct; no explode until the caller needs
-    * one row per shingle).
-    */
-  def charShingles(docs: DataFrame, n: Int = 4): DataFrame =
-    docs.select(
-      col("doc_id"),
-      col("lang"),
-      expr(
-        s"array_distinct(transform(sequence(1, greatest(length(text) - ${n - 1}, 0)), i -> substring(text, i, $n)))"
-      ).as("shingles")
-    )
-
   /** Distinct word n-shingle set per document — the C4/GPT-style dedup
     * unit. On this corpus word shingles separate signal from noise far
     * better than char grams: planted near-dups score ≈0.95 while unrelated

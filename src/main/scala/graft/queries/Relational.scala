@@ -18,6 +18,25 @@ final case class QueryDef(
     oracle: Option[String]
 )
 
+object QueryDef {
+
+  /** A query written once as dialect-generic SQL: Spark runs
+    * `build(Spark(viewPrefix))` over each of `tables` registered as the
+    * temp view `viewPrefix + table`, and the oracle is `build(DuckDb)`.
+    */
+  def sql(name: String, viewPrefix: String, tables: String*)(
+      build: Dialect => String): QueryDef = {
+    val sp = Spark(viewPrefix)
+    QueryDef(
+      name,
+      (s, dir) => {
+        sp.register(s, dir, tables: _*)
+        s.sql(build(sp))
+      },
+      Some(build(DuckDb)))
+  }
+}
+
 /** Relational query catalogue over the TESTDATA lake.
   *
   * Covers the operator categories of SURVEY §2.2 (scans, projections,

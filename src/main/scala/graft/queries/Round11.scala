@@ -20,18 +20,7 @@ import graft.sources.Tables
   */
 object Round11 {
 
-  private def views(s: org.apache.spark.sql.SparkSession, dir: String, ts: Seq[String]): Unit =
-    ts.foreach {
-      case "lineitem" => Tables.lineitem(s, dir).createOrReplaceTempView("r11_lineitem")
-      case "orders"   => Tables.orders(s, dir).createOrReplaceTempView("r11_orders")
-      case "customer" => Tables.customer(s, dir).createOrReplaceTempView("r11_customer")
-      case "supplier" => Tables.supplier(s, dir).createOrReplaceTempView("r11_supplier")
-      case "part"     => Tables.part(s, dir).createOrReplaceTempView("r11_part")
-      case "nation"   => Tables.nation(s, dir).createOrReplaceTempView("r11_nation")
-      case "region"   => Tables.region(s, dir).createOrReplaceTempView("r11_region")
-      case "events"   => Tables.events(s, dir).createOrReplaceTempView("r11_events")
-      case "documents" => Tables.documents(s, dir).createOrReplaceTempView("r11_documents")
-    }
+  private val R11 = Spark("r11_")
 
   /** TPC-H Q2 shape: for every ECONOMY part, the region-0 supplier(s)
     * offering the minimum observed unit cost. The Spark branch states
@@ -47,7 +36,7 @@ object Round11 {
   val q380MinCostSupplier: QueryDef = QueryDef(
     "q380_min_cost_supplier",
     (s, dir) => {
-      views(s, dir, Seq("lineitem", "supplier", "part", "nation"))
+      R11.register(s, dir, "lineitem", "supplier", "part", "nation")
       s.sql("""
         WITH supply AS (
           SELECT l_partkey pk, l_suppkey sk,
@@ -100,7 +89,7 @@ object Round11 {
   val q381TopSupplier: QueryDef = QueryDef(
     "q381_top_supplier",
     (s, dir) => {
-      views(s, dir, Seq("lineitem", "supplier"))
+      R11.register(s, dir, "lineitem", "supplier")
       s.sql("""
         WITH rev AS (
           SELECT l_suppkey sk,
@@ -142,7 +131,7 @@ object Round11 {
   val q382DominantSupplier: QueryDef = QueryDef(
     "q382_dominant_supplier",
     (s, dir) => {
-      views(s, dir, Seq("lineitem", "supplier", "part"))
+      R11.register(s, dir, "lineitem", "supplier", "part")
       s.sql("""
         WITH w AS (
           SELECT l_suppkey sk, l_partkey pk,
@@ -191,7 +180,7 @@ object Round11 {
   val q383LoneLateSupplier: QueryDef = QueryDef(
     "q383_lone_late_supplier",
     (s, dir) => {
-      views(s, dir, Seq("lineitem", "orders", "supplier"))
+      R11.register(s, dir, "lineitem", "orders", "supplier")
       s.sql("""
         WITH l1 AS (
           SELECT l_orderkey ok, l_suppkey sk,
@@ -241,7 +230,7 @@ object Round11 {
   val q384DormantProspects: QueryDef = QueryDef(
     "q384_dormant_prospects",
     (s, dir) => {
-      views(s, dir, Seq("customer", "orders"))
+      R11.register(s, dir, "customer", "orders")
       s.sql("""
         WITH pos AS (
           SELECT CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT) s,
@@ -288,7 +277,7 @@ object Round11 {
   val q385HhiConcentration: QueryDef = QueryDef(
     "q385_hhi_concentration",
     (s, dir) => {
-      views(s, dir, Seq("lineitem", "supplier"))
+      R11.register(s, dir, "lineitem", "supplier")
       s.sql("""
         WITH rev AS (
           SELECT s_nationkey nk, l_suppkey sk,
@@ -341,7 +330,7 @@ object Round11 {
   val q386SkewAdvisor: QueryDef = QueryDef(
     "q386_skew_advisor",
     (s, dir) => {
-      views(s, dir, Seq("lineitem", "orders"))
+      R11.register(s, dir, "lineitem", "orders")
       s.sql("""
         WITH ko AS (SELECT o_custkey k, CAST(count(*) AS BIGINT) c
                     FROM r11_orders GROUP BY 1),
@@ -389,7 +378,7 @@ object Round11 {
   val q387ZoneMapSkip: QueryDef = QueryDef(
     "q387_zone_map_skip",
     (s, dir) => {
-      views(s, dir, Seq("lineitem"))
+      R11.register(s, dir, "lineitem")
       s.sql("""
         WITH rg AS (
           SELECT l_orderkey DIV 1000 g,
@@ -446,7 +435,7 @@ object Round11 {
   val q388JoinCardCalibration: QueryDef = QueryDef(
     "q388_join_card_calibration",
     (s, dir) => {
-      views(s, dir, Seq("lineitem"))
+      R11.register(s, dir, "lineitem")
       s.sql("""
         WITH k AS (SELECT l_partkey, CAST(count(*) AS BIGINT) c
                    FROM r11_lineitem GROUP BY 1),
@@ -482,7 +471,7 @@ object Round11 {
   val q389RendezvousHash: QueryDef = QueryDef(
     "q389_rendezvous_hash",
     (s, dir) => {
-      views(s, dir, Seq("events"))
+      R11.register(s, dir, "events")
       s.sql("""
         WITH u AS (SELECT DISTINCT user_id FROM r11_events),
         t AS (SELECT CAST(count(*) AS BIGINT) n_total FROM u),
@@ -589,7 +578,7 @@ object Round11 {
   val q391DsirImportance: QueryDef = QueryDef(
     "q391_dsir_importance",
     (s, dir) => {
-      views(s, dir, Seq("documents"))
+      R11.register(s, dir, "documents")
       s.sql("""
         WITH toks AS (
           SELECT doc_id, t FROM (
@@ -653,19 +642,11 @@ object Round11 {
     * engines walk an identical float trajectory. The matrix is bounded
     * (types × 7 cells) — corpus-sized work is the one keyed count.
     */
-  val q392IpfRaking: QueryDef = QueryDef(
-    "q392_ipf_raking",
-    (s, dir) => {
-      views(s, dir, Seq("events"))
-      s.sql(ipfSql("r11_events", spark = true))
-    },
-    Some(ipfSql("events", spark = false))
-  )
+  val q392IpfRaking: QueryDef = QueryDef.sql("q392_ipf_raking", "r11_", "events")(ipfSql)
 
-  private def ipfSql(tbl: String, spark: Boolean): String = {
-    val dw =
-      if (spark) "CAST(datediff(to_date(ts), DATE '2024-01-01') AS BIGINT) % 7"
-      else "CAST(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS BIGINT) % 7"
+  private def ipfSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val dw = s"CAST(${d.dayDiff("DATE '2024-01-01'", d.toDate("ts"))} AS BIGINT) % 7"
     // Divisor CAST AS DOUBLE: floor() returns BIGINT in Spark, and a bare
     // 1073741824.0 is DECIMAL(11,1) to its parser, so BIGINT/DECIMAL made the
     // whole weight chain (and the rounded outputs) DECIMAL(28,6) while the
@@ -720,7 +701,7 @@ object Round11 {
   val q393HuberMean: QueryDef = QueryDef(
     "q393_huber_mean",
     (s, dir) => {
-      views(s, dir, Seq("events"))
+      R11.register(s, dir, "events")
       s.sql(huberSql("r11_events"))
     },
     Some(huberSql("events"))
@@ -772,7 +753,7 @@ object Round11 {
   val q394KfoldBalance: QueryDef = QueryDef(
     "q394_kfold_balance",
     (s, dir) => {
-      views(s, dir, Seq("documents"))
+      R11.register(s, dir, "documents")
       s.sql("""
         WITH f AS (
           SELECT doc_id, lang,
@@ -1032,7 +1013,7 @@ object Round11 {
   val q398JackknifeRatio: QueryDef = QueryDef(
     "q398_jackknife_ratio",
     (s, dir) => {
-      views(s, dir, Seq("lineitem", "supplier"))
+      R11.register(s, dir, "lineitem", "supplier")
       s.sql(jackknifeSql("r11_lineitem", "r11_supplier"))
     },
     Some(jackknifeSql("lineitem", "supplier"))
@@ -1074,7 +1055,7 @@ object Round11 {
   val q399DesignEffect: QueryDef = QueryDef(
     "q399_design_effect",
     (s, dir) => {
-      views(s, dir, Seq("customer"))
+      R11.register(s, dir, "customer")
       s.sql(deffSql("r11_customer"))
     },
     Some(deffSql("customer"))
@@ -1119,19 +1100,11 @@ object Round11 {
     * the 2⁻³⁰ grid, so the cumulative walk is exact dyadic arithmetic
     * and the crossing day is engine-independent.
     */
-  val q400Sprt: QueryDef = QueryDef(
-    "q400_sprt",
-    (s, dir) => {
-      views(s, dir, Seq("events"))
-      s.sql(sprtSql(spark = true))
-    },
-    Some(sprtSql(spark = false))
-  )
+  val q400Sprt: QueryDef = QueryDef.sql("q400_sprt", "r11_", "events")(sprtSql)
 
-  private def sprtSql(spark: Boolean): String = {
-    val (tbl, day) =
-      if (spark) ("r11_events", "to_date(ts)")
-      else ("events", "CAST(ts AS DATE)")
+  private def sprtSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val day = d.toDate("ts")
     // divisor CAST AS DOUBLE: floor() is BIGINT in Spark and a bare
     // 1073741824.0 is DECIMAL — BIGINT/DECIMAL drags the chain (and the
     // final round()) into DECIMAL output, the r7 hash-fail class

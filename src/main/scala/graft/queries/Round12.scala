@@ -79,7 +79,7 @@ object Round12 {
     "q402_bradley_terry",
     (s, dir) => {
       import s.implicits._
-      Tables.lineitem(s, dir).createOrReplaceTempView("r12_lineitem")
+      Spark("r12_").register(s, dir, "lineitem")
       // Corpus-sized work runs distributed: the bounded per-order
       // self-join (≤7 lines/order) + keyed counts reduce 100 TB to an
       // ≤8×8 duel matrix. That matrix is bounded model state (the
@@ -187,18 +187,16 @@ object Round12 {
     * breaking ties. One scan + explode + three keyed aggs — no pair
     * work, no driver loops; the explode fan is words-per-doc.
     */
-  val q403RakeKeywords: QueryDef = QueryDef(
-    "q403_rake_keywords",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r12_documents")
-      s.sql(rakeSql(spark = true))
-    },
-    Some(rakeSql(spark = false))
-  )
+  val q403RakeKeywords: QueryDef = QueryDef.sql("q403_rake_keywords", "r12_", "documents")(rakeSql)
 
-  private def rakeSql(spark: Boolean): String = {
-    val tbl = if (spark) "r12_documents" else "documents"
-    val words = posTokens(tbl, spark, "doc_id")
+  private def rakeSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val words = posTokens(tbl, d, "doc_id")
+    val phrase = d match {
+      case _: Spark =>
+        "array_join(transform(array_sort(array_agg(struct(nw.pos, nw.word))), s -> s.word), ' ')"
+      case DuckDb => "string_agg(nw.word, ' ' ORDER BY nw.pos)"
+    }
     s"""WITH w AS ($words),
         nw AS (
           SELECT doc_id, pos, word,
@@ -220,9 +218,7 @@ object Round12 {
           GROUP BY 1),
         ptext AS (
           SELECT nw.doc_id, nw.island,
-                 ${if (spark)
-            "array_join(transform(array_sort(array_agg(struct(nw.pos, nw.word))), s -> s.word), ' ')"
-          else "string_agg(nw.word, ' ' ORDER BY nw.pos)"} phrase,
+                 $phrase phrase,
                  ${snap("sum(CAST(ws.degree AS DOUBLE) / ws.freq)")} score
           FROM nw
           JOIN wscore ws ON ws.word = nw.word
@@ -242,26 +238,16 @@ object Round12 {
     * (all three equal N iff perfectly even), the standard way to read
     * corpus-source diversity for training-mix design.
     */
-  val q404HillDiversity: QueryDef = QueryDef(
-    "q404_hill_diversity",
-    (s, dir) => {
-      Tables.lineitem(s, dir).createOrReplaceTempView("r12_lineitem")
-      Tables.supplier(s, dir).createOrReplaceTempView("r12_supplier")
-      Tables.nation(s, dir).createOrReplaceTempView("r12_nation")
-      Tables.part(s, dir).createOrReplaceTempView("r12_part")
-      s.sql(hillSql(spark = true))
-    },
-    Some(hillSql(spark = false))
-  )
+  val q404HillDiversity: QueryDef =
+    QueryDef.sql("q404_hill_diversity", "r12_", "lineitem", "supplier", "nation", "part")(hillSql)
 
-  private def hillSql(spark: Boolean): String = {
-    val p = if (spark) "r12_" else ""
+  private def hillSql(d: Dialect): String = {
     s"""WITH typed AS (
           SELECT n.n_regionkey rk, p.p_type t, CAST(count(*) AS BIGINT) n
-          FROM ${p}lineitem l
-          JOIN ${p}supplier s ON s.s_suppkey = l.l_suppkey
-          JOIN ${p}nation n ON n.n_nationkey = s.s_nationkey
-          JOIN ${p}part p ON p.p_partkey = l.l_partkey
+          FROM ${d.t("lineitem")} l
+          JOIN ${d.t("supplier")} s ON s.s_suppkey = l.l_suppkey
+          JOIN ${d.t("nation")} n ON n.n_nationkey = s.s_nationkey
+          JOIN ${d.t("part")} p ON p.p_partkey = l.l_partkey
           GROUP BY 1, 2),
         tot AS (SELECT rk, CAST(sum(n) AS BIGINT) nt FROM typed GROUP BY 1)
         SELECT t.rk AS region_key,
@@ -287,25 +273,17 @@ object Round12 {
     * both classes populate every bin at sf ≥ 0.001 (asserted by the
     * oracle equality itself).
     */
-  val q405WoeIv: QueryDef = QueryDef(
-    "q405_woe_iv",
-    (s, dir) => {
-      Tables.lineitem(s, dir).createOrReplaceTempView("r12_lineitem")
-      Tables.orders(s, dir).createOrReplaceTempView("r12_orders")
-      s.sql(woeSql(spark = true))
-    },
-    Some(woeSql(spark = false))
-  )
+  val q405WoeIv: QueryDef = QueryDef.sql("q405_woe_iv", "r12_", "lineitem", "orders")(woeSql)
 
-  private def woeSql(spark: Boolean): String = {
-    val p = if (spark) "r12_" else ""
-    val dd =
-      if (spark) "datediff(l.l_shipdate, o.o_orderdate)"
-      else "datediff('day', o.o_orderdate, l.l_shipdate)"
+  private def woeSql(d: Dialect): String = {
+    val dd = d match {
+      case _: Spark => "datediff(l.l_shipdate, o.o_orderdate)"
+      case DuckDb => "datediff('day', o.o_orderdate, l.l_shipdate)"
+    }
     s"""WITH lab AS (
           SELECT CAST(round(l.l_discount * 100) AS BIGINT) bin,
                  CASE WHEN $dd > 25 THEN 1 ELSE 0 END bad
-          FROM ${p}lineitem l JOIN ${p}orders o ON o.o_orderkey = l.l_orderkey),
+          FROM ${d.t("lineitem")} l JOIN ${d.t("orders")} o ON o.o_orderkey = l.l_orderkey),
         b AS (
           SELECT bin,
                  CAST(sum(1 - bad) AS BIGINT) n_good,

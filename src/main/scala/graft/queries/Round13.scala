@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-13 additions (q406+): the training-data curation operators a
   * 100 TB corpus pipeline runs between ingest and tokenization —
@@ -33,26 +32,18 @@ object Round13 {
     * is scan + equi-join + per-doc windows: at 100 TB the only wide
     * shuffle is the gram-hash aggregate, and it partial-aggregates.
     */
-  val q406RepeatedSubstring: QueryDef = QueryDef(
-    "q406_repeated_substring",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r13_documents")
-      s.sql(repeatedSubstringSql(spark = true))
-    },
-    Some(repeatedSubstringSql(spark = false))
-  )
+  val q406RepeatedSubstring: QueryDef =
+    QueryDef.sql("q406_repeated_substring", "r13_", "documents")(repeatedSubstringSql)
 
-  private def repeatedSubstringSql(spark: Boolean): String = {
-    val tbl = if (spark) "r13_documents" else "documents"
-    val phrase =
-      if (spark)
-        "array_join(transform(array_sort(array_agg(struct(pos, word))), t -> t.word), ' ')"
-      else "string_agg(word, ' ' ORDER BY pos)"
-    val tailOfLast =
-      if (spark) "substring(max_by(gram, pos), instr(max_by(gram, pos), ' ') + 1)"
-      else "substring(max_by(gram, pos), strpos(max_by(gram, pos), ' ') + 1)"
+  private def repeatedSubstringSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val phrase = d.stringAgg("word", "pos")
+    val tailOfLast = d match {
+      case _: Spark => "substring(max_by(gram, pos), instr(max_by(gram, pos), ' ') + 1)"
+      case DuckDb => "substring(max_by(gram, pos), strpos(max_by(gram, pos), ' ') + 1)"
+    }
     val w = "OVER (PARTITION BY doc_id ORDER BY pos)"
-    s"""WITH tok AS (${posTokens(tbl, spark, "doc_id")}),
+    s"""WITH tok AS (${posTokens(tbl, d, "doc_id")}),
         grams AS (
           SELECT doc_id, pos, word, gram
           FROM (SELECT doc_id, pos, word,
@@ -97,30 +88,23 @@ object Round13 {
     * tokenizer is wasting context budget on a language. One scan, one
     * keyed agg; ratios from exact BIGINT sums, snapped at the end.
     */
-  val q407TokenizerFertility: QueryDef = QueryDef(
-    "q407_tokenizer_fertility",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r13_documents")
-      s.sql(fertilitySql(spark = true))
-    },
-    Some(fertilitySql(spark = false))
-  )
+  val q407TokenizerFertility: QueryDef =
+    QueryDef.sql("q407_tokenizer_fertility", "r13_", "documents")(fertilitySql)
 
-  private def fertilitySql(spark: Boolean): String = {
-    val tbl = if (spark) "r13_documents" else "documents"
+  private def fertilitySql(d: Dialect): String = {
+    val tbl = d.t("documents")
     // Spark SQL unescapes backslashes in string literals, DuckDB does
     // not — emit '\\s' for Spark, '\s' for DuckDB, same regex either way
-    val ws = if (spark) "\\\\s" else "\\s"
-    val pat = s"[a-z]{1,4}|[0-9]{1,3}|[^a-z0-9$ws]"
-    val nWords =
-      if (spark) """CAST(size(split(trim(text), '\\s+')) AS BIGINT)"""
-      else """CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)"""
-    val nSub =
-      if (spark) s"CAST(regexp_count(lower(text), '$pat') AS BIGINT)"
-      else s"CAST(len(regexp_extract_all(lower(text), '$pat')) AS BIGINT)"
-    val nBytes =
-      if (spark) "octet_length(text)"
-      else "octet_length(encode(text))" // DuckDB's octet_length takes BLOB
+    val pat = s"[a-z]{1,4}|[0-9]{1,3}|[^a-z0-9${d.ws}]"
+    val nWords = d match {
+      case _: Spark => """CAST(size(split(trim(text), '\\s+')) AS BIGINT)"""
+      case DuckDb => """CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)"""
+    }
+    val nSub = d.regexCount("lower(text)", pat)
+    val nBytes = d match {
+      case _: Spark => "octet_length(text)"
+      case DuckDb => "octet_length(encode(text))" // DuckDB's octet_length takes BLOB
+    }
     s"""WITH d AS (
           SELECT lang, source,
                  CAST(length(text) AS BIGINT) nc,
@@ -152,26 +136,24 @@ object Round13 {
     * removed/surviving counts. Hash group-bys only — at 100 TB each
     * stage is one partial-aggregable shuffle on a 32-char key.
     */
-  val q408DedupCascade: QueryDef = QueryDef(
-    "q408_dedup_cascade",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r13_documents")
-      s.sql(cascadeSql(spark = true))
-    },
-    Some(cascadeSql(spark = false))
-  )
+  val q408DedupCascade: QueryDef =
+    QueryDef.sql("q408_dedup_cascade", "r13_", "documents")(cascadeSql)
 
-  private def cascadeSql(spark: Boolean): String = {
-    val tbl = if (spark) "r13_documents" else "documents"
-    val bow =
-      if (spark)
-        "md5(array_join(array_sort(array_distinct(split(regexp_replace(lower(text), '[^a-z0-9]+', ' '), ' '))), ' '))"
-      else
-        "md5(array_to_string(list_sort(list_distinct(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '))), ' '))"
+  private def cascadeSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    // DuckDB's regexp_replace replaces only the first match without 'g'
+    val (bow, global) = d match {
+      case _: Spark =>
+        ("md5(array_join(array_sort(array_distinct(split(regexp_replace(lower(text), '[^a-z0-9]+', ' '), ' '))), ' '))",
+          "")
+      case DuckDb =>
+        ("md5(array_to_string(list_sort(list_distinct(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '))), ' '))",
+          ", 'g'")
+    }
     s"""WITH keyed AS (
           SELECT doc_id,
                  md5(text) k1,
-                 md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' '${if (spark) "" else ", 'g'"}))) k2,
+                 md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' '$global))) k2,
                  $bow k3
           FROM $tbl),
         s1 AS (SELECT min(doc_id) doc_id FROM keyed GROUP BY k1),
@@ -222,9 +204,10 @@ object Round13 {
     "q409_doremi_weights",
     (s, dir) => {
       import s.implicits._
-      Tables.documents(s, dir).createOrReplaceTempView("r13_documents")
+      val sp = Spark("r13_")
+      sp.register(s, dir, "documents")
       // corpus-sized half: one job, #domains rows back
-      val hd = s.sql(doremiHdSql(spark = true)).collect()
+      val hd = s.sql(doremiHdSql(sp)).collect()
         .map(r => r.getString(0) -> r.getDouble(1)).toMap
       val k = hd.size
       // grid-snapped addends with small magnitude sum EXACTLY in IEEE
@@ -252,23 +235,18 @@ object Round13 {
         .sortBy(_._1)
       ranked.toDF("source", "h_nats", "weight", "pos")
     },
-    Some(doremiSql(spark = false))
+    Some(doremiSql(DuckDb))
   )
 
   /** The corpus-sized half of q409: per-source cross-entropy in snapped
     * nats under the corpus unigram LM (exact micro-nat BIGINT sums).
     */
-  private def doremiHdSql(spark: Boolean): String = {
-    val tbl = if (spark) "r13_documents" else "documents"
+  private def doremiHdSql(d: Dialect): String = {
+    val tbl = d.t("documents")
     val tok =
-      if (spark)
-        s"""SELECT source, word
-            FROM (SELECT source, explode(split(lower(text), '[^a-z]+')) word FROM $tbl) x
-            WHERE word <> ''"""
-      else
-        s"""SELECT source, word
+      s"""SELECT source, word
             FROM (SELECT source,
-                         unnest(string_split_regex(lower(text), '[^a-z]+')) AS word
+                         ${d.words} AS word
                   FROM $tbl) x
             WHERE word <> ''"""
     s"""WITH tok AS ($tok),
@@ -286,18 +264,12 @@ object Round13 {
         GROUP BY 1"""
   }
 
-  private def doremiSql(spark: Boolean): String = {
-    val tbl = if (spark) "r13_documents" else "documents"
-    val mat = if (spark) "" else "MATERIALIZED "
+  private def doremiSql(d: Dialect): String = {
+    val tbl = d.t("documents")
     val tok =
-      if (spark)
-        s"""SELECT source, word
-            FROM (SELECT source, explode(split(lower(text), '[^a-z]+')) word FROM $tbl) x
-            WHERE word <> ''"""
-      else
-        s"""SELECT source, word
+      s"""SELECT source, word
             FROM (SELECT source,
-                         unnest(string_split_regex(lower(text), '[^a-z]+')) AS word
+                         ${d.words} AS word
                   FROM $tbl) x
             WHERE word <> ''"""
     val rounds = (0 until 5)
@@ -306,34 +278,34 @@ object Round13 {
         // order can never split the engines
         val mean = s"sum(${snap("a.w * h.hd")})"
         val boost = snap(s"a.w * exp(${snap("CAST(0.1 AS DOUBLE) * (h.hd - m.mu)")})")
-        s"""m$k AS ${mat}(
+        s"""m$k AS ${d.materialized}(
               SELECT $mean AS mu
               FROM a$k a JOIN hd h ON h.source = a.source),
-            b$k AS ${mat}(
+            b$k AS ${d.materialized}(
               SELECT a.source, $boost AS w
               FROM a$k a JOIN hd h ON h.source = a.source
               CROSS JOIN m$k m),
-            a${k + 1} AS ${mat}(
+            a${k + 1} AS ${d.materialized}(
               SELECT b.source, ${snap("b.w / t.tot")} AS w
               FROM b$k b CROSS JOIN (SELECT sum(w) tot FROM b$k) t)"""
       }
       .mkString(",\n")
     s"""WITH tok AS ($tok),
-        cw AS ${mat}(SELECT word, CAST(count(*) AS BIGINT) c FROM tok GROUP BY 1),
-        tot AS ${mat}(SELECT CAST(sum(c) AS BIGINT) n FROM cw),
-        li AS ${mat}(
+        cw AS ${d.materialized}(SELECT word, CAST(count(*) AS BIGINT) c FROM tok GROUP BY 1),
+        tot AS ${d.materialized}(SELECT CAST(sum(c) AS BIGINT) n FROM cw),
+        li AS ${d.materialized}(
           SELECT word,
                  CAST(floor(-ln(CAST(c AS DOUBLE) / t.n) * 1048576.0 + 0.5) AS BIGINT) lw
           FROM cw CROSS JOIN tot t),
-        dw AS ${mat}(SELECT source, word, CAST(count(*) AS BIGINT) c
+        dw AS ${d.materialized}(SELECT source, word, CAST(count(*) AS BIGINT) c
               FROM tok GROUP BY 1, 2),
-        hd AS ${mat}(
+        hd AS ${d.materialized}(
           SELECT d.source,
                  ${snap("CAST(sum(d.c * l.lw) AS DOUBLE) / (1048576.0 * sum(d.c))")} hd
           FROM dw d JOIN li l ON l.word = d.word
           GROUP BY 1),
-        nd AS ${mat}(SELECT CAST(count(*) AS BIGINT) k FROM hd),
-        a0 AS ${mat}(SELECT source, ${snap("CAST(1.0 AS DOUBLE) / nd.k")} w
+        nd AS ${d.materialized}(SELECT CAST(count(*) AS BIGINT) k FROM hd),
+        a0 AS ${d.materialized}(SELECT source, ${snap("CAST(1.0 AS DOUBLE) / nd.k")} w
               FROM hd CROSS JOIN nd),
         $rounds
         SELECT h.source, h.hd AS h_nats, a.w AS weight,
@@ -355,41 +327,34 @@ object Round13 {
     * because scores tie only when the integer sums tie. Corpus-sized
     * work: one explode + two keyed aggs + one per-lang window.
     */
-  val q410PerplexityFilter: QueryDef = QueryDef(
-    "q410_perplexity_filter",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r13_documents")
-      s.sql(perplexitySql(spark = true))
-    },
-    Some(perplexitySql(spark = false))
-  )
+  val q410PerplexityFilter: QueryDef =
+    QueryDef.sql("q410_perplexity_filter", "r13_", "documents")(perplexitySql)
 
-  private def perplexitySql(spark: Boolean): String = {
-    val tbl = if (spark) "r13_documents" else "documents"
-    val mat = if (spark) "" else "MATERIALIZED "
-    s"""WITH tok AS (${posTokens(tbl, spark, "doc_id")}),
+  private def perplexitySql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    s"""WITH tok AS (${posTokens(tbl, d, "doc_id")}),
         docmeta AS (SELECT doc_id, lang FROM $tbl),
-        bi AS ${mat}(
+        bi AS ${d.materialized}(
           SELECT doc_id, a, b
           FROM (SELECT doc_id, word a,
                        lead(word) OVER (PARTITION BY doc_id ORDER BY pos) b
                 FROM tok) x
           WHERE b IS NOT NULL),
-        cu AS ${mat}(SELECT a, CAST(count(*) AS BIGINT) c FROM bi GROUP BY 1),
-        v AS ${mat}(SELECT CAST(count(DISTINCT b) AS BIGINT) v FROM bi),
-        cb AS ${mat}(SELECT a, b, CAST(count(*) AS BIGINT) c FROM bi GROUP BY 1, 2),
-        lp AS ${mat}(
+        cu AS ${d.materialized}(SELECT a, CAST(count(*) AS BIGINT) c FROM bi GROUP BY 1),
+        v AS ${d.materialized}(SELECT CAST(count(DISTINCT b) AS BIGINT) v FROM bi),
+        cb AS ${d.materialized}(SELECT a, b, CAST(count(*) AS BIGINT) c FROM bi GROUP BY 1, 2),
+        lp AS ${d.materialized}(
           SELECT cb.a, cb.b,
                  CAST(floor(-ln((CAST(cb.c AS DOUBLE) + 1.0) / (cu.c + v.v))
                             * 1048576.0 + 0.5) AS BIGINT) lw
           FROM cb JOIN cu ON cu.a = cb.a CROSS JOIN v),
-        docscore AS ${mat}(
+        docscore AS ${d.materialized}(
           SELECT bi.doc_id,
                  CAST(count(*) AS BIGINT) n_bi,
                  ${snap("CAST(sum(lp.lw) AS DOUBLE) / (1048576.0 * count(*))")} h
           FROM bi JOIN lp ON lp.a = bi.a AND lp.b = bi.b
           GROUP BY 1),
-        bucketed AS ${mat}(
+        bucketed AS ${d.materialized}(
           SELECT m.lang, s.h,
                  CASE WHEN cume_dist() OVER (PARTITION BY m.lang ORDER BY s.h, s.doc_id)
                         <= CAST(1.0 AS DOUBLE) / 3 THEN 'head'

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-14 additions (q411+): the budget-planning layer of a training
   * corpus pipeline — data-constrained scaling projections (Muennighoff
@@ -21,10 +20,8 @@ object Round14 {
     * WITHIN the source — the unit a per-source epoch multiplies).
     * Shared by q411/q412.
     */
-  private def sourceTokensCte(tbl: String, spark: Boolean): String = {
-    val nWords =
-      if (spark) "CAST(regexp_count(lower(text), '[a-z]+') AS BIGINT)"
-      else "CAST(len(regexp_extract_all(lower(text), '[a-z]+')) AS BIGINT)"
+  private def sourceTokensCte(tbl: String, d: Dialect): String = {
+    val nWords = d.wordCount
     s"""SELECT source,
                CAST(sum(nw * dups) AS BIGINT) AS total_tokens,
                CAST(sum(nw) AS BIGINT) AS unique_tokens
@@ -47,24 +44,16 @@ object Round14 {
     * cross join on #sources rows. `eff_frac` = D'/(E·U) is the
     * marginal-value diagnostic (1.0 at one epoch, decaying toward 0).
     */
-  val q411ScalingEpochs: QueryDef = QueryDef(
-    "q411_scaling_epochs",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r14_documents")
-      s.sql(scalingSql(spark = true))
-    },
-    Some(scalingSql(spark = false))
-  )
+  val q411ScalingEpochs: QueryDef =
+    QueryDef.sql("q411_scaling_epochs", "r14_", "documents")(scalingSql)
 
-  private def scalingSql(spark: Boolean): String = {
-    val tbl = if (spark) "r14_documents" else "documents"
-    val grid =
-      if (spark) "SELECT * FROM VALUES (1), (2), (4), (8), (16) AS t(epochs)"
-      else "SELECT * FROM (VALUES (1), (2), (4), (8), (16)) AS t(epochs)"
+  private def scalingSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val grid = d.values("(1), (2), (4), (8), (16)", "t(epochs)")
     val rstar = "CAST(15.4 AS DOUBLE)"
     val decay = snap(s"exp(-(CAST(epochs AS DOUBLE) - 1.0) / $rstar)")
     val eff = snap(s"unique_tokens * (1.0 + $rstar * (1.0 - $decay))")
-    s"""WITH st AS (${sourceTokensCte(tbl, spark)}),
+    s"""WITH st AS (${sourceTokensCte(tbl, d)}),
         grid AS ($grid)
         SELECT st.source, CAST(epochs AS INT) AS epochs,
                unique_tokens,
@@ -88,19 +77,13 @@ object Round14 {
     * of sources since it rides a single agg output, and the feasibility
     * scan is a filter, not an iteration).
     */
-  val q412WaterfillBudget: QueryDef = QueryDef(
-    "q412_waterfill_budget",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r14_documents")
-      s.sql(waterfillSql(spark = true))
-    },
-    Some(waterfillSql(spark = false))
-  )
+  val q412WaterfillBudget: QueryDef =
+    QueryDef.sql("q412_waterfill_budget", "r14_", "documents")(waterfillSql)
 
-  private def waterfillSql(spark: Boolean): String = {
-    val tbl = if (spark) "r14_documents" else "documents"
+  private def waterfillSql(d: Dialect): String = {
+    val tbl = d.t("documents")
     val tau = snap("(b.budget - r.prefix) / (r.n - r.rnk + 1.0)")
-    s"""WITH st AS (${sourceTokensCte(tbl, spark)}),
+    s"""WITH st AS (${sourceTokensCte(tbl, d)}),
         b AS (SELECT CAST(floor(sum(unique_tokens) * CAST(0.6 AS DOUBLE)) AS BIGINT)
                        AS budget
               FROM st),
@@ -143,37 +126,26 @@ object Round14 {
     * iteration. At scale each iteration is one partial-aggregable
     * scan; model state is two doubles.
     */
-  val q413LogisticQuality: QueryDef = QueryDef(
-    "q413_logistic_quality",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r14_documents")
-      s.sql(logisticSql(spark = true))
-    },
-    Some(logisticSql(spark = false))
-  )
+  val q413LogisticQuality: QueryDef =
+    QueryDef.sql("q413_logistic_quality", "r14_", "documents")(logisticSql)
 
-  private def logisticSql(spark: Boolean): String = {
-    val tbl = if (spark) "r14_documents" else "documents"
-    val mat = if (spark) "" else "MATERIALIZED "
+  private def logisticSql(d: Dialect): String = {
+    val tbl = d.t("documents")
     // bag of words with lang, empties kept — not SqlFragments' positional tokenizers
     val tokCte =
-      if (spark)
-        s"""SELECT doc_id, lang, explode(split(lower(text), '[^a-z]+')) AS word
-            FROM $tbl"""
-      else
-        s"""SELECT doc_id, lang,
-                   unnest(string_split_regex(lower(text), '[^a-z]+')) AS word
+      s"""SELECT doc_id, lang,
+                   ${d.words} AS word
             FROM $tbl"""
     val stop = "('the','a','an','and','or','of','to','in','is','it')"
     def deq(c: String) = s"(CAST(sum($c) AS DOUBLE) / 1048576.0)"
     val iters = (0 until 3)
       .map { k =>
         // η, p are row-local doubles from snapped β — deterministic
-        s"""p$k AS ${mat}(
+        s"""p$k AS ${d.materialized}(
               SELECT y, xr,
                      1.0 / (1.0 + exp(-(b.b0 + b.b1 * xr))) AS p
               FROM feat CROSS JOIN beta$k b),
-            s$k AS ${mat}(
+            s$k AS ${d.materialized}(
               SELECT ${deq(qi("(y - p)"))} AS g0,
                      ${deq(qi("(y - p) * xr"))} AS g1,
                      ${deq(qi("p * (1.0 - p)"))} AS h00,
@@ -183,7 +155,7 @@ object Round14 {
                        AS loss_sum,
                      CAST(count(*) AS BIGINT) AS n
               FROM p$k),
-            beta${k + 1} AS ${mat}(
+            beta${k + 1} AS ${d.materialized}(
               SELECT CAST(${k + 1} AS INT) AS iter,
                      ${snap("b.b0 + (s.h11 * s.g0 - s.h01 * s.g1) / (s.h00 * s.h11 - s.h01 * s.h01)")} AS b0,
                      ${snap("b.b1 + (s.h00 * s.g1 - s.h01 * s.g0) / (s.h00 * s.h11 - s.h01 * s.h01)")} AS b1,
@@ -191,13 +163,13 @@ object Round14 {
               FROM s$k s CROSS JOIN beta$k b)"""
       }
       .mkString(",\n")
-    s"""WITH feat AS ${mat}(
+    s"""WITH feat AS ${d.materialized}(
           SELECT CAST(CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS DOUBLE) AS y,
                  CAST(${qi(s"CAST(sum(CASE WHEN word IN $stop THEN 1 ELSE 0 END) AS DOUBLE) / count(*)")}
                       AS DOUBLE) / 1048576.0 AS xr
           FROM (SELECT doc_id, lang, word FROM ($tokCte) t WHERE word <> '') tok
           GROUP BY doc_id, lang),
-        beta0 AS ${mat}(
+        beta0 AS ${d.materialized}(
           SELECT CAST(0 AS INT) AS iter, CAST(0.0 AS DOUBLE) AS b0,
                  CAST(0.0 AS DOUBLE) AS b1, CAST(0.0 AS DOUBLE) AS mean_logloss),
         $iters
@@ -217,36 +189,24 @@ object Round14 {
     * keyed aggs; the vocab is 200 rows and broadcast-joins into the
     * per-slice token stream.
     */
-  val q414VocabOov: QueryDef = QueryDef(
-    "q414_vocab_oov",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r14_documents")
-      s.sql(vocabOovSql(spark = true))
-    },
-    Some(vocabOovSql(spark = false))
-  )
+  val q414VocabOov: QueryDef = QueryDef.sql("q414_vocab_oov", "r14_", "documents")(vocabOovSql)
 
-  private def vocabOovSql(spark: Boolean): String = {
-    val tbl = if (spark) "r14_documents" else "documents"
-    val mat = if (spark) "" else "MATERIALIZED "
+  private def vocabOovSql(d: Dialect): String = {
+    val tbl = d.t("documents")
     val tokCte =
-      if (spark)
-        s"""SELECT lang, source, explode(split(lower(text), '[^a-z]+')) AS word
+      s"""SELECT lang, source,
+                   ${d.words} AS word
             FROM $tbl"""
-      else
-        s"""SELECT lang, source,
-                   unnest(string_split_regex(lower(text), '[^a-z]+')) AS word
-            FROM $tbl"""
-    s"""WITH tok AS ${mat}(
+    s"""WITH tok AS ${d.materialized}(
           SELECT lang, source, word
           FROM ($tokCte) t
           WHERE word <> ''),
-        vocab AS ${mat}(
+        vocab AS ${d.materialized}(
           SELECT word
           FROM (SELECT word, CAST(count(*) AS BIGINT) AS c
                 FROM tok GROUP BY word
                 ORDER BY c DESC, word LIMIT 200) f),
-        slice AS ${mat}(
+        slice AS ${d.materialized}(
           SELECT t.lang, t.source, t.word,
                  CAST(count(*) AS BIGINT) AS c,
                  max(CASE WHEN v.word IS NULL THEN 1 ELSE 0 END) AS oov
@@ -276,27 +236,20 @@ object Round14 {
     * keyed agg over the embeddings table; everything after runs on
     * #labels rows.
     */
-  val q415ClassBalance: QueryDef = QueryDef(
-    "q415_class_balance",
-    (s, dir) => {
-      Tables.embeddings(s, dir).createOrReplaceTempView("r14_embeddings")
-      s.sql(classBalanceSql(spark = true))
-    },
-    Some(classBalanceSql(spark = false))
-  )
+  val q415ClassBalance: QueryDef =
+    QueryDef.sql("q415_class_balance", "r14_", "embeddings")(classBalanceSql)
 
-  private def classBalanceSql(spark: Boolean): String = {
-    val tbl = if (spark) "r14_embeddings" else "embeddings"
-    val mat = if (spark) "" else "MATERIALIZED "
+  private def classBalanceSql(d: Dialect): String = {
+    val tbl = d.t("embeddings")
     val beta = "CAST(0.999 AS DOUBLE)"
     val effN = snap(s"(1.0 - ${snap(s"exp(n * ln($beta))")}) / (1.0 - $beta)")
-    s"""WITH cnt AS ${mat}(
+    s"""WITH cnt AS ${d.materialized}(
           SELECT label, CAST(count(*) AS BIGINT) AS n
           FROM $tbl GROUP BY label),
-        w AS ${mat}(
+        w AS ${d.materialized}(
           SELECT label, n, $effN AS eff_n, ${snap(s"1.0 / ($effN)")} AS w_raw
           FROM cnt),
-        z AS ${mat}(
+        z AS ${d.materialized}(
           SELECT CAST(count(*) AS BIGINT) AS k, sum(w_raw) AS wsum FROM w)
         SELECT w.label, w.n, w.eff_n,
                ${snap("w.w_raw * z.k / z.wsum")} AS w_norm,

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-15 additions (q416+): the corpus-quality audits between dedup
   * and training — segment-granular duplicate-token accounting (the
@@ -25,17 +24,8 @@ object Round15 {
     * `generate_subscripts` 1-based; dims only ever join within one
     * engine, so the offset is invisible.
     */
-  private def centroidCte(tbl: String, spark: Boolean): String = {
-    val e =
-      if (spark)
-        s"""SELECT vec_id, label, pos AS dim, CAST(col AS DOUBLE) AS v
-            FROM (SELECT vec_id, label,
-                         posexplode(transform(embedding, x -> CAST(x AS DOUBLE)))
-                  FROM $tbl)"""
-      else
-        s"""SELECT vec_id, label, generate_subscripts(embedding, 1) AS dim,
-                   CAST(unnest(embedding) AS DOUBLE) AS v
-            FROM $tbl"""
+  private def centroidCte(tbl: String, d: Dialect): String = {
+    val e = d.embeddingCells(tbl, "vec_id, label", 1)
     s"""e AS ($e),
         cent AS (
           SELECT label, dim,
@@ -56,22 +46,13 @@ object Round15 {
     * per-doc window and one md5-keyed window — both partial-friendly,
     * both on hashes, not text.
     */
-  val q416SegmentDedup: QueryDef = QueryDef(
-    "q416_segment_dedup",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r15_documents")
-      s.sql(segmentDedupSql(spark = true))
-    },
-    Some(segmentDedupSql(spark = false))
-  )
+  val q416SegmentDedup: QueryDef =
+    QueryDef.sql("q416_segment_dedup", "r15_", "documents")(segmentDedupSql)
 
-  private def segmentDedupSql(spark: Boolean): String = {
-    val tbl = if (spark) "r15_documents" else "documents"
-    val phrase =
-      if (spark)
-        "array_join(transform(array_sort(array_agg(struct(rnk, word))), t -> t.word), ' ')"
-      else "string_agg(word, ' ' ORDER BY rnk)"
-    s"""WITH tok AS (${rankTokens(tbl, spark, "source", "doc_id")}),
+  private def segmentDedupSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val phrase = d.stringAgg("word", "rnk")
+    s"""WITH tok AS (${rankTokens(tbl, d, "source", "doc_id")}),
         seg AS (
           SELECT source, doc_id,
                  CAST(floor(rnk / 16.0) AS BIGINT) AS seg_id,
@@ -108,18 +89,12 @@ object Round15 {
     * one explode + two keyed aggs; centroids are #labels×#dims rows
     * (broadcast at scale).
     */
-  val q417Prototypicality: QueryDef = QueryDef(
-    "q417_prototypicality",
-    (s, dir) => {
-      Tables.embeddings(s, dir).createOrReplaceTempView("r15_embeddings")
-      s.sql(prototypicalitySql(spark = true))
-    },
-    Some(prototypicalitySql(spark = false))
-  )
+  val q417Prototypicality: QueryDef =
+    QueryDef.sql("q417_prototypicality", "r15_", "embeddings")(prototypicalitySql)
 
-  private def prototypicalitySql(spark: Boolean): String = {
-    val tbl = if (spark) "r15_embeddings" else "embeddings"
-    s"""WITH ${centroidCte(tbl, spark)},
+  private def prototypicalitySql(d: Dialect): String = {
+    val tbl = d.t("embeddings")
+    s"""WITH ${centroidCte(tbl, d)},
         cn AS (
           SELECT label, CAST(sum(${qi("m * m")}) AS BIGINT) AS nrm2q
           FROM cent GROUP BY 1),
@@ -161,18 +136,12 @@ object Round15 {
     * is #vectors×#labels — at 100 TB the #labels×#dims centroid table
     * broadcasts and the fan stays a map-side explode, no shuffle growth.
     */
-  val q418LabelNoise: QueryDef = QueryDef(
-    "q418_label_noise",
-    (s, dir) => {
-      Tables.embeddings(s, dir).createOrReplaceTempView("r15_embeddings")
-      s.sql(labelNoiseSql(spark = true))
-    },
-    Some(labelNoiseSql(spark = false))
-  )
+  val q418LabelNoise: QueryDef =
+    QueryDef.sql("q418_label_noise", "r15_", "embeddings")(labelNoiseSql)
 
-  private def labelNoiseSql(spark: Boolean): String = {
-    val tbl = if (spark) "r15_embeddings" else "embeddings"
-    s"""WITH ${centroidCte(tbl, spark)},
+  private def labelNoiseSql(d: Dialect): String = {
+    val tbl = d.t("embeddings")
+    s"""WITH ${centroidCte(tbl, d)},
         cn AS (
           SELECT label, CAST(sum(${qi("m * m")}) AS BIGINT) AS nrm2q
           FROM cent GROUP BY 1),
@@ -210,19 +179,12 @@ object Round15 {
     * slope/intercept/R² are bit-identical across engines. A healthy
     * natural-language source fits slope ≈ −1.
     */
-  val q419ZipfFit: QueryDef = QueryDef(
-    "q419_zipf_fit",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r15_documents")
-      s.sql(zipfSql(spark = true))
-    },
-    Some(zipfSql(spark = false))
-  )
+  val q419ZipfFit: QueryDef = QueryDef.sql("q419_zipf_fit", "r15_", "documents")(zipfSql)
 
-  private def zipfSql(spark: Boolean): String = {
-    val tbl = if (spark) "r15_documents" else "documents"
+  private def zipfSql(d: Dialect): String = {
+    val tbl = d.t("documents")
     val deq = "CAST(1048576 AS DOUBLE)"
-    s"""WITH tok AS (${rankTokens(tbl, spark, "source", "doc_id")}),
+    s"""WITH tok AS (${rankTokens(tbl, d, "source", "doc_id")}),
         wc AS (
           SELECT source, word, CAST(count(*) AS BIGINT) AS c
           FROM tok GROUP BY 1, 2),
@@ -272,20 +234,12 @@ object Round15 {
     * not an interpolating quantile, so both engines pick the same
     * element.
     */
-  val q420DatasetCard: QueryDef = QueryDef(
-    "q420_dataset_card",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r15_documents")
-      s.sql(datasetCardSql(spark = true))
-    },
-    Some(datasetCardSql(spark = false))
-  )
+  val q420DatasetCard: QueryDef =
+    QueryDef.sql("q420_dataset_card", "r15_", "documents")(datasetCardSql)
 
-  private def datasetCardSql(spark: Boolean): String = {
-    val tbl = if (spark) "r15_documents" else "documents"
-    val nWords =
-      if (spark) "CAST(regexp_count(lower(text), '[a-z]+') AS BIGINT)"
-      else "CAST(len(regexp_extract_all(lower(text), '[a-z]+')) AS BIGINT)"
+  private def datasetCardSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val nWords = d.wordCount
     s"""WITH d AS (
           SELECT source, doc_id, lang, md5(text) AS h, $nWords AS nw
           FROM $tbl),

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-16 additions (q421+): corpus-dynamics audits — the n-gram
   * novelty curve over training order (how fast fresh data stops being
@@ -28,20 +27,18 @@ object Round16 {
     * "aggregate twice from the gram stream" shape would tokenize the
     * corpus twice (PlanAuditSpec pins the single-pass form).
     */
-  val q421NoveltyCurve: QueryDef = QueryDef(
-    "q421_novelty_curve",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r16_documents")
-      s.sql(noveltySql(spark = true))
-    },
-    Some(noveltySql(spark = false))
-  )
+  val q421NoveltyCurve: QueryDef =
+    QueryDef.sql("q421_novelty_curve", "r16_", "documents")(noveltySql)
 
-  private def noveltySql(spark: Boolean): String = {
-    val tbl = if (spark) "r16_documents" else "documents"
+  private def noveltySql(d: Dialect): String = {
+    val tbl = d.t("documents")
     val w = "OVER (PARTITION BY doc_id ORDER BY pos)"
+    val (collectSet, unnest) = d match {
+      case _: Spark => ("collect_set(batch)", "explode(bs)")
+      case DuckDb => ("list(DISTINCT batch)", "unnest(bs)")
+    }
     s"""WITH nmax AS (SELECT max(doc_id) + 1 AS n FROM $tbl),
-        tok AS (${posTokens(tbl, spark, "doc_id", "source")}),
+        tok AS (${posTokens(tbl, d, "doc_id", "source")}),
         grams AS (
           SELECT CAST(floor(doc_id * 10.0 / n) AS INT) AS batch,
                  md5(word || ' ' || lead(word, 1) $w || ' ' || lead(word, 2) $w) AS g
@@ -49,10 +46,10 @@ object Round16 {
           ),
         ga AS (
           SELECT g, min(batch) AS fb,
-                 ${if (spark) "collect_set(batch)" else "list(DISTINCT batch)"} AS bs
+                 $collectSet AS bs
           FROM grams WHERE g IS NOT NULL GROUP BY g),
         x AS (
-          SELECT fb, ${if (spark) "explode(bs)" else "unnest(bs)"} AS batch
+          SELECT fb, $unnest AS batch
           FROM ga)
         SELECT batch,
                CAST(count(*) AS BIGINT) AS n_distinct_grams,
@@ -76,27 +73,11 @@ object Round16 {
     * final 64-term square fold snaps). This is the 100 TB shape: no
     * pair ever materializes.
     */
-  val q422Isotropy: QueryDef = QueryDef(
-    "q422_isotropy",
-    (s, dir) => {
-      Tables.embeddings(s, dir).createOrReplaceTempView("r16_embeddings")
-      s.sql(isotropySql(spark = true))
-    },
-    Some(isotropySql(spark = false))
-  )
+  val q422Isotropy: QueryDef = QueryDef.sql("q422_isotropy", "r16_", "embeddings")(isotropySql)
 
-  private def isotropySql(spark: Boolean): String = {
-    val tbl = if (spark) "r16_embeddings" else "embeddings"
-    val e =
-      if (spark)
-        s"""SELECT vec_id, label, pos AS dim, CAST(col AS DOUBLE) AS v
-            FROM (SELECT vec_id, label,
-                         posexplode(transform(embedding, x -> CAST(x AS DOUBLE)))
-                  FROM $tbl)"""
-      else
-        s"""SELECT vec_id, label, generate_subscripts(embedding, 1) AS dim,
-                   CAST(unnest(embedding) AS DOUBLE) AS v
-            FROM $tbl"""
+  private def isotropySql(d: Dialect): String = {
+    val tbl = d.t("embeddings")
+    val e = d.embeddingCells(tbl, "vec_id, label", 1)
     s"""WITH e AS ($e),
         nrm AS (
           SELECT vec_id, label,
@@ -146,18 +127,11 @@ object Round16 {
     * broadcast-joins the token stream. Corpus work is one explode +
     * one keyed agg.
     */
-  val q423VocabDuel: QueryDef = QueryDef(
-    "q423_vocab_duel",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r16_documents")
-      s.sql(vocabDuelSql(spark = true))
-    },
-    Some(vocabDuelSql(spark = false))
-  )
+  val q423VocabDuel: QueryDef = QueryDef.sql("q423_vocab_duel", "r16_", "documents")(vocabDuelSql)
 
-  private def vocabDuelSql(spark: Boolean): String = {
-    val tbl = if (spark) "r16_documents" else "documents"
-    s"""WITH tok AS (${posTokens(tbl, spark, "doc_id", "source")}),
+  private def vocabDuelSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    s"""WITH tok AS (${posTokens(tbl, d, "doc_id", "source")}),
         freq AS (
           SELECT word,
                  CAST(row_number() OVER (ORDER BY c DESC, word) AS BIGINT) AS rnk
@@ -191,20 +165,12 @@ object Round16 {
     * worksheet a rebalancing pass consumes. One keyed agg; K rows
     * after.
     */
-  val q424MixtureGap: QueryDef = QueryDef(
-    "q424_mixture_gap",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r16_documents")
-      s.sql(mixtureGapSql(spark = true))
-    },
-    Some(mixtureGapSql(spark = false))
-  )
+  val q424MixtureGap: QueryDef =
+    QueryDef.sql("q424_mixture_gap", "r16_", "documents")(mixtureGapSql)
 
-  private def mixtureGapSql(spark: Boolean): String = {
-    val tbl = if (spark) "r16_documents" else "documents"
-    val nWords =
-      if (spark) "CAST(regexp_count(lower(text), '[a-z]+') AS BIGINT)"
-      else "CAST(len(regexp_extract_all(lower(text), '[a-z]+')) AS BIGINT)"
+  private def mixtureGapSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val nWords = d.wordCount
     s"""WITH st AS (
           SELECT source, CAST(sum($nWords) AS BIGINT) AS tok
           FROM $tbl GROUP BY 1),
@@ -233,20 +199,11 @@ object Round16 {
     * the source starts). The ordering agg is corpus-scale; the schedule
     * itself is a #sources-row window.
     */
-  val q425Curriculum: QueryDef = QueryDef(
-    "q425_curriculum",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r16_documents")
-      s.sql(curriculumSql(spark = true))
-    },
-    Some(curriculumSql(spark = false))
-  )
+  val q425Curriculum: QueryDef = QueryDef.sql("q425_curriculum", "r16_", "documents")(curriculumSql)
 
-  private def curriculumSql(spark: Boolean): String = {
-    val tbl = if (spark) "r16_documents" else "documents"
-    val nWords =
-      if (spark) "CAST(regexp_count(lower(text), '[a-z]+') AS BIGINT)"
-      else "CAST(len(regexp_extract_all(lower(text), '[a-z]+')) AS BIGINT)"
+  private def curriculumSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val nWords = d.wordCount
     s"""WITH st AS (
           SELECT source,
                  CAST(count(*) AS BIGINT) AS n_docs,

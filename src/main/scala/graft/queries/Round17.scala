@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-17 additions (q426+): corpus-composition forensics — the
   * cross-source 5-gram overlap matrix (who copied whom), Heaps'-law
@@ -26,19 +25,13 @@ object Round17 {
     * dimension, not the corpus) — the corpus text never self-joins,
     * and the only wide shuffles are hash aggs/joins on 32-char keys.
     */
-  val q426SourceOverlap: QueryDef = QueryDef(
-    "q426_source_overlap",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r17_documents")
-      s.sql(overlapSql(spark = true))
-    },
-    Some(overlapSql(spark = false))
-  )
+  val q426SourceOverlap: QueryDef =
+    QueryDef.sql("q426_source_overlap", "r17_", "documents")(overlapSql)
 
-  private def overlapSql(spark: Boolean): String = {
-    val tbl = if (spark) "r17_documents" else "documents"
+  private def overlapSql(d: Dialect): String = {
+    val tbl = d.t("documents")
     val w = "OVER (PARTITION BY doc_id ORDER BY pos)"
-    s"""WITH tok AS (${posTokens(tbl, spark, "source", "doc_id")}),
+    s"""WITH tok AS (${posTokens(tbl, d, "source", "doc_id")}),
         grams AS (
           SELECT source,
                  md5(word || ' ' || lead(word, 1) $w || ' ' || lead(word, 2) $w
@@ -73,19 +66,12 @@ object Round17 {
     * no corpus-sized window. The regression statistics ride quantized
     * BIGINT sums (10 points per source).
     */
-  val q427HeapsLaw: QueryDef = QueryDef(
-    "q427_heaps_law",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r17_documents")
-      s.sql(heapsSql(spark = true))
-    },
-    Some(heapsSql(spark = false))
-  )
+  val q427HeapsLaw: QueryDef = QueryDef.sql("q427_heaps_law", "r17_", "documents")(heapsSql)
 
-  private def heapsSql(spark: Boolean): String = {
-    val tbl = if (spark) "r17_documents" else "documents"
+  private def heapsSql(d: Dialect): String = {
+    val tbl = d.t("documents")
     s"""WITH nmax AS (SELECT max(doc_id) + 1 AS n FROM $tbl),
-        tok AS (${posTokens(tbl, spark, "source", "doc_id")}),
+        tok AS (${posTokens(tbl, d, "source", "doc_id")}),
         dec AS (
           SELECT source, CAST(floor(doc_id * 10.0 / n) AS INT) AS d, word
           FROM tok CROSS JOIN nmax),
@@ -143,18 +129,11 @@ object Round17 {
     * Top-50 selection is ORDER BY + LIMIT (distributed top-k, no
     * global window); everything else is two keyed aggs.
     */
-  val q428Burstiness: QueryDef = QueryDef(
-    "q428_burstiness",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r17_documents")
-      s.sql(burstinessSql(spark = true))
-    },
-    Some(burstinessSql(spark = false))
-  )
+  val q428Burstiness: QueryDef = QueryDef.sql("q428_burstiness", "r17_", "documents")(burstinessSql)
 
-  private def burstinessSql(spark: Boolean): String = {
-    val tbl = if (spark) "r17_documents" else "documents"
-    s"""WITH tok AS (${posTokens(tbl, spark, "source", "doc_id")}),
+  private def burstinessSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    s"""WITH tok AS (${posTokens(tbl, d, "source", "doc_id")}),
         d AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS nd FROM $tbl),
         wstats AS (
           SELECT word,
@@ -180,17 +159,11 @@ object Round17 {
     * Each n is one gram-keyed agg over hashes; the four levels union.
     * A slice whose distinct-4 ratio collapses is template spam.
     */
-  val q429DiversityProfile: QueryDef = QueryDef(
-    "q429_diversity_profile",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r17_documents")
-      s.sql(diversitySql(spark = true))
-    },
-    Some(diversitySql(spark = false))
-  )
+  val q429DiversityProfile: QueryDef =
+    QueryDef.sql("q429_diversity_profile", "r17_", "documents")(diversitySql)
 
-  private def diversitySql(spark: Boolean): String = {
-    val tbl = if (spark) "r17_documents" else "documents"
+  private def diversitySql(d: Dialect): String = {
+    val tbl = d.t("documents")
     val w = "OVER (PARTITION BY doc_id ORDER BY pos)"
     def level(n: Int): String = {
       val gram =
@@ -200,7 +173,7 @@ object Round17 {
       s"""SELECT source, CAST($n AS INT) AS n, md5($gram) AS g
           FROM tok"""
     }
-    s"""WITH tok AS (${posTokens(tbl, spark, "source", "doc_id")}),
+    s"""WITH tok AS (${posTokens(tbl, d, "source", "doc_id")}),
         grams AS (${(1 to 4).map(level).mkString("\n UNION ALL \n")})
         SELECT source, n,
                CAST(count(g) AS BIGINT) AS n_grams,
@@ -223,17 +196,10 @@ object Round17 {
     * #sources×#langs driver-free arithmetic. Positive delta = the
     * source makes the corpus mix MORE diverse.
     */
-  val q430LooValuation: QueryDef = QueryDef(
-    "q430_loo_valuation",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r17_documents")
-      s.sql(looSql(spark = true))
-    },
-    Some(looSql(spark = false))
-  )
+  val q430LooValuation: QueryDef = QueryDef.sql("q430_loo_valuation", "r17_", "documents")(looSql)
 
-  private def looSql(spark: Boolean): String = {
-    val tbl = if (spark) "r17_documents" else "documents"
+  private def looSql(d: Dialect): String = {
+    val tbl = d.t("documents")
     // entropy of a (count, total) profile in exact micro-nat terms
     def ent(c: String, n: String): String =
       s"CAST(sum(CASE WHEN $c > 0 THEN ${qi(s"-(CAST($c AS DOUBLE) / $n) * ln(CAST($c AS DOUBLE) / $n)")} ELSE 0 END) AS DOUBLE) / 1048576.0"

@@ -141,22 +141,13 @@ object Round18 {
     * come from one hash equi-join. Reports each stitch pair (tail doc →
     * head doc) with the shared affix.
     */
-  val q432DocStitching: QueryDef = QueryDef(
-    "q432_doc_stitching",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r18_documents")
-      s.sql(stitchSql(spark = true))
-    },
-    Some(stitchSql(spark = false))
-  )
+  val q432DocStitching: QueryDef =
+    QueryDef.sql("q432_doc_stitching", "r18_", "documents")(stitchSql)
 
-  private def stitchSql(spark: Boolean): String = {
-    val tbl = if (spark) "r18_documents" else "documents"
-    val phrase =
-      if (spark)
-        "array_join(transform(array_sort(array_agg(struct(pos, word))), t -> t.word), ' ')"
-      else "string_agg(word, ' ' ORDER BY pos)"
-    s"""WITH tok AS (${posTokens(tbl, spark, "source", "doc_id")}),
+  private def stitchSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val phrase = d.stringAgg("word", "pos")
+    s"""WITH tok AS (${posTokens(tbl, d, "source", "doc_id")}),
         ranked AS (
           SELECT doc_id, pos, word,
                  row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS rhead,
@@ -187,17 +178,10 @@ object Round18 {
     * grid so the fold is order-exact), then V = √(χ²/(N·(min(r,c)−1))).
     * One corpus-sized keyed agg; the table itself is dimension-sized.
     */
-  val q433CramersV: QueryDef = QueryDef(
-    "q433_cramers_v",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r18_documents")
-      s.sql(cramersSql(spark = true))
-    },
-    Some(cramersSql(spark = false))
-  )
+  val q433CramersV: QueryDef = QueryDef.sql("q433_cramers_v", "r18_", "documents")(cramersSql)
 
-  private def cramersSql(spark: Boolean): String = {
-    val tbl = if (spark) "r18_documents" else "documents"
+  private def cramersSql(d: Dialect): String = {
+    val tbl = d.t("documents")
     s"""WITH cell AS (
           SELECT lang, source, CAST(count(*) AS BIGINT) AS o
           FROM $tbl GROUP BY 1, 2),
@@ -229,24 +213,18 @@ object Round18 {
     * Both entropies come from exact counts with per-term micro-nat
     * quantization; everything is two gram-keyed aggs per source.
     */
-  val q434EntropyRate: QueryDef = QueryDef(
-    "q434_entropy_rate",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r18_documents")
-      s.sql(entropyRateSql(spark = true))
-    },
-    Some(entropyRateSql(spark = false))
-  )
+  val q434EntropyRate: QueryDef =
+    QueryDef.sql("q434_entropy_rate", "r18_", "documents")(entropyRateSql)
 
-  private def entropyRateSql(spark: Boolean): String = {
-    val tbl = if (spark) "r18_documents" else "documents"
+  private def entropyRateSql(d: Dialect): String = {
+    val tbl = d.t("documents")
     val w = "OVER (PARTITION BY doc_id ORDER BY pos)"
     def entOf(cte: String, cnt: String, tot: String): String =
       s"""SELECT source,
                  CAST(sum(${qi(s"-(CAST($cnt AS DOUBLE) / $tot) * ln(CAST($cnt AS DOUBLE) / $tot)")})
                       AS DOUBLE) / 1048576.0 AS h
           FROM $cte GROUP BY source"""
-    s"""WITH tok AS (${posTokens(tbl, spark, "source", "doc_id")}),
+    s"""WITH tok AS (${posTokens(tbl, d, "source", "doc_id")}),
         uni AS (
           SELECT source, word, CAST(count(*) AS BIGINT) AS c,
                  CAST(sum(count(*)) OVER (PARTITION BY source) AS BIGINT) AS t
@@ -277,18 +255,12 @@ object Round18 {
     * audit that catches templated document openings ("the following is
     * a transcript of…") before they become 3% of a training epoch.
     */
-  val q435PositionalBias: QueryDef = QueryDef(
-    "q435_positional_bias",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r18_documents")
-      s.sql(positionalSql(spark = true))
-    },
-    Some(positionalSql(spark = false))
-  )
+  val q435PositionalBias: QueryDef =
+    QueryDef.sql("q435_positional_bias", "r18_", "documents")(positionalSql)
 
-  private def positionalSql(spark: Boolean): String = {
-    val tbl = if (spark) "r18_documents" else "documents"
-    s"""WITH tok AS (${posTokens(tbl, spark, "source", "doc_id")}),
+  private def positionalSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    s"""WITH tok AS (${posTokens(tbl, d, "source", "doc_id")}),
         uni AS (
           SELECT source, word, CAST(count(*) AS BIGINT) AS c
           FROM tok GROUP BY 1, 2),

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-19 additions (q436+): the production-ingest shapes — an
   * interleaved shard-manifest planner (source-balanced packing via the
@@ -17,15 +16,12 @@ object Round19 {
   /** (doc_id, source, seg_id, h): md5 of each doc's consecutive
     * 16-token segment (Round15's q416 unit). Shared by q437/q438/q440.
     */
-  private def segCte(tbl: String, spark: Boolean): String = {
-    val phrase =
-      if (spark)
-        "array_join(transform(array_sort(array_agg(struct(rnk, word))), t -> t.word), ' ')"
-      else "string_agg(word, ' ' ORDER BY rnk)"
+  private def segCte(tbl: String, d: Dialect): String = {
+    val phrase = d.stringAgg("word", "rnk")
     s"""SELECT doc_id, source,
                CAST(floor(rnk / 16.0) AS BIGINT) AS seg_id,
                md5($phrase) AS h
-        FROM (${rankTokens(tbl, spark, "source", "doc_id")}) tk
+        FROM (${rankTokens(tbl, d, "source", "doc_id")}) tk
         GROUP BY doc_id, source, CAST(floor(rnk / 16.0) AS BIGINT)"""
   }
 
@@ -33,11 +29,8 @@ object Round19 {
     * replay (doc_id %% 10 would alias the synthetic corpus's
     * source = doc_id %% 20 assignment and starve some sources).
     */
-  private def bucket(salt: String, spark: Boolean): String =
-    if (spark)
-      s"CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), '$salt')), 1, 8), 16, 10) AS BIGINT) % 10"
-    else
-      s"CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR) || '$salt'), 1, 8)) AS BIGINT) % 10"
+  private def bucket(salt: String, d: Dialect): String =
+    s"${md5i(s"CAST(doc_id AS ${d.str}) || '$salt'", d)} % 10"
 
   // ---------------------------------------------------------------- q436
 
@@ -51,21 +44,13 @@ object Round19 {
     * bucket-keyed window. Output per shard: docs, tokens, source
     * spread, dominant-source share.
     */
-  val q436ShardManifest: QueryDef = QueryDef(
-    "q436_shard_manifest",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r19_documents")
-      s.sql(shardSql(spark = true))
-    },
-    Some(shardSql(spark = false))
-  )
+  val q436ShardManifest: QueryDef =
+    QueryDef.sql("q436_shard_manifest", "r19_", "documents")(shardSql)
 
-  private def shardSql(spark: Boolean): String = {
-    val tbl = if (spark) "r19_documents" else "documents"
-    val nWords =
-      if (spark) "CAST(regexp_count(lower(text), '[a-z]+') AS BIGINT)"
-      else "CAST(len(regexp_extract_all(lower(text), '[a-z]+')) AS BIGINT)"
-    val shardOf = if (spark) "cum div 4096" else "cum // 4096"
+  private def shardSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val nWords = d.wordCount
+    val shardOf = s"cum ${d.idiv} 4096"
     s"""WITH t AS (
           SELECT source, doc_id, $nWords AS nw FROM $tbl),
         r AS (
@@ -116,20 +101,14 @@ object Round19 {
     * shares a segment), or `fresh`. All decisions ride segment-hash
     * equi-joins; the batch never joins the corpus text.
     */
-  val q437IncrementalIngest: QueryDef = QueryDef(
-    "q437_incremental_ingest",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r19_documents")
-      s.sql(ingestSql(spark = true))
-    },
-    Some(ingestSql(spark = false))
-  )
+  val q437IncrementalIngest: QueryDef =
+    QueryDef.sql("q437_incremental_ingest", "r19_", "documents")(ingestSql)
 
-  private def ingestSql(spark: Boolean): String = {
-    val tbl = if (spark) "r19_documents" else "documents"
-    val bk = bucket(":ingest", spark)
+  private def ingestSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val bk = bucket(":ingest", d)
     s"""WITH lab AS (SELECT doc_id, $bk AS b FROM $tbl),
-        seg AS (${segCte(tbl, spark)}),
+        seg AS (${segCte(tbl, d)}),
         oldseg AS (SELECT s.h FROM seg s JOIN lab ON lab.doc_id = s.doc_id
                    WHERE lab.b < 8 GROUP BY 1),
         newseg AS (SELECT s.doc_id, s.h FROM seg s JOIN lab ON lab.doc_id = s.doc_id
@@ -167,19 +146,13 @@ object Round19 {
     * test-doc counts, contaminated counts, rate. One segment-hash
     * equi-join; no text self-join.
     */
-  val q438SplitContamination: QueryDef = QueryDef(
-    "q438_split_contamination",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r19_documents")
-      s.sql(contaminationSql(spark = true))
-    },
-    Some(contaminationSql(spark = false))
-  )
+  val q438SplitContamination: QueryDef =
+    QueryDef.sql("q438_split_contamination", "r19_", "documents")(contaminationSql)
 
-  private def contaminationSql(spark: Boolean): String = {
-    val tbl = if (spark) "r19_documents" else "documents"
-    val bk = bucket(":split", spark)
-    s"""WITH seg AS (${segCte(tbl, spark)}),
+  private def contaminationSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val bk = bucket(":split", d)
+    s"""WITH seg AS (${segCte(tbl, d)}),
         lab AS (
           SELECT doc_id, source,
                  CASE WHEN $bk < 8 THEN 'train' ELSE 'test' END AS split
@@ -210,20 +183,13 @@ object Round19 {
     * the relative token growth — the release-notes table of an
     * incremental corpus drop.
     */
-  val q439CorpusDiff: QueryDef = QueryDef(
-    "q439_corpus_diff",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r19_documents")
-      s.sql(diffSql(spark = true))
-    },
-    Some(diffSql(spark = false))
-  )
+  val q439CorpusDiff: QueryDef = QueryDef.sql("q439_corpus_diff", "r19_", "documents")(diffSql)
 
-  private def diffSql(spark: Boolean): String = {
-    val tbl = if (spark) "r19_documents" else "documents"
-    val bk = bucket(":ver", spark)
+  private def diffSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val bk = bucket(":ver", d)
     s"""WITH lab AS (SELECT doc_id, $bk < 9 AS in_a FROM $tbl),
-        tok AS (${rankTokens(tbl, spark, "source", "doc_id")}),
+        tok AS (${rankTokens(tbl, d, "source", "doc_id")}),
         marked AS (
           SELECT t.source, t.word, lab.in_a
           FROM tok t JOIN lab ON lab.doc_id = t.doc_id),
@@ -262,18 +228,12 @@ object Round19 {
     * of the hash-partitioned (doc_id, seg_id) window — q416's marking
     * pass; the matrix joins on the hash only.
     */
-  val q440DedupAttribution: QueryDef = QueryDef(
-    "q440_dedup_attribution",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r19_documents")
-      s.sql(attributionSql(spark = true))
-    },
-    Some(attributionSql(spark = false))
-  )
+  val q440DedupAttribution: QueryDef =
+    QueryDef.sql("q440_dedup_attribution", "r19_", "documents")(attributionSql)
 
-  private def attributionSql(spark: Boolean): String = {
-    val tbl = if (spark) "r19_documents" else "documents"
-    s"""WITH seg AS (${segCte(tbl, spark)}),
+  private def attributionSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    s"""WITH seg AS (${segCte(tbl, d)}),
         marked AS (
           SELECT h, source,
                  row_number() OVER (PARTITION BY h ORDER BY doc_id, seg_id) AS rn

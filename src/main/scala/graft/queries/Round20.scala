@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-20 additions (q441+): embedding-quality and transfer audits —
   * Matryoshka truncation agreement (Kusupati et al. 2022: do the first
@@ -20,17 +19,18 @@ object Round20 {
     * DuckDB 1-based — dims only join within one engine, and the
     * "first 16 dims" predicate adjusts per dialect.
     */
-  private def eCte(tbl: String, spark: Boolean): String =
-    if (spark)
+  private def eCte(tbl: String, d: Dialect): String = d match {
+    case _: Spark =>
       s"""SELECT vec_id, label, pos AS dim, CAST(col AS DOUBLE) AS v
           FROM (SELECT vec_id, label,
                        posexplode(transform(embedding, x -> CAST(x AS DOUBLE)))
                 FROM $tbl)"""
-    else
+    case DuckDb =>
       s"""SELECT vec_id, label, generate_subscripts(embedding, 1) AS dim,
                  CAST(unnest(embedding) AS DOUBLE) AS v
           FROM $tbl"""
 
+  }
   /** Per-label centroids with exact quantized sums (Round15 recipe). */
   private def centCte: String =
     s"""cent AS (
@@ -49,18 +49,15 @@ object Round20 {
     * cheap first-stage retrieval. Centroids broadcast; the candidate
     * fan is #vectors×#labels, scan-side.
     */
-  val q441MatryoshkaAudit: QueryDef = QueryDef(
-    "q441_matryoshka_audit",
-    (s, dir) => {
-      Tables.embeddings(s, dir).createOrReplaceTempView("r20_embeddings")
-      s.sql(matryoshkaSql(spark = true))
-    },
-    Some(matryoshkaSql(spark = false))
-  )
+  val q441MatryoshkaAudit: QueryDef =
+    QueryDef.sql("q441_matryoshka_audit", "r20_", "embeddings")(matryoshkaSql)
 
-  private def matryoshkaSql(spark: Boolean): String = {
-    val tbl = if (spark) "r20_embeddings" else "embeddings"
-    val low16 = if (spark) "e.dim < 16" else "e.dim <= 16"
+  private def matryoshkaSql(d: Dialect): String = {
+    val tbl = d.t("embeddings")
+    val low16 = d match {
+      case _: Spark => "e.dim < 16"
+      case DuckDb => "e.dim <= 16"
+    }
     def best(dimPred: String, name: String): String =
       s"""$name AS (
             SELECT vec_id, label, cand
@@ -78,7 +75,7 @@ object Round20 {
                 WHERE $dimPred
                 GROUP BY 1, 2, 3) d) x
             WHERE rn = 1)"""
-    s"""WITH e AS (${eCte(tbl, spark)}),
+    s"""WITH e AS (${eCte(tbl, d)}),
         $centCte,
         ${best("1 = 1", "full64")},
         ${best(low16, "trunc16")}
@@ -102,18 +99,12 @@ object Round20 {
     * positive means the labeling separates in embedding space —
     * averaged per label. Same broadcastable candidate fan as q441.
     */
-  val q442SilhouetteLite: QueryDef = QueryDef(
-    "q442_silhouette_lite",
-    (s, dir) => {
-      Tables.embeddings(s, dir).createOrReplaceTempView("r20_embeddings")
-      s.sql(silhouetteSql(spark = true))
-    },
-    Some(silhouetteSql(spark = false))
-  )
+  val q442SilhouetteLite: QueryDef =
+    QueryDef.sql("q442_silhouette_lite", "r20_", "embeddings")(silhouetteSql)
 
-  private def silhouetteSql(spark: Boolean): String = {
-    val tbl = if (spark) "r20_embeddings" else "embeddings"
-    s"""WITH e AS (${eCte(tbl, spark)}),
+  private def silhouetteSql(d: Dialect): String = {
+    val tbl = d.t("embeddings")
+    s"""WITH e AS (${eCte(tbl, d)}),
         $centCte,
         scored AS (
           SELECT d.vec_id, d.label, d.cand,
@@ -151,24 +142,14 @@ object Round20 {
     * bins. One corpus scan + one equi-join on the partner id — no pair
     * explosion, sampling is rerun-stable.
     */
-  val q443PairCosineHist: QueryDef = QueryDef(
-    "q443_pair_cosine_hist",
-    (s, dir) => {
-      Tables.embeddings(s, dir).createOrReplaceTempView("r20_embeddings")
-      s.sql(pairHistSql(spark = true))
-    },
-    Some(pairHistSql(spark = false))
-  )
+  val q443PairCosineHist: QueryDef =
+    QueryDef.sql("q443_pair_cosine_hist", "r20_", "embeddings")(pairHistSql)
 
-  private def pairHistSql(spark: Boolean): String = {
-    val tbl = if (spark) "r20_embeddings" else "embeddings"
-    val h =
-      if (spark)
-        "CAST(conv(substring(md5(concat(CAST(vec_id AS STRING), ':pair')), 1, 8), 16, 10) AS BIGINT)"
-      else
-        "CAST(('0x' || substring(md5(CAST(vec_id AS VARCHAR) || ':pair'), 1, 8)) AS BIGINT)"
+  private def pairHistSql(d: Dialect): String = {
+    val tbl = d.t("embeddings")
+    val h = md5i(s"CAST(vec_id AS ${d.str}) || ':pair'", d)
     s"""WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM $tbl),
-        e AS (${eCte(tbl, spark)}),
+        e AS (${eCte(tbl, d)}),
         pairing AS (
           SELECT vec_id,
                  (vec_id + 1 + $h % (n.n - 1)) % n.n AS partner
@@ -203,30 +184,16 @@ object Round20 {
     * needed and both engines rank identically). Corpus-sized work is
     * one token scan; the correlation runs on #sources rows.
     */
-  val q444SpearmanHealth: QueryDef = QueryDef(
-    "q444_spearman_health",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r20_documents")
-      s.sql(spearmanSql(spark = true))
-    },
-    Some(spearmanSql(spark = false))
-  )
+  val q444SpearmanHealth: QueryDef =
+    QueryDef.sql("q444_spearman_health", "r20_", "documents")(spearmanSql)
 
-  private def spearmanSql(spark: Boolean): String = {
-    val tbl = if (spark) "r20_documents" else "documents"
+  private def spearmanSql(d: Dialect): String = {
+    val tbl = d.t("documents")
     val tok =
-      if (spark)
-        s"""SELECT source, explode(split(lower(text), '[^a-z]+')) AS word FROM $tbl"""
-      else
-        s"""SELECT source, unnest(string_split_regex(lower(text), '[^a-z]+')) AS word
+      s"""SELECT source, ${d.words} AS word
             FROM $tbl"""
-    val ws = if (spark) "\\\\s" else "\\s"
-    val sub =
-      if (spark) s"CAST(regexp_count(lower(text), '[a-z]{1,4}|[0-9]{1,3}|[^a-z0-9$ws]') AS BIGINT)"
-      else s"CAST(len(regexp_extract_all(lower(text), '[a-z]{1,4}|[0-9]{1,3}|[^a-z0-9$ws]')) AS BIGINT)"
-    val nw =
-      if (spark) "CAST(regexp_count(lower(text), '[a-z]+') AS BIGINT)"
-      else "CAST(len(regexp_extract_all(lower(text), '[a-z]+')) AS BIGINT)"
+    val sub = d.regexCount("lower(text)", s"[a-z]{1,4}|[0-9]{1,3}|[^a-z0-9${d.ws}]")
+    val nw = d.wordCount
     s"""WITH uni AS (
           SELECT source, word, CAST(count(*) AS BIGINT) AS c
           FROM ($tok) t WHERE word <> '' GROUP BY 1, 2),
@@ -261,19 +228,13 @@ object Round20 {
     * release table. Per-source counts join the global tables on the
     * bigram key; nothing corpus-sized crosses a driver.
     */
-  val q445HoldoutTransfer: QueryDef = QueryDef(
-    "q445_holdout_transfer",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r20_documents")
-      s.sql(holdoutSql(spark = true))
-    },
-    Some(holdoutSql(spark = false))
-  )
+  val q445HoldoutTransfer: QueryDef =
+    QueryDef.sql("q445_holdout_transfer", "r20_", "documents")(holdoutSql)
 
-  private def holdoutSql(spark: Boolean): String = {
-    val tbl = if (spark) "r20_documents" else "documents"
+  private def holdoutSql(d: Dialect): String = {
+    val tbl = d.t("documents")
     val w = "OVER (PARTITION BY doc_id ORDER BY pos)"
-    val tok = posTokens(tbl, spark, "source", "doc_id")
+    val tok = posTokens(tbl, d, "source", "doc_id")
     s"""WITH tok AS ($tok),
         bi AS (
           SELECT source, a, b

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-21 additions (q446+): curation-policy analytics — duplicate-
   * count reweighting of a deduplicated corpus (train once, weight by
@@ -17,16 +16,13 @@ import graft.sources.Tables
 object Round21 {
 
   /** (doc_id, source, seg_id, h) 16-token segment hashes (q416 unit). */
-  private def segCte(tbl: String, spark: Boolean): String = {
-    val phrase =
-      if (spark)
-        "array_join(transform(array_sort(array_agg(struct(rnk, word))), t -> t.word), ' ')"
-      else "string_agg(word, ' ' ORDER BY rnk)"
+  private def segCte(tbl: String, d: Dialect): String = {
+    val phrase = d.stringAgg("word", "rnk")
     s"""SELECT doc_id, source,
                CAST(floor(rnk / 16.0) AS BIGINT) AS seg_id,
                md5($phrase) AS h,
                CAST(count(*) AS BIGINT) AS n_tok
-        FROM (${rankTokens(tbl, spark, "source", "doc_id")}) tk
+        FROM (${rankTokens(tbl, d, "source", "doc_id")}) tk
         GROUP BY doc_id, source, CAST(floor(rnk / 16.0) AS BIGINT)"""
   }
 
@@ -41,18 +37,12 @@ object Round21 {
     * class is wholly within one source and token-counts match across
     * instances.
     */
-  val q446DedupReweight: QueryDef = QueryDef(
-    "q446_dedup_reweight",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r21_documents")
-      s.sql(reweightSql(spark = true))
-    },
-    Some(reweightSql(spark = false))
-  )
+  val q446DedupReweight: QueryDef =
+    QueryDef.sql("q446_dedup_reweight", "r21_", "documents")(reweightSql)
 
-  private def reweightSql(spark: Boolean): String = {
-    val tbl = if (spark) "r21_documents" else "documents"
-    s"""WITH seg AS (${segCte(tbl, spark)}),
+  private def reweightSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    s"""WITH seg AS (${segCte(tbl, d)}),
         marked AS (
           SELECT source, n_tok,
                  row_number() OVER (PARTITION BY h ORDER BY doc_id, seg_id) AS rn,
@@ -81,18 +71,12 @@ object Round21 {
     * The table that says which filter actually bites before a rollout
     * commits to a policy.
     */
-  val q447FilterAblation: QueryDef = QueryDef(
-    "q447_filter_ablation",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r21_documents")
-      s.sql(ablationSql(spark = true))
-    },
-    Some(ablationSql(spark = false))
-  )
+  val q447FilterAblation: QueryDef =
+    QueryDef.sql("q447_filter_ablation", "r21_", "documents")(ablationSql)
 
-  private def ablationSql(spark: Boolean): String = {
-    val tbl = if (spark) "r21_documents" else "documents"
-    s"""WITH seg AS (${segCte(tbl, spark)}),
+  private def ablationSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    s"""WITH seg AS (${segCte(tbl, d)}),
         dupdoc AS (
           SELECT doc_id
           FROM (SELECT doc_id,
@@ -104,7 +88,7 @@ object Round21 {
           SELECT t.doc_id,
                  CAST(count(*) AS BIGINT) AS nw,
                  CAST(count(DISTINCT t.word) AS BIGINT) AS nv
-          FROM (${rankTokens(tbl, spark, "source", "doc_id")}) t
+          FROM (${rankTokens(tbl, d, "source", "doc_id")}) t
           GROUP BY t.doc_id),
         mask AS (
           SELECT (CASE WHEN f.nw >= 150 THEN 4 ELSE 0 END) +
@@ -131,22 +115,12 @@ object Round21 {
     * undercounts duplication (pairs straddle the cut), and this query
     * quantifies exactly how much at each rate.
     */
-  val q448SampleAudit: QueryDef = QueryDef(
-    "q448_sample_audit",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r21_documents")
-      s.sql(sampleAuditSql(spark = true))
-    },
-    Some(sampleAuditSql(spark = false))
-  )
+  val q448SampleAudit: QueryDef =
+    QueryDef.sql("q448_sample_audit", "r21_", "documents")(sampleAuditSql)
 
-  private def sampleAuditSql(spark: Boolean): String = {
-    val tbl = if (spark) "r21_documents" else "documents"
-    val bk =
-      if (spark)
-        "CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), ':audit')), 1, 8), 16, 10) AS BIGINT) % 10"
-      else
-        "CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':audit'), 1, 8)) AS BIGINT) % 10"
+  private def sampleAuditSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val bk = s"${md5i(s"CAST(doc_id AS ${d.str}) || ':audit'", d)} % 10"
     def rateFor(name: String, pred: String): String =
       s"""$name AS (
             SELECT CAST(count(*) AS BIGINT) AS n_seg,
@@ -155,7 +129,7 @@ object Round21 {
                            AS rn
                   FROM seg WHERE $pred) x)"""
     s"""WITH lab AS (SELECT doc_id, $bk AS b FROM $tbl),
-        seg0 AS (${segCte(tbl, spark)}),
+        seg0 AS (${segCte(tbl, d)}),
         seg AS (
           SELECT s.doc_id, s.seg_id, s.h, lab.b
           FROM seg0 s JOIN lab ON lab.doc_id = s.doc_id),
@@ -180,19 +154,13 @@ object Round21 {
     * is trivially identifiable from one probe. Per source: docs,
     * uniquely-identifiable docs, rate, and the mean df of rarest grams.
     */
-  val q449RareGramKeys: QueryDef = QueryDef(
-    "q449_rare_gram_keys",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r21_documents")
-      s.sql(rareGramSql(spark = true))
-    },
-    Some(rareGramSql(spark = false))
-  )
+  val q449RareGramKeys: QueryDef =
+    QueryDef.sql("q449_rare_gram_keys", "r21_", "documents")(rareGramSql)
 
-  private def rareGramSql(spark: Boolean): String = {
-    val tbl = if (spark) "r21_documents" else "documents"
+  private def rareGramSql(d: Dialect): String = {
+    val tbl = d.t("documents")
     val w = "OVER (PARTITION BY doc_id ORDER BY rnk)"
-    s"""WITH tok AS (${rankTokens(tbl, spark, "source", "doc_id")}),
+    s"""WITH tok AS (${rankTokens(tbl, d, "source", "doc_id")}),
         grams AS (
           SELECT source, doc_id, g
           FROM (SELECT source, doc_id,
@@ -229,18 +197,12 @@ object Round21 {
     * when a source is mined out. Same marking window as q416 — one
     * hash-keyed ranking, no corpus window.
     */
-  val q450RedundancyCurve: QueryDef = QueryDef(
-    "q450_redundancy_curve",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r21_documents")
-      s.sql(redundancySql(spark = true))
-    },
-    Some(redundancySql(spark = false))
-  )
+  val q450RedundancyCurve: QueryDef =
+    QueryDef.sql("q450_redundancy_curve", "r21_", "documents")(redundancySql)
 
-  private def redundancySql(spark: Boolean): String = {
-    val tbl = if (spark) "r21_documents" else "documents"
-    s"""WITH seg AS (${segCte(tbl, spark)}),
+  private def redundancySql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    s"""WITH seg AS (${segCte(tbl, d)}),
         q AS (
           SELECT source, doc_id,
                  CAST(floor((row_number() OVER (PARTITION BY source ORDER BY doc_id) - 1)

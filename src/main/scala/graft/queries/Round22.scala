@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-22 additions (q451+): mining and profiling — rare-word-blocked
   * cross-lingual bitext mining (the Artetxe & Schwenk candidate shape
@@ -27,19 +26,13 @@ object Round22 {
     * margin-based mining with the encoder swapped for exact lexical
     * counts.
     */
-  val q451BitextMining: QueryDef = QueryDef(
-    "q451_bitext_mining",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r22_documents")
-      s.sql(bitextSql(spark = true))
-    },
-    Some(bitextSql(spark = false))
-  )
+  val q451BitextMining: QueryDef =
+    QueryDef.sql("q451_bitext_mining", "r22_", "documents")(bitextSql)
 
-  private def bitextSql(spark: Boolean): String = {
-    val tbl = if (spark) "r22_documents" else "documents"
+  private def bitextSql(d: Dialect): String = {
+    val tbl = d.t("documents")
     val w = "OVER (PARTITION BY doc_id ORDER BY rnk)"
-    s"""WITH tok AS (${rankTokens(tbl, spark, "source", "doc_id")}),
+    s"""WITH tok AS (${rankTokens(tbl, d, "source", "doc_id")}),
         wc AS (
           SELECT doc_id, word, CAST(count(*) AS BIGINT) AS c
           FROM tok GROUP BY 1, 2),
@@ -88,20 +81,12 @@ object Round22 {
     * the table reports the same survivors with different intermediate
     * token bills — the argument for running the cheap filter first.
     */
-  val q452PipelineOrder: QueryDef = QueryDef(
-    "q452_pipeline_order",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r22_documents")
-      s.sql(pipelineOrderSql(spark = true))
-    },
-    Some(pipelineOrderSql(spark = false))
-  )
+  val q452PipelineOrder: QueryDef =
+    QueryDef.sql("q452_pipeline_order", "r22_", "documents")(pipelineOrderSql)
 
-  private def pipelineOrderSql(spark: Boolean): String = {
-    val tbl = if (spark) "r22_documents" else "documents"
-    val nWords =
-      if (spark) "CAST(regexp_count(lower(text), '[a-z]+') AS BIGINT)"
-      else "CAST(len(regexp_extract_all(lower(text), '[a-z]+')) AS BIGINT)"
+  private def pipelineOrderSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val nWords = d.wordCount
     s"""WITH d AS (
           SELECT doc_id, $nWords AS nw, md5(lower(text)) AS k
           FROM $tbl),
@@ -150,27 +135,12 @@ object Round22 {
     * anisotropy ratio max/mean — the cheap "is one dimension eating
     * the space" check before anyone pays for a full PCA.
     */
-  val q453VarianceProfile: QueryDef = QueryDef(
-    "q453_variance_profile",
-    (s, dir) => {
-      Tables.embeddings(s, dir).createOrReplaceTempView("r22_embeddings")
-      s.sql(varianceSql(spark = true))
-    },
-    Some(varianceSql(spark = false))
-  )
+  val q453VarianceProfile: QueryDef =
+    QueryDef.sql("q453_variance_profile", "r22_", "embeddings")(varianceSql)
 
-  private def varianceSql(spark: Boolean): String = {
-    val tbl = if (spark) "r22_embeddings" else "embeddings"
-    val e =
-      if (spark)
-        s"""SELECT vec_id, label, pos AS dim, CAST(col AS DOUBLE) AS v
-            FROM (SELECT vec_id, label,
-                         posexplode(transform(embedding, x -> CAST(x AS DOUBLE)))
-                  FROM $tbl)"""
-      else
-        s"""SELECT vec_id, label, generate_subscripts(embedding, 1) AS dim,
-                   CAST(unnest(embedding) AS DOUBLE) AS v
-            FROM $tbl"""
+  private def varianceSql(d: Dialect): String = {
+    val tbl = d.t("embeddings")
+    val e = d.embeddingCells(tbl, "vec_id, label", 1)
     s"""WITH e AS ($e),
         dimstats AS (
           SELECT label, dim,
@@ -202,18 +172,11 @@ object Round22 {
     * document length; MSTTR doesn't). Row-local chunking + one keyed
     * agg.
     */
-  val q454Msttr: QueryDef = QueryDef(
-    "q454_msttr",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r22_documents")
-      s.sql(msttrSql(spark = true))
-    },
-    Some(msttrSql(spark = false))
-  )
+  val q454Msttr: QueryDef = QueryDef.sql("q454_msttr", "r22_", "documents")(msttrSql)
 
-  private def msttrSql(spark: Boolean): String = {
-    val tbl = if (spark) "r22_documents" else "documents"
-    s"""WITH tok AS (${rankTokens(tbl, spark, "source", "doc_id")}),
+  private def msttrSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    s"""WITH tok AS (${rankTokens(tbl, d, "source", "doc_id")}),
         seg AS (
           SELECT source, doc_id,
                  CAST(floor(rnk / 50.0) AS BIGINT) AS seg_id,
@@ -240,26 +203,17 @@ object Round22 {
     * share of ALL segment instances each bucket owns. One hash agg
     * over segment hashes.
     */
-  val q455DupHistogram: QueryDef = QueryDef(
-    "q455_dup_histogram",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r22_documents")
-      s.sql(dupHistSql(spark = true))
-    },
-    Some(dupHistSql(spark = false))
-  )
+  val q455DupHistogram: QueryDef =
+    QueryDef.sql("q455_dup_histogram", "r22_", "documents")(dupHistSql)
 
-  private def dupHistSql(spark: Boolean): String = {
-    val tbl = if (spark) "r22_documents" else "documents"
-    val phrase =
-      if (spark)
-        "array_join(transform(array_sort(array_agg(struct(rnk, word))), t -> t.word), ' ')"
-      else "string_agg(word, ' ' ORDER BY rnk)"
+  private def dupHistSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val phrase = d.stringAgg("word", "rnk")
     s"""WITH seg AS (
           SELECT doc_id,
                  CAST(floor(rnk / 16.0) AS BIGINT) AS seg_id,
                  md5($phrase) AS h
-          FROM (${rankTokens(tbl, spark, "source", "doc_id")}) tk
+          FROM (${rankTokens(tbl, d, "source", "doc_id")}) tk
           GROUP BY doc_id, CAST(floor(rnk / 16.0) AS BIGINT)),
         classes AS (
           SELECT h, CAST(count(*) AS BIGINT) AS m FROM seg GROUP BY 1),

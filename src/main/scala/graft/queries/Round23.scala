@@ -105,18 +105,11 @@ object Round23 {
     * corpus scale nothing exceeds a partial-aggregated scan plus
     * equi-joins.
     */
-  val q457TextTiling: QueryDef = QueryDef(
-    "q457_text_tiling",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r23_documents")
-      s.sql(tilingSql(spark = true))
-    },
-    Some(tilingSql(spark = false))
-  )
+  val q457TextTiling: QueryDef = QueryDef.sql("q457_text_tiling", "r23_", "documents")(tilingSql)
 
-  private def tilingSql(spark: Boolean): String = {
-    val tbl = if (spark) "r23_documents" else "documents"
-    s"""WITH tok AS (${rankTokens(tbl, spark, "doc_id", "source")}),
+  private def tilingSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    s"""WITH tok AS (${rankTokens(tbl, d, "doc_id", "source")}),
         c AS (
           SELECT doc_id, CAST(floor(rnk / 10.0) AS BIGINT) AS blk, word,
                  CAST(count(*) AS BIGINT) AS n
@@ -165,7 +158,7 @@ object Round23 {
   val q458BurrowsDelta: QueryDef = QueryDef(
     "q458_burrows_delta",
     (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r23_documents")
+      Spark("r23_").register(s, dir, "documents")
       // r14 (guide §1.2 "don't compute things twice", §2.3
       // aggregate-before-shuffle): the monolithic SQL re-inlined the
       // token CTE into cw, st AND sc — three full corpus tokenization
@@ -189,7 +182,7 @@ object Round23 {
       sw.createOrReplaceTempView("r23_source_word")
       s.sql(burrowsFromHistSql)
     },
-    Some(burrowsSql(spark = false))
+    Some(burrowsSql)
   )
 
   /** The q458 body downstream of the materialized (source, word, c)
@@ -233,9 +226,8 @@ object Round23 {
         ORDER BY delta, source_a, source_b
         LIMIT 10"""
 
-  private def burrowsSql(spark: Boolean): String = {
-    val tbl = if (spark) "r23_documents" else "documents"
-    s"""WITH tok AS (${rankTokens(tbl, spark, "doc_id", "source")}),
+  private def burrowsSql: String = {
+    s"""WITH tok AS (${rankTokens("documents", DuckDb, "doc_id", "source")}),
         cw AS (SELECT word, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1),
         topw AS (SELECT word FROM cw ORDER BY c DESC, word LIMIT 16),
         st AS (SELECT source, CAST(count(*) AS BIGINT) AS tot FROM tok GROUP BY 1),
@@ -287,7 +279,7 @@ object Round23 {
   val q459Textrank: QueryDef = QueryDef(
     "q459_textrank",
     (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r23_documents")
+      Spark("r23_").register(s, dir, "documents")
       // r14 (guide §3.3 "explode before a join multiplies the shuffle",
       // §1.2): bg was a token-stream SELF-JOIN on (doc_id, rnk+1) — two
       // full corpus tokenizations shuffled against each other — and the
@@ -321,7 +313,7 @@ object Round23 {
       e.createOrReplaceTempView("r23_tr_edges")
       s.sql(textrankFromEdgesSql)
     },
-    Some(textrankSql(spark = false))
+    Some(textrankSql)
   )
 
   /** The q459 body downstream of the materialized symmetric edge view. */
@@ -347,8 +339,8 @@ object Round23 {
         LIMIT 12"""
   }
 
-  private def textrankSql(spark: Boolean): String = {
-    val tbl = if (spark) "r23_documents" else "documents"
+  private def textrankSql: String = {
+    val tbl = "documents"
     def iter(prev: String, cur: String): String =
       s"""$cur AS (
             SELECT e.b AS v,
@@ -358,7 +350,7 @@ object Round23 {
             JOIN $prev ON $prev.v = e.a
             JOIN deg ON deg.v = e.a
             GROUP BY 1)"""
-    s"""WITH tok AS (${rankTokens(tbl, spark, "doc_id", "source")}),
+    s"""WITH tok AS (${rankTokens(tbl, DuckDb, "doc_id", "source")}),
         bg AS (
           SELECT t1.word AS a, t2.word AS b, CAST(count(*) AS BIGINT) AS w
           FROM tok t1 JOIN tok t2
@@ -395,41 +387,26 @@ object Round23 {
     * onto an integer grid and sums in BIGINT: projection terms on 2⁴⁰,
     * pair products on 2²⁰ — no engine-ordered float reduction anywhere.
     */
-  val q460JlDistortion: QueryDef = QueryDef(
-    "q460_jl_distortion",
-    (s, dir) => {
-      Tables.embeddings(s, dir).createOrReplaceTempView("r23_embeddings")
-      s.sql(jlSql(spark = true))
-    },
-    Some(jlSql(spark = false))
-  )
+  val q460JlDistortion: QueryDef = QueryDef.sql("q460_jl_distortion", "r23_", "embeddings")(jlSql)
 
-  private def jlSql(spark: Boolean): String = {
-    val tbl = if (spark) "r23_embeddings" else "embeddings"
-    val e =
-      if (spark)
-        s"""SELECT vec_id, pos + 1 AS dim, CAST(col AS DOUBLE) AS v
-            FROM (SELECT vec_id,
-                         posexplode(transform(embedding, x -> CAST(x AS DOUBLE)))
-                  FROM $tbl)"""
-      else
-        s"""SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-                   CAST(unnest(embedding) AS DOUBLE) AS v
-            FROM $tbl"""
-    val planes =
-      if (spark)
+  private def jlSql(d: Dialect): String = {
+    val tbl = d.t("embeddings")
+    val e = d.embeddingCells(tbl, "vec_id", 1)
+    val planes = d match {
+      case _: Spark =>
         s"""SELECT p, dim,
                    CAST(conv(substring(md5(concat('jl:', CAST(p AS STRING), ':',
                         CAST(dim AS STRING))), 1, 12), 16, 10) AS BIGINT)
                      / CAST(140737488355328 AS DOUBLE) - 1.0 AS comp
             FROM (SELECT explode(sequence(0, 15)) AS p)
             LATERAL VIEW explode(sequence(1, 64)) dx AS dim"""
-      else
+      case DuckDb =>
         s"""SELECT p.range AS p, d.range AS dim,
                    CAST(('0x' || substring(md5('jl:' || CAST(p.range AS VARCHAR) || ':'
                         || CAST(d.range AS VARCHAR)), 1, 12)) AS BIGINT)
                      / CAST(140737488355328 AS DOUBLE) - 1.0 AS comp
             FROM range(0, 16) p CROSS JOIN range(1, 65) d"""
+    }
     s"""WITH e AS ($e),
         pl AS ($planes),
         proj AS (
@@ -488,39 +465,34 @@ object Round23 {
       graft.operators.Par
         .spread(Tables.documents(s, dir).select(col("doc_id"), col("text")))
         .createOrReplaceTempView("r23_cov_spread")
-      s.sql(coverageSql(spark = true))
+      s.sql(coverageSparkSql)
     },
-    Some(coverageSql(spark = false))
+    Some(coverageSql)
   )
 
-  private def coverageSql(spark: Boolean): String = {
-    val tbl = if (spark) "r23_cov_spread" else "documents"
+  /** The q461 Spark body over the spread (doc_id, text) view. */
+  private def coverageSparkSql: String = {
     val fold =
-      if (spark)
-        """pmod(CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), ':cov')), 1, 8),
+      """pmod(CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), ':cov')), 1, 8),
              16, 10) AS BIGINT), 5)"""
-      else
-        """CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':cov'), 1, 8))
-             AS BIGINT) % 5"""
-    if (spark) {
-      // r14 plan-size fix (guide §3.3 "very wide joins produce enormous
-      // plans", §2.3): the join-based gram blocks re-inlined the token
-      // CTE at every self-join arm AND at every scalar subquery — six
-      // corpus tokenizations and a 3.3k-line plan. Grams now come
-      // straight off the per-document word ARRAY (slice i..i+n-1 of the
-      // filtered split is exactly the rnk/rnk+i join — same words, same
-      // order), and the three per-n counts fold in ONE aggregation over
-      // (gram → seen-in-train, seen-in-test) flags: n_test = Σ te,
-      // n_train = Σ tr, n_covered = Σ te·tr — the IN-subquery semantics
-      // without a second pass. One corpus pass and one gram-keyed
-      // exchange per n; output bit-identical (same counts, same snap).
-      def gramBlock(n: Int): String = {
-        val gramExpr =
-          if (n == 1) "element_at(ws, i)"
-          else (0 until n).map(j =>
-            if (j == 0) "element_at(ws, i)" else s"element_at(ws, i + $j)")
-            .mkString("concat(", ", ' ', ", ")")
-        s"""a$n AS (
+    // r14 plan-size fix (guide §3.3 "very wide joins produce enormous
+    // plans", §2.3): the join-based gram blocks re-inlined the token
+    // CTE at every self-join arm AND at every scalar subquery — six
+    // corpus tokenizations and a 3.3k-line plan. Grams now come
+    // straight off the per-document word ARRAY (slice i..i+n-1 of the
+    // filtered split is exactly the rnk/rnk+i join — same words, same
+    // order), and the three per-n counts fold in ONE aggregation over
+    // (gram → seen-in-train, seen-in-test) flags: n_test = Σ te,
+    // n_train = Σ tr, n_covered = Σ te·tr — the IN-subquery semantics
+    // without a second pass. One corpus pass and one gram-keyed
+    // exchange per n; output bit-identical (same counts, same snap).
+    def gramBlock(n: Int): String = {
+      val gramExpr =
+        if (n == 1) "element_at(ws, i)"
+        else (0 until n).map(j =>
+          if (j == 0) "element_at(ws, i)" else s"element_at(ws, i + $j)")
+          .mkString("concat(", ", ' ', ", ")")
+      s"""a$n AS (
               SELECT max(CASE WHEN split = 'train' THEN 1 ELSE 0 END) AS tr,
                      max(CASE WHEN split = 'test' THEN 1 ELSE 0 END) AS te
               FROM (SELECT split,
@@ -534,11 +506,11 @@ object Round23 {
                      CAST(coalesce(sum(tr), 0) AS BIGINT) AS n_train_grams,
                      CAST(coalesce(sum(te * tr), 0) AS BIGINT) AS n_covered
               FROM a$n)"""
-      }
-      s"""WITH ws AS (
+    }
+    s"""WITH ws AS (
             SELECT CASE WHEN $fold = 0 THEN 'test' ELSE 'train' END AS split,
                    filter(split(lower(text), '[^a-z]+'), w -> w <> '') AS ws
-            FROM $tbl),
+            FROM r23_cov_spread),
           ${gramBlock(1)},
           ${gramBlock(2)},
           ${gramBlock(3)}
@@ -546,16 +518,21 @@ object Round23 {
                  ${snap("CAST(n_covered AS DOUBLE) / n_test_grams")} AS coverage
           FROM (SELECT * FROM r1 UNION ALL SELECT * FROM r2 UNION ALL SELECT * FROM r3) r
           ORDER BY n"""
-    } else {
-      def gramBlock(n: Int): String = {
-        val parts = (0 until n)
-          .map(i => if (i == 0) "t0.word" else s"t$i.word")
-          .mkString(" || ' ' || ")
-        val joins = (1 until n)
-          .map(i =>
-            s"JOIN tok t$i ON t$i.doc_id = t0.doc_id AND t$i.rnk = t0.rnk + $i")
-          .mkString(" ")
-        s"""g$n AS (
+  }
+
+  private def coverageSql: String = {
+    val fold =
+      """CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':cov'), 1, 8))
+             AS BIGINT) % 5"""
+    def gramBlock(n: Int): String = {
+      val parts = (0 until n)
+        .map(i => if (i == 0) "t0.word" else s"t$i.word")
+        .mkString(" || ' ' || ")
+      val joins = (1 until n)
+        .map(i =>
+          s"JOIN tok t$i ON t$i.doc_id = t0.doc_id AND t$i.rnk = t0.rnk + $i")
+        .mkString(" ")
+      s"""g$n AS (
               SELECT DISTINCT t0.split, $parts AS gram
               FROM tok t0 $joins),
             tr$n AS (SELECT DISTINCT gram FROM g$n WHERE split = 'train'),
@@ -566,8 +543,8 @@ object Round23 {
                      (SELECT CAST(count(*) AS BIGINT) FROM tr$n) AS n_train_grams,
                      (SELECT CAST(count(*) AS BIGINT)
                       FROM te$n WHERE gram IN (SELECT gram FROM tr$n)) AS n_covered)"""
-      }
-      s"""WITH base AS (${rankTokens(tbl, spark, "doc_id", "source")}),
+    }
+    s"""WITH base AS (${rankTokens("documents", DuckDb, "doc_id", "source")}),
           sp AS (SELECT doc_id,
                         CASE WHEN $fold = 0 THEN 'test' ELSE 'train' END AS split
                  FROM (SELECT DISTINCT doc_id FROM base) dd),
@@ -580,7 +557,6 @@ object Round23 {
                  ${snap("CAST(n_covered AS DOUBLE) / n_test_grams")} AS coverage
           FROM (SELECT * FROM r1 UNION ALL SELECT * FROM r2 UNION ALL SELECT * FROM r3) r
           ORDER BY n"""
-    }
   }
 
   val all: Seq[QueryDef] =

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-24 additions (q462+): retrieval & evaluation machinery —
   * sorted-neighborhood dedup blocking (the third blocking family next
@@ -35,7 +34,8 @@ object Round24 {
   val q462SortedNeighborhood: QueryDef = QueryDef(
     "q462_sorted_neighborhood",
     (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r24_documents")
+      val sp = Spark("r24_")
+      sp.register(s, dir, "documents")
       // Spark inlines WITH CTEs, so `k` (referenced 4x by the window
       // join) and `g` (2x by the verify) would each re-run the scan +
       // window; materialize both once. localCheckpoint (not cache): it
@@ -44,14 +44,14 @@ object Round24 {
       // don't accumulate cached partitions for the session's lifetime.
       s.sql(snmKSql("r24_documents")).localCheckpoint()
         .createOrReplaceTempView("r24_snm_k")
-      s.sql(snmGSql(spark = true)).localCheckpoint()
+      s.sql(snmGSql(sp)).localCheckpoint()
         .createOrReplaceTempView("r24_snm_g")
-      s.sql(s"WITH ${snmTail("r24_snm_k", "r24_snm_g", spark = true)}")
+      s.sql(s"WITH ${snmTail("r24_snm_k", "r24_snm_g", sp)}")
     },
     Some(
       s"""WITH k AS (${snmKSql("documents")}),
-          g AS (${snmGSql(spark = false)}),
-          ${snmTail("k", "g", spark = false)}""")
+          g AS (${snmGSql(DuckDb)}),
+          ${snmTail("k", "g", DuckDb)}""")
   )
 
   /** The global-rank relation (Packing-pattern bucketed prefix sum). */
@@ -73,32 +73,34 @@ object Round24 {
         FROM b JOIN boff ON boff.bk = b.bk"""
 
   /** Per-doc distinct word-3-gram sets. */
-  private def snmGSql(spark: Boolean): String =
-    if (spark)
+  private def snmGSql(d: Dialect): String = d match {
+    case _: Spark =>
       """SELECT doc_id,
                 array_distinct(transform(sequence(1, greatest(size(w) - 2, 0)),
                   i -> concat_ws(' ', slice(w, i, 3)))) AS gs
          FROM (SELECT doc_id, split(lower(text), '[^a-z]+') AS w FROM r24_documents)"""
-    else
+    case DuckDb =>
       """SELECT doc_id,
                 list_distinct([array_to_string(parts[i:i+2], ' ')
                                FOR i IN range(1, greatest(len(parts) - 1, 1))]) AS gs
          FROM (SELECT doc_id,
                       string_split_regex(lower(text), '[^a-z]+') AS parts
                FROM documents)"""
+  }
 
   /** Candidate window + exact-Jaccard verify over rank relation `kRel`
     * and gram relation `gRel` (CTE names for the oracle, cached temp
     * views for the engine).
     */
-  private def snmTail(kRel: String, gRel: String, spark: Boolean): String = {
-    val jac =
-      if (spark)
-        """CAST(size(array_intersect(a.gs, b.gs)) AS DOUBLE) /
-           size(array_union(a.gs, b.gs))"""
-      else
-        """CAST(len(list_intersect(a.gs, b.gs)) AS DOUBLE) /
-           len(list_distinct(list_concat(a.gs, b.gs)))"""
+  private def snmTail(kRel: String, gRel: String, d: Dialect): String = {
+    val (jac, nonEmpty) = d match {
+      case _: Spark =>
+        ("""CAST(size(array_intersect(a.gs, b.gs)) AS DOUBLE) /
+           size(array_union(a.gs, b.gs))""", "size(a.gs) > 0 AND size(b.gs) > 0")
+      case DuckDb =>
+        ("""CAST(len(list_intersect(a.gs, b.gs)) AS DOUBLE) /
+           len(list_distinct(list_concat(a.gs, b.gs)))""", "len(a.gs) > 0 AND len(b.gs) > 0")
+    }
     s"""cand AS (
           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
           FROM $kRel a JOIN $kRel b ON b.rn = a.rn + 1
@@ -110,8 +112,7 @@ object Round24 {
           FROM cand c
           JOIN $gRel a ON a.doc_id = c.doc_a
           JOIN $gRel b ON b.doc_id = c.doc_b
-          WHERE ${if (spark) "size(a.gs) > 0 AND size(b.gs) > 0"
-      else "len(a.gs) > 0 AND len(b.gs) > 0"})
+          WHERE $nonEmpty)
         SELECT doc_a, doc_b, jaccard
         FROM scored
         ORDER BY jaccard DESC, doc_a, doc_b
@@ -134,7 +135,7 @@ object Round24 {
   val q463MaxscorePrune: QueryDef = QueryDef(
     "q463_maxscore_prune",
     (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r24_documents")
+      Spark("r24_").register(s, dir, "documents")
       // r14 plan-size + pass-count fix (guide §1.2, §3.3 "materialising
       // an intermediate truncates the plan"): the monolithic SQL
       // re-inlined the token stream at every reference — dl, q and post
@@ -159,7 +160,7 @@ object Round24 {
       inv.createOrReplaceTempView("r24_inv")
       s.sql(maxscoreFromInvSql)
     },
-    Some(maxscoreSql(spark = false))
+    Some(maxscoreSql)
   )
 
   /** The q463 body downstream of the materialized inverted-index view. */
@@ -232,22 +233,12 @@ object Round24 {
     * itself and Spark re-inlines the CTE at every reference; a bag of
     * words keeps all four references scan-cheap.
     */
-  private def wordsCte(tbl: String, spark: Boolean): String =
-    if (spark)
-      s"""SELECT doc_id, word
-          FROM (SELECT doc_id, explode(split(lower(text), '[^a-z]+')) AS word
-                FROM $tbl) x
-          WHERE word <> ''"""
-    else
-      s"""SELECT doc_id, word
+  private def maxscoreSql: String = {
+    s"""WITH tok AS (SELECT doc_id, word
           FROM (SELECT doc_id,
-                       unnest(string_split_regex(lower(text), '[^a-z]+')) AS word
-                FROM $tbl) x
-          WHERE word <> ''"""
-
-  private def maxscoreSql(spark: Boolean): String = {
-    val tbl = if (spark) "r24_documents" else "documents"
-    s"""WITH tok AS (${wordsCte(tbl, spark)}),
+                       ${DuckDb.words} AS word
+                FROM documents) x
+          WHERE word <> ''),
         dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS len FROM tok GROUP BY 1),
         stats AS (SELECT CAST(count(*) AS BIGINT) AS nd,
                          ${snap("sum(CAST(len AS DOUBLE)) / count(*)")} AS avgdl
@@ -319,17 +310,10 @@ object Round24 {
     * BIGINT binomials overflow past n ≈ 90). Reports the task count
     * and mean pass@k for k ∈ {1, 5, 10}.
     */
-  val q464PassAtK: QueryDef = QueryDef(
-    "q464_pass_at_k",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r24_events")
-      s.sql(passAtKSql(spark = true))
-    },
-    Some(passAtKSql(spark = false))
-  )
+  val q464PassAtK: QueryDef = QueryDef.sql("q464_pass_at_k", "r24_", "events")(passAtKSql)
 
-  private def passAtKSql(spark: Boolean): String = {
-    val tbl = if (spark) "r24_events" else "events"
+  private def passAtKSql(d: Dialect): String = {
+    val tbl = d.t("events")
     // Π_{i<k} (n-c-i)/(n-i), left-associated literal factors
     def prod(k: Int): String =
       (0 until k)
@@ -367,27 +351,19 @@ object Round24 {
     * the whole experiment replays. Two keyed aggs over events; all
     * scalar algebra on snapped doubles from integer sums.
     */
-  val q465Cuped: QueryDef = QueryDef(
-    "q465_cuped",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r24_events")
-      s.sql(cupedSql(spark = true))
-    },
-    Some(cupedSql(spark = false))
-  )
+  val q465Cuped: QueryDef = QueryDef.sql("q465_cuped", "r24_", "events")(cupedSql)
 
-  private def cupedSql(spark: Boolean): String = {
-    val (tbl, day, arm) =
-      if (spark)
-        ("r24_events",
-          "CAST(datediff(to_date(ts), DATE '2024-01-01') AS BIGINT)",
-          """pmod(CAST(conv(substring(md5(concat(CAST(user_id AS STRING), ':arm')), 1, 8),
-               16, 10) AS BIGINT), 2)""")
-      else
-        ("events",
-          "CAST(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS BIGINT)",
-          """CAST(('0x' || substring(md5(CAST(user_id AS VARCHAR) || ':arm'), 1, 8))
-               AS BIGINT) % 2""")
+  private def cupedSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val day = s"CAST(${d.dayDiff("DATE '2024-01-01'", d.toDate("ts"))} AS BIGINT)"
+    val arm = d match {
+      case _: Spark =>
+        """pmod(CAST(conv(substring(md5(concat(CAST(user_id AS STRING), ':arm')), 1, 8),
+               16, 10) AS BIGINT), 2)"""
+      case DuckDb =>
+        """CAST(('0x' || substring(md5(CAST(user_id AS VARCHAR) || ':arm'), 1, 8))
+               AS BIGINT) % 2"""
+    }
     s"""WITH e AS (
           SELECT user_id, $day AS dd,
                  CAST(round(value * 100) AS BIGINT) AS cents

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-25 additions (q466+): generation-quality forensics — Self-BLEU
   * corpus diversity (Zhu et al. 2018) with the top-2-per-gram trick
@@ -27,17 +26,10 @@ object Round25 {
     * with < 2 tokens (no bigram) are excluded — precision is undefined
     * for them on both engines.
     */
-  val q466SelfBleu: QueryDef = QueryDef(
-    "q466_self_bleu",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r25_documents")
-      s.sql(selfBleuSql(spark = true))
-    },
-    Some(selfBleuSql(spark = false))
-  )
+  val q466SelfBleu: QueryDef = QueryDef.sql("q466_self_bleu", "r25_", "documents")(selfBleuSql)
 
-  private def selfBleuSql(spark: Boolean): String = {
-    val tbl = if (spark) "r25_documents" else "documents"
+  private def selfBleuSql(d: Dialect): String = {
+    val tbl = d.t("documents")
     // clipped-precision pipeline for one gram order; gr = gram relation
     // (doc_id, source, g, tf)
     def prec(gr: String, out: String): String =
@@ -59,7 +51,7 @@ object Round25 {
                      sum(x.tf)""")} AS p
             FROM $gr x JOIN top_$out t ON t.g = x.g
             GROUP BY 1, 2)"""
-    s"""WITH tok AS (${rankTokens(tbl, spark, "doc_id", "source")}),
+    s"""WITH tok AS (${rankTokens(tbl, d, "doc_id", "source")}),
         g1 AS (
           SELECT doc_id, source, word AS g, CAST(count(*) AS BIGINT) AS tf
           FROM tok GROUP BY 1, 2, 3),
@@ -101,25 +93,20 @@ object Round25 {
     * IS the calibration check. One token scan, one self-join on
     * adjacent rank, one keyed agg.
     */
-  val q467WatermarkDetect: QueryDef = QueryDef(
-    "q467_watermark_detect",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r25_documents")
-      s.sql(watermarkSql(spark = true))
-    },
-    Some(watermarkSql(spark = false))
-  )
+  val q467WatermarkDetect: QueryDef =
+    QueryDef.sql("q467_watermark_detect", "r25_", "documents")(watermarkSql)
 
-  private def watermarkSql(spark: Boolean): String = {
-    val tbl = if (spark) "r25_documents" else "documents"
-    val green =
-      if (spark)
+  private def watermarkSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val green = d match {
+      case _: Spark =>
         """pmod(CAST(conv(substring(md5(concat(a.word, '|', b.word)), 32, 1),
              16, 10) AS BIGINT), 2)"""
-      else
+      case DuckDb =>
         """CAST(('0x' || substring(md5(a.word || '|' || b.word), 32, 1))
              AS BIGINT) % 2"""
-    s"""WITH tok AS (${rankTokens(tbl, spark, "doc_id", "source")}),
+    }
+    s"""WITH tok AS (${rankTokens(tbl, d, "doc_id", "source")}),
         tr AS (
           SELECT a.doc_id, a.source,
                  CAST(count(*) AS BIGINT) AS n,
@@ -157,26 +144,20 @@ object Round25 {
     * q455's territory. One scan → per-segment shape hash → one keyed
     * agg.
     */
-  val q468TemplateMining: QueryDef = QueryDef(
-    "q468_template_mining",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r25_documents")
-      s.sql(templateSql(spark = true))
-    },
-    Some(templateSql(spark = false))
-  )
+  val q468TemplateMining: QueryDef =
+    QueryDef.sql("q468_template_mining", "r25_", "documents")(templateSql)
 
-  private def templateSql(spark: Boolean): String = {
-    val tbl = if (spark) "r25_documents" else "documents"
-    def agg(expr: String): String =
-      if (spark)
+  private def templateSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    def agg(expr: String): String = d match {
+      case _: Spark =>
         s"""md5(array_join(transform(array_sort(array_agg(struct(rnk, word))),
              t -> $expr), ','))"""
-      else {
+      case DuckDb =>
         val e = expr.replace("t.word", "word")
         s"md5(string_agg($e, ',' ORDER BY rnk))"
-      }
-    s"""WITH tok AS (${rankTokens(tbl, spark, "doc_id", "source")}),
+    }
+    s"""WITH tok AS (${rankTokens(tbl, d, "doc_id", "source")}),
         seg AS (
           -- complete 16-token windows only: ragged tail segments have
           -- near-trivial shapes (a lone length digit) that would flood

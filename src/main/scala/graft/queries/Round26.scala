@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-26 additions (q469+): privacy & representation health —
   * t-closeness (the third privacy audit next to k-anonymity q210 and
@@ -28,17 +27,10 @@ object Round26 {
     * DISTRIBUTION. Two keyed aggs over the exact count matrix; TVD is a
     * 5-term fold of snapped ratios — exact dyadic.
     */
-  val q469TCloseness: QueryDef = QueryDef(
-    "q469_t_closeness",
-    (s, dir) => {
-      Tables.customer(s, dir).createOrReplaceTempView("r26_customer")
-      s.sql(tClosenessSql(spark = true))
-    },
-    Some(tClosenessSql(spark = false))
-  )
+  val q469TCloseness: QueryDef = QueryDef.sql("q469_t_closeness", "r26_", "customer")(tClosenessSql)
 
-  private def tClosenessSql(spark: Boolean): String = {
-    val tbl = if (spark) "r26_customer" else "customer"
+  private def tClosenessSql(d: Dialect): String = {
+    val tbl = d.t("customer")
     s"""WITH cell AS (
           SELECT c_nationkey nk, c_mktsegment seg, CAST(count(*) AS BIGINT) AS n
           FROM $tbl GROUP BY 1, 2),
@@ -74,27 +66,11 @@ object Round26 {
     * product quantized onto the 2²⁰ grid so the folds are exact BIGINT.
     * The Frobenius folds then run over 4096-row bounded relations.
     */
-  val q470CkaAlignment: QueryDef = QueryDef(
-    "q470_cka_alignment",
-    (s, dir) => {
-      Tables.embeddings(s, dir).createOrReplaceTempView("r26_embeddings")
-      s.sql(ckaSql(spark = true))
-    },
-    Some(ckaSql(spark = false))
-  )
+  val q470CkaAlignment: QueryDef = QueryDef.sql("q470_cka_alignment", "r26_", "embeddings")(ckaSql)
 
-  private def ckaSql(spark: Boolean): String = {
-    val tbl = if (spark) "r26_embeddings" else "embeddings"
-    val e =
-      if (spark)
-        s"""SELECT vec_id, pos + 1 AS dim, CAST(col AS DOUBLE) AS v
-            FROM (SELECT vec_id,
-                         posexplode(transform(embedding, x -> CAST(x AS DOUBLE)))
-                  FROM $tbl)"""
-      else
-        s"""SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-                   CAST(unnest(embedding) AS DOUBLE) AS v
-            FROM $tbl"""
+  private def ckaSql(d: Dialect): String = {
+    val tbl = d.t("embeddings")
+    val e = d.embeddingCells(tbl, "vec_id", 1)
     s"""WITH e AS ($e),
         rng AS (
           SELECT dim, min(v) AS lo, max(v) AS hi FROM e GROUP BY 1),
@@ -155,27 +131,12 @@ object Round26 {
     * 2²⁰-quantized BIGINT sums over an explode + broadcast-probe join;
     * both rankings use the (cosine DESC, neighbor ASC) house tie-break.
     */
-  val q471Int8Recall: QueryDef = QueryDef(
-    "q471_int8_recall",
-    (s, dir) => {
-      Tables.embeddings(s, dir).createOrReplaceTempView("r26_embeddings")
-      s.sql(int8RecallSql(spark = true))
-    },
-    Some(int8RecallSql(spark = false))
-  )
+  val q471Int8Recall: QueryDef =
+    QueryDef.sql("q471_int8_recall", "r26_", "embeddings")(int8RecallSql)
 
-  private def int8RecallSql(spark: Boolean): String = {
-    val tbl = if (spark) "r26_embeddings" else "embeddings"
-    val e =
-      if (spark)
-        s"""SELECT vec_id, pos + 1 AS dim, CAST(col AS DOUBLE) AS v
-            FROM (SELECT vec_id,
-                         posexplode(transform(embedding, x -> CAST(x AS DOUBLE)))
-                  FROM $tbl)"""
-      else
-        s"""SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-                   CAST(unnest(embedding) AS DOUBLE) AS v
-            FROM $tbl"""
+  private def int8RecallSql(d: Dialect): String = {
+    val tbl = d.t("embeddings")
+    val e = d.embeddingCells(tbl, "vec_id", 1)
     // top-5 by the cosine of column `vcol` over vector relation `rel`
     def top5(rel: String, vcol: String, out: String): String =
       s"""dot_$out AS (

@@ -37,7 +37,7 @@ object Round28 {
         .ivfAssign(emb)
         .select(col("vec_id"), col("cell"))
       assign.createOrReplaceTempView("r28_assign")
-      s.sql(agreementSql(spark = true))
+      s.sql(agreementSql)
     },
     Some(s"""WITH ${AnnReplaySql.preambleSql},
             ${AnnReplaySql.ivfModelSql(2)},
@@ -46,7 +46,7 @@ object Round28 {
             ${agreementTail()}""")
   )
 
-  private def agreementSql(spark: Boolean): String =
+  private val agreementSql: String =
     s"""WITH lab AS (SELECT vec_id, label FROM r28_embeddings),
         asg AS (SELECT vec_id, cell FROM r28_assign),
         ${agreementTail()}"""

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-29 additions (q476+): inference-economics audits —
   * speculative-decoding acceptance rate under a corpus-bigram draft
@@ -25,18 +24,12 @@ object Round29 {
     * One token scan → transitions; the argmax table is
     * vocabulary-sized and equi-joins back.
     */
-  val q476SpeculativeAcceptance: QueryDef = QueryDef(
-    "q476_speculative_acceptance",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r29_documents")
-      s.sql(speculativeSql(spark = true))
-    },
-    Some(speculativeSql(spark = false))
-  )
+  val q476SpeculativeAcceptance: QueryDef =
+    QueryDef.sql("q476_speculative_acceptance", "r29_", "documents")(speculativeSql)
 
-  private def speculativeSql(spark: Boolean): String = {
-    val tbl = if (spark) "r29_documents" else "documents"
-    s"""WITH tok AS (${rankTokens(tbl, spark, "doc_id", "source")}),
+  private def speculativeSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    s"""WITH tok AS (${rankTokens(tbl, d, "doc_id", "source")}),
         tr AS (
           SELECT a.source, a.word AS prev, b.word AS nxt
           FROM tok a JOIN tok b
@@ -78,22 +71,13 @@ object Round29 {
     * hash and one keyed agg (the prefix string never exceeds depth
     * tokens).
     */
-  val q477PrefixCacheRoi: QueryDef = QueryDef(
-    "q477_prefix_cache_roi",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r29_documents")
-      s.sql(prefixRoiSql(spark = true))
-    },
-    Some(prefixRoiSql(spark = false))
-  )
+  val q477PrefixCacheRoi: QueryDef =
+    QueryDef.sql("q477_prefix_cache_roi", "r29_", "documents")(prefixRoiSql)
 
-  private def prefixRoiSql(spark: Boolean): String = {
-    val tbl = if (spark) "r29_documents" else "documents"
+  private def prefixRoiSql(d: Dialect): String = {
+    val tbl = d.t("documents")
     val agg =
-      if (spark)
-        """md5(array_join(transform(array_sort(array_agg(struct(rnk, word))),
-             t -> t.word), ' '))"""
-      else "md5(string_agg(word, ' ' ORDER BY rnk))"
+      s"""md5(${d.stringAgg("word", "rnk")})"""
     def depthBlock(d: Int): String =
       s"""p$d AS (
             SELECT doc_id, $agg AS ph
@@ -107,7 +91,7 @@ object Round29 {
                    CAST($d * (count(*) - count(DISTINCT ph)) AS BIGINT)
                      AS saved_tokens
             FROM p$d)"""
-    s"""WITH tok AS (${rankTokens(tbl, spark, "doc_id", "source")}),
+    s"""WITH tok AS (${rankTokens(tbl, d, "doc_id", "source")}),
         tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM tok),
         ${depthBlock(8)},
         ${depthBlock(16)},

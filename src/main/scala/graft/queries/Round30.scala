@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-30 additions (q478+): serving-capacity and spectral audits —
   * Erlang-C M/M/c staffing sheet over the hourly arrival process (the
@@ -41,24 +40,29 @@ object Round30 {
   val q478ErlangC: QueryDef = QueryDef(
     "q478_erlang_c",
     (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r30_events")
+      val sp = Spark("r30_")
+      sp.register(s, dir, "events")
       // The 3-branch staffing union references the hourly-rate relation
       // once per c; Spark inlines CTEs, so materialize the (24-row)
       // corpus agg ONCE — the oracle keeps it as a MATERIALIZED CTE.
-      s.sql(erlangBaseSql("r30_events", spark = true)).localCheckpoint()
+      s.sql(erlangBaseSql(sp)).localCheckpoint()
         .createOrReplaceTempView("r30_erlang_base")
       s.sql(erlangTail("r30_erlang_base"))
     },
     Some(
-      s"""WITH base AS MATERIALIZED (${erlangBaseSql("events", spark = false)})
+      s"""WITH base AS MATERIALIZED (${erlangBaseSql(DuckDb)})
           ${erlangTail("base")}""")
   )
 
   /** (hr, n_arrivals, lam, a) — per-hour arrival rate and offered load
     * at mean service 8 s (μ = 0.125/s); one keyed agg + one tiny cross.
     */
-  private def erlangBaseSql(tbl: String, spark: Boolean): String = {
-    val hourExpr = if (spark) "hour(ts)" else "CAST(hour(ts) AS INT)"
+  private def erlangBaseSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val hourExpr = d match {
+      case _: Spark => "hour(ts)"
+      case DuckDb => "CAST(hour(ts) AS INT)"
+    }
     s"""WITH days AS (
           SELECT CAST(count(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS d FROM $tbl),
         byh AS (
@@ -117,7 +121,8 @@ object Round30 {
   val q479PowerIteration: QueryDef = QueryDef(
     "q479_power_iteration",
     (s, dir) => {
-      Tables.embeddings(s, dir).createOrReplaceTempView("r30_embeddings")
+      val sp = Spark("r30_")
+      sp.register(s, dir, "embeddings")
       // Materialize the Gram ONCE (it also feeds the final Rayleigh
       // select), then run the 8 matvec-normalize rounds DRIVER-side on
       // the collected d² relation — bounded model state (the q431
@@ -128,7 +133,7 @@ object Round30 {
       // oracle's MATERIALIZED CTE chain walks (per-term 2²⁰
       // quantization, snapped sqrt/divide) — Round30PropertySpec pins
       // the equality independently.
-      val gram = s.sql(gramSql(spark = true)).localCheckpoint()
+      val gram = s.sql(gramSql(sp)).localCheckpoint()
       gram.createOrReplaceTempView("r30_gram")
       val g = gram.collect()
         .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
@@ -151,7 +156,7 @@ object Round30 {
       val chain = (1 to 8).map { k =>
         s"x$k AS MATERIALIZED (${powerRound("cov", s"x${k - 1}")})"
       }.mkString(",\n")
-      s"""WITH cov AS MATERIALIZED (${gramSql(spark = false)}),
+      s"""WITH cov AS MATERIALIZED (${gramSql(DuckDb)}),
           n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings),
           x0 AS MATERIALIZED (${powerX0("cov")}),
           $chain
@@ -160,18 +165,9 @@ object Round30 {
   )
 
   /** Mean-centered d×d scatter Gram (di, dj, g) — exact keyed sums. */
-  private def gramSql(spark: Boolean): String = {
-    val tbl = if (spark) "r30_embeddings" else "embeddings"
-    val e =
-      if (spark)
-        s"""SELECT vec_id, pos + 1 AS dim, CAST(col AS DOUBLE) AS v
-            FROM (SELECT vec_id,
-                         posexplode(transform(embedding, x -> CAST(x AS DOUBLE)))
-                  FROM $tbl)"""
-      else
-        s"""SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-                   CAST(unnest(embedding) AS DOUBLE) AS v
-            FROM $tbl"""
+  private def gramSql(d: Dialect): String = {
+    val tbl = d.t("embeddings")
+    val e = d.embeddingCells(tbl, "vec_id", 1)
     s"""WITH e AS ($e),
         mu AS (
           SELECT dim,
@@ -233,21 +229,13 @@ object Round30 {
     * first-reject position is ONE window min over the accept stream —
     * no self-join, no per-k rescan of the corpus.
     */
-  val q480SpeculativeLookahead: QueryDef = QueryDef(
-    "q480_speculative_lookahead",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r30_documents")
-      s.sql(lookaheadSql(spark = true))
-    },
-    Some(lookaheadSql(spark = false))
-  )
+  val q480SpeculativeLookahead: QueryDef =
+    QueryDef.sql("q480_speculative_lookahead", "r30_", "documents")(lookaheadSql)
 
-  private def lookaheadSql(spark: Boolean): String = {
-    val tbl = if (spark) "r30_documents" else "documents"
-    val ks =
-      if (spark) "SELECT CAST(kk AS BIGINT) AS k FROM (SELECT explode(array(1, 2, 4, 8)) AS kk)"
-      else "SELECT CAST(unnest([1, 2, 4, 8]) AS BIGINT) AS k"
-    s"""WITH tok AS (${rankTokens(tbl, spark, "doc_id", "source")}),
+  private def lookaheadSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val ks = d.selectGen(d.list("1, 2, 4, 8"), "BIGINT", "k", "kk")
+    s"""WITH tok AS (${rankTokens(tbl, d, "doc_id", "source")}),
         tr AS (
           SELECT a.doc_id, a.rnk, a.word AS prev, b.word AS nxt
           FROM tok a JOIN tok b

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-31 additions (q481+): protection & annotation-QA audits —
   * sliding-window rate-limiter replay (the batch planning bound for the
@@ -31,21 +30,13 @@ object Round31 {
     * requests, over-limit arrivals, their share, and distinct users
     * affected.
     */
-  val q481RateLimitReplay: QueryDef = QueryDef(
-    "q481_rate_limit_replay",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r31_events")
-      s.sql(rateLimitSql(spark = true))
-    },
-    Some(rateLimitSql(spark = false))
-  )
+  val q481RateLimitReplay: QueryDef =
+    QueryDef.sql("q481_rate_limit_replay", "r31_", "events")(rateLimitSql)
 
-  private def rateLimitSql(spark: Boolean): String = {
-    val tbl = if (spark) "r31_events" else "events"
-    val us = if (spark) "unix_micros(ts)" else "epoch_us(ts)"
-    val ks =
-      if (spark) "SELECT CAST(kk AS BIGINT) AS lim FROM (SELECT explode(array(10, 60)) AS kk)"
-      else "SELECT CAST(unnest([10, 60]) AS BIGINT) AS lim"
+  private def rateLimitSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val us = d.epochUs("ts")
+    val ks = d.selectGen(d.list("10, 60"), "BIGINT", "lim", "kk")
     s"""WITH e AS (SELECT user_id, CAST($us AS BIGINT) AS ts_us FROM $tbl),
         w AS (
           SELECT user_id,
@@ -80,17 +71,11 @@ object Round31 {
     * statistic every labeling pipeline gates raters on, here with
     * TPC-H's own multi-line orders as the panel.
     */
-  val q482KrippendorffAlpha: QueryDef = QueryDef(
-    "q482_krippendorff_alpha",
-    (s, dir) => {
-      Tables.lineitem(s, dir).createOrReplaceTempView("r31_lineitem")
-      s.sql(krippendorffSql(spark = true))
-    },
-    Some(krippendorffSql(spark = false))
-  )
+  val q482KrippendorffAlpha: QueryDef =
+    QueryDef.sql("q482_krippendorff_alpha", "r31_", "lineitem")(krippendorffSql)
 
-  private def krippendorffSql(spark: Boolean): String = {
-    val tbl = if (spark) "r31_lineitem" else "lineitem"
+  private def krippendorffSql(d: Dialect): String = {
+    val tbl = d.t("lineitem")
     s"""WITH r AS (SELECT l_orderkey AS unit, l_returnflag AS val FROM $tbl),
         mu AS (
           SELECT unit, CAST(count(*) AS BIGINT) AS m FROM r GROUP BY 1
@@ -145,26 +130,30 @@ object Round31 {
     "q483_luhn_card_scan",
     (s, dir) => {
       graft.functions.LuhnCheck.register(s)
-      Tables.documents(s, dir).createOrReplaceTempView("r31_documents")
-      s.sql(luhnScanSql(spark = true))
+      val sp = Spark("r31_")
+      sp.register(s, dir, "documents")
+      s.sql(luhnScanSql(sp))
     },
-    Some(luhnScanSql(spark = false))
+    Some(luhnScanSql(DuckDb))
   )
 
-  private def luhnScanSql(spark: Boolean): String = {
-    val tbl = if (spark) "r31_documents" else "documents"
-    val extract =
-      if (spark) "explode(regexp_extract_all(t, '[0-9]{13,19}', 0))"
-      else "unnest(regexp_extract_all(t, '[0-9]{13,19}'))"
-    val luhn =
-      if (spark) "graft_luhn_check(num)"
-      else
+  private def luhnScanSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val extract = d match {
+      case _: Spark => "explode(regexp_extract_all(t, '[0-9]{13,19}', 0))"
+      case DuckDb => "unnest(regexp_extract_all(t, '[0-9]{13,19}'))"
+    }
+    val luhn = d match {
+      case _: Spark =>
+        "graft_luhn_check(num)"
+      case DuckDb =>
         """(list_sum([CASE WHEN i % 2 = 1
                            THEN CAST(substring(reverse(num), i, 1) AS INT)
                            WHEN 2 * CAST(substring(reverse(num), i, 1) AS INT) > 9
                            THEN 2 * CAST(substring(reverse(num), i, 1) AS INT) - 9
                            ELSE 2 * CAST(substring(reverse(num), i, 1) AS INT) END
                       FOR i IN range(1, len(num) + 1)]) % 10 = 0)"""
+    }
     s"""WITH injected AS (
           SELECT doc_id,
                  text

@@ -101,21 +101,13 @@ object Round32 {
     * reads over the event lake. Exact counts everywhere; the burn
     * ratios snap.
     */
-  val q485SloBurn: QueryDef = QueryDef(
-    "q485_slo_burn",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r32_events")
-      s.sql(sloBurnSql(spark = true))
-    },
-    Some(sloBurnSql(spark = false))
-  )
+  val q485SloBurn: QueryDef = QueryDef.sql("q485_slo_burn", "r32_", "events")(sloBurnSql)
 
-  private def sloBurnSql(spark: Boolean): String = {
-    val tbl = if (spark) "r32_events" else "events"
-    val us = if (spark) "unix_micros(ts)" else "epoch_us(ts)"
-    val idiv = if (spark) "div" else "//"
+  private def sloBurnSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val us = d.epochUs("ts")
     s"""WITH e AS (
-          SELECT CAST($us AS BIGINT) $idiv 3600000000 AS hi,
+          SELECT CAST($us AS BIGINT) ${d.idiv} 3600000000 AS hi,
                  CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS is_err
           FROM $tbl),
         hourly AS (
@@ -134,7 +126,7 @@ object Round32 {
                  (CAST(e1 AS DOUBLE) / n1) / CAST(0.01 AS DOUBLE) AS b1,
                  (CAST(e6 AS DOUBLE) / n6) / CAST(0.01 AS DOUBLE) AS b6
           FROM w)
-        SELECT hi $idiv 24 AS day_idx,
+        SELECT hi ${d.idiv} 24 AS day_idx,
                CAST(count(*) AS BIGINT) AS n_hours,
                CAST(sum(CASE WHEN b1 > CAST(14.4 AS DOUBLE)
                               AND b6 > CAST(6.0 AS DOUBLE)
@@ -164,13 +156,14 @@ object Round32 {
   val q486SinkhornOt: QueryDef = QueryDef(
     "q486_sinkhorn_ot",
     (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r32_documents")
-      s.sql(sinkhornHistSql(spark = true)).localCheckpoint()
+      val sp = Spark("r32_")
+      sp.register(s, dir, "documents")
+      s.sql(sinkhornHistSql(sp)).localCheckpoint()
         .createOrReplaceTempView("r32_ot_hist")
       s.sql(s"WITH ${sinkhornTail("r32_ot_hist")} ${sinkhornSelect()}")
     },
     Some(
-      s"""WITH hist AS MATERIALIZED (${sinkhornHistSql(spark = false)}),
+      s"""WITH hist AS MATERIALIZED (${sinkhornHistSql(DuckDb)}),
           ${sinkhornTail("hist")}
           ${sinkhornSelect()}""")
   )
@@ -178,14 +171,10 @@ object Round32 {
   /** (side 'a'|'b', bin, mass) — word-length histograms of the first and
     * last source, bins capped at 15, masses snapped to the dyadic grid.
     */
-  private def sinkhornHistSql(spark: Boolean): String = {
-    val tbl = if (spark) "r32_documents" else "documents"
+  private def sinkhornHistSql(d: Dialect): String = {
+    val tbl = d.t("documents")
     val words =
-      if (spark)
-        s"""SELECT source, explode(split(lower(text), '[^a-z]+')) AS word
-            FROM $tbl"""
-      else
-        s"""SELECT source, unnest(string_split_regex(lower(text), '[^a-z]+')) AS word
+      s"""SELECT source, ${d.words} AS word
             FROM $tbl"""
     s"""WITH w AS (SELECT source, word FROM ($words) x WHERE word <> ''),
         ends AS (SELECT min(source) AS sa, max(source) AS sb FROM w),

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-33 additions (q487+): inference-scaling and shuffle-health
   * audits — expected best-of-n quality from exact empirical order
@@ -27,25 +26,15 @@ object Round33 {
     * 16}), per-bin terms quantize onto exact BIGINT sums; one keyed agg
     * + one ≤32-bin window per source.
     */
-  val q487BestOfN: QueryDef = QueryDef(
-    "q487_best_of_n",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r33_documents")
-      s.sql(bestOfNSql(spark = true))
-    },
-    Some(bestOfNSql(spark = false))
-  )
+  val q487BestOfN: QueryDef = QueryDef.sql("q487_best_of_n", "r33_", "documents")(bestOfNSql)
 
-  private def bestOfNSql(spark: Boolean): String = {
-    val tbl = if (spark) "r33_documents" else "documents"
-    val idiv = if (spark) "div" else "//"
-    val ks =
-      if (spark) "SELECT CAST(kk AS BIGINT) AS n FROM (SELECT explode(array(1, 4, 16)) AS kk)"
-      else "SELECT CAST(unnest([1, 4, 16]) AS BIGINT) AS n"
+  private def bestOfNSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val ks = d.selectGen(d.list("1, 4, 16"), "BIGINT", "n", "kk")
     def pow(v: String, n: Int): String = Seq.fill(n)(s"($v)").mkString(" * ")
     s"""WITH q AS (
           SELECT source,
-                 CAST(least(length(text) $idiv 64, 31) AS BIGINT) AS qbin
+                 CAST(least(length(text) ${d.idiv} 64, 31) AS BIGINT) AS qbin
           FROM $tbl),
         hist AS (
           SELECT source, qbin, CAST(count(*) AS BIGINT) AS c FROM q GROUP BY 1, 2),
@@ -83,25 +72,12 @@ object Round33 {
     * sampling-surface audit: a 95%-nucleus that keeps 40 types is a
     * very different corpus from one that keeps 4 000.
     */
-  val q488TopPVocab: QueryDef = QueryDef(
-    "q488_top_p_vocab",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r33_documents")
-      s.sql(topPSql(spark = true))
-    },
-    Some(topPSql(spark = false))
-  )
+  val q488TopPVocab: QueryDef = QueryDef.sql("q488_top_p_vocab", "r33_", "documents")(topPSql)
 
-  private def topPSql(spark: Boolean): String = {
-    val tbl = if (spark) "r33_documents" else "documents"
-    val words =
-      if (spark)
-        s"SELECT source, explode(split(lower(text), '[^a-z]+')) AS word FROM $tbl"
-      else
-        s"SELECT source, unnest(string_split_regex(lower(text), '[^a-z]+')) AS word FROM $tbl"
-    val ps =
-      if (spark) "SELECT CAST(pp AS BIGINT) AS p100 FROM (SELECT explode(array(50, 90, 95)) AS pp)"
-      else "SELECT CAST(unnest([50, 90, 95]) AS BIGINT) AS p100"
+  private def topPSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val words = s"SELECT source, ${d.words} AS word FROM $tbl"
+    val ps = d.selectGen(d.list("50, 90, 95"), "BIGINT", "p100", "pp")
     s"""WITH w AS (SELECT source, word FROM ($words) x WHERE word <> ''),
         tc AS (SELECT source, word, CAST(count(*) AS BIGINT) AS c FROM w GROUP BY 1, 2),
         ranked AS (
@@ -142,17 +118,10 @@ object Round33 {
     * ≫ 1 means a loader reading in doc_id order sees source streaks.
     * One lag window over the ordered scan + one keyed agg.
     */
-  val q489OrderBias: QueryDef = QueryDef(
-    "q489_order_bias",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r33_documents")
-      s.sql(orderBiasSql(spark = true))
-    },
-    Some(orderBiasSql(spark = false))
-  )
+  val q489OrderBias: QueryDef = QueryDef.sql("q489_order_bias", "r33_", "documents")(orderBiasSql)
 
-  private def orderBiasSql(spark: Boolean): String = {
-    val tbl = if (spark) "r33_documents" else "documents"
+  private def orderBiasSql(d: Dialect): String = {
+    val tbl = d.t("documents")
     // r14 Spark branch: the lag window had NO partition key — the doc
     // dimension ran through ONE task (guide §2.4/§5). Bucketed lag (the
     // operators.Ranks prefix discipline): doc_id is dense so 4096-id
@@ -161,8 +130,8 @@ object Round33 {
     // relation (one lightweight row per band — the only unpartitioned
     // window left, and lag over the FIRST band is NULL exactly like the
     // global form's first row). The oracle keeps the textbook lag.
-    val seqCte =
-      if (spark)
+    val seqCte = d match {
+      case _: Spark =>
         s"""sb AS (SELECT doc_id, source, doc_id div 4096 AS bkt FROM $tbl),
         inb AS (SELECT bkt, doc_id, source,
                        lag(source) OVER (PARTITION BY bkt ORDER BY doc_id) AS prev_in,
@@ -176,11 +145,12 @@ object Round33 {
                        CASE WHEN i.rn = 1 THEN eb.prev_band_last
                             ELSE i.prev_in END AS prev_source
                 FROM inb i JOIN eb USING (bkt))"""
-      else
+      case DuckDb =>
         s"""seq AS (
           SELECT doc_id, source,
                  lag(source) OVER (ORDER BY doc_id) AS prev_source
           FROM $tbl)"""
+    }
     s"""WITH $seqCte,
         tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM $tbl),
         per_source AS (

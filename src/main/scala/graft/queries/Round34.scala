@@ -79,26 +79,16 @@ object Round34 {
     * types-per-token diversity. The pruning planning sheet: how much
     * diversity does each quality quartile actually buy.
     */
-  val q491PruningCurve: QueryDef = QueryDef(
-    "q491_pruning_curve",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r34_documents")
-      s.sql(pruningSql(spark = true))
-    },
-    Some(pruningSql(spark = false))
-  )
+  val q491PruningCurve: QueryDef =
+    QueryDef.sql("q491_pruning_curve", "r34_", "documents")(pruningSql)
 
-  private def pruningSql(spark: Boolean): String = {
-    val tbl = if (spark) "r34_documents" else "documents"
-    val words =
-      if (spark)
-        s"SELECT doc_id, explode(split(lower(text), '[^a-z]+')) AS word FROM $tbl"
-      else
-        s"SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z]+')) AS word FROM $tbl"
+  private def pruningSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val words = s"SELECT doc_id, ${d.words} AS word FROM $tbl"
     // trigrams over the CLEANED (empty-free) word array; short docs
     // yield no windows (Spark's sequence(1, 0) DESCENDS — guard it)
-    val grams =
-      if (spark)
+    val grams = d match {
+      case _: Spark =>
         s"""SELECT doc_id, explode(CASE WHEN size(wc) >= 3
               THEN transform(sequence(1, size(wc) - 2),
                              i -> concat_ws(' ', slice(wc, i, 3)))
@@ -106,16 +96,15 @@ object Round34 {
             FROM (SELECT doc_id,
                          filter(split(lower(text), '[^a-z]+'), x -> x <> '') AS wc
                   FROM $tbl)"""
-      else
+      case DuckDb =>
         s"""SELECT doc_id, unnest([array_to_string(wc[i:i+2], ' ')
                                    FOR i IN range(1, greatest(len(wc) - 1, 1))]) AS g
             FROM (SELECT doc_id,
                          list_filter(string_split_regex(lower(text), '[^a-z]+'),
                                      x -> x <> '') AS wc
                   FROM $tbl)"""
-    val qs =
-      if (spark) "SELECT CAST(qq AS BIGINT) AS q FROM (SELECT explode(array(25, 50, 75, 100)) AS qq)"
-      else "SELECT CAST(unnest([25, 50, 75, 100]) AS BIGINT) AS q"
+    }
+    val qs = d.selectGen(d.list("25, 50, 75, 100"), "BIGINT", "q", "qq")
     s"""WITH w AS (SELECT doc_id, word FROM ($words) x WHERE word <> ''),
         sc AS (
           SELECT d.doc_id,
@@ -138,7 +127,7 @@ object Round34 {
         n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM rk),
         qs AS ($qs),
         thresholds AS (
-          SELECT q, CAST((q * n.n + 99) ${if (spark) "div" else "//"} 100 AS BIGINT)
+          SELECT q, CAST((q * n.n + 99) ${d.idiv} 100 AS BIGINT)
                       AS r_max
           FROM qs CROSS JOIN n),
         gmin AS (

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-35 additions (q492+): robust time-series matching — dynamic
   * time warping between the daily click and purchase intensity curves
@@ -32,8 +31,9 @@ object Round35 {
   val q492Dtw: QueryDef = QueryDef(
     "q492_dtw",
     (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r35_events")
-      val series = s.sql(dtwSeriesSql(spark = true)).collect()
+      val sp = Spark("r35_")
+      sp.register(s, dir, "events")
+      val series = s.sql(dtwSeriesSql(sp)).collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
       def curve(side: String): Seq[Double] =
         series.filter(_._1 == side).sortBy(_._2).map(_._3)
@@ -60,8 +60,8 @@ object Round35 {
   )
 
   /** (side, day index within side, snapped day-share) for both curves. */
-  private def dtwSeriesSql(spark: Boolean): String = {
-    val tbl = if (spark) "r35_events" else "events"
+  private def dtwSeriesSql(d: Dialect): String = {
+    val tbl = d.t("events")
     s"""WITH d AS (
           SELECT CASE WHEN event_type = 'click' THEN 'a' ELSE 'b' END AS side,
                  CAST(ts AS DATE) AS day, CAST(count(*) AS BIGINT) AS c
@@ -108,7 +108,7 @@ object Round35 {
                               ${Long.MaxValue / 4})) AS d
             FROM cells c WHERE c.i + c.j = $k)"""
     }).mkString(",\n")
-    s"""WITH series AS MATERIALIZED (${dtwSeriesSql(spark = false)}),
+    s"""WITH series AS MATERIALIZED (${dtwSeriesSql(DuckDb)}),
         a AS (SELECT idx, share FROM series WHERE side = 'a'),
         b AS (SELECT idx, share FROM series WHERE side = 'b'),
         nn AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM a) AS n,
@@ -147,27 +147,15 @@ object Round35 {
     * a traffic spike day corrupts the fit. Points and trials are
     * calendar-bounded; everything is one daily agg + a 50×days grid.
     */
-  val q493RansacLine: QueryDef = QueryDef(
-    "q493_ransac_line",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r35_events")
-      s.sql(ransacSql(spark = true))
-    },
-    Some(ransacSql(spark = false))
-  )
+  val q493RansacLine: QueryDef = QueryDef.sql("q493_ransac_line", "r35_", "events")(ransacSql)
 
-  private def ransacSql(spark: Boolean): String = {
-    val tbl = if (spark) "r35_events" else "events"
-    def md5mod(seed: String, n: String): String =
-      if (spark)
-        s"CAST(conv(substring(md5($seed), 1, 8), 16, 10) AS BIGINT) % $n"
-      else
-        s"CAST(('0x' || substring(md5($seed), 1, 8)) AS BIGINT) % $n"
-    val trials =
-      if (spark)
-        "SELECT CAST(tt AS BIGINT) AS t FROM (SELECT explode(sequence(1, 50)) AS tt)"
-      else
-        "SELECT CAST(unnest(generate_series(1, 50)) AS BIGINT) AS t"
+  private def ransacSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    def md5mod(seed: String, n: String): String = s"${md5i(seed, d)} % $n"
+    val trials = d match {
+      case _: Spark => "SELECT CAST(tt AS BIGINT) AS t FROM (SELECT explode(sequence(1, 50)) AS tt)"
+      case DuckDb => "SELECT CAST(unnest(generate_series(1, 50)) AS BIGINT) AS t"
+    }
     s"""WITH pts AS (
           SELECT CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS x,
                  CAST(c AS DOUBLE) AS y
@@ -179,8 +167,8 @@ object Round35 {
         trials AS ($trials),
         picks AS (
           SELECT t,
-                 1 + ${md5mod(s"CAST(t AS ${if (spark) "STRING" else "VARCHAR"}) || ':a'", "np.n")} AS ia,
-                 1 + ${md5mod(s"CAST(t AS ${if (spark) "STRING" else "VARCHAR"}) || ':b'", "np.n")} AS ib
+                 1 + ${md5mod(s"CAST(t AS ${d.str}) || ':a'", "np.n")} AS ia,
+                 1 + ${md5mod(s"CAST(t AS ${d.str}) || ':b'", "np.n")} AS ib
           FROM trials CROSS JOIN np),
         lines AS (
           -- degenerate picks (same day) are skipped, like a RANSAC

@@ -30,18 +30,11 @@ object Round36 {
     * row-local. The analytic companion to the reference's simulated
     * queue (where q19 MEASURES, this PREDICTS from two moments).
     */
-  val q494Pollaczek: QueryDef = QueryDef(
-    "q494_pollaczek",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r36_events")
-      s.sql(pollaczekSql(spark = true))
-    },
-    Some(pollaczekSql(spark = false))
-  )
+  val q494Pollaczek: QueryDef = QueryDef.sql("q494_pollaczek", "r36_", "events")(pollaczekSql)
 
-  private def pollaczekSql(spark: Boolean): String = {
-    val tbl = if (spark) "r36_events" else "events"
-    val us = if (spark) "unix_micros(ts)" else "epoch_us(ts)"
+  private def pollaczekSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val us = d.epochUs("ts")
     s"""WITH span AS (
           -- CAST the divisor: a bare 1000000.0 is DECIMAL in Spark, and
           -- BIGINT/DECIMAL stays exact decimal (no double operand to
@@ -85,18 +78,11 @@ object Round36 {
     * to q272's central-noise counts: the noise lives on each ROW, and
     * unbiasing is algebra, not trust.
     */
-  val q495RandomizedResponse: QueryDef = QueryDef(
-    "q495_randomized_response",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r36_events")
-      s.sql(rrSql(spark = true))
-    },
-    Some(rrSql(spark = false))
-  )
+  val q495RandomizedResponse: QueryDef =
+    QueryDef.sql("q495_randomized_response", "r36_", "events")(rrSql)
 
-  private def rrSql(spark: Boolean): String = {
-    val tbl = if (spark) "r36_events" else "events"
-    val str = if (spark) "STRING" else "VARCHAR"
+  private def rrSql(d: Dialect): String = {
+    val tbl = d.t("events")
     s"""WITH modal AS (
           SELECT user_id, event_type AS true_cat FROM (
             SELECT user_id, event_type,
@@ -111,8 +97,8 @@ object Round36 {
         k AS (SELECT CAST(count(*) AS BIGINT) AS k FROM cats),
         coins AS (
           SELECT m.user_id, m.true_cat,
-                 ${md5i(s"'rr:keep:' || CAST(m.user_id AS $str)", spark)} % 4 AS keep_coin,
-                 ${md5i(s"'rr:pick:' || CAST(m.user_id AS $str)", spark)} % (SELECT k FROM k)
+                 ${md5i(s"'rr:keep:' || CAST(m.user_id AS ${d.str})", d)} % 4 AS keep_coin,
+                 ${md5i(s"'rr:pick:' || CAST(m.user_id AS ${d.str})", d)} % (SELECT k FROM k)
                    AS pick_ci
           FROM modal m),
         perturbed AS (

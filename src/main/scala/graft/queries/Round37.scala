@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-37 additions (q497+): evaluation-budget and trajectory
   * audits — successive halving over md5-bucketed arms (the
@@ -26,18 +25,11 @@ object Round37 {
     * survivor set size, budget, and the min/max surviving means — the
     * audit of what an early-stopping search would actually have kept.
     */
-  val q497SuccessiveHalving: QueryDef = QueryDef(
-    "q497_successive_halving",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r37_events")
-      s.sql(halvingSql(spark = true))
-    },
-    Some(halvingSql(spark = false))
-  )
+  val q497SuccessiveHalving: QueryDef =
+    QueryDef.sql("q497_successive_halving", "r37_", "events")(halvingSql)
 
-  private def halvingSql(spark: Boolean): String = {
-    val tbl = if (spark) "r37_events" else "events"
-    val str = if (spark) "STRING" else "VARCHAR"
+  private def halvingSql(d: Dialect): String = {
+    val tbl = d.t("events")
     // survivors after each selection stage, over the bounded means table
     def stage(k: Int, prev: String, budgetIdx: Int, keep: Int): String =
       s"""s$k AS (
@@ -47,10 +39,10 @@ object Round37 {
               FROM means m JOIN $prev p ON p.arm = m.arm) r
             WHERE rn <= $keep)"""
     s"""WITH pulls AS (
-          SELECT ${md5i(s"'arm:' || CAST(user_id AS $str)", spark)} % 16 AS arm,
+          SELECT ${md5i(s"'arm:' || CAST(user_id AS ${d.str})", d)} % 16 AS arm,
                  CAST(round(value * 100) AS BIGINT) AS cents,
                  row_number() OVER (
-                   PARTITION BY ${md5i(s"'arm:' || CAST(user_id AS $str)", spark)} % 16
+                   PARTITION BY ${md5i(s"'arm:' || CAST(user_id AS ${d.str})", d)} % 16
                    ORDER BY ts, event_id) AS pull
           FROM $tbl),
         means AS (
@@ -90,17 +82,11 @@ object Round37 {
     * CTEs stay linear. The trajectory sheet: is the mix converging to
     * the stationary blend or still drifting (and which states gain).
     */
-  val q498MarkovProjection: QueryDef = QueryDef(
-    "q498_markov_projection",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r37_events")
-      s.sql(markovSql(spark = true))
-    },
-    Some(markovSql(spark = false))
-  )
+  val q498MarkovProjection: QueryDef =
+    QueryDef.sql("q498_markov_projection", "r37_", "events")(markovSql)
 
-  private def markovSql(spark: Boolean): String = {
-    val tbl = if (spark) "r37_events" else "events"
+  private def markovSql(d: Dialect): String = {
+    val tbl = d.t("events")
     val steps = (1 to 4).map { k =>
       s"""pi$k AS (
             SELECT p.to_state AS state,

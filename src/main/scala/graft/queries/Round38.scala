@@ -28,25 +28,16 @@ object Round38 {
     * join, all λ in one aggregation. The sweep says how much context is
     * worth before discounting (q167) enters.
     */
-  val q499JmInterpolation: QueryDef = QueryDef(
-    "q499_jm_interpolation",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r38_documents")
-      s.sql(jmSql(spark = true))
-    },
-    Some(jmSql(spark = false))
-  )
+  val q499JmInterpolation: QueryDef =
+    QueryDef.sql("q499_jm_interpolation", "r38_", "documents")(jmSql)
 
-  private def jmSql(spark: Boolean): String = {
-    val tbl = if (spark) "r38_documents" else "documents"
-    val str = if (spark) "STRING" else "VARCHAR"
-    val toks = posTokens(tbl, spark, "doc_id")
-    val lambdas =
-      if (spark) "SELECT CAST(ll AS DOUBLE) / 4.0 AS lam FROM (SELECT explode(array(1, 2, 3)) AS ll)"
-      else "SELECT CAST(ll AS DOUBLE) / 4.0 AS lam FROM (SELECT unnest([1, 2, 3]) AS ll)"
+  private def jmSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val toks = posTokens(tbl, d, "doc_id")
+    val lambdas = s"SELECT CAST(ll AS DOUBLE) / 4.0 AS lam FROM (SELECT ${d.list("1, 2, 3")} AS ll)"
     s"""WITH split AS (
           SELECT doc_id,
-                 CASE WHEN ${md5i(s"'jm:' || CAST(doc_id AS $str)", spark)} % 5 = 0
+                 CASE WHEN ${md5i(s"'jm:' || CAST(doc_id AS ${d.str})", d)} % 5 = 0
                       THEN 'test' ELSE 'train' END AS slice
           FROM $tbl),
         tok AS (

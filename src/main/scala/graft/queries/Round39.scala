@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-39 additions (q501+): the serving/training audits the first 38
   * rounds never covered — MoE router load balance (top-2 gating, Switch
@@ -21,12 +20,13 @@ import graft.sources.Tables
 object Round39 {
 
   /** Per-document kept-token count, both flavors. */
-  private def ntokExpr(spark: Boolean): String =
-    if (spark)
+  private def ntokExpr(d: Dialect): String = d match {
+    case _: Spark =>
       "CAST(size(filter(split(lower(text), '[^a-z]+'), x -> x <> '')) AS BIGINT)"
-    else
+    case DuckDb =>
       "CAST(len(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS BIGINT)"
 
+  }
   // ---------------------------------------------------------------- q501
 
   /** MoE router load-balance audit: every kept token hash-routes over
@@ -38,28 +38,17 @@ object Round39 {
     * whole chart is token-keyed aggregation — the expert grid is a
     * foldable 8-row literal, never corpus-sized.
     */
-  val q501MoeBalance: QueryDef = QueryDef(
-    "q501_moe_balance",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r39_documents")
-      s.sql(moeSql(spark = true))
-    },
-    Some(moeSql(spark = false))
-  )
+  val q501MoeBalance: QueryDef = QueryDef.sql("q501_moe_balance", "r39_", "documents")(moeSql)
 
-  private def moeSql(spark: Boolean): String = {
-    val tbl = if (spark) "r39_documents" else "documents"
-    val str = if (spark) "STRING" else "VARCHAR"
-    val idiv = if (spark) "div" else "//"
-    val ex =
-      if (spark) "SELECT explode(sequence(0, 7)) AS e"
-      else "SELECT unnest(range(0, 8)) AS e"
-    s"""WITH tok AS (${posTokens(tbl, spark, "doc_id")}),
+  private def moeSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val ex = s"SELECT ${d.closedRange(0, 7)} AS e"
+    s"""WITH tok AS (${posTokens(tbl, d, "doc_id")}),
         nt AS (SELECT CAST(count(*) AS BIGINT) AS n FROM tok),
         ex AS ($ex),
         gate AS (
           SELECT t.doc_id, t.pos, CAST(e.e AS BIGINT) AS e,
-                 ${md5i(s"'moe:' || word || ':' || CAST(e.e AS $str)", spark)} % 1048576 AS g
+                 ${md5i(s"'moe:' || word || ':' || CAST(e.e AS ${d.str})", d)} % 1048576 AS g
           FROM tok t CROSS JOIN ex e),
         rk AS (
           SELECT doc_id, pos, e, g,
@@ -87,7 +76,7 @@ object Round39 {
         drops AS (
           SELECT a.e AS expert, CAST(count(*) AS BIGINT) AS n_dropped
           FROM assign a CROSS JOIN nt
-          WHERE a.arr > (5 * nt.n) $idiv 32
+          WHERE a.arr > (5 * nt.n) ${d.idiv} 32
           GROUP BY 1),
         stats AS (
           SELECT p.expert, p.n_top1, p.sq,
@@ -117,26 +106,13 @@ object Round39 {
     * index, and the chart maximum. q193 answers "where was THE change";
     * this replays the monitoring rule that would have paged.
     */
-  val q502CusumAlarms: QueryDef = QueryDef(
-    "q502_cusum_alarms",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r39_events")
-      s.sql(cusumSql(spark = true))
-    },
-    Some(cusumSql(spark = false))
-  )
+  val q502CusumAlarms: QueryDef = QueryDef.sql("q502_cusum_alarms", "r39_", "events")(cusumSql)
 
-  private def cusumSql(spark: Boolean): String = {
-    val tbl = if (spark) "r39_events" else "events"
-    val hh =
-      if (spark) "unix_micros(ts) div 3600000000"
-      else "epoch_us(ts) // 3600000000"
-    val grid =
-      if (spark) "SELECT mn, explode(sequence(mn, mx)) AS hh FROM b"
-      else "SELECT mn, unnest(range(mn, mx + 1)) AS hh FROM b"
-    val ms =
-      if (spark) "SELECT explode(array(1, 2, 4)) AS m"
-      else "SELECT unnest([1, 2, 4]) AS m"
+  private def cusumSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val hh = s"${d.epochUs("ts")} ${d.idiv} 3600000000"
+    val grid = s"SELECT mn, ${d.closedRange("mn", "mx")} AS hh FROM b"
+    val ms = s"SELECT ${d.list("1, 2, 4")} AS m"
     s"""WITH h AS (SELECT $hh AS hh FROM $tbl),
         cnt AS (SELECT hh, CAST(count(*) AS BIGINT) AS x FROM h GROUP BY 1),
         b AS (SELECT min(hh) AS mn, max(hh) AS mx FROM cnt),
@@ -176,26 +152,17 @@ object Round39 {
     * policy would keep. Pure integer arithmetic over one doc-grain scan
     * × a 3-row foldable grid.
     */
-  val q503ContextFit: QueryDef = QueryDef(
-    "q503_context_fit",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r39_documents")
-      s.sql(contextFitSql(spark = true))
-    },
-    Some(contextFitSql(spark = false))
-  )
+  val q503ContextFit: QueryDef =
+    QueryDef.sql("q503_context_fit", "r39_", "documents")(contextFitSql)
 
-  private def contextFitSql(spark: Boolean): String = {
-    val tbl = if (spark) "r39_documents" else "documents"
-    val idiv = if (spark) "div" else "//"
-    val ws =
-      if (spark) "SELECT explode(array(128, 512, 2048)) AS w"
-      else "SELECT unnest([128, 512, 2048]) AS w"
-    s"""WITH d AS (SELECT doc_id, ${ntokExpr(spark)} AS ntok FROM $tbl),
+  private def contextFitSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val ws = s"SELECT ${d.list("128, 512, 2048")} AS w"
+    s"""WITH d AS (SELECT doc_id, ${ntokExpr(d)} AS ntok FROM $tbl),
         ws AS ($ws),
         per AS (
           SELECT CAST(w AS BIGINT) AS w, ntok,
-                 (ntok + w - 1) $idiv w AS chunks
+                 (ntok + w - 1) ${d.idiv} w AS chunks
           FROM d CROSS JOIN ws)
         SELECT w AS window_len,
                CAST(count(*) AS BIGINT) AS n_docs,
@@ -221,27 +188,12 @@ object Round39 {
     * is exact dyadic arithmetic in both engines regardless of order.
     * q453 profiles the variance shape; this prices the batch size.
     */
-  val q504GradientNoise: QueryDef = QueryDef(
-    "q504_gradient_noise",
-    (s, dir) => {
-      Tables.embeddings(s, dir).createOrReplaceTempView("r39_embeddings")
-      s.sql(gradNoiseSql(spark = true))
-    },
-    Some(gradNoiseSql(spark = false))
-  )
+  val q504GradientNoise: QueryDef =
+    QueryDef.sql("q504_gradient_noise", "r39_", "embeddings")(gradNoiseSql)
 
-  private def gradNoiseSql(spark: Boolean): String = {
-    val tbl = if (spark) "r39_embeddings" else "embeddings"
-    val e =
-      if (spark)
-        s"""SELECT vec_id, label, pos AS dim, CAST(col AS DOUBLE) AS v
-            FROM (SELECT vec_id, label,
-                         posexplode(transform(embedding, x -> CAST(x AS DOUBLE)))
-                  FROM $tbl)"""
-      else
-        s"""SELECT vec_id, label, generate_subscripts(embedding, 1) AS dim,
-                   CAST(unnest(embedding) AS DOUBLE) AS v
-            FROM $tbl"""
+  private def gradNoiseSql(d: Dialect): String = {
+    val tbl = d.t("embeddings")
+    val e = d.embeddingCells(tbl, "vec_id, label", 1)
     s"""WITH e AS ($e),
         ds AS (
           SELECT label, dim,
@@ -283,22 +235,13 @@ object Round39 {
     * + row_number within a length), never a single-partition window
     * over the corpus.
     */
-  val q505LengthBucketing: QueryDef = QueryDef(
-    "q505_length_bucketing",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r39_documents")
-      s.sql(bucketingSql(spark = true))
-    },
-    Some(bucketingSql(spark = false))
-  )
+  val q505LengthBucketing: QueryDef =
+    QueryDef.sql("q505_length_bucketing", "r39_", "documents")(bucketingSql)
 
-  private def bucketingSql(spark: Boolean): String = {
-    val tbl = if (spark) "r39_documents" else "documents"
-    val idiv = if (spark) "div" else "//"
-    val ks =
-      if (spark) "SELECT explode(array(1, 2, 4, 8)) AS k"
-      else "SELECT unnest([1, 2, 4, 8]) AS k"
-    s"""WITH d AS (SELECT doc_id, ${ntokExpr(spark)} AS ntok FROM $tbl),
+  private def bucketingSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val ks = s"SELECT ${d.list("1, 2, 4, 8")} AS k"
+    s"""WITH d AS (SELECT doc_id, ${ntokExpr(d)} AS ntok FROM $tbl),
         lc AS (SELECT ntok, CAST(count(*) AS BIGINT) AS c FROM d GROUP BY 1),
         boff AS (
           SELECT ntok, CAST(coalesce(sum(c) OVER (ORDER BY ntok
@@ -313,7 +256,7 @@ object Round39 {
         ks AS ($ks),
         bkt AS (
           SELECT CAST(k.k AS BIGINT) AS k,
-                 ((rk.rnk - 1) * k.k) $idiv nn.n AS b,
+                 ((rk.rnk - 1) * k.k) ${d.idiv} nn.n AS b,
                  rk.ntok
           FROM rk CROSS JOIN nn CROSS JOIN ks k),
         per AS (
@@ -344,17 +287,10 @@ object Round39 {
     * the bucket-offset pattern; everything is BIGINT until the final
     * snapped combination.
     */
-  val q506CramerVonMises: QueryDef = QueryDef(
-    "q506_cramer_von_mises",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r39_events")
-      s.sql(cvmSql(spark = true))
-    },
-    Some(cvmSql(spark = false))
-  )
+  val q506CramerVonMises: QueryDef = QueryDef.sql("q506_cramer_von_mises", "r39_", "events")(cvmSql)
 
-  private def cvmSql(spark: Boolean): String = {
-    val tbl = if (spark) "r39_events" else "events"
+  private def cvmSql(d: Dialect): String = {
+    val tbl = d.t("events")
     s"""WITH b AS (
           SELECT event_id, value AS v,
                  CASE WHEN event_type = 'click' THEN 0 ELSE 1 END AS g

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-40 additions (q507+): trend/weighting/masking audits that
   * round 39 left open — a broken-stick (two-segment OLS) trend fit with
@@ -30,23 +29,13 @@ object Round40 {
     * segments are required to hold ≥ 2 points; ties break to the
     * earliest split.
     */
-  val q507BrokenStick: QueryDef = QueryDef(
-    "q507_broken_stick",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r40_orders")
-      s.sql(brokenStickSql(spark = true))
-    },
-    Some(brokenStickSql(spark = false))
-  )
+  val q507BrokenStick: QueryDef =
+    QueryDef.sql("q507_broken_stick", "r40_", "orders")(brokenStickSql)
 
-  private def brokenStickSql(spark: Boolean): String = {
-    val tbl = if (spark) "r40_orders" else "orders"
-    val dd =
-      if (spark) "unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000"
-      else "epoch_us(o_orderdate) // 86400000000"
-    val grid =
-      if (spark) "SELECT mn, explode(sequence(mn, mx)) AS dd FROM b"
-      else "SELECT mn, unnest(range(mn, mx + 1)) AS dd FROM b"
+  private def brokenStickSql(d: Dialect): String = {
+    val tbl = d.t("orders")
+    val dd = s"${d.dateUs("o_orderdate")} ${d.idiv} 86400000000"
+    val grid = s"SELECT mn, ${d.closedRange("mn", "mx")} AS dd FROM b"
     def cxx(sxx: String, sx: String, n: String): String =
       s"(CAST($sxx AS DOUBLE) - CAST($sx AS DOUBLE) * $sx / $n)"
     def cxy(sxy: String, sx: String, sy: String, n: String): String =
@@ -106,23 +95,12 @@ object Round40 {
     * before the sum, so the arbitrary-order reduce is exact in both
     * engines.
     */
-  val q508DecayEss: QueryDef = QueryDef(
-    "q508_decay_ess",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r40_events")
-      s.sql(decayEssSql(spark = true))
-    },
-    Some(decayEssSql(spark = false))
-  )
+  val q508DecayEss: QueryDef = QueryDef.sql("q508_decay_ess", "r40_", "events")(decayEssSql)
 
-  private def decayEssSql(spark: Boolean): String = {
-    val tbl = if (spark) "r40_events" else "events"
-    val dd =
-      if (spark) "unix_micros(ts) div 86400000000"
-      else "epoch_us(ts) // 86400000000"
-    val ls =
-      if (spark) "SELECT explode(array(5, 20, 100)) AS lraw"
-      else "SELECT unnest([5, 20, 100]) AS lraw"
+  private def decayEssSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val dd = s"${d.epochUs("ts")} ${d.idiv} 86400000000"
+    val ls = s"SELECT ${d.list("5, 20, 100")} AS lraw"
     s"""WITH e AS (SELECT event_type, $dd AS dd FROM $tbl),
         cnt AS (SELECT event_type, dd, CAST(count(*) AS BIGINT) AS c
                 FROM e GROUP BY 1, 2),
@@ -163,23 +141,16 @@ object Round40 {
     * target. Runs come from the pos − row_number islands trick over
     * doc-keyed windows.
     */
-  val q509SpanCorruption: QueryDef = QueryDef(
-    "q509_span_corruption",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r40_documents")
-      s.sql(spanCorruptionSql(spark = true))
-    },
-    Some(spanCorruptionSql(spark = false))
-  )
+  val q509SpanCorruption: QueryDef =
+    QueryDef.sql("q509_span_corruption", "r40_", "documents")(spanCorruptionSql)
 
-  private def spanCorruptionSql(spark: Boolean): String = {
-    val tbl = if (spark) "r40_documents" else "documents"
-    val str = if (spark) "STRING" else "VARCHAR"
-    s"""WITH tok AS (${posTokens(tbl, spark, "source", "doc_id")}),
+  private def spanCorruptionSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    s"""WITH tok AS (${posTokens(tbl, d, "source", "doc_id")}),
         marked AS (
           SELECT source, doc_id, pos
           FROM tok
-          WHERE ${md5i(s"'span:' || CAST(doc_id AS $str) || ':' || CAST(pos AS $str)", spark)} % 100 < 15),
+          WHERE ${md5i(s"'span:' || CAST(doc_id AS ${d.str}) || ':' || CAST(pos AS ${d.str})", d)} % 100 < 15),
         isl AS (
           SELECT source, doc_id,
                  pos - CAST(row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS BIGINT) AS grp
@@ -217,17 +188,10 @@ object Round40 {
     * is the tail-shape gate a value distribution must pass before
     * z-score rules (q150) mean anything.
     */
-  val q510JarqueBera: QueryDef = QueryDef(
-    "q510_jarque_bera",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r40_events")
-      s.sql(jarqueBeraSql(spark = true))
-    },
-    Some(jarqueBeraSql(spark = false))
-  )
+  val q510JarqueBera: QueryDef = QueryDef.sql("q510_jarque_bera", "r40_", "events")(jarqueBeraSql)
 
-  private def jarqueBeraSql(spark: Boolean): String = {
-    val tbl = if (spark) "r40_events" else "events"
+  private def jarqueBeraSql(d: Dialect): String = {
+    val tbl = d.t("events")
     s"""WITH z AS (SELECT event_type, value / CAST(100 AS DOUBLE) AS z FROM $tbl),
         raw AS (
           SELECT event_type,
@@ -278,21 +242,12 @@ object Round40 {
     * quantization is safe. The distributionally-robust counterpart to
     * q409's DoReMi excess-loss weights.
     */
-  val q511GroupDro: QueryDef = QueryDef(
-    "q511_group_dro",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r40_documents")
-      s.sql(groupDroSql(spark = true))
-    },
-    Some(groupDroSql(spark = false))
-  )
+  val q511GroupDro: QueryDef = QueryDef.sql("q511_group_dro", "r40_", "documents")(groupDroSql)
 
-  private def groupDroSql(spark: Boolean): String = {
-    val tbl = if (spark) "r40_documents" else "documents"
-    val etas =
-      if (spark) "SELECT explode(array(1, 4)) AS eta"
-      else "SELECT unnest([1, 4]) AS eta"
-    s"""WITH tok AS (${posTokens(tbl, spark, "source", "doc_id")}),
+  private def groupDroSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val etas = s"SELECT ${d.list("1, 4")} AS eta"
+    s"""WITH tok AS (${posTokens(tbl, d, "source", "doc_id")}),
         cw AS (SELECT word, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1),
         tt AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM cw),
         sl AS (
@@ -332,21 +287,13 @@ object Round40 {
     * (q132/q182/q216) hard-codes one. All windows are (gap, user)-keyed;
     * ties in ts break by event_id so the lag chain is deterministic.
     */
-  val q512SessionGapSweep: QueryDef = QueryDef(
-    "q512_session_gap_sweep",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r40_events")
-      s.sql(sessionGapSql(spark = true))
-    },
-    Some(sessionGapSql(spark = false))
-  )
+  val q512SessionGapSweep: QueryDef =
+    QueryDef.sql("q512_session_gap_sweep", "r40_", "events")(sessionGapSql)
 
-  private def sessionGapSql(spark: Boolean): String = {
-    val tbl = if (spark) "r40_events" else "events"
-    val us = if (spark) "unix_micros(ts)" else "epoch_us(ts)"
-    val gs =
-      if (spark) "SELECT explode(array(300, 900, 3600)) AS gap_s"
-      else "SELECT unnest([300, 900, 3600]) AS gap_s"
+  private def sessionGapSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val us = d.epochUs("ts")
+    val gs = s"SELECT ${d.list("300, 900, 3600")} AS gap_s"
     s"""WITH ev AS (SELECT event_id, user_id, $us AS us FROM $tbl),
         gs AS ($gs),
         lagd AS (

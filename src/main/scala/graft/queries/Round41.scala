@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-41 additions (q513+): the classical-inference and geometry
   * audits still missing after 40 rounds — Welch's unequal-variance
@@ -27,17 +26,10 @@ object Round41 {
     * freedom, and the |t| > 1.96 verdict. The unequal-variance test
     * q327's Cohen's d and q229's pooled-variance F both skip.
     */
-  val q513WelchTtest: QueryDef = QueryDef(
-    "q513_welch_ttest",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r41_events")
-      s.sql(welchSql(spark = true))
-    },
-    Some(welchSql(spark = false))
-  )
+  val q513WelchTtest: QueryDef = QueryDef.sql("q513_welch_ttest", "r41_", "events")(welchSql)
 
-  private def welchSql(spark: Boolean): String = {
-    val tbl = if (spark) "r41_events" else "events"
+  private def welchSql(d: Dialect): String = {
+    val tbl = d.t("events")
     s"""WITH b AS (
           SELECT CASE WHEN event_type = 'click' THEN 0 ELSE 1 END AS g, value AS v
           FROM $tbl WHERE event_type IN ('click', 'view')),
@@ -83,23 +75,13 @@ object Round41 {
     * type dimension carries a LIMIT node so the grid cross join is
     * provably bounded.
     */
-  val q514PermutationEntropy: QueryDef = QueryDef(
-    "q514_permutation_entropy",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r41_events")
-      s.sql(permEntropySql(spark = true))
-    },
-    Some(permEntropySql(spark = false))
-  )
+  val q514PermutationEntropy: QueryDef =
+    QueryDef.sql("q514_permutation_entropy", "r41_", "events")(permEntropySql)
 
-  private def permEntropySql(spark: Boolean): String = {
-    val tbl = if (spark) "r41_events" else "events"
-    val hh =
-      if (spark) "unix_micros(ts) div 3600000000"
-      else "epoch_us(ts) // 3600000000"
-    val grid =
-      if (spark) "SELECT mn, explode(sequence(mn, mx)) AS hh FROM b"
-      else "SELECT mn, unnest(range(mn, mx + 1)) AS hh FROM b"
+  private def permEntropySql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val hh = s"${d.epochUs("ts")} ${d.idiv} 3600000000"
+    val grid = s"SELECT mn, ${d.closedRange("mn", "mx")} AS hh FROM b"
     s"""WITH h AS (SELECT event_type, $hh AS hh FROM $tbl),
         cnt AS (SELECT event_type, hh, CAST(count(*) AS BIGINT) AS x
                 FROM h GROUP BY 1, 2),
@@ -155,27 +137,12 @@ object Round41 {
     * Squared cells re-quantize before the cross-cell sum (snapped
     * squares are NOT dyadic at 2^-30).
     */
-  val q515WhiteningAudit: QueryDef = QueryDef(
-    "q515_whitening_audit",
-    (s, dir) => {
-      Tables.embeddings(s, dir).createOrReplaceTempView("r41_embeddings")
-      s.sql(whiteningSql(spark = true))
-    },
-    Some(whiteningSql(spark = false))
-  )
+  val q515WhiteningAudit: QueryDef =
+    QueryDef.sql("q515_whitening_audit", "r41_", "embeddings")(whiteningSql)
 
-  private def whiteningSql(spark: Boolean): String = {
-    val tbl = if (spark) "r41_embeddings" else "embeddings"
-    val e =
-      if (spark)
-        s"""SELECT vec_id, pos AS dim, CAST(col AS DOUBLE) AS v
-            FROM (SELECT vec_id,
-                         posexplode(transform(embedding, x -> CAST(x AS DOUBLE)))
-                  FROM $tbl)"""
-      else
-        s"""SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS dim,
-                   CAST(unnest(embedding) AS DOUBLE) AS v
-            FROM $tbl"""
+  private def whiteningSql(d: Dialect): String = {
+    val tbl = d.t("embeddings")
+    val e = d.embeddingCells(tbl, "vec_id", 0)
     s"""WITH e AS ($e),
         pe AS (
           SELECT a.dim AS da, b.dim AS db,
@@ -216,25 +183,18 @@ object Round41 {
     * Contiguous key ranges (unlike q59's hash split) keep time-locality
     * for pruning; this sheet says what that costs in balance.
     */
-  val q516RangeShardPlan: QueryDef = QueryDef(
-    "q516_range_shard_plan",
-    (s, dir) => {
-      Tables.lineitem(s, dir).createOrReplaceTempView("r41_lineitem")
-      s.sql(rangeShardSql(spark = true))
-    },
-    Some(rangeShardSql(spark = false))
-  )
+  val q516RangeShardPlan: QueryDef =
+    QueryDef.sql("q516_range_shard_plan", "r41_", "lineitem")(rangeShardSql)
 
-  private def rangeShardSql(spark: Boolean): String = {
-    val tbl = if (spark) "r41_lineitem" else "lineitem"
-    val idiv = if (spark) "div" else "//"
+  private def rangeShardSql(d: Dialect): String = {
+    val tbl = d.t("lineitem")
     s"""WITH m AS (SELECT CAST(year(l_shipdate) * 12 + month(l_shipdate) AS BIGINT) AS mk
                    FROM $tbl),
         cm AS (SELECT mk, CAST(count(*) AS BIGINT) AS w FROM m GROUP BY 1),
         p AS (SELECT mk, w, CAST(sum(w) OVER (ORDER BY mk) AS BIGINT) AS cum FROM cm),
         tot AS (SELECT CAST(sum(w) AS BIGINT) AS t FROM cm),
         sh AS (SELECT p.mk, p.w, tot.t,
-                      ((p.cum - p.w) * 8) $idiv tot.t AS shard
+                      ((p.cum - p.w) * 8) ${d.idiv} tot.t AS shard
                FROM p CROSS JOIN tot)
         SELECT CAST(shard AS BIGINT) AS shard,
                CAST(count(*) AS BIGINT) AS n_months,
@@ -258,23 +218,13 @@ object Round41 {
     * so only 24 cos/sin products exist per type, each quantized before
     * the sum. The spectral companion to q236's moving-average indices.
     */
-  val q517DiurnalHarmonic: QueryDef = QueryDef(
-    "q517_diurnal_harmonic",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r41_events")
-      s.sql(harmonicSql(spark = true))
-    },
-    Some(harmonicSql(spark = false))
-  )
+  val q517DiurnalHarmonic: QueryDef =
+    QueryDef.sql("q517_diurnal_harmonic", "r41_", "events")(harmonicSql)
 
-  private def harmonicSql(spark: Boolean): String = {
-    val tbl = if (spark) "r41_events" else "events"
-    val hh =
-      if (spark) "unix_micros(ts) div 3600000000"
-      else "epoch_us(ts) // 3600000000"
-    val grid =
-      if (spark) "SELECT mn, explode(sequence(mn, mx)) AS hh FROM b"
-      else "SELECT mn, unnest(range(mn, mx + 1)) AS hh FROM b"
+  private def harmonicSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val hh = s"${d.epochUs("ts")} ${d.idiv} 3600000000"
+    val grid = s"SELECT mn, ${d.closedRange("mn", "mx")} AS hh FROM b"
     val theta = "CAST(2 AS DOUBLE) * pi() * k / CAST(24 AS DOUBLE)"
     s"""WITH h AS (SELECT event_type, $hh AS hh FROM $tbl),
         cnt AS (SELECT event_type, hh, CAST(count(*) AS BIGINT) AS x
@@ -323,17 +273,10 @@ object Round41 {
     * the tie-uncorrected variance; q340's Kruskal–Wallis would ignore
     * that the alternative is MONOTONE in priority.
     */
-  val q518Jonckheere: QueryDef = QueryDef(
-    "q518_jonckheere",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r41_orders")
-      s.sql(jonckheereSql(spark = true))
-    },
-    Some(jonckheereSql(spark = false))
-  )
+  val q518Jonckheere: QueryDef = QueryDef.sql("q518_jonckheere", "r41_", "orders")(jonckheereSql)
 
-  private def jonckheereSql(spark: Boolean): String = {
-    val tbl = if (spark) "r41_orders" else "orders"
+  private def jonckheereSql(d: Dialect): String = {
+    val tbl = d.t("orders")
     s"""WITH o AS (SELECT o_orderpriority AS p,
                           CAST(round(o_totalprice * CAST(100 AS DOUBLE)) AS BIGINT) AS cents
                    FROM $tbl),

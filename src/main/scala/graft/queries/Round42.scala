@@ -27,29 +27,21 @@ object Round42 {
     * √f terms quantize before the ordered cumsum so the running totals
     * are integers.
     */
-  val q519DaleniusHodges: QueryDef = QueryDef(
-    "q519_dalenius_hodges",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r42_orders")
-      s.sql(dhSql(spark = true))
-    },
-    Some(dhSql(spark = false))
-  )
+  val q519DaleniusHodges: QueryDef = QueryDef.sql("q519_dalenius_hodges", "r42_", "orders")(dhSql)
 
-  private def dhSql(spark: Boolean): String = {
-    val tbl = if (spark) "r42_orders" else "orders"
-    val idiv = if (spark) "div" else "//"
+  private def dhSql(d: Dialect): String = {
+    val tbl = d.t("orders")
     s"""WITH o AS (SELECT CAST(round(o_totalprice * CAST(100 AS DOUBLE)) AS BIGINT) AS cents
                    FROM $tbl),
-        bins AS (SELECT cents $idiv 50000 AS b, CAST(count(*) AS BIGINT) AS f
+        bins AS (SELECT cents ${d.idiv} 50000 AS b, CAST(count(*) AS BIGINT) AS f
                  FROM o GROUP BY 1),
         q AS (SELECT b, ${qi("sqrt(CAST(f AS DOUBLE))")} AS qf FROM bins),
         cq AS (SELECT b, qf, CAST(sum(qf) OVER (ORDER BY b) AS BIGINT) AS cum FROM q),
         tq AS (SELECT CAST(sum(qf) AS BIGINT) AS tot FROM q),
-        sb AS (SELECT c.b, ((c.cum - c.qf) * 4) $idiv t.tot AS stratum
+        sb AS (SELECT c.b, ((c.cum - c.qf) * 4) ${d.idiv} t.tot AS stratum
                FROM cq c CROSS JOIN tq t),
         so AS (SELECT o.cents, sb.stratum FROM o
-               JOIN sb ON sb.b = o.cents $idiv 50000),
+               JOIN sb ON sb.b = o.cents ${d.idiv} 50000),
         st AS (
           SELECT stratum,
                  CAST(count(*) AS BIGINT) AS n,
@@ -88,29 +80,15 @@ object Round42 {
     * weekly calendar or checkerboard-dispersed", per type, vs the
     * E[I] = −1/167 null.
     */
-  val q520CalendarMorans: QueryDef = QueryDef(
-    "q520_calendar_morans_i",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r42_events")
-      s.sql(moransSql(spark = true))
-    },
-    Some(moransSql(spark = false))
-  )
+  val q520CalendarMorans: QueryDef =
+    QueryDef.sql("q520_calendar_morans_i", "r42_", "events")(moransSql)
 
-  private def moransSql(spark: Boolean): String = {
-    val tbl = if (spark) "r42_events" else "events"
-    val dd =
-      if (spark) "unix_micros(ts) div 86400000000"
-      else "epoch_us(ts) // 86400000000"
-    val hh =
-      if (spark) "unix_micros(ts) div 3600000000"
-      else "epoch_us(ts) // 3600000000"
-    val dgrid =
-      if (spark) "SELECT explode(sequence(0, 6)) AS dw"
-      else "SELECT unnest(range(0, 7)) AS dw"
-    val hgrid =
-      if (spark) "SELECT explode(sequence(0, 23)) AS hd"
-      else "SELECT unnest(range(0, 24)) AS hd"
+  private def moransSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val dd = s"${d.epochUs("ts")} ${d.idiv} 86400000000"
+    val hh = s"${d.epochUs("ts")} ${d.idiv} 3600000000"
+    val dgrid = s"SELECT ${d.closedRange(0, 6)} AS dw"
+    val hgrid = s"SELECT ${d.closedRange(0, 23)} AS hd"
     s"""WITH e AS (SELECT event_type, ($dd) % 7 AS dw, ($hh) % 24 AS hd FROM $tbl),
         cnt AS (SELECT event_type, dw, hd, CAST(count(*) AS BIGINT) AS x
                 FROM e GROUP BY 1, 2, 3),
@@ -167,27 +145,22 @@ object Round42 {
         .createOrReplaceTempView("r42_pairs")
       docs.createOrReplaceTempView("r42_documents")
       s.sql(localitySelect(
-        pairs = "SELECT doc_a, doc_b FROM r42_pairs",
-        docs = "r42_documents", spark = true))
+        pairs = "SELECT doc_a, doc_b FROM r42_pairs", d = Spark("r42_")))
     },
     Some(localitySelect(
-      pairs = s"SELECT doc_a, doc_b FROM (${LlmQueries.ngramJaccardOracle})",
-      docs = "documents", spark = false))
+      pairs = s"SELECT doc_a, doc_b FROM (${LlmQueries.ngramJaccardOracle})", d = DuckDb))
   )
 
-  private def localitySelect(pairs: String, docs: String, spark: Boolean): String = {
-    val str = if (spark) "STRING" else "VARCHAR"
-    val idiv = if (spark) "div" else "//"
-    val strat =
-      if (spark) "SELECT * FROM VALUES ('hash8'), ('range8') AS t(strategy)"
-      else "SELECT * FROM (VALUES ('hash8'), ('range8')) AS t(strategy)"
+  private def localitySelect(pairs: String, d: Dialect): String = {
+    val docs = d.t("documents")
+    val strat = d.values("('hash8'), ('range8')", "t(strategy)")
     s"""WITH pr AS ($pairs),
         b AS (SELECT CAST(min(doc_id) AS BIGINT) AS mn,
                      CAST(max(doc_id) AS BIGINT) AS mx
               FROM $docs),
         sh AS (SELECT d.doc_id,
-                      ${md5i(s"'shard:' || CAST(d.doc_id AS $str)", spark)} % 8 AS hs,
-                      ((d.doc_id - b.mn) * 8) $idiv (b.mx - b.mn + 1) AS rs
+                      ${md5i(s"'shard:' || CAST(d.doc_id AS ${d.str})", d)} % 8 AS hs,
+                      ((d.doc_id - b.mn) * 8) ${d.idiv} (b.mx - b.mn + 1) AS rs
                FROM $docs d CROSS JOIN b),
         lab AS (SELECT p.doc_a, p.doc_b, a.hs AS hsa, a.rs AS rsa,
                        c.hs AS hsb, c.rs AS rsb
@@ -219,20 +192,12 @@ object Round42 {
     * best segment, and the disparate-impact ratio (the 80%-rule
     * number). The fairness sheet for any top-k cutoff rule.
     */
-  val q522ParityGaps: QueryDef = QueryDef(
-    "q522_parity_gaps",
-    (s, dir) => {
-      Tables.customer(s, dir).createOrReplaceTempView("r42_customer")
-      Tables.orders(s, dir).createOrReplaceTempView("r42_orders")
-      s.sql(paritySql(spark = true))
-    },
-    Some(paritySql(spark = false))
-  )
+  val q522ParityGaps: QueryDef =
+    QueryDef.sql("q522_parity_gaps", "r42_", "customer", "orders")(paritySql)
 
-  private def paritySql(spark: Boolean): String = {
+  private def paritySql(d: Dialect): String = {
     val (cust, ord) =
-      if (spark) ("r42_customer", "r42_orders") else ("customer", "orders")
-    val idiv = if (spark) "div" else "//"
+      (d.t("customer"), d.t("orders"))
     s"""WITH sp AS (
           SELECT c.c_custkey AS ck, c.c_mktsegment AS seg,
                  CAST(coalesce(sum(CAST(round(o.o_totalprice * CAST(100 AS DOUBLE)) AS BIGINT)), 0) AS BIGINT) AS cents
@@ -252,7 +217,7 @@ object Round42 {
         per AS (
           SELECT r.seg,
                  CAST(count(*) AS BIGINT) AS n_cust,
-                 CAST(sum(CASE WHEN r.rnk <= (nn.n + 3) $idiv 4 THEN 1 ELSE 0 END) AS BIGINT)
+                 CAST(sum(CASE WHEN r.rnk <= (nn.n + 3) ${d.idiv} 4 THEN 1 ELSE 0 END) AS BIGINT)
                    AS n_selected
           FROM rk r CROSS JOIN nn
           GROUP BY 1),
@@ -274,19 +239,12 @@ object Round42 {
     * (lead bias says early text is cleaner). Decile means re-quantize
     * before the 10-point regression so the slope is engine-exact.
     */
-  val q523PositionalSurprisal: QueryDef = QueryDef(
-    "q523_positional_surprisal",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r42_documents")
-      s.sql(positionalSql(spark = true))
-    },
-    Some(positionalSql(spark = false))
-  )
+  val q523PositionalSurprisal: QueryDef =
+    QueryDef.sql("q523_positional_surprisal", "r42_", "documents")(positionalSql)
 
-  private def positionalSql(spark: Boolean): String = {
-    val tbl = if (spark) "r42_documents" else "documents"
-    val idiv = if (spark) "div" else "//"
-    val toks = posTokens(tbl, spark, "doc_id")
+  private def positionalSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val toks = posTokens(tbl, d, "doc_id")
     s"""WITH tok AS ($toks),
         rt AS (SELECT doc_id, word,
                       CAST(row_number() OVER (PARTITION BY doc_id ORDER BY pos) - 1
@@ -295,7 +253,7 @@ object Round42 {
                FROM tok),
         cw AS (SELECT word, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1),
         tt AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM cw),
-        dt AS (SELECT least(9, (rt.rnk * 10) $idiv rt.ntok) AS dcl, rt.word FROM rt),
+        dt AS (SELECT least(9, (rt.rnk * 10) ${d.idiv} rt.ntok) AS dcl, rt.word FROM rt),
         per AS (
           SELECT CAST(dcl AS BIGINT) AS decile,
                  CAST(count(*) AS BIGINT) AS n,
@@ -327,42 +285,30 @@ object Round42 {
     * lag-1 serial Pearson r through a doc_id+1 EQUI-join (no global
     * window over the corpus).
     */
-  val q524HashUniformity: QueryDef = QueryDef(
-    "q524_hash_uniformity",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r42_documents")
-      s.sql(hashAuditSql(spark = true))
-    },
-    Some(hashAuditSql(spark = false))
-  )
+  val q524HashUniformity: QueryDef =
+    QueryDef.sql("q524_hash_uniformity", "r42_", "documents")(hashAuditSql)
 
-  private def hashAuditSql(spark: Boolean): String = {
-    val tbl = if (spark) "r42_documents" else "documents"
-    val str = if (spark) "STRING" else "VARCHAR"
-    val idiv = if (spark) "div" else "//"
+  private def hashAuditSql(d: Dialect): String = {
+    val tbl = d.t("documents")
     val p2s = (0 until 32).map(j => 1L << j).mkString(", ")
-    val bgrid =
-      if (spark) "SELECT explode(sequence(0, 15)) AS bk"
-      else "SELECT unnest(range(0, 16)) AS bk"
-    val pgrid =
-      if (spark) s"SELECT explode(array($p2s)) AS p2"
-      else s"SELECT unnest([$p2s]) AS p2"
+    val bgrid = s"SELECT ${d.closedRange(0, 15)} AS bk"
+    val pgrid = s"SELECT ${d.list(p2s)} AS p2"
     s"""WITH u AS (SELECT CAST(doc_id AS BIGINT) AS did,
-                          ${md5i(s"'key:' || CAST(doc_id AS $str)", spark)} AS v
+                          ${md5i(s"'key:' || CAST(doc_id AS ${d.str})", d)} AS v
                    FROM $tbl),
         nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM u),
-        bc AS (SELECT v $idiv 268435456 AS bk, CAST(count(*) AS BIGINT) AS o
+        bc AS (SELECT v ${d.idiv} 268435456 AS bk, CAST(count(*) AS BIGINT) AS o
                FROM u GROUP BY 1),
         bz AS (SELECT g.bk, CAST(coalesce(bc.o, 0) AS BIGINT) AS o
                FROM ($bgrid) g LEFT JOIN bc ON bc.bk = g.bk),
         chi AS (SELECT CAST(sum((16 * o - n.n) * (16 * o - n.n)) AS BIGINT) AS num
                 FROM bz CROSS JOIN nn n),
-        bits AS (SELECT p.p2, CAST(sum((u.v $idiv p.p2) % 2) AS BIGINT) AS ones
+        bits AS (SELECT p.p2, CAST(sum((u.v ${d.idiv} p.p2) % 2) AS BIGINT) AS ones
                  FROM u CROSS JOIN ($pgrid) p
                  GROUP BY 1),
         bdev AS (SELECT max(abs(CAST(ones AS DOUBLE) / n.n - CAST(0.5 AS DOUBLE))) AS mx
                  FROM bits CROSS JOIN nn n),
-        pairs AS (SELECT a.v $idiv 65536 AS va, b.v $idiv 65536 AS vb
+        pairs AS (SELECT a.v ${d.idiv} 65536 AS va, b.v ${d.idiv} 65536 AS vb
                   FROM u a JOIN u b ON b.did = a.did + 1),
         ser AS (SELECT CAST(count(*) AS BIGINT) AS np,
                        CAST(sum(va) AS BIGINT) AS sa, CAST(sum(vb) AS BIGINT) AS sb,

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-43 additions (q525+): storage-model, tail-risk and
   * distribution-shape audits — the learned-index error of a linear
@@ -27,23 +26,16 @@ object Round43 {
     * the bucket-offset pattern (key div 4096 buckets), never a
     * corpus-wide single-partition window.
     */
-  val q525LearnedIndex: QueryDef = QueryDef(
-    "q525_learned_index",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r43_orders")
-      s.sql(learnedIndexSql(spark = true))
-    },
-    Some(learnedIndexSql(spark = false))
-  )
+  val q525LearnedIndex: QueryDef =
+    QueryDef.sql("q525_learned_index", "r43_", "orders")(learnedIndexSql)
 
-  private def learnedIndexSql(spark: Boolean): String = {
-    val tbl = if (spark) "r43_orders" else "orders"
-    val idiv = if (spark) "div" else "//"
+  private def learnedIndexSql(d: Dialect): String = {
+    val tbl = d.t("orders")
     s"""WITH k AS (SELECT CAST(o_orderkey AS BIGINT) AS key FROM $tbl),
         b AS (SELECT CAST(min(key) AS BIGINT) AS mn, CAST(max(key) AS BIGINT) AS mx,
                      CAST(count(*) AS BIGINT) AS n
               FROM k),
-        bc AS (SELECT key $idiv 4096 AS bkt, CAST(count(*) AS BIGINT) AS c
+        bc AS (SELECT key ${d.idiv} 4096 AS bkt, CAST(count(*) AS BIGINT) AS c
                FROM k GROUP BY 1),
         boff AS (SELECT bkt, CAST(coalesce(sum(c) OVER (ORDER BY bkt
                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off
@@ -51,7 +43,7 @@ object Round43 {
         rk AS (SELECT k.key,
                       boff.off + CAST(row_number() OVER (
                         PARTITION BY boff.bkt ORDER BY k.key) AS BIGINT) AS rnk
-               FROM k JOIN boff ON boff.bkt = k.key $idiv 4096),
+               FROM k JOIN boff ON boff.bkt = k.key ${d.idiv} 4096),
         xy AS (SELECT CAST(key - b.mn AS DOUBLE) / (b.mx - b.mn) AS xu,
                       CAST(rnk AS DOUBLE) / b.n AS yu,
                       b.n
@@ -92,25 +84,17 @@ object Round43 {
     * q298's Hill estimator (Hill assumes a pure power law; GPD also
     * prices σ).
     */
-  val q526GpdMoments: QueryDef = QueryDef(
-    "q526_gpd_moments",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r43_events")
-      s.sql(gpdSql(spark = true))
-    },
-    Some(gpdSql(spark = false))
-  )
+  val q526GpdMoments: QueryDef = QueryDef.sql("q526_gpd_moments", "r43_", "events")(gpdSql)
 
-  private def gpdSql(spark: Boolean): String = {
-    val tbl = if (spark) "r43_events" else "events"
-    val idiv = if (spark) "div" else "//"
+  private def gpdSql(d: Dialect): String = {
+    val tbl = d.t("events")
     s"""WITH v AS (SELECT value AS x FROM $tbl),
         n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM v),
         dv AS (SELECT x, CAST(count(*) AS BIGINT) AS c FROM v GROUP BY 1),
         cum AS (SELECT x, CAST(sum(c) OVER (ORDER BY x) AS BIGINT) AS cle FROM dv),
         u AS (SELECT min(cum.x) AS u
               FROM cum CROSS JOIN n
-              WHERE cum.cle >= (9 * n.n + 9) $idiv 10),
+              WHERE cum.cle >= (9 * n.n + 9) ${d.idiv} 10),
         ex AS (SELECT v.x - u.u AS e FROM v CROSS JOIN u WHERE v.x > u.u),
         st AS (SELECT CAST(count(*) AS BIGINT) AS ne,
                       CAST(sum(${qi("e")}) AS BIGINT) AS s1,
@@ -145,20 +129,11 @@ object Round43 {
     * the sum. The kernel two-sample view — q149 sees the worst CDF
     * point, q506 the integrated CDF gap, this the smoothed density gap.
     */
-  val q527MmdBinned: QueryDef = QueryDef(
-    "q527_mmd_binned",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r43_events")
-      s.sql(mmdSql(spark = true))
-    },
-    Some(mmdSql(spark = false))
-  )
+  val q527MmdBinned: QueryDef = QueryDef.sql("q527_mmd_binned", "r43_", "events")(mmdSql)
 
-  private def mmdSql(spark: Boolean): String = {
-    val tbl = if (spark) "r43_events" else "events"
-    val gs =
-      if (spark) "SELECT explode(array(10, 50)) AS gam"
-      else "SELECT unnest([10, 50]) AS gam"
+  private def mmdSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val gs = s"SELECT ${d.list("10, 50")} AS gam"
     def kern(a: String, b: String): String =
       s"exp(-CAST(($a - $b) * ($a - $b) AS DOUBLE) / (CAST(2 AS DOUBLE) * gam * gam))"
     s"""WITH b AS (
@@ -202,17 +177,10 @@ object Round43 {
     * value/100 (the χ² is scale-free, the quantization grid isn't).
     * Per-group ln terms quantize before the k-term sum.
     */
-  val q528Bartlett: QueryDef = QueryDef(
-    "q528_bartlett",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r43_events")
-      s.sql(bartlettSql(spark = true))
-    },
-    Some(bartlettSql(spark = false))
-  )
+  val q528Bartlett: QueryDef = QueryDef.sql("q528_bartlett", "r43_", "events")(bartlettSql)
 
-  private def bartlettSql(spark: Boolean): String = {
-    val tbl = if (spark) "r43_events" else "events"
+  private def bartlettSql(d: Dialect): String = {
+    val tbl = d.t("events")
     s"""WITH z AS (SELECT event_type, value / CAST(100 AS DOUBLE) AS z FROM $tbl),
         raw AS (SELECT event_type,
                        CAST(count(*) AS BIGINT) AS n,
@@ -255,23 +223,13 @@ object Round43 {
     * mass through the bucket-offset frequency rank (one rank serves all
     * τ — every reweighting is monotone in c).
     */
-  val q529TemperatureSweep: QueryDef = QueryDef(
-    "q529_temperature_sweep",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r43_documents")
-      s.sql(temperatureSql(spark = true))
-    },
-    Some(temperatureSql(spark = false))
-  )
+  val q529TemperatureSweep: QueryDef =
+    QueryDef.sql("q529_temperature_sweep", "r43_", "documents")(temperatureSql)
 
-  private def temperatureSql(spark: Boolean): String = {
-    val tbl = if (spark) "r43_documents" else "documents"
+  private def temperatureSql(d: Dialect): String = {
+    val tbl = d.t("documents")
     val toks =
-      if (spark)
-        s"""SELECT word FROM (SELECT explode(split(lower(text), '[^a-z]+')) AS word
-            FROM $tbl) x WHERE word <> ''"""
-      else
-        s"""SELECT word FROM (SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS word
+      s"""SELECT word FROM (SELECT ${d.words} AS word
             FROM $tbl) x WHERE word <> ''"""
     def branch(tau: String, w: String): String =
       s"""SELECT CAST($tau AS DOUBLE) AS tau, word, c, rnk,

@@ -40,7 +40,7 @@ object Round44 {
       Similarity.bruteTopK(emb, probes, k = 5).createOrReplaceTempView("r44_brute")
       emb.createOrReplaceTempView("r44_embeddings")
       graft.functions.VectorCosine.register(s)
-      s.sql(funnelSelect(spark = true))
+      s.sql(funnelSelect)
     },
     Some(s"""WITH ${AnnReplaySql.preambleSql},
             ${AnnReplaySql.ivfModelSql(2)},
@@ -72,22 +72,22 @@ object Round44 {
                             row_number() OVER (PARTITION BY query_id
                               ORDER BY cosine DESC, neighbor_id ASC) AS rank
                      FROM bsc) WHERE rank <= 5),
-            ${funnelTail(spark = false)}""")
+            ${funnelTail(DuckDb)}""")
   )
 
   /** The funnel tail shared between engines MODULO the cosine fold:
     * built separately per dialect because the Spark side reads the
     * operator views while the oracle reads its replay CTEs.
     */
-  private def funnelTail(spark: Boolean): String = {
-    val pairCos =
-      if (spark)
-        "round(vector_cosine(ea.embedding, eb.embedding), 6)"
-      else
-        s"""round(${AnnReplaySql.dot64("ea.v", "eb.v")} /
+  private def funnelTail(d: Dialect): String = {
+    val (pairCos, vecs) = d match {
+      case _: Spark =>
+        ("round(vector_cosine(ea.embedding, eb.embedding), 6)", d.t("embeddings"))
+      case DuckDb =>
+        (s"""round(${AnnReplaySql.dot64("ea.v", "eb.v")} /
               (sqrt(${AnnReplaySql.dot64("ea.v", "ea.v")}) *
-               sqrt(${AnnReplaySql.dot64("eb.v", "eb.v")})), 6)"""
-    val vecs = if (spark) "r44_embeddings" else "pts"
+               sqrt(${AnnReplaySql.dot64("eb.v", "eb.v")})), 6)""", "pts")
+    }
     val vid = "vec_id"
     s"""dom AS (
           SELECT b.query_id, b.neighbor_id
@@ -118,10 +118,10 @@ object Round44 {
         ORDER BY i.query_id"""
   }
 
-  private def funnelSelect(spark: Boolean): String =
+  private def funnelSelect: String =
     s"""WITH iv AS (SELECT query_id, neighbor_id, rank FROM r44_ivf),
         br AS (SELECT query_id, neighbor_id FROM r44_brute),
-        ${funnelTail(spark = true)}"""
+        ${funnelTail(Spark("r44_"))}"""
 
   // ---------------------------------------------------------------- q531
 
@@ -131,23 +131,13 @@ object Round44 {
     * their ratio — below 1 means daily seasonality is real signal any
     * forecast must beat, the floor q261's backtests stand on.
     */
-  val q531SeasonalNaiveMase: QueryDef = QueryDef(
-    "q531_seasonal_naive_mase",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r44_events")
-      s.sql(maseSql(spark = true))
-    },
-    Some(maseSql(spark = false))
-  )
+  val q531SeasonalNaiveMase: QueryDef =
+    QueryDef.sql("q531_seasonal_naive_mase", "r44_", "events")(maseSql)
 
-  private def maseSql(spark: Boolean): String = {
-    val tbl = if (spark) "r44_events" else "events"
-    val hh =
-      if (spark) "unix_micros(ts) div 3600000000"
-      else "epoch_us(ts) // 3600000000"
-    val grid =
-      if (spark) "SELECT mn, explode(sequence(mn, mx)) AS hh FROM b"
-      else "SELECT mn, unnest(range(mn, mx + 1)) AS hh FROM b"
+  private def maseSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val hh = s"${d.epochUs("ts")} ${d.idiv} 3600000000"
+    val grid = s"SELECT mn, ${d.closedRange("mn", "mx")} AS hh FROM b"
     s"""WITH h AS (SELECT event_type, $hh AS hh FROM $tbl),
         cnt AS (SELECT event_type, hh, CAST(count(*) AS BIGINT) AS x
                 FROM h GROUP BY 1, 2),
@@ -185,24 +175,15 @@ object Round44 {
     * whether q43/q104's salting pattern is actually needed for this key
     * distribution, measured the way AQE sees it.
     */
-  val q532SaltingEffect: QueryDef = QueryDef(
-    "q532_salting_effect",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r44_events")
-      s.sql(saltingSql(spark = true))
-    },
-    Some(saltingSql(spark = false))
-  )
+  val q532SaltingEffect: QueryDef =
+    QueryDef.sql("q532_salting_effect", "r44_", "events")(saltingSql)
 
-  private def saltingSql(spark: Boolean): String = {
-    val tbl = if (spark) "r44_events" else "events"
-    val str = if (spark) "STRING" else "VARCHAR"
-    val strat =
-      if (spark) "SELECT * FROM VALUES ('plain'), ('salted8') AS t(strategy)"
-      else "SELECT * FROM (VALUES ('plain'), ('salted8')) AS t(strategy)"
+  private def saltingSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val strat = d.values("('plain'), ('salted8')", "t(strategy)")
     s"""WITH e AS (
-          SELECT ${md5i(s"'p:' || CAST(user_id AS $str)", spark)} % 32 AS pp,
-                 ${md5i(s"'p:' || CAST(user_id AS $str) || ':' || CAST(event_id % 8 AS $str)", spark)} % 32 AS ps
+          SELECT ${md5i(s"'p:' || CAST(user_id AS ${d.str})", d)} % 32 AS pp,
+                 ${md5i(s"'p:' || CAST(user_id AS ${d.str}) || ':' || CAST(event_id % 8 AS ${d.str})", d)} % 32 AS ps
           FROM $tbl),
         nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM e),
         pc AS (SELECT pp AS part, CAST(count(*) AS BIGINT) AS c FROM e GROUP BY 1),
@@ -230,18 +211,10 @@ object Round44 {
     * weighted sufficient statistics. The distributed-EM workload every
     * Spark ML intro promises, as one deterministic query.
     */
-  val q533EmGaussian2: QueryDef = QueryDef(
-    "q533_em_gaussian2",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r44_events")
-      s.sql(emSql(spark = true))
-    },
-    Some(emSql(spark = false))
-  )
+  val q533EmGaussian2: QueryDef = QueryDef.sql("q533_em_gaussian2", "r44_", "events")(emSql)
 
-  private def emSql(spark: Boolean): String = {
-    val tbl = if (spark) "r44_events" else "events"
-    val idiv = if (spark) "div" else "//"
+  private def emSql(d: Dialect): String = {
+    val tbl = d.t("events")
     def phi(mu: String, s2: String): String =
       s"exp(-(z - $mu) * (z - $mu) / (CAST(2 AS DOUBLE) * $s2)) / sqrt($s2)"
     def iter(i: Int, prev: String): String = {
@@ -282,9 +255,9 @@ object Round44 {
         cum AS (SELECT x, CAST(sum(c) OVER (ORDER BY x) AS BIGINT) AS cle FROM dv),
         seed AS (
           SELECT (SELECT min(cum.x) FROM cum CROSS JOIN n0
-                  WHERE cum.cle >= (n0.n + 3) $idiv 4) AS q25,
+                  WHERE cum.cle >= (n0.n + 3) ${d.idiv} 4) AS q25,
                  (SELECT min(cum.x) FROM cum CROSS JOIN n0
-                  WHERE cum.cle >= (3 * n0.n + 3) $idiv 4) AS q75),
+                  WHERE cum.cle >= (3 * n0.n + 3) ${d.idiv} 4) AS q75),
         par0 AS (
           SELECT CAST(0.5 AS DOUBLE) AS w1,
                  s.q25 AS m1,
@@ -317,23 +290,13 @@ object Round44 {
     * prefix rule with a half-cell tie term. Every grid sum quantizes
     * before reduction.
     */
-  val q534BayesAb: QueryDef = QueryDef(
-    "q534_bayes_ab",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r44_events")
-      s.sql(bayesAbSql(spark = true))
-    },
-    Some(bayesAbSql(spark = false))
-  )
+  val q534BayesAb: QueryDef = QueryDef.sql("q534_bayes_ab", "r44_", "events")(bayesAbSql)
 
-  private def bayesAbSql(spark: Boolean): String = {
-    val tbl = if (spark) "r44_events" else "events"
-    val str = if (spark) "STRING" else "VARCHAR"
-    val grid =
-      if (spark) "SELECT explode(sequence(1, 511)) AS i"
-      else "SELECT unnest(range(1, 512)) AS i"
+  private def bayesAbSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val grid = s"SELECT ${d.closedRange(1, 511)} AS i"
     s"""WITH e AS (
-          SELECT ${md5i(s"'arm:' || CAST(user_id AS $str)", spark)} % 2 AS arm,
+          SELECT ${md5i(s"'arm:' || CAST(user_id AS ${d.str})", d)} % 2 AS arm,
                  CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS conv
           FROM $tbl),
         st AS (SELECT arm, CAST(count(*) AS BIGINT) AS n,
@@ -379,23 +342,16 @@ object Round44 {
     * fragmented is this identifier space" sheet a compaction or
     * allocator decision starts from.
     */
-  val q535KeyFragmentation: QueryDef = QueryDef(
-    "q535_key_fragmentation",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r44_orders")
-      s.sql(fragmentationSql(spark = true))
-    },
-    Some(fragmentationSql(spark = false))
-  )
+  val q535KeyFragmentation: QueryDef =
+    QueryDef.sql("q535_key_fragmentation", "r44_", "orders")(fragmentationSql)
 
-  private def fragmentationSql(spark: Boolean): String = {
-    val tbl = if (spark) "r44_orders" else "orders"
-    val idiv = if (spark) "div" else "//"
+  private def fragmentationSql(d: Dialect): String = {
+    val tbl = d.t("orders")
     s"""WITH k AS (SELECT CAST(o_orderkey AS BIGINT) AS key FROM $tbl),
         b AS (SELECT CAST(min(key) AS BIGINT) AS mn, CAST(max(key) AS BIGINT) AS mx,
                      CAST(count(*) AS BIGINT) AS n
               FROM k),
-        bc AS (SELECT key $idiv 4096 AS bkt, CAST(count(*) AS BIGINT) AS c
+        bc AS (SELECT key ${d.idiv} 4096 AS bkt, CAST(count(*) AS BIGINT) AS c
                FROM k GROUP BY 1),
         boff AS (SELECT bkt, CAST(coalesce(sum(c) OVER (ORDER BY bkt
                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off
@@ -403,7 +359,7 @@ object Round44 {
         rk AS (SELECT k.key,
                       boff.off + CAST(row_number() OVER (
                         PARTITION BY boff.bkt ORDER BY k.key) AS BIGINT) AS rnk
-               FROM k JOIN boff ON boff.bkt = k.key $idiv 4096),
+               FROM k JOIN boff ON boff.bkt = k.key ${d.idiv} 4096),
         gaps AS (SELECT b2.key - a.key - 1 AS gap
                  FROM rk a JOIN rk b2 ON b2.rnk = a.rnk + 1),
         runs AS (SELECT key - rnk AS grp, CAST(count(*) AS BIGINT) AS len

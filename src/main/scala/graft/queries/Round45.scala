@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-45 additions (q536+): robust-inference and locality audits —
   * heteroscedasticity-robust (HC1) standard errors next to the
@@ -26,23 +25,12 @@ object Round45 {
     * se_cls² = (SSE/(n−2))/Sxx vs se_hc1² = n/(n−2)·Σx̃²e²/Sxx² — the
     * ratio says whether the trend's t-stat was honest.
     */
-  val q536RobustSe: QueryDef = QueryDef(
-    "q536_robust_se",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r45_orders")
-      s.sql(robustSeSql(spark = true))
-    },
-    Some(robustSeSql(spark = false))
-  )
+  val q536RobustSe: QueryDef = QueryDef.sql("q536_robust_se", "r45_", "orders")(robustSeSql)
 
-  private def robustSeSql(spark: Boolean): String = {
-    val tbl = if (spark) "r45_orders" else "orders"
-    val dd =
-      if (spark) "unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000"
-      else "epoch_us(o_orderdate) // 86400000000"
-    val grid =
-      if (spark) "SELECT mn, explode(sequence(mn, mx)) AS dd FROM b"
-      else "SELECT mn, unnest(range(mn, mx + 1)) AS dd FROM b"
+  private def robustSeSql(d: Dialect): String = {
+    val tbl = d.t("orders")
+    val dd = s"${d.dateUs("o_orderdate")} ${d.idiv} 86400000000"
+    val grid = s"SELECT mn, ${d.closedRange("mn", "mx")} AS dd FROM b"
     s"""WITH o AS (SELECT $dd AS dd FROM $tbl),
         cnt AS (SELECT dd, CAST(count(*) AS BIGINT) AS y FROM o GROUP BY 1),
         b AS (SELECT min(dd) AS mn, max(dd) AS mx FROM cnt),
@@ -91,21 +79,11 @@ object Round45 {
     * decile, with difference and ratio — the whole-curve comparison
     * behind the one-number drift statistics.
     */
-  val q537QqDeciles: QueryDef = QueryDef(
-    "q537_qq_deciles",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r45_events")
-      s.sql(qqSql(spark = true))
-    },
-    Some(qqSql(spark = false))
-  )
+  val q537QqDeciles: QueryDef = QueryDef.sql("q537_qq_deciles", "r45_", "events")(qqSql)
 
-  private def qqSql(spark: Boolean): String = {
-    val tbl = if (spark) "r45_events" else "events"
-    val idiv = if (spark) "div" else "//"
-    val dgrid =
-      if (spark) "SELECT explode(sequence(1, 9)) AS d"
-      else "SELECT unnest(range(1, 10)) AS d"
+  private def qqSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val dgrid = s"SELECT ${d.closedRange(1, 9)} AS d"
     def cumSide(g: Int, name: String): String =
       s"""$name AS (
             SELECT x, CAST(sum(c) OVER (ORDER BY x) AS BIGINT) AS cle
@@ -122,11 +100,11 @@ object Round45 {
         dg AS ($dgrid),
         qa AS (SELECT dg.d, min(c.x) AS qx
                FROM dg CROSS JOIN nn
-               JOIN cua c ON c.cle >= (dg.d * nn.na + 9) $idiv 10
+               JOIN cua c ON c.cle >= (dg.d * nn.na + 9) ${d.idiv} 10
                GROUP BY 1),
         qb AS (SELECT dg.d, min(c.x) AS qx
                FROM dg CROSS JOIN nn
-               JOIN cub c ON c.cle >= (dg.d * nn.nb + 9) $idiv 10
+               JOIN cub c ON c.cle >= (dg.d * nn.nb + 9) ${d.idiv} 10
                GROUP BY 1)
         SELECT CAST(qa.d AS BIGINT) AS decile,
                ${snap("qa.qx")} AS q_click,
@@ -147,17 +125,11 @@ object Round45 {
     * the final snap. The metric that is zero IFF the distributions are
     * equal, with no kernel bandwidth to pick (q527's MMD needs γ).
     */
-  val q538EnergyDistance: QueryDef = QueryDef(
-    "q538_energy_distance",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r45_events")
-      s.sql(energySql(spark = true))
-    },
-    Some(energySql(spark = false))
-  )
+  val q538EnergyDistance: QueryDef =
+    QueryDef.sql("q538_energy_distance", "r45_", "events")(energySql)
 
-  private def energySql(spark: Boolean): String = {
-    val tbl = if (spark) "r45_events" else "events"
+  private def energySql(d: Dialect): String = {
+    val tbl = d.t("events")
     s"""WITH b AS (
           SELECT CASE WHEN event_type = 'click' THEN 0 ELSE 1 END AS g,
                  CAST(round(value * CAST(100 AS DOUBLE)) AS BIGINT) AS v
@@ -198,27 +170,14 @@ object Round45 {
     * and how long the worst storm ran. The time-structure companion
     * to q526's magnitude-only GPD fit.
     */
-  val q539ExtremalIndex: QueryDef = QueryDef(
-    "q539_extremal_index",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r45_events")
-      s.sql(extremalSql(spark = true))
-    },
-    Some(extremalSql(spark = false))
-  )
+  val q539ExtremalIndex: QueryDef =
+    QueryDef.sql("q539_extremal_index", "r45_", "events")(extremalSql)
 
-  private def extremalSql(spark: Boolean): String = {
-    val tbl = if (spark) "r45_events" else "events"
-    val hh =
-      if (spark) "unix_micros(ts) div 3600000000"
-      else "epoch_us(ts) // 3600000000"
-    val grid =
-      if (spark) "SELECT mn, explode(sequence(mn, mx)) AS hh FROM b"
-      else "SELECT mn, unnest(range(mn, mx + 1)) AS hh FROM b"
-    val idiv = if (spark) "div" else "//"
-    val rs =
-      if (spark) "SELECT explode(array(1, 3, 6)) AS r"
-      else "SELECT unnest([1, 3, 6]) AS r"
+  private def extremalSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val hh = s"${d.epochUs("ts")} ${d.idiv} 3600000000"
+    val grid = s"SELECT mn, ${d.closedRange("mn", "mx")} AS hh FROM b"
+    val rs = s"SELECT ${d.list("1, 3, 6")} AS r"
     s"""WITH h AS (SELECT $hh AS hh FROM $tbl),
         cnt AS (SELECT hh, CAST(count(*) AS BIGINT) AS x FROM h GROUP BY 1),
         b AS (SELECT min(hh) AS mn, max(hh) AS mx FROM cnt),
@@ -229,7 +188,7 @@ object Round45 {
         dx AS (SELECT x, CAST(count(*) AS BIGINT) AS c FROM s GROUP BY 1),
         cum AS (SELECT x, CAST(sum(c) OVER (ORDER BY x) AS BIGINT) AS cle FROM dx),
         u AS (SELECT min(cum.x) AS u FROM cum CROSS JOIN nh
-              WHERE cum.cle >= (9 * nh.n + 9) $idiv 10),
+              WHERE cum.cle >= (9 * nh.n + 9) ${d.idiv} 10),
         ex AS (SELECT s.idx FROM s CROSS JOIN u WHERE s.x > u.u),
         rg AS ($rs),
         lagd AS (SELECT CAST(r.r AS BIGINT) AS r, e.idx,
@@ -262,20 +221,11 @@ object Round45 {
     * position span). The cache-sizing curve q295's reuse distances
     * approach from the other side.
     */
-  val q540WorkingSet: QueryDef = QueryDef(
-    "q540_working_set",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r45_events")
-      s.sql(workingSetSql(spark = true))
-    },
-    Some(workingSetSql(spark = false))
-  )
+  val q540WorkingSet: QueryDef = QueryDef.sql("q540_working_set", "r45_", "events")(workingSetSql)
 
-  private def workingSetSql(spark: Boolean): String = {
-    val tbl = if (spark) "r45_events" else "events"
-    val ts =
-      if (spark) "SELECT explode(array(16, 64, 256)) AS tau"
-      else "SELECT unnest([16, 64, 256]) AS tau"
+  private def workingSetSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val ts = s"SELECT ${d.list("16, 64, 256")} AS tau"
     s"""WITH e AS (SELECT CAST(event_id AS BIGINT) AS p, user_id FROM $tbl),
         b AS (SELECT CAST(min(p) AS BIGINT) AS mn, CAST(max(p) AS BIGINT) AS mx FROM e),
         lagd AS (SELECT user_id, p,
@@ -317,26 +267,14 @@ object Round45 {
     * silent harmonic can't blow up the log). q517 fits the f=1 line;
     * this says whether anything else rings.
     */
-  val q541SpectrumFlatness: QueryDef = QueryDef(
-    "q541_spectrum_flatness",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r45_events")
-      s.sql(spectrumSql(spark = true))
-    },
-    Some(spectrumSql(spark = false))
-  )
+  val q541SpectrumFlatness: QueryDef =
+    QueryDef.sql("q541_spectrum_flatness", "r45_", "events")(spectrumSql)
 
-  private def spectrumSql(spark: Boolean): String = {
-    val tbl = if (spark) "r45_events" else "events"
-    val hh =
-      if (spark) "unix_micros(ts) div 3600000000"
-      else "epoch_us(ts) // 3600000000"
-    val grid =
-      if (spark) "SELECT mn, explode(sequence(mn, mx)) AS hh FROM b"
-      else "SELECT mn, unnest(range(mn, mx + 1)) AS hh FROM b"
-    val fs =
-      if (spark) "SELECT explode(sequence(1, 11)) AS f"
-      else "SELECT unnest(range(1, 12)) AS f"
+  private def spectrumSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val hh = s"${d.epochUs("ts")} ${d.idiv} 3600000000"
+    val grid = s"SELECT mn, ${d.closedRange("mn", "mx")} AS hh FROM b"
+    val fs = s"SELECT ${d.closedRange(1, 11)} AS f"
     val theta = "CAST(2 AS DOUBLE) * pi() * f * k / CAST(24 AS DOUBLE)"
     s"""WITH h AS (SELECT event_type, $hh AS hh FROM $tbl),
         cnt AS (SELECT event_type, hh, CAST(count(*) AS BIGINT) AS x

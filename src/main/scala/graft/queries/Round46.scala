@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-46 additions (q542+): long-memory, inventory, econometrics,
   * post-hoc testing, retrieval smoothing and optimal stopping — Hurst
@@ -26,27 +25,13 @@ object Round46 {
     * is memoryless; the long-memory answer q192's short-lag ACF can't
     * give.
     */
-  val q542HurstRs: QueryDef = QueryDef(
-    "q542_hurst_rs",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r46_events")
-      s.sql(hurstSql(spark = true))
-    },
-    Some(hurstSql(spark = false))
-  )
+  val q542HurstRs: QueryDef = QueryDef.sql("q542_hurst_rs", "r46_", "events")(hurstSql)
 
-  private def hurstSql(spark: Boolean): String = {
-    val tbl = if (spark) "r46_events" else "events"
-    val hh =
-      if (spark) "unix_micros(ts) div 3600000000"
-      else "epoch_us(ts) // 3600000000"
-    val grid =
-      if (spark) "SELECT mn, explode(sequence(mn, mx)) AS hh FROM b"
-      else "SELECT mn, unnest(range(mn, mx + 1)) AS hh FROM b"
-    val idiv = if (spark) "div" else "//"
-    val ms =
-      if (spark) "SELECT explode(array(32, 64, 128)) AS m"
-      else "SELECT unnest([32, 64, 128]) AS m"
+  private def hurstSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val hh = s"${d.epochUs("ts")} ${d.idiv} 3600000000"
+    val grid = s"SELECT mn, ${d.closedRange("mn", "mx")} AS hh FROM b"
+    val ms = s"SELECT ${d.list("32, 64, 128")} AS m"
     s"""WITH h AS (SELECT $hh AS hh FROM $tbl),
         cnt AS (SELECT hh, CAST(count(*) AS BIGINT) AS x FROM h GROUP BY 1),
         b AS (SELECT min(hh) AS mn, max(hh) AS mx FROM cnt),
@@ -54,7 +39,7 @@ object Round46 {
         s AS (SELECT g.hh - g.mn AS idx, CAST(coalesce(c.x, 0) AS BIGINT) AS x
               FROM grid g LEFT JOIN cnt c ON c.hh = g.hh),
         ms AS ($ms),
-        blk AS (SELECT CAST(m.m AS BIGINT) AS m, s.idx $idiv m.m AS bid,
+        blk AS (SELECT CAST(m.m AS BIGINT) AS m, s.idx ${d.idiv} m.m AS bid,
                        s.idx, s.x
                 FROM s CROSS JOIN ms m),
         bs AS (SELECT m, bid,
@@ -103,27 +88,13 @@ object Round46 {
     * the achieved fill probability. The one-table answer to "how much
     * capacity covers tomorrow".
     */
-  val q543Newsvendor: QueryDef = QueryDef(
-    "q543_newsvendor",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r46_orders")
-      s.sql(newsvendorSql(spark = true))
-    },
-    Some(newsvendorSql(spark = false))
-  )
+  val q543Newsvendor: QueryDef = QueryDef.sql("q543_newsvendor", "r46_", "orders")(newsvendorSql)
 
-  private def newsvendorSql(spark: Boolean): String = {
-    val tbl = if (spark) "r46_orders" else "orders"
-    val dd =
-      if (spark) "unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000"
-      else "epoch_us(o_orderdate) // 86400000000"
-    val grid =
-      if (spark) "SELECT mn, explode(sequence(mn, mx)) AS dd FROM b"
-      else "SELECT mn, unnest(range(mn, mx + 1)) AS dd FROM b"
-    val idiv = if (spark) "div" else "//"
-    val qs =
-      if (spark) "SELECT explode(array(50, 80, 95)) AS sl"
-      else "SELECT unnest([50, 80, 95]) AS sl"
+  private def newsvendorSql(d: Dialect): String = {
+    val tbl = d.t("orders")
+    val dd = s"${d.dateUs("o_orderdate")} ${d.idiv} 86400000000"
+    val grid = s"SELECT mn, ${d.closedRange("mn", "mx")} AS dd FROM b"
+    val qs = s"SELECT ${d.list("50, 80, 95")} AS sl"
     s"""WITH o AS (SELECT $dd AS dd FROM $tbl),
         cnt AS (SELECT dd, CAST(count(*) AS BIGINT) AS y FROM o GROUP BY 1),
         b AS (SELECT min(dd) AS mn, max(dd) AS mx FROM cnt),
@@ -136,7 +107,7 @@ object Round46 {
         qg AS ($qs),
         stock AS (SELECT g.sl, min(cum.d) AS s
                   FROM qg g CROSS JOIN nn
-                  JOIN cum ON cum.cle >= (g.sl * nn.n + 99) $idiv 100
+                  JOIN cum ON cum.cle >= (g.sl * nn.n + 99) ${d.idiv} 100
                   GROUP BY 1
                   LIMIT 8),
         cost AS (
@@ -166,17 +137,10 @@ object Round46 {
     * quantized pre-sum. The canonical "did prices move or did the mix"
     * decomposition.
     */
-  val q544PriceIndex: QueryDef = QueryDef(
-    "q544_price_index",
-    (s, dir) => {
-      Tables.lineitem(s, dir).createOrReplaceTempView("r46_lineitem")
-      s.sql(priceIndexSql(spark = true))
-    },
-    Some(priceIndexSql(spark = false))
-  )
+  val q544PriceIndex: QueryDef = QueryDef.sql("q544_price_index", "r46_", "lineitem")(priceIndexSql)
 
-  private def priceIndexSql(spark: Boolean): String = {
-    val tbl = if (spark) "r46_lineitem" else "lineitem"
+  private def priceIndexSql(d: Dialect): String = {
+    val tbl = d.t("lineitem")
     s"""WITH li AS (
           SELECT CAST(year(l_shipdate) AS BIGINT) AS y, l_partkey AS pk,
                  CAST(round(CAST(l_extendedprice AS DOUBLE) / l_quantity
@@ -221,17 +185,10 @@ object Round46 {
     * one-way F only says SOME mean differs; this is the table of which.
     * The 5-type dimension carries a LIMIT node for the pair join.
     */
-  val q545TukeyHsd: QueryDef = QueryDef(
-    "q545_tukey_hsd",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r46_events")
-      s.sql(tukeySql(spark = true))
-    },
-    Some(tukeySql(spark = false))
-  )
+  val q545TukeyHsd: QueryDef = QueryDef.sql("q545_tukey_hsd", "r46_", "events")(tukeySql)
 
-  private def tukeySql(spark: Boolean): String = {
-    val tbl = if (spark) "r46_events" else "events"
+  private def tukeySql(d: Dialect): String = {
+    val tbl = d.t("events")
     s"""WITH z AS (SELECT event_type, value / CAST(100 AS DOUBLE) AS z FROM $tbl),
         raw AS (SELECT event_type,
                        CAST(count(*) AS BIGINT) AS n,
@@ -275,29 +232,16 @@ object Round46 {
     * q129 BM25, q167 Kneser–Ney, q499 Jelinek–Mercer — Dirichlet is the
     * one a length-varied corpus actually wants.
     */
-  val q546DirichletLm: QueryDef = QueryDef(
-    "q546_dirichlet_lm",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r46_documents")
-      s.sql(dirichletSql(spark = true))
-    },
-    Some(dirichletSql(spark = false))
-  )
+  val q546DirichletLm: QueryDef =
+    QueryDef.sql("q546_dirichlet_lm", "r46_", "documents")(dirichletSql)
 
-  private def dirichletSql(spark: Boolean): String = {
-    val tbl = if (spark) "r46_documents" else "documents"
+  private def dirichletSql(d: Dialect): String = {
+    val tbl = d.t("documents")
     val toks =
-      if (spark)
-        s"""SELECT doc_id, word FROM (SELECT doc_id,
-              explode(split(lower(text), '[^a-z]+')) AS word FROM $tbl) x
+      s"""SELECT doc_id, word FROM (SELECT doc_id,
+              ${d.words} AS word FROM $tbl) x
             WHERE word <> ''"""
-      else
-        s"""SELECT doc_id, word FROM (SELECT doc_id,
-              unnest(string_split_regex(lower(text), '[^a-z]+')) AS word FROM $tbl) x
-            WHERE word <> ''"""
-    val mus =
-      if (spark) "SELECT explode(array(100, 1000)) AS mu"
-      else "SELECT unnest([100, 1000]) AS mu"
+    val mus = s"SELECT ${d.list("100, 1000")} AS mu"
     s"""WITH tok AS ($toks),
         cw AS (SELECT word, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1),
         tt AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM cw),
@@ -341,21 +285,11 @@ object Round46 {
     * deterministic: permutations are md5 sort keys, comparisons are
     * exact cents.
     */
-  val q547Secretary: QueryDef = QueryDef(
-    "q547_secretary",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r46_orders")
-      s.sql(secretarySql(spark = true))
-    },
-    Some(secretarySql(spark = false))
-  )
+  val q547Secretary: QueryDef = QueryDef.sql("q547_secretary", "r46_", "orders")(secretarySql)
 
-  private def secretarySql(spark: Boolean): String = {
-    val tbl = if (spark) "r46_orders" else "orders"
-    val str = if (spark) "STRING" else "VARCHAR"
-    val trials =
-      if (spark) "SELECT explode(sequence(0, 49)) AS t"
-      else "SELECT unnest(range(0, 50)) AS t"
+  private def secretarySql(d: Dialect): String = {
+    val tbl = d.t("orders")
+    val trials = s"SELECT ${d.closedRange(0, 49)} AS t"
     s"""WITH panel AS (
           SELECT CAST(o_orderkey AS BIGINT) AS ok,
                  CAST(round(o_totalprice * CAST(100 AS DOUBLE)) AS BIGINT) AS cents
@@ -365,7 +299,7 @@ object Round46 {
         seq AS (
           SELECT CAST(t.t AS BIGINT) AS t, p.ok, p.cents,
                  CAST(row_number() OVER (PARTITION BY t.t
-                   ORDER BY ${md5i(s"'sec:' || CAST(t.t AS $str) || ':' || CAST(p.ok AS $str)", spark)},
+                   ORDER BY ${md5i(s"'sec:' || CAST(t.t AS ${d.str}) || ':' || CAST(p.ok AS ${d.str})", d)},
                      p.ok) AS BIGINT) AS pos
           FROM panel p CROSS JOIN tg t),
         thr AS (SELECT t, CAST(max(cents) AS BIGINT) AS obs_max

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-47 additions (q548+): forecasting calibration, concordance,
   * experimentation and a drift capstone — empirical prediction-interval
@@ -24,27 +23,14 @@ object Round47 {
     * calibration gap says whether yesterday's volatility prices
     * tomorrow's. All exact integers until the final shares.
     */
-  val q548IntervalCoverage: QueryDef = QueryDef(
-    "q548_interval_coverage",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r47_orders")
-      s.sql(coverageSql(spark = true))
-    },
-    Some(coverageSql(spark = false))
-  )
+  val q548IntervalCoverage: QueryDef =
+    QueryDef.sql("q548_interval_coverage", "r47_", "orders")(coverageSql)
 
-  private def coverageSql(spark: Boolean): String = {
-    val tbl = if (spark) "r47_orders" else "orders"
-    val dd =
-      if (spark) "unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000"
-      else "epoch_us(o_orderdate) // 86400000000"
-    val grid =
-      if (spark) "SELECT mn, explode(sequence(mn, mx)) AS dd FROM b"
-      else "SELECT mn, unnest(range(mn, mx + 1)) AS dd FROM b"
-    val idiv = if (spark) "div" else "//"
-    val qs =
-      if (spark) "SELECT explode(array(50, 90)) AS nom"
-      else "SELECT unnest([50, 90]) AS nom"
+  private def coverageSql(d: Dialect): String = {
+    val tbl = d.t("orders")
+    val dd = s"${d.dateUs("o_orderdate")} ${d.idiv} 86400000000"
+    val grid = s"SELECT mn, ${d.closedRange("mn", "mx")} AS dd FROM b"
+    val qs = s"SELECT ${d.list("50, 90")} AS nom"
     s"""WITH o AS (SELECT $dd AS dd FROM $tbl),
         cnt AS (SELECT dd, CAST(count(*) AS BIGINT) AS y FROM o GROUP BY 1),
         b AS (SELECT min(dd) AS mn, max(dd) AS mx FROM cnt),
@@ -55,18 +41,18 @@ object Round47 {
         d AS (SELECT s.idx, abs(s.y - lag(s.y) OVER (ORDER BY s.idx)) AS ad
               FROM s),
         cal AS (SELECT d.ad FROM d CROSS JOIN nn
-                WHERE d.ad IS NOT NULL AND d.idx < (7 * nn.n) $idiv 10),
+                WHERE d.ad IS NOT NULL AND d.idx < (7 * nn.n) ${d.idiv} 10),
         ncal AS (SELECT CAST(count(*) AS BIGINT) AS nc FROM cal),
         cdist AS (SELECT ad, CAST(count(*) AS BIGINT) AS c FROM cal GROUP BY 1),
         ccum AS (SELECT ad, CAST(sum(c) OVER (ORDER BY ad) AS BIGINT) AS cle FROM cdist),
         qg AS ($qs),
         hw AS (SELECT g.nom, min(ccum.ad) AS h
                FROM qg g CROSS JOIN ncal
-               JOIN ccum ON ccum.cle >= (g.nom * ncal.nc + 99) $idiv 100
+               JOIN ccum ON ccum.cle >= (g.nom * ncal.nc + 99) ${d.idiv} 100
                GROUP BY 1
                LIMIT 8),
         test AS (SELECT d.ad FROM d CROSS JOIN nn
-                 WHERE d.ad IS NOT NULL AND d.idx >= (7 * nn.n) $idiv 10),
+                 WHERE d.ad IS NOT NULL AND d.idx >= (7 * nn.n) ${d.idiv} 10),
         cov AS (SELECT hw.nom, hw.h,
                        CAST(count(*) AS BIGINT) AS nt,
                        CAST(sum(CASE WHEN t.ad <= hw.h THEN 1 ELSE 0 END) AS BIGINT) AS hit
@@ -90,22 +76,12 @@ object Round47 {
     * the type mix is stable week over week; the multi-ranking companion
     * to q339's pairwise τ.
     */
-  val q549KendallW: QueryDef = QueryDef(
-    "q549_kendall_w",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r47_events")
-      s.sql(kendallWSql(spark = true))
-    },
-    Some(kendallWSql(spark = false))
-  )
+  val q549KendallW: QueryDef = QueryDef.sql("q549_kendall_w", "r47_", "events")(kendallWSql)
 
-  private def kendallWSql(spark: Boolean): String = {
-    val tbl = if (spark) "r47_events" else "events"
-    val dd =
-      if (spark) "unix_micros(ts) div 86400000000"
-      else "epoch_us(ts) // 86400000000"
-    val idiv = if (spark) "div" else "//"
-    s"""WITH e AS (SELECT event_type, ($dd) $idiv 7 AS wk FROM $tbl),
+  private def kendallWSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val dd = s"${d.epochUs("ts")} ${d.idiv} 86400000000"
+    s"""WITH e AS (SELECT event_type, ($dd) ${d.idiv} 7 AS wk FROM $tbl),
         wt AS (SELECT wk, event_type, CAST(count(*) AS BIGINT) AS c
                FROM e GROUP BY 1, 2),
         tys AS (SELECT DISTINCT event_type FROM e LIMIT 64),
@@ -146,17 +122,11 @@ object Round47 {
     * 1 − R² — how much experiment sensitivity the two covariates buy
     * over q208/q465's single-covariate CUPED.
     */
-  val q550RegressionAdjustment: QueryDef = QueryDef(
-    "q550_regression_adjustment",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r47_events")
-      s.sql(regAdjSql(spark = true))
-    },
-    Some(regAdjSql(spark = false))
-  )
+  val q550RegressionAdjustment: QueryDef =
+    QueryDef.sql("q550_regression_adjustment", "r47_", "events")(regAdjSql)
 
-  private def regAdjSql(spark: Boolean): String = {
-    val tbl = if (spark) "r47_events" else "events"
+  private def regAdjSql(d: Dialect): String = {
+    val tbl = d.t("events")
     s"""WITH u AS (
           SELECT user_id,
                  CAST(sum(CASE WHEN event_type = 'purchase'
@@ -204,23 +174,14 @@ object Round47 {
     * size and the small-file share (< 100 rows) per layout — the sheet
     * that justifies (or kills) a compaction job before anyone runs it.
     */
-  val q551CompactionModel: QueryDef = QueryDef(
-    "q551_compaction_model",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r47_orders")
-      s.sql(compactionSql(spark = true))
-    },
-    Some(compactionSql(spark = false))
-  )
+  val q551CompactionModel: QueryDef =
+    QueryDef.sql("q551_compaction_model", "r47_", "orders")(compactionSql)
 
-  private def compactionSql(spark: Boolean): String = {
-    val tbl = if (spark) "r47_orders" else "orders"
-    val dd =
-      if (spark) "unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000"
-      else "epoch_us(o_orderdate) // 86400000000"
-    val idiv = if (spark) "div" else "//"
+  private def compactionSql(d: Dialect): String = {
+    val tbl = d.t("orders")
+    val dd = s"${d.dateUs("o_orderdate")} ${d.idiv} 86400000000"
     def layout(name: String, unit: String): String =
-      s"""SELECT '$name' AS layout, CAST(dd $idiv $unit AS BIGINT) AS f,
+      s"""SELECT '$name' AS layout, CAST(dd ${d.idiv} $unit AS BIGINT) AS f,
                  CAST(count(*) AS BIGINT) AS r
           FROM o GROUP BY 2"""
     s"""WITH o AS (SELECT $dd AS dd FROM $tbl),
@@ -238,7 +199,7 @@ object Round47 {
                FROM files GROUP BY 1),
         med AS (SELECT fc.layout, min(fc.r) AS p50
                 FROM fcum fc JOIN fn ON fn.layout = fc.layout
-                WHERE fc.cle >= (fn.nf + 1) $idiv 2
+                WHERE fc.cle >= (fn.nf + 1) ${d.idiv} 2
                 GROUP BY 1),
         daily AS (SELECT nf * 1000 + rows_total AS c0 FROM fn
                   WHERE layout = '1_daily' LIMIT 8)
@@ -260,24 +221,14 @@ object Round47 {
     * periods — the clustering that naive row-level t-tests ignore).
     * Hourly means quantize before the cross-period moments.
     */
-  val q552Switchback: QueryDef = QueryDef(
-    "q552_switchback",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r47_events")
-      s.sql(switchbackSql(spark = true))
-    },
-    Some(switchbackSql(spark = false))
-  )
+  val q552Switchback: QueryDef = QueryDef.sql("q552_switchback", "r47_", "events")(switchbackSql)
 
-  private def switchbackSql(spark: Boolean): String = {
-    val tbl = if (spark) "r47_events" else "events"
-    val hh =
-      if (spark) "unix_micros(ts) div 3600000000"
-      else "epoch_us(ts) // 3600000000"
-    val str = if (spark) "STRING" else "VARCHAR"
+  private def switchbackSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val hh = s"${d.epochUs("ts")} ${d.idiv} 3600000000"
     s"""WITH e AS (SELECT $hh AS hh, value AS v FROM $tbl),
         per AS (SELECT hh,
-                       ${md5i(s"'sb:' || CAST(hh AS $str)", spark)} % 2 AS arm,
+                       ${md5i(s"'sb:' || CAST(hh AS ${d.str})", d)} % 2 AS arm,
                        CAST(count(*) AS BIGINT) AS c,
                        CAST(sum(${qi("v")}) AS BIGINT) AS sv
                 FROM e GROUP BY 1, 2),
@@ -320,17 +271,11 @@ object Round47 {
     * independently written SQL agreeing to the last bit is the
     * strongest consistency check the catalogue can make on itself.
     */
-  val q553DriftScorecard: QueryDef = QueryDef(
-    "q553_drift_scorecard",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r47_events")
-      s.sql(scorecardSql(spark = true))
-    },
-    Some(scorecardSql(spark = false))
-  )
+  val q553DriftScorecard: QueryDef =
+    QueryDef.sql("q553_drift_scorecard", "r47_", "events")(scorecardSql)
 
-  private def scorecardSql(spark: Boolean): String = {
-    val tbl = if (spark) "r47_events" else "events"
+  private def scorecardSql(d: Dialect): String = {
+    val tbl = d.t("events")
     def kern(a: String, b: String): String =
       s"exp(-CAST(($a - $b) * ($a - $b) AS DOUBLE) / (CAST(2 AS DOUBLE) * 50 * 50))"
     s"""WITH b AS (

@@ -28,29 +28,17 @@ object Round48 {
     * scale σ needs Γ(1+k), which neither engine shares, so the sheet
     * deliberately stops at shape.
     */
-  val q554GevLmoments: QueryDef = QueryDef(
-    "q554_gev_lmoments",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r48_orders")
-      s.sql(gevSql(spark = true))
-    },
-    Some(gevSql(spark = false))
-  )
+  val q554GevLmoments: QueryDef = QueryDef.sql("q554_gev_lmoments", "r48_", "orders")(gevSql)
 
-  private def gevSql(spark: Boolean): String = {
-    val tbl = if (spark) "r48_orders" else "orders"
-    val dd =
-      if (spark) "unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000"
-      else "epoch_us(o_orderdate) // 86400000000"
-    val grid =
-      if (spark) "SELECT mn, explode(sequence(mn, mx)) AS dd FROM b"
-      else "SELECT mn, unnest(range(mn, mx + 1)) AS dd FROM b"
-    val idiv = if (spark) "div" else "//"
+  private def gevSql(d: Dialect): String = {
+    val tbl = d.t("orders")
+    val dd = s"${d.dateUs("o_orderdate")} ${d.idiv} 86400000000"
+    val grid = s"SELECT mn, ${d.closedRange("mn", "mx")} AS dd FROM b"
     s"""WITH o AS (SELECT $dd AS dd FROM $tbl),
         cnt AS (SELECT dd, CAST(count(*) AS BIGINT) AS y FROM o GROUP BY 1),
         b AS (SELECT min(dd) AS mn, max(dd) AS mx FROM cnt),
         grid AS ($grid),
-        s AS (SELECT (g.dd - g.mn) $idiv 7 AS wk, (g.dd - g.mn) AS idx,
+        s AS (SELECT (g.dd - g.mn) ${d.idiv} 7 AS wk, (g.dd - g.mn) AS idx,
                      CAST(coalesce(c.y, 0) AS BIGINT) AS y
               FROM grid g LEFT JOIN cnt c ON c.dd = g.dd),
         wm AS (SELECT wk, CAST(max(y) AS BIGINT) AS m
@@ -99,23 +87,12 @@ object Round48 {
     * regression. "Do these two streams share a
     * trend" — the question q52's plain correlation can't answer.
     */
-  val q555EngleGranger: QueryDef = QueryDef(
-    "q555_engle_granger",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r48_events")
-      s.sql(egSql(spark = true))
-    },
-    Some(egSql(spark = false))
-  )
+  val q555EngleGranger: QueryDef = QueryDef.sql("q555_engle_granger", "r48_", "events")(egSql)
 
-  private def egSql(spark: Boolean): String = {
-    val tbl = if (spark) "r48_events" else "events"
-    val dd =
-      if (spark) "unix_micros(ts) div 86400000000"
-      else "epoch_us(ts) // 86400000000"
-    val grid =
-      if (spark) "SELECT mn, explode(sequence(mn, mx)) AS dd FROM b"
-      else "SELECT mn, unnest(range(mn, mx + 1)) AS dd FROM b"
+  private def egSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val dd = s"${d.epochUs("ts")} ${d.idiv} 86400000000"
+    val grid = s"SELECT mn, ${d.closedRange("mn", "mx")} AS dd FROM b"
     s"""WITH e AS (SELECT event_type, $dd AS dd FROM $tbl
                    WHERE event_type IN ('click', 'view')),
         cnt AS (SELECT dd,
@@ -181,28 +158,18 @@ object Round48 {
     * step curve exactly across the death-time cluster. q191 draws S(t);
     * this prices it in expected retained days.
     */
-  val q556KmRmst: QueryDef = QueryDef(
-    "q556_km_rmst",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r48_events")
-      s.sql(rmstSql(spark = true))
-    },
-    Some(rmstSql(spark = false))
-  )
+  val q556KmRmst: QueryDef = QueryDef.sql("q556_km_rmst", "r48_", "events")(rmstSql)
 
-  private def rmstSql(spark: Boolean): String = {
-    val tbl = if (spark) "r48_events" else "events"
-    val us = if (spark) "unix_micros(ts)" else "epoch_us(ts)"
-    val idiv = if (spark) "div" else "//"
-    val taus =
-      if (spark) "SELECT explode(array(27, 30)) AS tau"
-      else "SELECT unnest([27, 30]) AS tau"
+  private def rmstSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val us = d.epochUs("ts")
+    val taus = s"SELECT ${d.list("27, 30")} AS tau"
     s"""WITH u AS (SELECT user_id, CAST(min($us) AS BIGINT) AS f,
                           CAST(max($us) AS BIGINT) AS l
                    FROM $tbl GROUP BY 1),
         gmx AS (SELECT CAST(max(l) AS BIGINT) AS gm FROM u),
         lt AS (SELECT u.user_id,
-                      (u.l - u.f) $idiv 86400000000 AS t,
+                      (u.l - u.f) ${d.idiv} 86400000000 AS t,
                       CASE WHEN 2 * (g.gm - u.l) < 86400000000 THEN 0 ELSE 1 END AS death
                FROM u CROSS JOIN gmx g),
         nn AS (SELECT CAST(count(*) AS BIGINT) AS n,
@@ -257,26 +224,13 @@ object Round48 {
     * next to the naive MAE: the skill says whether carrying the whole
     * distribution beats carrying a point.
     */
-  val q557Crps: QueryDef = QueryDef(
-    "q557_crps",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r48_orders")
-      s.sql(crpsSql(spark = true))
-    },
-    Some(crpsSql(spark = false))
-  )
+  val q557Crps: QueryDef = QueryDef.sql("q557_crps", "r48_", "orders")(crpsSql)
 
-  private def crpsSql(spark: Boolean): String = {
-    val tbl = if (spark) "r48_orders" else "orders"
-    val dd =
-      if (spark) "unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000"
-      else "epoch_us(o_orderdate) // 86400000000"
-    val grid =
-      if (spark) "SELECT mn, explode(sequence(mn, mx)) AS dd FROM b"
-      else "SELECT mn, unnest(range(mn, mx + 1)) AS dd FROM b"
-    val og =
-      if (spark) "SELECT explode(sequence(1, 28)) AS o"
-      else "SELECT unnest(range(1, 29)) AS o"
+  private def crpsSql(d: Dialect): String = {
+    val tbl = d.t("orders")
+    val dd = s"${d.dateUs("o_orderdate")} ${d.idiv} 86400000000"
+    val grid = s"SELECT mn, ${d.closedRange("mn", "mx")} AS dd FROM b"
+    val og = s"SELECT ${d.closedRange(1, 28)} AS o"
     s"""WITH o AS (SELECT $dd AS dd FROM $tbl),
         cnt AS (SELECT dd, CAST(count(*) AS BIGINT) AS y FROM o GROUP BY 1),
         b AS (SELECT min(dd) AS mn, max(dd) AS mx FROM cnt),
@@ -398,23 +352,12 @@ object Round48 {
     * the previous. q229 tests whether type matters; this prices how
     * much each calendar dimension adds.
     */
-  val q559EtaLadder: QueryDef = QueryDef(
-    "q559_eta_ladder",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r48_events")
-      s.sql(etaSql(spark = true))
-    },
-    Some(etaSql(spark = false))
-  )
+  val q559EtaLadder: QueryDef = QueryDef.sql("q559_eta_ladder", "r48_", "events")(etaSql)
 
-  private def etaSql(spark: Boolean): String = {
-    val tbl = if (spark) "r48_events" else "events"
-    val dd =
-      if (spark) "unix_micros(ts) div 86400000000"
-      else "epoch_us(ts) // 86400000000"
-    val hh =
-      if (spark) "unix_micros(ts) div 3600000000"
-      else "epoch_us(ts) // 3600000000"
+  private def etaSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val dd = s"${d.epochUs("ts")} ${d.idiv} 86400000000"
+    val hh = s"${d.epochUs("ts")} ${d.idiv} 3600000000"
     def rung(id: Int, name: String, keys: String): String =
       s"""SELECT CAST($id AS BIGINT) AS model_id, '$name' AS model,
                  CAST(count(*) AS BIGINT) AS n_groups,

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-49 additions (q560+): corpus frequency-spectrum and
   * predictive-causality audits — Good–Turing unseen-type mass from the
@@ -24,12 +23,8 @@ object Round49 {
     * "word" with the established Zipf/Heaps sheets. Kept local: an
     * unfiltered, positionless word stream, unlike [[SqlFragments]]'.
     */
-  private def tokCte(tbl: String, spark: Boolean): String =
-    if (spark)
-      s"""SELECT source, explode(split(lower(text), '[^a-z]+')) AS word
-          FROM $tbl"""
-    else
-      s"""SELECT source, unnest(string_split_regex(lower(text), '[^a-z]+')) AS word
+  private def tokCte(tbl: String, d: Dialect): String =
+    s"""SELECT source, ${d.words} AS word
           FROM $tbl"""
 
   // ---------------------------------------------------------------- q560
@@ -44,18 +39,12 @@ object Round49 {
     * The release-sheet answer to "is this source's vocabulary saturated
     * or still mostly unobserved".
     */
-  val q560GoodTuring: QueryDef = QueryDef(
-    "q560_good_turing",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r49_documents")
-      s.sql(goodTuringSql(spark = true))
-    },
-    Some(goodTuringSql(spark = false))
-  )
+  val q560GoodTuring: QueryDef =
+    QueryDef.sql("q560_good_turing", "r49_", "documents")(goodTuringSql)
 
-  private def goodTuringSql(spark: Boolean): String = {
-    val tbl = if (spark) "r49_documents" else "documents"
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+  private def goodTuringSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    s"""WITH tok AS (${tokCte(tbl, d)}),
         wc AS (SELECT source, word, CAST(count(*) AS BIGINT) AS c
                FROM tok WHERE word <> '' GROUP BY 1, 2),
         fof AS (SELECT source, c AS r, CAST(count(*) AS BIGINT) AS v
@@ -87,18 +76,11 @@ object Round49 {
     * end. Reads the same spectrum as q560 from independently written
     * SQL, so the two sheets cross-check each other's token convention.
     */
-  val q561YuleK: QueryDef = QueryDef(
-    "q561_yule_k",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r49_documents")
-      s.sql(yuleSql(spark = true))
-    },
-    Some(yuleSql(spark = false))
-  )
+  val q561YuleK: QueryDef = QueryDef.sql("q561_yule_k", "r49_", "documents")(yuleSql)
 
-  private def yuleSql(spark: Boolean): String = {
-    val tbl = if (spark) "r49_documents" else "documents"
-    s"""WITH tok AS (${tokCte(tbl, spark)}),
+  private def yuleSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    s"""WITH tok AS (${tokCte(tbl, d)}),
         wc AS (SELECT source, word, CAST(count(*) AS BIGINT) AS c
                FROM tok WHERE word <> '' GROUP BY 1, 2),
         agg AS (SELECT source,
@@ -131,23 +113,12 @@ object Round49 {
     * the third panel of the click/view co-movement sheet (q52
     * correlation, q555 cointegration).
     */
-  val q562Granger: QueryDef = QueryDef(
-    "q562_granger",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r49_events")
-      s.sql(grangerSql(spark = true))
-    },
-    Some(grangerSql(spark = false))
-  )
+  val q562Granger: QueryDef = QueryDef.sql("q562_granger", "r49_", "events")(grangerSql)
 
-  private def grangerSql(spark: Boolean): String = {
-    val tbl = if (spark) "r49_events" else "events"
-    val dd =
-      if (spark) "unix_micros(ts) div 86400000000"
-      else "epoch_us(ts) // 86400000000"
-    val grid =
-      if (spark) "SELECT mn, explode(sequence(mn, mx)) AS dd FROM b"
-      else "SELECT mn, unnest(range(mn, mx + 1)) AS dd FROM b"
+  private def grangerSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val dd = s"${d.epochUs("ts")} ${d.idiv} 86400000000"
+    val grid = s"SELECT mn, ${d.closedRange("mn", "mx")} AS dd FROM b"
     // One CTE chain per direction: exact BIGINT moments, Cramer
     // coefficients in DOUBLE (identical expression text both engines),
     // quantized residual sums, F.
@@ -237,24 +208,12 @@ object Round49 {
     * packing (q61/q484) from sampled statistics. Only the ≤ 51-row
     * head of the rank relation ever joins anything.
     */
-  val q563HillTail: QueryDef = QueryDef(
-    "q563_hill_tail",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r49_documents")
-      s.sql(hillSql(spark = true))
-    },
-    Some(hillSql(spark = false))
-  )
+  val q563HillTail: QueryDef = QueryDef.sql("q563_hill_tail", "r49_", "documents")(hillSql)
 
-  private def hillSql(spark: Boolean): String = {
-    val tbl = if (spark) "r49_documents" else "documents"
-    val nWords =
-      if (spark) "CAST(regexp_count(lower(text), '[a-z]+') AS BIGINT)"
-      else "CAST(len(regexp_extract_all(lower(text), '[a-z]+')) AS BIGINT)"
-    val ks =
-      if (spark)
-        "SELECT CAST(k0 AS BIGINT) AS k FROM (SELECT explode(array(10, 25, 50)) AS k0)"
-      else "SELECT CAST(unnest([10, 25, 50]) AS BIGINT) AS k"
+  private def hillSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val nWords = d.wordCount
+    val ks = d.selectGen(d.list("10, 25, 50"), "BIGINT", "k", "k0")
     s"""WITH d AS (SELECT doc_id, $nWords AS nw FROM $tbl),
         dz AS (SELECT doc_id, nw FROM d WHERE nw > 0),
         rk AS (SELECT CAST(row_number() OVER (ORDER BY nw DESC, doc_id) AS BIGINT) AS r,

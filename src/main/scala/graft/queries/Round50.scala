@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-50 additions (q564+): tuning, fraud-audit and sequential-
   * decision sheets — a successive-halving (ASHA-style) replay over the
@@ -28,25 +27,16 @@ object Round50 {
     * Output: every (round, arm) evaluation with its rank and kept flag —
     * the audit trail a sweep scheduler owes the experimenter.
     */
-  val q564SuccessiveHalving: QueryDef = QueryDef(
-    "q564_successive_halving",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r50_events")
-      s.sql(halvingSql(spark = true))
-    },
-    Some(halvingSql(spark = false))
-  )
+  val q564SuccessiveHalving: QueryDef =
+    QueryDef.sql("q564_successive_halving", "r50_", "events")(halvingSql)
 
-  private def halvingSql(spark: Boolean): String = {
-    val tbl = if (spark) "r50_events" else "events"
-    val dd =
-      if (spark) "unix_micros(ts) div 86400000000"
-      else "epoch_us(ts) // 86400000000"
-    val idiv = if (spark) "div" else "//"
+  private def halvingSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val dd = s"${d.epochUs("ts")} ${d.idiv} 86400000000"
     s"""WITH e AS (SELECT event_type AS arm, $dd AS dd, ${qi("value")} AS vq
                    FROM $tbl),
         b AS (SELECT min(dd) AS mn FROM e),
-        blk AS (SELECT arm, (dd - b.mn) $idiv 7 AS blk,
+        blk AS (SELECT arm, (dd - b.mn) ${d.idiv} 7 AS blk,
                        vq
                 FROM e CROSS JOIN b),
         bm AS (SELECT arm, blk,
@@ -95,24 +85,14 @@ object Round50 {
     * integer formatting both engines share exactly, where float log10
     * tricks can straddle a power of ten.
     */
-  val q565Benford: QueryDef = QueryDef(
-    "q565_benford",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r50_orders")
-      s.sql(benfordSql(spark = true))
-    },
-    Some(benfordSql(spark = false))
-  )
+  val q565Benford: QueryDef = QueryDef.sql("q565_benford", "r50_", "orders")(benfordSql)
 
-  private def benfordSql(spark: Boolean): String = {
-    val tbl = if (spark) "r50_orders" else "orders"
-    val str = if (spark) "STRING" else "VARCHAR"
-    val digits =
-      if (spark) "SELECT CAST(d0 AS INT) AS d FROM (SELECT explode(sequence(1, 9)) AS d0)"
-      else "SELECT CAST(unnest(range(1, 10)) AS INT) AS d"
+  private def benfordSql(d: Dialect): String = {
+    val tbl = d.t("orders")
+    val digits = d.selectGen(d.closedRange(1, 9), "INT", "d", "d0")
     s"""WITH c AS (SELECT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
                    FROM $tbl),
-        fd AS (SELECT CAST(substring(CAST(cents AS $str), 1, 1) AS INT) AS d
+        fd AS (SELECT CAST(substring(CAST(cents AS ${d.str}), 1, 1) AS INT) AS d
                FROM c WHERE cents > 0),
         n AS (SELECT CAST(count(*) AS BIGINT) AS nt FROM fd),
         obs AS (SELECT d, CAST(count(*) AS BIGINT) AS cnt FROM fd GROUP BY 1),
@@ -146,23 +126,12 @@ object Round50 {
     * the nonparametric cousin of q197's fitted trend). All counting is
     * integer; only the harmonic terms are quantized.
     */
-  val q566Records: QueryDef = QueryDef(
-    "q566_records",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r50_orders")
-      s.sql(recordsSql(spark = true))
-    },
-    Some(recordsSql(spark = false))
-  )
+  val q566Records: QueryDef = QueryDef.sql("q566_records", "r50_", "orders")(recordsSql)
 
-  private def recordsSql(spark: Boolean): String = {
-    val tbl = if (spark) "r50_orders" else "orders"
-    val dd =
-      if (spark) "unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000"
-      else "epoch_us(o_orderdate) // 86400000000"
-    val grid =
-      if (spark) "SELECT mn, explode(sequence(mn, mx)) AS dd FROM b"
-      else "SELECT mn, unnest(range(mn, mx + 1)) AS dd FROM b"
+  private def recordsSql(d: Dialect): String = {
+    val tbl = d.t("orders")
+    val dd = s"${d.dateUs("o_orderdate")} ${d.idiv} 86400000000"
+    val grid = s"SELECT mn, ${d.closedRange("mn", "mx")} AS dd FROM b"
     s"""WITH o AS (SELECT $dd AS dd FROM $tbl),
         cnt AS (SELECT dd, CAST(count(*) AS BIGINT) AS y FROM o GROUP BY 1),
         b AS (SELECT min(dd) AS mn, max(dd) AS mx FROM cnt),
@@ -200,20 +169,11 @@ object Round50 {
     * switchback — "how many days does this effect size need". With H₀
     * data the expected outcome is accept_h0 (LLR drifts negative).
     */
-  val q567Sprt: QueryDef = QueryDef(
-    "q567_sprt",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r50_events")
-      s.sql(sprtSql(spark = true))
-    },
-    Some(sprtSql(spark = false))
-  )
+  val q567Sprt: QueryDef = QueryDef.sql("q567_sprt", "r50_", "events")(sprtSql)
 
-  private def sprtSql(spark: Boolean): String = {
-    val tbl = if (spark) "r50_events" else "events"
-    val dd =
-      if (spark) "unix_micros(ts) div 86400000000"
-      else "epoch_us(ts) // 86400000000"
+  private def sprtSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val dd = s"${d.epochUs("ts")} ${d.idiv} 86400000000"
     s"""WITH e AS (SELECT event_type, $dd AS dd FROM $tbl
                    WHERE event_type IN ('click', 'view')),
         day AS (SELECT dd,

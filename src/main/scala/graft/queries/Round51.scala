@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-51 additions (q568+): dependence-structure and operations-
   * measurement audits — empirical upper-tail dependence between the
@@ -25,26 +24,14 @@ object Round51 {
     * k/n rides along: λ_U far above it means the streams spike together
     * and a capacity plan summing marginal p99s is wrong.
     */
-  val q568TailDependence: QueryDef = QueryDef(
-    "q568_tail_dependence",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r51_events")
-      s.sql(tailDepSql(spark = true))
-    },
-    Some(tailDepSql(spark = false))
-  )
+  val q568TailDependence: QueryDef =
+    QueryDef.sql("q568_tail_dependence", "r51_", "events")(tailDepSql)
 
-  private def tailDepSql(spark: Boolean): String = {
-    val tbl = if (spark) "r51_events" else "events"
-    val dd =
-      if (spark) "unix_micros(ts) div 86400000000"
-      else "epoch_us(ts) // 86400000000"
-    val grid =
-      if (spark) "SELECT mn, explode(sequence(mn, mx)) AS dd FROM b"
-      else "SELECT mn, unnest(range(mn, mx + 1)) AS dd FROM b"
-    val qs =
-      if (spark) "SELECT q0 AS q FROM (SELECT explode(array(75, 90)) AS q0)"
-      else "SELECT unnest([75, 90]) AS q"
+  private def tailDepSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val dd = s"${d.epochUs("ts")} ${d.idiv} 86400000000"
+    val grid = s"SELECT mn, ${d.closedRange("mn", "mx")} AS dd FROM b"
+    val qs = d.selectGen(d.list("75, 90"), "", "q", "q0")
     s"""WITH e AS (SELECT event_type, $dd AS dd FROM $tbl
                    WHERE event_type IN ('click', 'view')),
         cnt AS (SELECT dd,
@@ -90,32 +77,18 @@ object Round51 {
     * explode only into the hour instants they COVER (duration-bounded),
     * so the instant join is a keyed equi-join, never interval-vs-grid.
     */
-  val q569LittlesLaw: QueryDef = QueryDef(
-    "q569_littles_law",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r51_events")
-      s.sql(littleSql(spark = true))
-    },
-    Some(littleSql(spark = false))
-  )
+  val q569LittlesLaw: QueryDef = QueryDef.sql("q569_littles_law", "r51_", "events")(littleSql)
 
-  private def littleSql(spark: Boolean): String = {
-    val tbl = if (spark) "r51_events" else "events"
-    val us = if (spark) "unix_micros(ts)" else "epoch_us(ts)"
-    val idiv = if (spark) "div" else "//"
+  private def littleSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val us = d.epochUs("ts")
     // Guard BEFORE the sequence: a session that crosses no hour boundary
     // has ceil(lo/h) > floor(hi/h) — Spark's sequence() would DESCEND
     // there while DuckDB's range() is empty (the q76 lesson).
     val hcover =
-      if (spark)
-        """SELECT explode(sequence(h0, h1)) AS h
+      s"""SELECT ${d.closedRange("h0", "h1")} AS h
            FROM (SELECT CAST(ceil(CAST(lo AS DOUBLE) / 3600000000) AS BIGINT) AS h0,
-                        hi div 3600000000 AS h1 FROM sess) z
-           WHERE h0 <= h1"""
-      else
-        """SELECT unnest(range(h0, h1 + 1)) AS h
-           FROM (SELECT CAST(ceil(CAST(lo AS DOUBLE) / 3600000000) AS BIGINT) AS h0,
-                        hi // 3600000000 AS h1 FROM sess) z
+                        hi ${d.idiv} 3600000000 AS h1 FROM sess) z
            WHERE h0 <= h1"""
     s"""WITH x AS (SELECT user_id, $us AS t FROM $tbl),
         o AS (SELECT user_id, t,
@@ -141,7 +114,7 @@ object Round51 {
                  FROM cov CROSS JOIN span
                  WHERE cov.h * 3600000000 >= span.t0 AND cov.h * 3600000000 <= span.t1
                  GROUP BY 1),
-        ni AS (SELECT CAST((t1 $idiv 3600000000) - CAST(ceil(CAST(t0 AS DOUBLE) / 3600000000) AS BIGINT) + 1 AS BIGINT) AS n_inst,
+        ni AS (SELECT CAST((t1 ${d.idiv} 3600000000) - CAST(ceil(CAST(t0 AS DOUBLE) / 3600000000) AS BIGINT) + 1 AS BIGINT) AS n_inst,
                       t0, t1
                FROM (SELECT t0, t1, t1 AS dummy FROM span) z),
         samp AS (SELECT CAST(sum(active) AS BIGINT) AS tot FROM inst)
@@ -165,27 +138,13 @@ object Round51 {
     * flat or rising): the q192 ACF asks "is there memory", this asks
     * "what KIND of noise is the daily demand".
     */
-  val q570AllanVariance: QueryDef = QueryDef(
-    "q570_allan_variance",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r51_orders")
-      s.sql(allanSql(spark = true))
-    },
-    Some(allanSql(spark = false))
-  )
+  val q570AllanVariance: QueryDef = QueryDef.sql("q570_allan_variance", "r51_", "orders")(allanSql)
 
-  private def allanSql(spark: Boolean): String = {
-    val tbl = if (spark) "r51_orders" else "orders"
-    val dd =
-      if (spark) "unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000"
-      else "epoch_us(o_orderdate) // 86400000000"
-    val grid =
-      if (spark) "SELECT mn, explode(sequence(mn, mx)) AS dd FROM b"
-      else "SELECT mn, unnest(range(mn, mx + 1)) AS dd FROM b"
-    val idiv = if (spark) "div" else "//"
-    val taus =
-      if (spark) "SELECT t0 AS tau FROM (SELECT explode(array(1, 2, 4)) AS t0)"
-      else "SELECT unnest([1, 2, 4]) AS tau"
+  private def allanSql(d: Dialect): String = {
+    val tbl = d.t("orders")
+    val dd = s"${d.dateUs("o_orderdate")} ${d.idiv} 86400000000"
+    val grid = s"SELECT mn, ${d.closedRange("mn", "mx")} AS dd FROM b"
+    val taus = d.selectGen(d.list("1, 2, 4"), "", "tau", "t0")
     s"""WITH o AS (SELECT $dd AS dd FROM $tbl),
         cnt AS (SELECT dd, CAST(count(*) AS BIGINT) AS y FROM o GROUP BY 1),
         b AS (SELECT min(dd) AS mn, max(dd) AS mx FROM cnt),
@@ -195,7 +154,7 @@ object Round51 {
         n AS (SELECT CAST(count(*) AS BIGINT) AS nd FROM s),
         tv AS ($taus),
         blocks AS (SELECT CAST(t.tau AS BIGINT) AS tau,
-                          s.idx $idiv t.tau AS blk,
+                          s.idx ${d.idiv} t.tau AS blk,
                           CAST(sum(s.y) AS BIGINT) AS bs,
                           CAST(count(*) AS BIGINT) AS bn
                    FROM s CROSS JOIN tv t

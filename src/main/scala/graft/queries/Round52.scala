@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-52 additions (q571+): lake-health audits — the checks a data
   * platform runs on every snapshot before anyone queries it. Catalogue
@@ -25,20 +24,14 @@ object Round52 {
     * assortment-stability number a procurement mix model needs before
     * trusting last year's weights.
     */
-  val q571CatalogChurn: QueryDef = QueryDef(
-    "q571_catalog_churn",
-    (s, dir) => {
-      Tables.lineitem(s, dir).createOrReplaceTempView("r52_lineitem")
-      s.sql(churnSql(spark = true))
-    },
-    Some(churnSql(spark = false))
-  )
+  val q571CatalogChurn: QueryDef = QueryDef.sql("q571_catalog_churn", "r52_", "lineitem")(churnSql)
 
-  private def churnSql(spark: Boolean): String = {
-    val tbl = if (spark) "r52_lineitem" else "lineitem"
-    val yr =
-      if (spark) "year(CAST(l_shipdate AS TIMESTAMP))"
-      else "CAST(year(l_shipdate) AS INT)"
+  private def churnSql(d: Dialect): String = {
+    val tbl = d.t("lineitem")
+    val yr = d match {
+      case _: Spark => "year(CAST(l_shipdate AS TIMESTAMP))"
+      case DuckDb => "CAST(year(l_shipdate) AS INT)"
+    }
     s"""WITH act AS (SELECT DISTINCT $yr AS y, l_partkey AS pk, l_suppkey AS sk
                      FROM $tbl),
         a AS (SELECT y, pk, sk FROM act),
@@ -72,29 +65,16 @@ object Round52 {
     * orphan rate. Anti-joins shuffle by the key being checked; nothing
     * is collected. The first dashboard a lake publishes.
     */
-  val q572OrphanAudit: QueryDef = QueryDef(
-    "q572_orphan_audit",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r52_orders")
-      Tables.customer(s, dir).createOrReplaceTempView("r52_customer")
-      Tables.lineitem(s, dir).createOrReplaceTempView("r52_lineitem")
-      Tables.part(s, dir).createOrReplaceTempView("r52_part")
-      Tables.supplier(s, dir).createOrReplaceTempView("r52_supplier")
-      Tables.nation(s, dir).createOrReplaceTempView("r52_nation")
-      Tables.events(s, dir).createOrReplaceTempView("r52_events")
-      s.sql(orphanSql(spark = true))
-    },
-    Some(orphanSql(spark = false))
-  )
+  val q572OrphanAudit: QueryDef =
+    QueryDef.sql("q572_orphan_audit", "r52_", "orders", "customer", "lineitem", "part", "supplier", "nation", "events")(orphanSql)
 
-  private def orphanSql(spark: Boolean): String = {
-    val p = if (spark) "r52_" else ""
+  private def orphanSql(d: Dialect): String = {
     def edge(name: String, child: String, childKey: String,
              parent: String, parentKey: String): String =
       s"""SELECT '$name' AS fk_edge,
                  CAST(count(*) AS BIGINT) AS n_child,
                  CAST(sum(CASE WHEN p.$parentKey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_orphans
-          FROM $p$child c LEFT JOIN $p$parent p ON c.$childKey = p.$parentKey"""
+          FROM ${d.t(child)} c LEFT JOIN ${d.t(parent)} p ON c.$childKey = p.$parentKey"""
     val edges = Seq(
       edge("orders->customer", "orders", "o_custkey", "customer", "c_custkey"),
       edge("lineitem->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
@@ -124,26 +104,14 @@ object Round52 {
     * detector that catches a dead upstream partition before a consumer
     * does.
     */
-  val q573CompletenessSla: QueryDef = QueryDef(
-    "q573_completeness_sla",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r52_events")
-      s.sql(slaSql(spark = true))
-    },
-    Some(slaSql(spark = false))
-  )
+  val q573CompletenessSla: QueryDef =
+    QueryDef.sql("q573_completeness_sla", "r52_", "events")(slaSql)
 
-  private def slaSql(spark: Boolean): String = {
-    val tbl = if (spark) "r52_events" else "events"
-    val dd =
-      if (spark) "unix_micros(ts) div 86400000000"
-      else "epoch_us(ts) // 86400000000"
-    val grid =
-      if (spark) "SELECT mn, explode(sequence(mn, mx)) AS dd FROM b"
-      else "SELECT mn, unnest(range(mn, mx + 1)) AS dd FROM b"
-    val og =
-      if (spark) "SELECT explode(sequence(1, 7)) AS o"
-      else "SELECT unnest(range(1, 8)) AS o"
+  private def slaSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val dd = s"${d.epochUs("ts")} ${d.idiv} 86400000000"
+    val grid = s"SELECT mn, ${d.closedRange("mn", "mx")} AS dd FROM b"
+    val og = s"SELECT ${d.closedRange(1, 7)} AS o"
     s"""WITH e AS (SELECT $dd AS dd FROM $tbl),
         cnt AS (SELECT dd, CAST(count(*) AS BIGINT) AS y FROM e GROUP BY 1),
         b AS (SELECT min(dd) AS mn, max(dd) AS mx FROM cnt),
@@ -181,30 +149,15 @@ object Round52 {
     * COMPOSITE (l_orderkey, l_linenumber) — this corpus reuses line
     * numbers within an order, so the sweep reports it honestly.)
     */
-  val q574PkUniqueness: QueryDef = QueryDef(
-    "q574_pk_uniqueness",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r52_orders")
-      Tables.customer(s, dir).createOrReplaceTempView("r52_customer")
-      Tables.part(s, dir).createOrReplaceTempView("r52_part")
-      Tables.supplier(s, dir).createOrReplaceTempView("r52_supplier")
-      Tables.nation(s, dir).createOrReplaceTempView("r52_nation")
-      Tables.region(s, dir).createOrReplaceTempView("r52_region")
-      Tables.events(s, dir).createOrReplaceTempView("r52_events")
-      Tables.documents(s, dir).createOrReplaceTempView("r52_documents")
-      Tables.lineitem(s, dir).createOrReplaceTempView("r52_lineitem")
-      s.sql(pkSql(spark = true))
-    },
-    Some(pkSql(spark = false))
-  )
+  val q574PkUniqueness: QueryDef =
+    QueryDef.sql("q574_pk_uniqueness", "r52_", "orders", "customer", "part", "supplier", "nation", "region", "events", "documents", "lineitem")(pkSql)
 
-  private def pkSql(spark: Boolean): String = {
-    val p = if (spark) "r52_" else ""
+  private def pkSql(d: Dialect): String = {
     def table(name: String, keyExpr: String): String =
       s"""SELECT '$name' AS pk,
                  CAST(count(*) AS BIGINT) AS n_rows,
                  CAST(count(DISTINCT $keyExpr) AS BIGINT) AS n_keys
-          FROM $p$name"""
+          FROM ${d.t(name)}"""
     val tables = Seq(
       table("customer", "c_custkey"),
       table("documents", "doc_id"),

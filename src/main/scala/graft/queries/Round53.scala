@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-53 additions (q575+): robust-fit and equity audits — an EXACT
   * grid quantile regression of the daily order trend (the pinball-loss
@@ -31,30 +30,15 @@ object Round53 {
     * days actually follow — OLS (q197) and Theil–Sen (q200) both answer
     * a different question.
     */
-  val q575QuantileRegression: QueryDef = QueryDef(
-    "q575_quantile_regression",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r53_orders")
-      s.sql(qregSql(spark = true))
-    },
-    Some(qregSql(spark = false))
-  )
+  val q575QuantileRegression: QueryDef =
+    QueryDef.sql("q575_quantile_regression", "r53_", "orders")(qregSql)
 
-  private def qregSql(spark: Boolean): String = {
-    val tbl = if (spark) "r53_orders" else "orders"
-    val dd =
-      if (spark) "unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000"
-      else "epoch_us(o_orderdate) // 86400000000"
-    val grid =
-      if (spark) "SELECT mn, explode(sequence(mn, mx)) AS dd FROM b"
-      else "SELECT mn, unnest(range(mn, mx + 1)) AS dd FROM b"
-    val slopes =
-      if (spark) "SELECT explode(sequence(0, 64)) AS gi"
-      else "SELECT unnest(range(0, 65)) AS gi"
-    val taus =
-      if (spark) "SELECT explode(array(10, 18)) AS t20"
-      else "SELECT unnest([10, 18]) AS t20"
-    val idiv = if (spark) "div" else "//"
+  private def qregSql(d: Dialect): String = {
+    val tbl = d.t("orders")
+    val dd = s"${d.dateUs("o_orderdate")} ${d.idiv} 86400000000"
+    val grid = s"SELECT mn, ${d.closedRange("mn", "mx")} AS dd FROM b"
+    val slopes = s"SELECT ${d.closedRange(0, 64)} AS gi"
+    val taus = s"SELECT ${d.list("10, 18")} AS t20"
     s"""WITH o AS (SELECT $dd AS dd FROM $tbl),
         cnt AS (SELECT dd, CAST(count(*) AS BIGINT) AS y FROM o GROUP BY 1),
         b AS (SELECT min(dd) AS mn, max(dd) AS mx FROM cnt),
@@ -73,7 +57,7 @@ object Round53 {
         -- everything stays on the 2^-20 grid as BIGINT numerators
         gsl AS (SELECT gi,
                        -(2 * abs(ob.bq) + 1048576)
-                         + (gi * (CAST(4 AS BIGINT) * abs(ob.bq) + 2097152)) $idiv 64 AS bq
+                         + (gi * (CAST(4 AS BIGINT) * abs(ob.bq) + 2097152)) ${d.idiv} 64 AS bq
                 FROM ($slopes) g CROSS JOIN ob),
         tg AS ($taus),
         -- residual numerators r = 2^20·y − b_q·x are exact BIGINTs
@@ -119,17 +103,10 @@ object Round53 {
     * prices the same inequality economically, J prices it the way a
     * scheduler reads it.
     */
-  val q576JainFairness: QueryDef = QueryDef(
-    "q576_jain_fairness",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r53_events")
-      s.sql(jainSql(spark = true))
-    },
-    Some(jainSql(spark = false))
-  )
+  val q576JainFairness: QueryDef = QueryDef.sql("q576_jain_fairness", "r53_", "events")(jainSql)
 
-  private def jainSql(spark: Boolean): String = {
-    val tbl = if (spark) "r53_events" else "events"
+  private def jainSql(d: Dialect): String = {
+    val tbl = d.t("events")
     s"""WITH pu AS (SELECT event_type, user_id, CAST(count(*) AS BIGINT) AS x
                     FROM $tbl GROUP BY 1, 2),
         per_type AS (SELECT event_type,
@@ -162,17 +139,10 @@ object Round53 {
     * Spend is exact integer cents; only the per-user transcendental is
     * quantized.
     */
-  val q577Atkinson: QueryDef = QueryDef(
-    "q577_atkinson",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r53_orders")
-      s.sql(atkinsonSql(spark = true))
-    },
-    Some(atkinsonSql(spark = false))
-  )
+  val q577Atkinson: QueryDef = QueryDef.sql("q577_atkinson", "r53_", "orders")(atkinsonSql)
 
-  private def atkinsonSql(spark: Boolean): String = {
-    val tbl = if (spark) "r53_orders" else "orders"
+  private def atkinsonSql(d: Dialect): String = {
+    val tbl = d.t("orders")
     s"""WITH pc AS (SELECT o_custkey,
                            CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
                     FROM $tbl GROUP BY 1),
@@ -206,22 +176,14 @@ object Round53 {
     * sizing q254's Fano ratio already suspects is wrong, with a test
     * statistic this time.
     */
-  val q578Overdispersion: QueryDef = QueryDef(
-    "q578_overdispersion",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r53_events")
-      s.sql(odSql(spark = true))
-    },
-    Some(odSql(spark = false))
-  )
+  val q578Overdispersion: QueryDef = QueryDef.sql("q578_overdispersion", "r53_", "events")(odSql)
 
-  private def odSql(spark: Boolean): String = {
-    val tbl = if (spark) "r53_events" else "events"
-    val us = if (spark) "unix_micros(ts)" else "epoch_us(ts)"
-    val idiv = if (spark) "div" else "//"
-    s"""WITH e AS (SELECT ($us $idiv 3600000000) AS hh,
-                          (($us $idiv 86400000000) + 4) % 7 AS dow,
-                          ($us $idiv 3600000000) % 24 AS hr
+  private def odSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val us = d.epochUs("ts")
+    s"""WITH e AS (SELECT ($us ${d.idiv} 3600000000) AS hh,
+                          (($us ${d.idiv} 86400000000) + 4) % 7 AS dow,
+                          ($us ${d.idiv} 3600000000) % 24 AS hr
                    FROM $tbl),
         hc AS (SELECT dow, hr, hh, CAST(count(*) AS BIGINT) AS y
                FROM e GROUP BY 1, 2, 3),

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-54 additions (q579+): process-control and agreement audits —
   * a Shewhart X̄ control chart over daily subgroups of hourly counts
@@ -25,27 +24,17 @@ object Round54 {
     * day's X̄, the limits, and the out-of-control flag; q502's CUSUM
     * accumulates small shifts, this catches the single bad day.
     */
-  val q579XbarChart: QueryDef = QueryDef(
-    "q579_xbar_chart",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r54_events")
-      s.sql(xbarSql(spark = true))
-    },
-    Some(xbarSql(spark = false))
-  )
+  val q579XbarChart: QueryDef = QueryDef.sql("q579_xbar_chart", "r54_", "events")(xbarSql)
 
-  private def xbarSql(spark: Boolean): String = {
-    val tbl = if (spark) "r54_events" else "events"
-    val us = if (spark) "unix_micros(ts)" else "epoch_us(ts)"
-    val idiv = if (spark) "div" else "//"
-    val grid =
-      if (spark) "SELECT mn, explode(sequence(mn, mx)) AS hh FROM b"
-      else "SELECT mn, unnest(range(mn, mx + 1)) AS hh FROM b"
-    s"""WITH e AS (SELECT ($us $idiv 3600000000) AS hh FROM $tbl),
+  private def xbarSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val us = d.epochUs("ts")
+    val grid = s"SELECT mn, ${d.closedRange("mn", "mx")} AS hh FROM b"
+    s"""WITH e AS (SELECT ($us ${d.idiv} 3600000000) AS hh FROM $tbl),
         cnt AS (SELECT hh, CAST(count(*) AS BIGINT) AS y FROM e GROUP BY 1),
         b AS (SELECT min(hh) AS mn, max(hh) AS mx FROM cnt),
         grid AS ($grid),
-        s AS (SELECT (g.hh - g.mn) $idiv 24 AS d, CAST(coalesce(c.y, 0) AS BIGINT) AS y
+        s AS (SELECT (g.hh - g.mn) ${d.idiv} 24 AS d, CAST(coalesce(c.y, 0) AS BIGINT) AS y
               FROM grid g LEFT JOIN cnt c ON c.hh = g.hh),
         sg AS (SELECT d, CAST(count(*) AS BIGINT) AS m,
                       CAST(sum(y) AS BIGINT) AS sy,
@@ -85,17 +74,10 @@ object Round54 {
     * FAIL to find a difference — this is the test that can PROVE
     * sameness, the A/A-validation tool.
     */
-  val q580Tost: QueryDef = QueryDef(
-    "q580_tost",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r54_events")
-      s.sql(tostSql(spark = true))
-    },
-    Some(tostSql(spark = false))
-  )
+  val q580Tost: QueryDef = QueryDef.sql("q580_tost", "r54_", "events")(tostSql)
 
-  private def tostSql(spark: Boolean): String = {
-    val tbl = if (spark) "r54_events" else "events"
+  private def tostSql(d: Dialect): String = {
+    val tbl = d.t("events")
     s"""WITH g AS (SELECT event_type,
                           CAST(count(*) AS BIGINT) AS n,
                           CAST(sum(${qi("value")}) AS BIGINT) AS sv,
@@ -146,33 +128,27 @@ object Round54 {
     * denormalized column — q572 checks the KEYS agree, this checks the
     * MONEY does.
     */
-  val q581BlandAltman: QueryDef = QueryDef(
-    "q581_bland_altman",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r54_orders")
-      Tables.lineitem(s, dir).createOrReplaceTempView("r54_lineitem")
-      s.sql(blandSql(spark = true))
-    },
-    Some(blandSql(spark = false))
-  )
+  val q581BlandAltman: QueryDef =
+    QueryDef.sql("q581_bland_altman", "r54_", "orders", "lineitem")(blandSql)
 
-  private def blandSql(spark: Boolean): String = {
-    val tbl = if (spark) "r54_" else ""
+  private def blandSql(d: Dialect): String = {
     // Σdc² needs >63 bits at bench scale (|dc| is tax-sized cents, ~1e6;
     // 150k orders ⇒ ~1e18+): DuckDB's sum(BIGINT) widens to HUGEINT on
     // its own, Spark's stays BIGINT and ANSI-overflows — so the Spark
     // side sums the per-row squares (each far inside 63 bits) in
     // DECIMAL(38,0). Both paths are exact integers; only the final
     // moments are cast to DOUBLE.
-    val sddExpr =
-      if (spark) "sum(CAST(dc * dc AS DECIMAL(38,0)))" else "sum(dc * dc)"
+    val sddExpr = d match {
+      case _: Spark => "sum(CAST(dc * dc AS DECIMAL(38,0)))"
+      case DuckDb => "sum(dc * dc)"
+    }
     s"""WITH li AS (SELECT l_orderkey,
                            CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS calc_cents
-                    FROM ${tbl}lineitem GROUP BY 1),
+                    FROM ${d.t("lineitem")} GROUP BY 1),
         pairs AS (SELECT o.o_orderkey,
                          CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT) AS stored_cents,
                          li.calc_cents
-                  FROM ${tbl}orders o JOIN li ON li.l_orderkey = o.o_orderkey),
+                  FROM ${d.t("orders")} o JOIN li ON li.l_orderkey = o.o_orderkey),
         d AS (SELECT o_orderkey,
                      stored_cents - calc_cents AS dc
               FROM pairs),

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-55 additions (q582+): measurement-reliability panel — Cronbach's
   * alpha over the five event-type daily-count "items" (is the composite
@@ -28,23 +27,15 @@ object Round55 {
     * double unit exactly once. α > 0.7 is the conventional "monitor the
     * composite" bar — the panel's headline flag.
     */
-  val q582Cronbach: QueryDef = QueryDef(
-    "q582_cronbach",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r55_events")
-      s.sql(cronbachSql(spark = true))
-    },
-    Some(cronbachSql(spark = false))
-  )
+  val q582Cronbach: QueryDef = QueryDef.sql("q582_cronbach", "r55_", "events")(cronbachSql)
 
-  private def cronbachSql(spark: Boolean): String = {
-    val tbl = if (spark) "r55_events" else "events"
-    val us = if (spark) "unix_micros(ts)" else "epoch_us(ts)"
-    val idiv = if (spark) "div" else "//"
+  private def cronbachSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val us = d.epochUs("ts")
     // No zero-fill grid: days with no events contribute 0 to every Σx
     // and Σx², so the moments need only the day-SPAN nd as n — the
     // (days × types) product the guard would flag never materializes.
-    s"""WITH e AS (SELECT ($us $idiv 86400000000) AS d, event_type FROM $tbl),
+    s"""WITH e AS (SELECT ($us ${d.idiv} 86400000000) AS d, event_type FROM $tbl),
         cnt AS (SELECT d, event_type, CAST(count(*) AS BIGINT) AS y
                 FROM e GROUP BY 1, 2),
         b AS (SELECT (max(d) - min(d) + 1) AS nd FROM e),
@@ -88,23 +79,18 @@ object Round55 {
     * the stacked filters are measuring different things and a curation
     * funnel multiplying them is incoherent.
     */
-  val q583FleissKappa: QueryDef = QueryDef(
-    "q583_fleiss_kappa",
-    (s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("r55_documents")
-      s.sql(fleissSql(spark = true))
-    },
-    Some(fleissSql(spark = false))
-  )
+  val q583FleissKappa: QueryDef = QueryDef.sql("q583_fleiss_kappa", "r55_", "documents")(fleissSql)
 
-  private def fleissSql(spark: Boolean): String = {
-    val tbl = if (spark) "r55_documents" else "documents"
-    val wc =
-      if (spark) "size(split(text, ' '))"
-      else "len(string_split(text, ' '))"
-    val dc =
-      if (spark) "size(array_distinct(split(text, ' ')))"
-      else "len(list_distinct(string_split(text, ' ')))"
+  private def fleissSql(d: Dialect): String = {
+    val tbl = d.t("documents")
+    val wc = d match {
+      case _: Spark => "size(split(text, ' '))"
+      case DuckDb => "len(string_split(text, ' '))"
+    }
+    val dc = d match {
+      case _: Spark => "size(array_distinct(split(text, ' ')))"
+      case DuckDb => "len(list_distinct(string_split(text, ' ')))"
+    }
     s"""WITH r AS (SELECT doc_id,
                      CAST(CASE WHEN length(text) >= 200 THEN 1 ELSE 0 END AS BIGINT)
                        + CAST(CASE WHEN $wc >= 40 THEN 1 ELSE 0 END AS BIGINT)
@@ -140,23 +126,13 @@ object Round55 {
     * and rough size, and the PAIR (alpha, SB) is the diagnostic: SB ≫ α
     * means one deviant item, not an unreliable composite.
     */
-  val q584SplitHalf: QueryDef = QueryDef(
-    "q584_split_half",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r55_events")
-      s.sql(splitHalfSql(spark = true))
-    },
-    Some(splitHalfSql(spark = false))
-  )
+  val q584SplitHalf: QueryDef = QueryDef.sql("q584_split_half", "r55_", "events")(splitHalfSql)
 
-  private def splitHalfSql(spark: Boolean): String = {
-    val tbl = if (spark) "r55_events" else "events"
-    val us = if (spark) "unix_micros(ts)" else "epoch_us(ts)"
-    val idiv = if (spark) "div" else "//"
-    val grid =
-      if (spark) "SELECT explode(sequence(mn, mx)) AS d FROM b"
-      else "SELECT unnest(range(mn, mx + 1)) AS d FROM b"
-    s"""WITH e AS (SELECT ($us $idiv 86400000000) AS d, event_type FROM $tbl),
+  private def splitHalfSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val us = d.epochUs("ts")
+    val grid = s"SELECT ${d.closedRange("mn", "mx")} AS d FROM b"
+    s"""WITH e AS (SELECT ($us ${d.idiv} 86400000000) AS d, event_type FROM $tbl),
         tr AS (SELECT event_type,
                       CAST(row_number() OVER (ORDER BY event_type) AS BIGINT) AS rk
                FROM (SELECT DISTINCT event_type FROM e) t),

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-56 additions (q585+): sequential-drift panel — a Page–Hinkley
   * increase detector over the daily event counts (the classic
@@ -29,23 +28,13 @@ object Round56 {
     * the verdict); q502's CUSUM tracks a KNOWN target mean, PH tracks
     * the self-estimated one.
     */
-  val q585PageHinkley: QueryDef = QueryDef(
-    "q585_page_hinkley",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r56_events")
-      s.sql(phSql(spark = true))
-    },
-    Some(phSql(spark = false))
-  )
+  val q585PageHinkley: QueryDef = QueryDef.sql("q585_page_hinkley", "r56_", "events")(phSql)
 
-  private def phSql(spark: Boolean): String = {
-    val tbl = if (spark) "r56_events" else "events"
-    val us = if (spark) "unix_micros(ts)" else "epoch_us(ts)"
-    val idiv = if (spark) "div" else "//"
-    val grid =
-      if (spark) "SELECT explode(sequence(mn, mx)) AS d FROM b"
-      else "SELECT unnest(range(mn, mx + 1)) AS d FROM b"
-    s"""WITH e AS (SELECT ($us $idiv 86400000000) AS d FROM $tbl),
+  private def phSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val us = d.epochUs("ts")
+    val grid = s"SELECT ${d.closedRange("mn", "mx")} AS d FROM b"
+    s"""WITH e AS (SELECT ($us ${d.idiv} 86400000000) AS d FROM $tbl),
         cnt AS (SELECT d, CAST(count(*) AS BIGINT) AS y FROM e GROUP BY 1),
         b AS (SELECT min(d) AS mn, max(d) AS mx FROM e),
         days AS ($grid),
@@ -84,20 +73,13 @@ object Round56 {
     * "did volume die", this asks "did the MIX shift"). Shares ride
     * integer counts; the only transcendental is the constant ln 40.
     */
-  val q586HoeffdingMonitor: QueryDef = QueryDef(
-    "q586_hoeffding_monitor",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r56_events")
-      s.sql(hoeffdingSql(spark = true))
-    },
-    Some(hoeffdingSql(spark = false))
-  )
+  val q586HoeffdingMonitor: QueryDef =
+    QueryDef.sql("q586_hoeffding_monitor", "r56_", "events")(hoeffdingSql)
 
-  private def hoeffdingSql(spark: Boolean): String = {
-    val tbl = if (spark) "r56_events" else "events"
-    val us = if (spark) "unix_micros(ts)" else "epoch_us(ts)"
-    val idiv = if (spark) "div" else "//"
-    s"""WITH e AS (SELECT ($us $idiv 86400000000) AS d,
+  private def hoeffdingSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val us = d.epochUs("ts")
+    s"""WITH e AS (SELECT ($us ${d.idiv} 86400000000) AS d,
                           CAST(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
                             AS BIGINT) AS x
                    FROM $tbl),
@@ -131,21 +113,13 @@ object Round56 {
     * 2^-20-quantized pre-sum; OLS moments over the quantized grid are
     * exact BIGINTs.
     */
-  val q587TaylorLaw: QueryDef = QueryDef(
-    "q587_taylor_law",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r56_events")
-      s.sql(taylorSql(spark = true))
-    },
-    Some(taylorSql(spark = false))
-  )
+  val q587TaylorLaw: QueryDef = QueryDef.sql("q587_taylor_law", "r56_", "events")(taylorSql)
 
-  private def taylorSql(spark: Boolean): String = {
-    val tbl = if (spark) "r56_events" else "events"
-    val us = if (spark) "unix_micros(ts)" else "epoch_us(ts)"
-    val idiv = if (spark) "div" else "//"
-    s"""WITH e AS (SELECT ($us $idiv 86400000000) AS d,
-                          (($us $idiv 3600000000) % 24) AS hh, event_type
+  private def taylorSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val us = d.epochUs("ts")
+    s"""WITH e AS (SELECT ($us ${d.idiv} 86400000000) AS d,
+                          (($us ${d.idiv} 3600000000) % 24) AS hh, event_type
                    FROM $tbl),
         cnt AS (SELECT event_type, hh, d, CAST(count(*) AS BIGINT) AS y
                 FROM e GROUP BY 1, 2, 3),

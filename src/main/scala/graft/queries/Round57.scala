@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-57 additions (q588+): inequality-decomposition panel over
   * per-customer order spend — the Theil index with its exact
@@ -19,11 +18,11 @@ import graft.sources.Tables
 object Round57 {
 
   /** Per-customer spend cents joined to nation — shared by all three. */
-  private def spendCte(tbl: String): String =
+  private def spendCte(d: Dialect): String =
     s"""sp AS (SELECT o.o_custkey AS ck, c.c_nationkey AS nk,
                       CAST(sum(CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT))
                         AS BIGINT) AS x
-               FROM ${tbl}orders o JOIN ${tbl}customer c
+               FROM ${d.t("orders")} o JOIN ${d.t("customer")} c
                  ON c.c_custkey = o.o_custkey
                GROUP BY 1, 2),
         n AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS xx
@@ -38,19 +37,11 @@ object Round57 {
     * cross-nation sum, so both engines add the same 25 integers in any
     * order. Additivity survives to ~2^-20 — the spec pins it.
     */
-  val q588TheilDecomposition: QueryDef = QueryDef(
-    "q588_theil_decomposition",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r57_orders")
-      Tables.customer(s, dir).createOrReplaceTempView("r57_customer")
-      s.sql(theilSql(spark = true))
-    },
-    Some(theilSql(spark = false))
-  )
+  val q588TheilDecomposition: QueryDef =
+    QueryDef.sql("q588_theil_decomposition", "r57_", "orders", "customer")(theilSql)
 
-  private def theilSql(spark: Boolean): String = {
-    val tbl = if (spark) "r57_" else ""
-    s"""WITH ${spendCte(tbl)},
+  private def theilSql(d: Dialect): String = {
+    s"""WITH ${spendCte(d)},
         tt AS (SELECT CAST(sum(${qi(
         """(CAST(sp.x AS DOUBLE) * n.n / n.xx)
            * ln(CAST(sp.x AS DOUBLE) * n.n / n.xx)""")}) AS BIGINT) AS t20
@@ -96,19 +87,10 @@ object Round57 {
     * severed-arm benchmark of the inequality panel: no transcendental,
     * no quantization, bit-identical by construction.
     */
-  val q589Hoover: QueryDef = QueryDef(
-    "q589_hoover",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r57_orders")
-      Tables.customer(s, dir).createOrReplaceTempView("r57_customer")
-      s.sql(hooverSql(spark = true))
-    },
-    Some(hooverSql(spark = false))
-  )
+  val q589Hoover: QueryDef = QueryDef.sql("q589_hoover", "r57_", "orders", "customer")(hooverSql)
 
-  private def hooverSql(spark: Boolean): String = {
-    val tbl = if (spark) "r57_" else ""
-    s"""WITH ${spendCte(tbl)},
+  private def hooverSql(d: Dialect): String = {
+    s"""WITH ${spendCte(d)},
         d AS (SELECT CAST(sum(abs(n.n * sp.x - n.xx)) AS BIGINT) AS num
               FROM sp CROSS JOIN n)
         SELECT n.n AS n_customers, n.xx AS total_cents,
@@ -125,19 +107,9 @@ object Round57 {
     * the projection. Reads the tail-vs-base structure q202's single
     * Gini number integrates away.
     */
-  val q590Palma: QueryDef = QueryDef(
-    "q590_palma",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r57_orders")
-      Tables.customer(s, dir).createOrReplaceTempView("r57_customer")
-      s.sql(palmaSql(spark = true))
-    },
-    Some(palmaSql(spark = false))
-  )
+  val q590Palma: QueryDef = QueryDef.sql("q590_palma", "r57_", "orders", "customer")(palmaSql)
 
-  private def palmaSql(spark: Boolean): String = {
-    val tbl = if (spark) "r57_" else ""
-    val idiv = if (spark) "div" else "//"
+  private def palmaSql(d: Dialect): String = {
     // r14 Spark branch: the global spend-rank window had NO partition
     // key — the customer dimension ran through ONE task (guide §2.4/§5).
     // Bucketed prefix-sum rank (the operators.Ranks discipline, inline
@@ -145,8 +117,8 @@ object Round57 {
     // sums are near-continuous so the cent-million bands spread, and
     // only the band HISTOGRAM sees an unpartitioned window. Ranks are
     // exact, so the oracle keeps the textbook row_number form.
-    val rkCte =
-      if (spark)
+    val rkCte = d match {
+      case _: Spark =>
         """rkb AS (SELECT x, ck, -(x div 1048576) AS bkt FROM sp),
         rbo AS (SELECT bkt,
                        coalesce(sum(c) OVER (ORDER BY bkt
@@ -158,14 +130,15 @@ object Round57 {
                       CAST(rbo.off + row_number() OVER (PARTITION BY bkt
                         ORDER BY x DESC, ck) AS BIGINT) AS r
                FROM rkb JOIN rbo USING (bkt))"""
-      else
+      case DuckDb =>
         """rk AS (SELECT x,
                       CAST(row_number() OVER (ORDER BY x DESC, ck) AS BIGINT) AS r
                FROM sp)"""
-    s"""WITH ${spendCte(tbl)},
+    }
+    s"""WITH ${spendCte(d)},
         $rkCte,
-        cut AS (SELECT n.n, n.xx, (n.n $idiv 10) AS d10,
-                       ((4 * n.n) $idiv 10) AS b40
+        cut AS (SELECT n.n, n.xx, (n.n ${d.idiv} 10) AS d10,
+                       ((4 * n.n) ${d.idiv} 10) AS b40
                 FROM n),
         agg AS (SELECT CAST(sum(CASE WHEN rk.r <= cut.d10 THEN rk.x ELSE 0 END)
                          AS BIGINT) AS top_cents,

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-58 additions (q591+): shrinkage / model-choice panel — an
   * empirical-Bayes beta-binomial shrink of per-user purchase shares
@@ -29,17 +28,11 @@ object Round58 {
     * shrinkage, and how often shrinkage flips a user across the pooled
     * mean (it never should — shrinkage is a contraction toward p̄).
     */
-  val q591BetaBinomialShrink: QueryDef = QueryDef(
-    "q591_beta_binomial_shrink",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r58_events")
-      s.sql(bbSql(spark = true))
-    },
-    Some(bbSql(spark = false))
-  )
+  val q591BetaBinomialShrink: QueryDef =
+    QueryDef.sql("q591_beta_binomial_shrink", "r58_", "events")(bbSql)
 
-  private def bbSql(spark: Boolean): String = {
-    val tbl = if (spark) "r58_events" else "events"
+  private def bbSql(d: Dialect): String = {
+    val tbl = d.t("events")
     s"""WITH u AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n,
                           CAST(sum(CASE WHEN event_type = 'purchase'
                                         THEN 1 ELSE 0 END) AS BIGINT) AS k
@@ -94,21 +87,13 @@ object Round58 {
     * exact cents; per-group rationals quantized before every
     * cross-group sum.
     */
-  val q592JamesStein: QueryDef = QueryDef(
-    "q592_james_stein",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r58_orders")
-      Tables.customer(s, dir).createOrReplaceTempView("r58_customer")
-      s.sql(jsSql(spark = true))
-    },
-    Some(jsSql(spark = false))
-  )
+  val q592JamesStein: QueryDef =
+    QueryDef.sql("q592_james_stein", "r58_", "orders", "customer")(jsSql)
 
-  private def jsSql(spark: Boolean): String = {
-    val tbl = if (spark) "r58_" else ""
+  private def jsSql(d: Dialect): String = {
     s"""WITH o AS (SELECT c.c_nationkey AS nk,
                           CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-                   FROM ${tbl}orders o JOIN ${tbl}customer c
+                   FROM ${d.t("orders")} o JOIN ${d.t("customer")} c
                      ON c.c_custkey = o.o_custkey),
         gmom AS (SELECT nk, CAST(count(*) AS BIGINT) AS n,
                         CAST(sum(cents) AS BIGINT) AS sc,
@@ -156,23 +141,13 @@ object Round58 {
     * and ln BF₁₀ ≈ −ΔBIC/2 — "strong evidence" for weekly seasonality
     * at ln BF > 3 (the Kass–Raftery shelf, cited not invented).
     */
-  val q593BicSeasonality: QueryDef = QueryDef(
-    "q593_bic_seasonality",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r58_events")
-      s.sql(bicSql(spark = true))
-    },
-    Some(bicSql(spark = false))
-  )
+  val q593BicSeasonality: QueryDef = QueryDef.sql("q593_bic_seasonality", "r58_", "events")(bicSql)
 
-  private def bicSql(spark: Boolean): String = {
-    val tbl = if (spark) "r58_events" else "events"
-    val us = if (spark) "unix_micros(ts)" else "epoch_us(ts)"
-    val idiv = if (spark) "div" else "//"
-    val grid =
-      if (spark) "SELECT explode(sequence(mn, mx)) AS d FROM b"
-      else "SELECT unnest(range(mn, mx + 1)) AS d FROM b"
-    s"""WITH e AS (SELECT ($us $idiv 86400000000) AS d FROM $tbl),
+  private def bicSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val us = d.epochUs("ts")
+    val grid = s"SELECT ${d.closedRange("mn", "mx")} AS d FROM b"
+    s"""WITH e AS (SELECT ($us ${d.idiv} 86400000000) AS d FROM $tbl),
         cnt AS (SELECT d, CAST(count(*) AS BIGINT) AS y FROM e GROUP BY 1),
         b AS (SELECT min(d) AS mn, max(d) AS mx FROM e),
         days AS ($grid),

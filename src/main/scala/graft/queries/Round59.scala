@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-59 additions (q594+): multiple-testing / experiment-design
   * panel — a Holm step-down over the five "does this event type's mean
@@ -27,32 +26,26 @@ object Round59 {
     * is what separates Holm from naive per-rank Bonferroni. Group
     * moments are 2^-20-quantized pre-sum exactly as q580.
     */
-  val q594HolmStepdown: QueryDef = QueryDef(
-    "q594_holm_stepdown",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r59_events")
-      s.sql(holmSql(spark = true))
-    },
-    Some(holmSql(spark = false))
-  )
+  val q594HolmStepdown: QueryDef = QueryDef.sql("q594_holm_stepdown", "r59_", "events")(holmSql)
 
-  private def holmSql(spark: Boolean): String = {
-    val tbl = if (spark) "r59_events" else "events"
-    val crit =
-      if (spark)
+  private def holmSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val crit = d match {
+      case _: Spark =>
         """SELECT * FROM VALUES
              (1, CAST(2.5758293035489 AS DOUBLE)),
              (2, CAST(2.4977054744123737 AS DOUBLE)),
              (3, CAST(2.3939797998185104 AS DOUBLE)),
              (4, CAST(2.2414027276049464 AS DOUBLE)),
              (5, CAST(1.9599639845400536 AS DOUBLE)) AS t(rnk, c)"""
-      else
+      case DuckDb =>
         """SELECT * FROM (VALUES
              (1, CAST(2.5758293035489 AS DOUBLE)),
              (2, CAST(2.4977054744123737 AS DOUBLE)),
              (3, CAST(2.3939797998185104 AS DOUBLE)),
              (4, CAST(2.2414027276049464 AS DOUBLE)),
              (5, CAST(1.9599639845400536 AS DOUBLE))) AS t(rnk, c)"""
+    }
     s"""WITH g AS (SELECT event_type,
                           CAST(count(*) AS BIGINT) AS n,
                           CAST(sum(${qi("value")}) AS BIGINT) AS sv,
@@ -106,23 +99,15 @@ object Round59 {
     * bigger than what this sample could reliably detect (i.e. is the
     * "drift" readout powered, or noise-level by design).
     */
-  val q595MdePanel: QueryDef = QueryDef(
-    "q595_mde_panel",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r59_events")
-      s.sql(mdeSql(spark = true))
-    },
-    Some(mdeSql(spark = false))
-  )
+  val q595MdePanel: QueryDef = QueryDef.sql("q595_mde_panel", "r59_", "events")(mdeSql)
 
-  private def mdeSql(spark: Boolean): String = {
-    val tbl = if (spark) "r59_events" else "events"
-    val us = if (spark) "unix_micros(ts)" else "epoch_us(ts)"
-    val idiv = if (spark) "div" else "//"
-    s"""WITH e AS (SELECT ($us $idiv 86400000000) AS d, event_type FROM $tbl),
+  private def mdeSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val us = d.epochUs("ts")
+    s"""WITH e AS (SELECT ($us ${d.idiv} 86400000000) AS d, event_type FROM $tbl),
         b AS (SELECT min(d) AS mn, max(d) AS mx FROM e),
         h AS (SELECT e.event_type,
-                     CASE WHEN e.d < b.mn + (b.mx - b.mn + 1) $idiv 2
+                     CASE WHEN e.d < b.mn + (b.mx - b.mn + 1) ${d.idiv} 2
                           THEN 1 ELSE 2 END AS half
               FROM e CROSS JOIN b),
         nh AS (SELECT half, CAST(count(*) AS BIGINT) AS n FROM h GROUP BY 1),

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-60 additions (q596+): effect-size & robust-location panel — the
   * "how BIG is the difference" companions to the test panels (q580 TOST,
@@ -24,17 +23,10 @@ object Round60 {
     * d·(1 − 3/(4(n_a+n_b) − 9)). The conventional magnitude label rides
     * the standard 0.2/0.5/0.8 shelves (Cohen '88, cited not invented).
     */
-  val q596CohensD: QueryDef = QueryDef(
-    "q596_cohens_d",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r60_events")
-      s.sql(cohenSql(spark = true))
-    },
-    Some(cohenSql(spark = false))
-  )
+  val q596CohensD: QueryDef = QueryDef.sql("q596_cohens_d", "r60_", "events")(cohenSql)
 
-  private def cohenSql(spark: Boolean): String = {
-    val tbl = if (spark) "r60_events" else "events"
+  private def cohenSql(d: Dialect): String = {
+    val tbl = d.t("events")
     s"""WITH g AS (SELECT event_type,
                           CAST(count(*) AS BIGINT) AS n,
                           CAST(sum(${qi("value")}) AS BIGINT) AS sv,
@@ -87,17 +79,10 @@ object Round60 {
     * gt + lt + ties = n₁·n₂ is emitted as its own audited invariant.
     * Magnitude shelves 0.147/0.33/0.474 (Romano et al. 2006).
     */
-  val q597CliffsDelta: QueryDef = QueryDef(
-    "q597_cliffs_delta",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r60_events")
-      s.sql(cliffSql(spark = true))
-    },
-    Some(cliffSql(spark = false))
-  )
+  val q597CliffsDelta: QueryDef = QueryDef.sql("q597_cliffs_delta", "r60_", "events")(cliffSql)
 
-  private def cliffSql(spark: Boolean): String = {
-    val tbl = if (spark) "r60_events" else "events"
+  private def cliffSql(d: Dialect): String = {
+    val tbl = d.t("events")
     s"""WITH v AS (SELECT CAST(round(value * 100) AS BIGINT) AS v,
                           CAST(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END
                             AS BIGINT) AS cx,
@@ -149,18 +134,11 @@ object Round60 {
     * location row beside the raw mean: when trimmed ≪ mean the tail,
     * not the body, is carrying the metric.
     */
-  val q598TrimmedWinsorized: QueryDef = QueryDef(
-    "q598_trimmed_winsorized",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r60_events")
-      s.sql(trimSql(spark = true))
-    },
-    Some(trimSql(spark = false))
-  )
+  val q598TrimmedWinsorized: QueryDef =
+    QueryDef.sql("q598_trimmed_winsorized", "r60_", "events")(trimSql)
 
-  private def trimSql(spark: Boolean): String = {
-    val tbl = if (spark) "r60_events" else "events"
-    val idiv = if (spark) "div" else "//"
+  private def trimSql(d: Dialect): String = {
+    val tbl = d.t("events")
     s"""WITH v AS (SELECT event_type, event_id,
                           CAST(round(value * 100) AS BIGINT) AS c
                    FROM $tbl),
@@ -169,7 +147,7 @@ object Round60 {
                         ORDER BY c, event_id) AS BIGINT) AS r
                FROM v),
         nt AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-                      CAST(count(*) AS BIGINT) $idiv 10 AS k
+                      CAST(count(*) AS BIGINT) ${d.idiv} 10 AS k
                FROM v GROUP BY 1),
         bounds AS (SELECT rk.event_type,
                           max(CASE WHEN rk.r = nt.k + 1 THEN rk.c END) AS lo,

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-61 additions (q599+): temporal-structure panel — the Kuiper
   * test of hour-of-day uniformity (the rotation-invariant KS variant a
@@ -27,23 +26,13 @@ object Round61 {
     * invariant to rotating the clock's zero — a peak at 23:30 scores
     * the same as one at 00:30.
     */
-  val q599Kuiper: QueryDef = QueryDef(
-    "q599_kuiper",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r61_events")
-      s.sql(kuiperSql(spark = true))
-    },
-    Some(kuiperSql(spark = false))
-  )
+  val q599Kuiper: QueryDef = QueryDef.sql("q599_kuiper", "r61_", "events")(kuiperSql)
 
-  private def kuiperSql(spark: Boolean): String = {
-    val tbl = if (spark) "r61_events" else "events"
-    val us = if (spark) "unix_micros(ts)" else "epoch_us(ts)"
-    val idiv = if (spark) "div" else "//"
-    val bins =
-      if (spark) "SELECT explode(sequence(0, 23)) AS h"
-      else "SELECT unnest(range(0, 24)) AS h"
-    s"""WITH e AS (SELECT (($us $idiv 3600000000) % 24) AS h FROM $tbl),
+  private def kuiperSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val us = d.epochUs("ts")
+    val bins = s"SELECT ${d.closedRange(0, 23)} AS h"
+    s"""WITH e AS (SELECT (($us ${d.idiv} 3600000000) % 24) AS h FROM $tbl),
         cnt AS (SELECT h, CAST(count(*) AS BIGINT) AS c FROM e GROUP BY 1),
         bins AS ($bins),
         z AS (SELECT bins.h, CAST(coalesce(cnt.c, 0) AS BIGINT) AS c
@@ -70,18 +59,11 @@ object Round61 {
     * [0, 24), Rayleigh z = n·R̄² with the z > ln 20 ≈ 2.9957 rejection
     * shelf (p ≈ e^{−z} at α = 0.05, cited not invented).
     */
-  val q600CircularMean: QueryDef = QueryDef(
-    "q600_circular_mean",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r61_events")
-      s.sql(circSql(spark = true))
-    },
-    Some(circSql(spark = false))
-  )
+  val q600CircularMean: QueryDef = QueryDef.sql("q600_circular_mean", "r61_", "events")(circSql)
 
-  private def circSql(spark: Boolean): String = {
-    val tbl = if (spark) "r61_events" else "events"
-    val us = if (spark) "unix_micros(ts)" else "epoch_us(ts)"
+  private def circSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val us = d.epochUs("ts")
     s"""WITH e AS (SELECT (($us) % 86400000000) AS usd FROM $tbl),
         t AS (SELECT 2 * pi() * usd / CAST(86400000000 AS DOUBLE) AS theta
               FROM e),
@@ -116,18 +98,11 @@ object Round61 {
     * event type tells you about the next. All 25 + 5 transcendental
     * terms 2^-20-quantized pre-sum.
     */
-  val q601MarkovEntropy: QueryDef = QueryDef(
-    "q601_markov_entropy",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r61_events")
-      s.sql(markovSql(spark = true))
-    },
-    Some(markovSql(spark = false))
-  )
+  val q601MarkovEntropy: QueryDef = QueryDef.sql("q601_markov_entropy", "r61_", "events")(markovSql)
 
-  private def markovSql(spark: Boolean): String = {
-    val tbl = if (spark) "r61_events" else "events"
-    val us = if (spark) "unix_micros(ts)" else "epoch_us(ts)"
+  private def markovSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val us = d.epochUs("ts")
     s"""WITH e AS (SELECT user_id, event_type, $us AS u, event_id FROM $tbl),
         p AS (SELECT lag(event_type) OVER (PARTITION BY user_id
                 ORDER BY u, event_id) AS a,

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-62 additions (q602+): physical-design advisor panel — the three
   * numbers a 100 TB lake layout decision actually consumes: a dictionary-
@@ -42,17 +41,11 @@ object Round62 {
   private val encodingCols = Seq("l_orderkey", "l_partkey", "l_suppkey",
     "l_linenumber", "l_quantity", "l_returnflag", "l_linestatus", "l_shipdate")
 
-  val q602EncodingAdvisor: QueryDef = QueryDef(
-    "q602_encoding_advisor",
-    (s, dir) => {
-      Tables.lineitem(s, dir).createOrReplaceTempView("r62_lineitem")
-      s.sql(encodingSql(spark = true))
-    },
-    Some(encodingSql(spark = false))
-  )
+  val q602EncodingAdvisor: QueryDef =
+    QueryDef.sql("q602_encoding_advisor", "r62_", "lineitem")(encodingSql)
 
-  private def encodingSql(spark: Boolean): String = {
-    val tbl = if (spark) "r62_lineitem" else "lineitem"
+  private def encodingSql(d: Dialect): String = {
+    val tbl = d.t("lineitem")
     val branches = encodingCols.map { c =>
       s"""SELECT '$c' AS col_name, CAST(count(*) AS BIGINT) AS n_rows,
                  CAST(count(DISTINCT $c) AS BIGINT) AS ndv
@@ -77,27 +70,19 @@ object Round62 {
     * divides once. THE table to read before choosing a 100 TB layout's
     * partitioning column.
     */
-  val q603PartitionAdvisor: QueryDef = QueryDef(
-    "q603_partition_advisor",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r62_events")
-      s.sql(partitionSql(spark = true))
-    },
-    Some(partitionSql(spark = false))
-  )
+  val q603PartitionAdvisor: QueryDef =
+    QueryDef.sql("q603_partition_advisor", "r62_", "events")(partitionSql)
 
-  private def partitionSql(spark: Boolean): String = {
-    val tbl = if (spark) "r62_events" else "events"
-    val us = if (spark) "unix_micros(ts)" else "epoch_us(ts)"
-    val idiv = if (spark) "div" else "//"
+  private def partitionSql(d: Dialect): String = {
+    val tbl = d.t("events")
+    val us = d.epochUs("ts")
     val keys = Seq(
-      "day" -> s"CAST(($us $idiv 86400000000) AS VARCHAR)",
-      "hour_of_day" -> s"CAST((($us $idiv 3600000000) % 24) AS VARCHAR)",
+      "day" -> s"CAST(($us ${d.idiv} 86400000000) AS ${d.str})",
+      "hour_of_day" -> s"CAST((($us ${d.idiv} 3600000000) % 24) AS ${d.str})",
       "event_type" -> "event_type",
-      "user_mod_256" -> "CAST((user_id % 256) AS VARCHAR)")
+      "user_mod_256" -> s"CAST((user_id % 256) AS ${d.str})")
     val keyExprs = keys.map { case (name, expr) =>
-      val e = if (spark) expr.replace("AS VARCHAR", "AS STRING") else expr
-      s"""SELECT '$name' AS key_name, $e AS pk FROM $tbl"""
+      s"""SELECT '$name' AS key_name, $expr AS pk FROM $tbl"""
     }.mkString("\n          UNION ALL\n          ")
     s"""WITH keyed AS (
           $keyExprs),
@@ -129,23 +114,15 @@ object Round62 {
     * EXACT join hit count — the number that decides whether shipping
     * the filter to the scan is worth it.
     */
-  val q604BloomSizing: QueryDef = QueryDef(
-    "q604_bloom_sizing",
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("r62_orders")
-      Tables.customer(s, dir).createOrReplaceTempView("r62_customer")
-      s.sql(bloomSql(spark = true))
-    },
-    Some(bloomSql(spark = false))
-  )
+  val q604BloomSizing: QueryDef =
+    QueryDef.sql("q604_bloom_sizing", "r62_", "orders", "customer")(bloomSql)
 
-  private def bloomSql(spark: Boolean): String = {
-    val tbl = if (spark) "r62_" else ""
-    s"""WITH build AS (SELECT c_custkey FROM ${tbl}customer WHERE c_acctbal < 0),
+  private def bloomSql(d: Dialect): String = {
+    s"""WITH build AS (SELECT c_custkey FROM ${d.t("customer")} WHERE c_acctbal < 0),
         nb AS (SELECT CAST(count(*) AS BIGINT) AS n FROM build),
-        probe AS (SELECT CAST(count(*) AS BIGINT) AS n FROM ${tbl}orders),
+        probe AS (SELECT CAST(count(*) AS BIGINT) AS n FROM ${d.t("orders")}),
         hits AS (SELECT CAST(count(*) AS BIGINT) AS n
-                 FROM ${tbl}orders o JOIN build b ON b.c_custkey = o.o_custkey),
+                 FROM ${d.t("orders")} o JOIN build b ON b.c_custkey = o.o_custkey),
         f AS (SELECT nb.n AS n_build, probe.n AS n_probe, hits.n AS n_hits,
                      CAST(ceil(7 * nb.n / ln(CAST(2 AS DOUBLE))) AS BIGINT)
                        AS m_bits,

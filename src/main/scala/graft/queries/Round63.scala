@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.queries.SqlFragments._
-import graft.sources.Tables
 
 /** Round-63 additions (q605+): forecast-evaluation panel over the daily
   * event volume, last-7-days holdout — the metrics duel between the two
@@ -21,14 +20,11 @@ object Round63 {
   /** Zero-filled daily series with naive/seasonal lags and the
     * last-7-days holdout marker — shared by all three queries.
     */
-  private def seriesCte(spark: Boolean, view: String): String = {
-    val tbl = if (spark) view else "events"
-    val us = if (spark) "unix_micros(ts)" else "epoch_us(ts)"
-    val idiv = if (spark) "div" else "//"
-    val grid =
-      if (spark) "SELECT explode(sequence(mn, mx)) AS d FROM b"
-      else "SELECT unnest(range(mn, mx + 1)) AS d FROM b"
-    s"""e AS (SELECT ($us $idiv 86400000000) AS d FROM $tbl),
+  private def seriesCte(d: Dialect): String = {
+    val tbl = d.t("events")
+    val us = d.epochUs("ts")
+    val grid = s"SELECT ${d.closedRange("mn", "mx")} AS d FROM b"
+    s"""e AS (SELECT ($us ${d.idiv} 86400000000) AS d FROM $tbl),
         cnt AS (SELECT d, CAST(count(*) AS BIGINT) AS y FROM e GROUP BY 1),
         b AS (SELECT min(d) AS mn, max(d) AS mx FROM e),
         days AS ($grid),
@@ -50,16 +46,9 @@ object Round63 {
     * √(SSE_model/SSE_naive) — a pure integer SSE ratio; the naive row's
     * U2 ≡ 1 is the emitted sanity cell.
     */
-  val q605ForecastDuel: QueryDef = QueryDef(
-    "q605_forecast_duel",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r63_events")
-      s.sql(duelSql(spark = true))
-    },
-    Some(duelSql(spark = false))
-  )
+  val q605ForecastDuel: QueryDef = QueryDef.sql("q605_forecast_duel", "r63_", "events")(duelSql)
 
-  private def duelSql(spark: Boolean): String = {
+  private def duelSql(d: Dialect): String = {
     def modelAgg(f: String, name: String): String =
       s"""SELECT '$name' AS model,
                  CAST(count(*) AS BIGINT) AS n_test,
@@ -72,7 +61,7 @@ object Round63 {
                    AS BIGINT) AS smape20,
                  CAST(sum((y1 - y) * (y1 - y)) AS BIGINT) AS sse_naive
           FROM s WHERE holdout = 1 AND y1 IS NOT NULL AND y7 IS NOT NULL"""
-    s"""WITH ${seriesCte(spark, "r63_events")},
+    s"""WITH ${seriesCte(d)},
         duel AS (
           ${modelAgg("y1", "naive")}
           UNION ALL
@@ -94,24 +83,17 @@ object Round63 {
     * holdout band f ± q90; coverage is an integer count over the 7
     * holdout days. Distribution-free, no variance estimate anywhere.
     */
-  val q606ConformalCoverage: QueryDef = QueryDef(
-    "q606_conformal_coverage",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r63_events")
-      s.sql(conformalSql(spark = true))
-    },
-    Some(conformalSql(spark = false))
-  )
+  val q606ConformalCoverage: QueryDef =
+    QueryDef.sql("q606_conformal_coverage", "r63_", "events")(conformalSql)
 
-  private def conformalSql(spark: Boolean): String = {
-    val idiv = if (spark) "div" else "//"
-    s"""WITH ${seriesCte(spark, "r63_events")},
+  private def conformalSql(d: Dialect): String = {
+    s"""WITH ${seriesCte(d)},
         tr AS (SELECT t, abs(y - y1) AS r
                FROM s WHERE holdout = 0 AND y1 IS NOT NULL),
         m AS (SELECT CAST(count(*) AS BIGINT) AS m FROM tr),
         rk AS (SELECT r, CAST(row_number() OVER (ORDER BY r, t) AS BIGINT) AS rn
                FROM tr),
-        q AS (SELECT CAST(max(CASE WHEN rk.rn = ((9 * m.m + 9) $idiv 10)
+        q AS (SELECT CAST(max(CASE WHEN rk.rn = ((9 * m.m + 9) ${d.idiv} 10)
                                    THEN rk.r END) AS BIGINT) AS q90
               FROM rk CROSS JOIN m),
         te AS (SELECT CAST(count(*) AS BIGINT) AS n_test,
@@ -131,17 +113,10 @@ object Round63 {
     * ever materialize). Emits the three SSEs and the combo_beats_both
     * verdict, the demonstration behind every ensemble average.
     */
-  val q607ForecastCombo: QueryDef = QueryDef(
-    "q607_forecast_combo",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r63_events")
-      s.sql(comboSql(spark = true))
-    },
-    Some(comboSql(spark = false))
-  )
+  val q607ForecastCombo: QueryDef = QueryDef.sql("q607_forecast_combo", "r63_", "events")(comboSql)
 
-  private def comboSql(spark: Boolean): String =
-    s"""WITH ${seriesCte(spark, "r63_events")},
+  private def comboSql(d: Dialect): String =
+    s"""WITH ${seriesCte(d)},
         agg AS (SELECT
                   CAST(count(*) AS BIGINT) AS n_test,
                   CAST(sum((2 * y - 2 * y1) * (2 * y - 2 * y1)) AS BIGINT)

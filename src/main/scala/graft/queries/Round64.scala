@@ -78,20 +78,12 @@ object Round64 {
     ("orders", 32, Seq("o_orderstatus", "o_orderpriority")),
     ("lineitem", 68, Seq("l_returnflag", "l_linestatus")))
 
-  val q609BroadcastAdvisor: QueryDef = QueryDef(
-    "q609_broadcast_advisor",
-    (s, dir) => {
-      advisorTables.foreach { case (t, _, _) =>
-        Tables.table(s, dir, t).createOrReplaceTempView(s"r64_$t")
-      }
-      s.sql(broadcastSql(spark = true))
-    },
-    Some(broadcastSql(spark = false))
-  )
+  val q609BroadcastAdvisor: QueryDef =
+    QueryDef.sql("q609_broadcast_advisor", "r64_", advisorTables.map(_._1): _*)(broadcastSql)
 
-  private def broadcastSql(spark: Boolean): String = {
+  private def broadcastSql(d: Dialect): String = {
     val branches = advisorTables.map { case (t, fixed, strs) =>
-      val tbl = if (spark) s"r64_$t" else t
+      val tbl = d.t(t)
       val strBytes = strs.map(c => s"length($c)").mkString(" + ")
       s"""SELECT '$t' AS tbl, CAST(count(*) AS BIGINT) AS n_rows,
                  CAST($fixed * count(*) + sum($strBytes) AS BIGINT) AS est_bytes
@@ -119,20 +111,13 @@ object Round64 {
     * baseline rides the same output. method_skew = max·8/total per
     * method — the straggler number that decides range vs hash.
     */
-  val q610RangeBounds: QueryDef = QueryDef(
-    "q610_range_bounds",
-    (s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("r64_events")
-      s.sql(rangeBoundsSql(spark = true))
-    },
-    Some(rangeBoundsSql(spark = false))
-  )
+  val q610RangeBounds: QueryDef =
+    QueryDef.sql("q610_range_bounds", "r64_", "events")(rangeBoundsSql)
 
-  private def rangeBoundsSql(spark: Boolean): String = {
-    val tbl = if (spark) "r64_events" else "events"
-    val idiv = if (spark) "div" else "//"
+  private def rangeBoundsSql(d: Dialect): String = {
+    val tbl = d.t("events")
     val cuts = (1 to 7).map(i =>
-      s"min(CASE WHEN cum >= (($i * n + 7) $idiv 8) THEN v END) AS b$i")
+      s"min(CASE WHEN cum >= (($i * n + 7) ${d.idiv} 8) THEN v END) AS b$i")
       .mkString(",\n                 ")
     val bucketExpr = (1 to 7).map(i =>
       s"CASE WHEN user_id > b.b$i THEN 1 ELSE 0 END").mkString(" + ")
@@ -144,8 +129,8 @@ object Round64 {
     // balance by construction; only the band histogram sees an
     // unpartitioned window. Exact integer sums either way, so the
     // oracle keeps the textbook form.
-    val cumCte =
-      if (spark)
+    val cumCte = d match {
+      case _: Spark =>
         """hb AS (SELECT v, c, v div 65536 AS bkt FROM hist),
         hbo AS (SELECT bkt,
                        coalesce(sum(bc) OVER (ORDER BY bkt
@@ -157,10 +142,11 @@ object Round64 {
         cum AS (SELECT v, hbo.off + sum(c) OVER (PARTITION BY bkt ORDER BY v) AS cum,
                        tot.n AS n
                 FROM hb JOIN hbo USING (bkt) CROSS JOIN tot)"""
-      else
+      case DuckDb =>
         """cum AS (SELECT v, sum(c) OVER (ORDER BY v) AS cum,
                        sum(c) OVER () AS n
                 FROM hist)"""
+    }
     s"""WITH u AS (SELECT user_id FROM $tbl),
         hist AS (SELECT user_id AS v, CAST(count(*) AS BIGINT) AS c
                  FROM u GROUP BY 1),

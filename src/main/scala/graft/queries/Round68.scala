@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.functions.GraftFunctions
-import graft.sources.Tables
 
 /** Round-68 additions (q618/q619): the native imperative-aggregate
   * surface — [[graft.functions.SpaceSavingTopK]], a
@@ -20,7 +19,7 @@ object Round68 {
 
   private def withEvents(s: org.apache.spark.sql.SparkSession, dir: String): Unit = {
     GraftFunctions.registerAll(s)
-    Tables.events(s, dir).createOrReplaceTempView("r68_events")
+    Spark("r68_").register(s, dir, "events")
   }
 
   /** Global heavy hitters of event_type (capacity 16 ≥ NDV 5 → exact,

@@ -48,9 +48,10 @@ object SqlFragments {
     * each engine's dialect (Spark's `conv` returns STRING, so it is CAST;
     * DuckDB parses a `0x` literal).
     */
-  def md5i(seed: String, spark: Boolean): String =
-    if (spark) s"CAST(conv(substring(md5($seed), 1, 8), 16, 10) AS BIGINT)"
-    else s"CAST(('0x' || substring(md5($seed), 1, 8)) AS BIGINT)"
+  def md5i(seed: String, d: Dialect): String = d match {
+    case _: Spark => s"CAST(conv(substring(md5($seed), 1, 8), 16, 10) AS BIGINT)"
+    case DuckDb => s"CAST(('0x' || substring(md5($seed), 1, 8)) AS BIGINT)"
+  }
 
   /** Kept-token relation `(cols..., rnk, word)`: the catalogue's
     * lower/`[^a-z]+` tokenizer with `rnk` the 0-based rank of the word
@@ -63,17 +64,18 @@ object SqlFragments {
     * while the oracle numbers them per doc_id; the two agree only when a
     * doc_id names one row.
     */
-  def rankTokens(tbl: String, spark: Boolean, cols: String*): String = {
+  def rankTokens(tbl: String, d: Dialect, cols: String*): String = {
     require(cols.contains("doc_id"), "rankTokens partitions the oracle by doc_id")
     val c = cols.mkString(", ")
-    if (spark)
-      s"""SELECT $c, CAST(pos AS BIGINT) AS rnk, word
+    d match {
+      case _: Spark =>
+        s"""SELECT $c, CAST(pos AS BIGINT) AS rnk, word
           FROM (SELECT $c,
                        posexplode(filter(split(lower(text), '[^a-z]+'),
                                          w -> w <> '')) AS (pos, word)
                 FROM $tbl) x"""
-    else
-      s"""SELECT $c,
+      case DuckDb =>
+        s"""SELECT $c,
                  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY pos) - 1
                       AS BIGINT) AS rnk,
                  word
@@ -84,22 +86,24 @@ object SqlFragments {
                              string_split_regex(lower(text), '[^a-z]+') AS parts
                       FROM $tbl)) x
           WHERE word <> ''"""
+    }
   }
 
   /** Kept-token relation `(cols..., pos, word)`: same tokenizer, but `pos`
     * is the RAW position in the split array — it counts split()'s boundary
     * empties, which are then dropped — so positions may skip.
     */
-  def posTokens(tbl: String, spark: Boolean, cols: String*): String = {
+  def posTokens(tbl: String, d: Dialect, cols: String*): String = {
     val c = cols.mkString(", ")
-    if (spark)
-      s"""SELECT $c, pos, word
+    d match {
+      case _: Spark =>
+        s"""SELECT $c, pos, word
           FROM (SELECT $c,
                        posexplode(split(lower(text), '[^a-z]+')) AS (pos, word)
                 FROM $tbl) x
           WHERE word <> ''"""
-    else
-      s"""SELECT $c, pos, word
+      case DuckDb =>
+        s"""SELECT $c, pos, word
           FROM (SELECT $c,
                        CAST(unnest(generate_series(1, len(parts))) AS INT) - 1 AS pos,
                        unnest(parts) AS word
@@ -107,5 +111,6 @@ object SqlFragments {
                              string_split_regex(lower(text), '[^a-z]+') AS parts
                       FROM $tbl)) x
           WHERE word <> ''"""
+    }
   }
 }

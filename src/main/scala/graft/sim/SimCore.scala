@@ -361,11 +361,6 @@ object SimCore {
       }
       None
     }
-
-    def isBusy(currentTime: Double): Boolean =
-      // t == busy_until ⇒ not busy (src/worker.py:124,
-      // tests/test_worker.py:185-197)
-      currentTask.nonEmpty && currentTime < busyUntil
   }
 
   /** One animation frame's observable state (reference

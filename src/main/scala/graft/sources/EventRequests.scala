@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.SimRequest
@@ -21,17 +21,18 @@ object EventRequests {
 
   implicit private val reqEnc: Encoder[SimRequest] = Encoders.product[SimRequest]
 
-  def requests(spark: SparkSession, sfDir: String): Dataset[SimRequest] = {
-    Tables
-      .events(spark, sfDir)
-      .select(
-        col("user_id").cast("string").as("userId"),
-        unix_micros(col("ts")).as("requestTimeMicros"),
-        col("value").cast("double").as("processingTime"),
-        ((unix_micros(col("ts")) - lit(SimOriginMicros)) / lit(1000000.0))
-          .as("simArrivalTime"),
-        col("event_id").cast("long").as("seq")
-      )
-      .as[SimRequest]
-  }
+  /** The events → [[SimRequest]] projection, one column per field, over
+    * any events relation with a µs `ts` (batch or stream).
+    */
+  val requestColumns: Seq[Column] = Seq(
+    col("user_id").cast("string").as("userId"),
+    unix_micros(col("ts")).as("requestTimeMicros"),
+    col("value").cast("double").as("processingTime"),
+    ((unix_micros(col("ts")) - lit(SimOriginMicros)) / lit(1000000.0))
+      .as("simArrivalTime"),
+    col("event_id").cast("long").as("seq")
+  )
+
+  def requests(spark: SparkSession, sfDir: String): Dataset[SimRequest] =
+    Tables.events(spark, sfDir).select(requestColumns: _*).as[SimRequest]
 }

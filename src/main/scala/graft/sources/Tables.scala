@@ -10,7 +10,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * query in the engine goes through this one seam.
   */
 object Tables {
+
+  /** Lake table `name`; `"events"` comes back with its `ts` normalized as
+    * in [[events]].
+    */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    if (name == "events") events(spark, sfDir) else read(spark, sfDir, name)
+
+  private def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
   def region(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "region")
@@ -30,7 +37,7 @@ object Tables {
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = table(spark, sfDir, "events")
+    val raw = read(spark, sfDir, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(

@@ -70,14 +70,7 @@ object StreamingSim {
     val keyed = stream
       .select(
         col("event_type").as("_1"),
-        struct(
-          col("user_id").cast("string").as("userId"),
-          unix_micros(col("ts")).as("requestTimeMicros"),
-          col("value").cast("double").as("processingTime"),
-          ((unix_micros(col("ts")) - lit(graft.sources.EventRequests.SimOriginMicros)) /
-            lit(1000000.0)).as("simArrivalTime"),
-          col("event_id").cast("long").as("seq")
-        ).as("_2")
+        struct(graft.sources.EventRequests.requestColumns: _*).as("_2")
       )
       .as[(String, SimRequest)]
 

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.queries.{Round11, Round12, SqlFragments}
+import graft.queries.{Round11, Round12, Spark, SqlFragments}
 import graft.sources.Tables
 
 /** Differential checks for the round-11/12 additions, matching the
@@ -71,13 +71,40 @@ class Round12PropertySpec extends AnyFunSuite {
 
     val seeds = Seq("", "a", "rr:keep:42", "jm:7", "key:123456789")
     val got = seeds.toDF("s")
-      .selectExpr("s", s"${SqlFragments.md5i("s", spark = true)} AS h")
+      .selectExpr("s", s"${SqlFragments.md5i("s", Spark(""))} AS h")
       .as[(String, Long)].collect().toMap
     seeds.foreach { seed =>
       val hex = java.security.MessageDigest.getInstance("MD5")
         .digest(seed.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
       assert(got(seed) == java.lang.Long.parseLong(hex.take(8), 16), s"md5i('$seed')")
     }
+  }
+
+  test("Spark dialect: closedRange includes both ends, epochUs is unix_micros, idiv is /") {
+    val ss = spark
+    import ss.implicits._
+    val d = Spark("")
+    for ((lo, hi) <- Seq((0, 0), (3, 7), (-2, 4))) {
+      val viaCols = spark
+        .sql(s"SELECT ${d.closedRange("lo", "hi")} AS v FROM (SELECT $lo AS lo, $hi AS hi)")
+        .as[Int].collect().toSeq
+      assert(viaCols == (lo to hi), s"closedRange(lo, hi) over ($lo, $hi)")
+      val viaInts = spark.sql(s"SELECT ${d.closedRange(lo, hi)} AS v").as[Int].collect().toSeq
+      assert(viaInts == (lo to hi), s"closedRange($lo, $hi)")
+    }
+
+    assert(d.epochUs("ts") == "unix_micros(ts)")
+    val ts = Seq("2024-01-01 00:00:00", "2024-03-05 12:34:56.789012")
+    val us = ts.toDF("s").selectExpr(
+      s"${d.epochUs("CAST(s AS TIMESTAMP)")} AS a", "unix_micros(CAST(s AS TIMESTAMP)) AS b")
+      .as[(Long, Long)].collect()
+    us.foreach { case (a, b) => assert(a == b) }
+
+    val pairs = Seq((0L, 1L), (7L, 2L), (86399999999L, 86400000000L),
+      (1704067200123456L, 86400000000L), (Long.MaxValue, 3L))
+    val q = pairs.toDF("a", "b").selectExpr("a", "b", s"a ${d.idiv} b AS q")
+      .as[(Long, Long, Long)].collect()
+    q.foreach { case (a, b, got) => assert(got == a / b, s"$a idiv $b") }
   }
 
   // ---------------------------------------------------------------- q402

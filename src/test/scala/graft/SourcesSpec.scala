@@ -184,6 +184,15 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
+  test("Tables.table(\"events\") reads the same normalized relation as Tables.events") {
+    val dir = "/root/testdata/sf0.001"
+    assume(new java.io.File(dir).isDirectory, s"$dir not present")
+    val byName = graft.sources.Tables.table(spark, dir, "events")
+    val events = graft.sources.Tables.events(spark, dir)
+    assert(byName.schema == events.schema)
+    assert(byName.exceptAll(events).isEmpty && events.exceptAll(byName).isEmpty)
+  }
+
   test("32-combo grid fan-out ≡ 32 independent full-stream simulations") {
     import spark.implicits._
     val grid = graft.queries.SimQueries.grid32
