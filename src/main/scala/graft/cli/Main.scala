@@ -1,8 +1,8 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, Dataset, Row, SparkSession}
 
-import graft.model.{FifoConfig, PriorityConfig, SimConfig}
+import graft.model.{FifoConfig, PriorityConfig, SimCompleted, SimConfig, SimRequest}
 import graft.sim.SimOperator
 import graft.sources.RequestCsv
 import graft.stats.Statistics
@@ -17,13 +17,22 @@ import graft.stats.Statistics
   * src/queue_manager.py:249-256), so `-q` alone is accepted-and-inert
   * exactly like the original; `--fifo` selects the bounded FIFO discipline
   * where rejection is reachable (SURVEY §4.1).
+  *
+  * The report comes from one parse of the CSV in one Spark job: the parse
+  * check and row count ride the job as observed metrics
+  * ([[RequestCsv.readWith]]), and simulation → [[Statistics.report]] →
+  * collect is that job's action. Nothing is cached.
+  *
+  * Exit status, unlike the reference's 0 on every error path: 0 after a
+  * report (or an empty CSV), 1 after a CSV error, 2 after a bad flag value.
   */
 object Main {
 
+  val Usage = "usage: graft.cli.Main <csv_file> [-w N] [-q M] [--fifo] [--animation]"
+
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) {
-      System.err.println(
-        "usage: graft.cli.Main <csv_file> [-w N] [-q M] [--fifo] [--animation]")
+      System.err.println(Usage)
       sys.exit(2)
     }
     val spark = SparkSession
@@ -35,94 +44,103 @@ object Main {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    try run(spark, args)
-    finally spark.stop()
+    val status =
+      try run(spark, args)
+      finally spark.stop()
+    sys.exit(status)
   }
 
   /** The whole pipeline against a CALLER-OWNED session — separated from
     * `main` so the CLI is end-to-end testable in-process (a test must not
-    * let the CLI stop the shared SparkContext).
+    * let the CLI stop the shared SparkContext). Returns the exit status.
     */
-  def run(spark: SparkSession, args: Array[String]): Unit = {
+  def run(spark: SparkSession, args: Array[String]): Int = {
     require(args.nonEmpty, "run() needs at least the csv path")
     val csvFile = args(0)
     def intFlag(names: Set[String]): Option[Int] =
       args.sliding(2).collectFirst {
-        case Array(f, v) if names(f) => v.toInt
+        case Array(f, v) if names(f) =>
+          v.toIntOption.getOrElse(throw new IllegalArgumentException(s"$f needs an integer, got '$v'"))
       }
-    val numWorkers = intFlag(Set("-w", "--num_workers")).getOrElse(1)
-    val queueSize = intFlag(Set("-q", "--queue_size"))
-    val useFifo = args.contains("--fifo")
     val animation = args.contains("--animation")
-
-    {
-      val requests =
-        try RequestCsv.read(spark, csvFile)
-        catch {
-          case e: RequestCsv.CsvParseException =>
-            System.err.println(s"Error: CSV file format is invalid. Detail: ${e.message}")
-            return
-          case e: org.apache.spark.sql.AnalysisException if e.getMessage.contains("PATH_NOT_FOUND") =>
-            System.err.println(s"Error: CSV file '$csvFile' not found.")
-            return
-        }
-
-      val total = requests.count()
-      if (total == 0) {
-        println("No request data in CSV; nothing to simulate.")
-        return
+    val cfg =
+      try {
+        val numWorkers = intFlag(Set("-w", "--num_workers")).getOrElse(1)
+        val queueSize = intFlag(Set("-q", "--queue_size"))
+        SimConfig(
+          numWorkers = numWorkers,
+          strategy = if (args.contains("--fifo")) FifoConfig(queueSize) else PriorityConfig()
+        )
+      } catch {
+        case e: IllegalArgumentException =>
+          System.err.println(s"Error: ${e.getMessage.stripPrefix("requirement failed: ")}")
+          System.err.println(Usage)
+          return 2
       }
 
-      val cfg = SimConfig(
-        numWorkers = numWorkers,
-        strategy = if (useFifo) FifoConfig(queueSize) else PriorityConfig()
-      )
-      val completed =
-        if (animation) {
-          // Animation mode (E2, reference src/simulator.py:148-193): the
-          // fixed-step loop with per-frame console gauges is a driver-side
-          // presentation of the same transition function; wall-clock scale
-          // is 24 h simulated = 60 s real (sleep = interval / 1440,
-          // src/simulator.py:44-45). GRAFT_ANIMATION_SLEEP=0 disables
-          // pacing (tests).
-          val sleepMs =
-            sys.env.get("GRAFT_ANIMATION_SLEEP").map(_.toDouble).getOrElse(1.0 / 1440 * 1000)
-          val rows = requests.collect()
-          val out = graft.sim.SimCore
-            .runFixedStep(cfg, rows.iterator, interval = 1.0, onFrame = f => {
-              println(
-                f"[t=${f.currentTime}%9.2f] pending=${f.pendingCount}%5d queued=${f.queuedCount}%5d " +
-                  f"active=${f.activeWorkers}%3d/${numWorkers} completed=${f.completedCount}%5d"
-              )
-              if (sleepMs > 0) Thread.sleep(sleepMs.toLong)
-            })
-            .toSeq
-          import spark.implicits._
-          spark.createDataset(out)
-        } else SimOperator.simulate(requests, cfg)
-      val completedDF = Statistics.toDF(completed).cache()
-      val s = Statistics.summary(completedDF).collect()(0)
-      val usage = Statistics
-        .apiUsage(completedDF, cfg.numApis)
-        .orderBy("api_id")
-        .collect()
+    def report(completed: Dataset[SimCompleted]): Row =
+      Statistics.report(Statistics.toDF(completed), cfg.numApis).collect()(0)
 
-      def fmt(d: Double): String = if (d.isNaN) "N/A" else f"$d%.4f"
-      println("\n--- Simulation statistics ---")
-      println(s"  Total requests (input):  $total")
-      println(s"  Processed requests:      ${s.getAs[Long]("total_requests_processed")}")
-      println(s"  Rejected requests:       ${s.getAs[Long]("total_requests_rejected")}")
-      println(s"  Average queuing time:    ${fmt(s.getAs[Double]("average_queuing_time"))}")
-      println(s"  Queuing time P50:        ${fmt(s.getAs[Double]("p50"))}")
-      println(s"  Queuing time P75:        ${fmt(s.getAs[Double]("p75"))}")
-      println(s"  Queuing time P90:        ${fmt(s.getAs[Double]("p90"))}")
-      println(s"  Queuing time P99:        ${fmt(s.getAs[Double]("p99"))}")
-      println("\n  --- API usage ---")
-      usage.foreach(r => println(s"    ${r.getAs[String]("api_id")}: ${r.getAs[Long]("n_used")}"))
-      println("\n  --- Queue totals (enqueued) ---")
-      println(s"    priority: ${s.getAs[Long]("priority_queue_enqueued_total")}")
-      println(s"    normal:   ${s.getAs[Long]("normal_queue_enqueued_total")}")
-      println("-----------------------------\n")
+    val (total, s) =
+      try {
+        if (animation) {
+          // The whole file is parsed and checked before the first frame.
+          val (n, rows) = RequestCsv.readWith(spark, csvFile)(_.collect())
+          (n, report(animate(spark, cfg, rows)))
+        } else RequestCsv.readWith(spark, csvFile)(rs => report(SimOperator.simulate(rs, cfg)))
+      } catch {
+        case e: RequestCsv.CsvParseException =>
+          System.err.println(s"Error: CSV file format is invalid. Detail: ${e.message}")
+          return 1
+        case e: AnalysisException if e.getMessage.contains("PATH_NOT_FOUND") =>
+          System.err.println(s"Error: CSV file '$csvFile' not found.")
+          return 1
+      }
+
+    if (total == 0) {
+      println("No request data in CSV; nothing to simulate.")
+      return 0
     }
+
+    def fmt(d: Double): String = if (d.isNaN) "N/A" else f"$d%.4f"
+    println("\n--- Simulation statistics ---")
+    println(s"  Total requests (input):  $total")
+    println(s"  Processed requests:      ${s.getAs[Long]("total_requests_processed")}")
+    println(s"  Rejected requests:       ${s.getAs[Long]("total_requests_rejected")}")
+    println(s"  Average queuing time:    ${fmt(s.getAs[Double]("average_queuing_time"))}")
+    println(s"  Queuing time P50:        ${fmt(s.getAs[Double]("p50"))}")
+    println(s"  Queuing time P75:        ${fmt(s.getAs[Double]("p75"))}")
+    println(s"  Queuing time P90:        ${fmt(s.getAs[Double]("p90"))}")
+    println(s"  Queuing time P99:        ${fmt(s.getAs[Double]("p99"))}")
+    println("\n  --- API usage ---")
+    (1 to cfg.numApis).foreach(k => println(s"    api_$k: ${s.getAs[Long](s"api_$k")}"))
+    println("\n  --- Queue totals (enqueued) ---")
+    println(s"    priority: ${s.getAs[Long]("priority_queue_enqueued_total")}")
+    println(s"    normal:   ${s.getAs[Long]("normal_queue_enqueued_total")}")
+    println("-----------------------------\n")
+    0
+  }
+
+  /** Animation mode (E2, reference src/simulator.py:148-193): the
+    * fixed-step loop with per-frame console gauges is a driver-side
+    * presentation of the same transition function; wall-clock scale is
+    * 24 h simulated = 60 s real (sleep = interval / 1440,
+    * src/simulator.py:44-45). GRAFT_ANIMATION_SLEEP=0 disables pacing
+    * (tests).
+    */
+  private def animate(spark: SparkSession, cfg: SimConfig, rows: Array[SimRequest]): Dataset[SimCompleted] = {
+    val sleepMs =
+      sys.env.get("GRAFT_ANIMATION_SLEEP").map(_.toDouble).getOrElse(1.0 / 1440 * 1000)
+    val out = graft.sim.SimCore
+      .runFixedStep(cfg, rows.iterator, interval = 1.0, onFrame = f => {
+        println(
+          f"[t=${f.currentTime}%9.2f] pending=${f.pendingCount}%5d queued=${f.queuedCount}%5d " +
+            f"active=${f.activeWorkers}%3d/${cfg.numWorkers} completed=${f.completedCount}%5d"
+        )
+        if (sleepMs > 0) Thread.sleep(sleepMs.toLong)
+      })
+      .toSeq
+    import spark.implicits._
+    spark.createDataset(out)
   }
 }

@@ -78,4 +78,9 @@ final case class SimConfig(
     rpmLimit: Int = 60,
     rateWindowSeconds: Double = 60.0,
     rngSeed: Long = 42L
-)
+) {
+  require(numWorkers >= 1, s"numWorkers must be at least 1, got $numWorkers")
+  require(numApis >= 1, s"numApis must be at least 1, got $numApis")
+  require(rpmLimit >= 1, s"rpmLimit must be at least 1, got $rpmLimit")
+  require(rateWindowSeconds > 0, s"rateWindowSeconds must be positive, got $rateWindowSeconds")
+}

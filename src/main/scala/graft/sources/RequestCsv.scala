@@ -1,9 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.SimRequest
+import graft.operators.Observe
 
 /** CSV request source with the reference's parse contract (S1,
   * reference: src/csv_parser.py:7-75):
@@ -12,11 +13,16 @@ import graft.model.SimRequest
   *     missing column fails naming it (KeyError analogue, :37-40)
   *   - `request_time` is ISO-8601; trailing `Z` normalizes to UTC (:50-53)
   *   - malformed timestamp / float fails with the 1-based data row number
-  *     (ValueError analogue, :42,69-70)
+  *     (ValueError analogue, :42,69-70); a `processing_time` of NaN or
+  *     ±Infinity counts as a malformed float, since neither can be
+  *     simulated
   *   - header-only file → empty dataset, no error
   *
   * Parse runs distributed (typed casts in a projection); the row-numbered
-  * error report is only computed on the failure path.
+  * error report is only computed on the failure path. [[read]] checks the
+  * whole file before it returns; [[readWith]] checks it inside the
+  * caller's own action, so a reader that consumes the rows once pays for
+  * one scan and one job.
   */
 object RequestCsv {
 
@@ -65,7 +71,12 @@ object RequestCsv {
   }
 
   private val badTs = col("ts").isNull && col("raw_ts").isNotNull
-  private val badProc = col("proc").isNull && col("raw_proc").isNotNull
+  // Null-safe equality keeps the predicate false, never NULL, on a NULL
+  // `proc`, so `!bad` filters exactly the complement.
+  private val badProc = (col("proc").isNull && col("raw_proc").isNotNull) ||
+    isnan(col("proc")) || col("proc") <=> lit(Double.PositiveInfinity) ||
+    col("proc") <=> lit(Double.NegativeInfinity)
+  private val bad = badTs || badProc
 
   private def typed(parsed: DataFrame): Dataset[SimRequest] =
     parsed
@@ -80,25 +91,49 @@ object RequestCsv {
 
   def read(spark: SparkSession, path: String): Dataset[SimRequest] = {
     val parsed = parse(spark, path)
-    val bad = parsed
-      .filter(badTs || badProc)
-      .orderBy("seq")
-      .limit(1)
-      .collect()
-    if (bad.nonEmpty) {
-      val r = bad(0)
-      // 1-based data row number (header excluded), reference :42.
-      // `seq` is monotonically_increasing_id — file-order monotone but NOT
-      // dense across input partitions (it jumps by 2^33 per partition), so
-      // the true row number is the count of rows at-or-before the failure.
-      // Only computed on the failure path.
-      val rowNo = parsed.filter(col("seq") <= r.getAs[Long]("seq")).count()
-      val what =
-        if (r.isNullAt(r.fieldIndex("ts"))) s"timestamp '${r.getAs[String]("raw_ts")}'"
-        else s"float '${r.getAs[String]("raw_proc")}'"
-      throw CsvParseException(s"Malformed $what at data row $rowNo")
-    }
+    parsed.filter(bad).orderBy("seq").limit(1).collect().headOption
+      .foreach(r => throw failure(parsed, r))
     typed(parsed)
+  }
+
+  /** One-action reader: runs `action` on the typed rows of `path` with
+    * malformed rows filtered out and, in the same Spark job, counts every
+    * data row and records the smallest `seq` of a malformed one (observed
+    * metrics on the parsed rows, see [[Observe.withMetrics]]). Returns the
+    * data row count with the action's result, or throws the
+    * [[CsvParseException]] [[read]] would throw, with the same message and
+    * row number; that row number costs two more jobs, on the failure path
+    * only.
+    *
+    * `action` must run one Spark action that consumes all of its input:
+    * the count and the check come from the rows that action scans. A
+    * metric row that never arrives is an error, never "no bad rows".
+    */
+  def readWith[T](spark: SparkSession, path: String)(action: Dataset[SimRequest] => T): (Long, T) = {
+    val parsed = parse(spark, path)
+    val (result, m) = Observe.withMetrics(
+      parsed,
+      "graft_request_csv",
+      Seq(count(lit(1)).as("rows"), min(when(bad, col("seq"))).as("bad_seq"))
+    )(observed => action(typed(observed.filter(!bad))))
+    if (m.isEmpty)
+      throw new IllegalStateException(s"no row count arrived from the action over $path")
+    Option(m("bad_seq")).foreach(s => throw failure(parsed, parsed.filter(col("seq") === s).head()))
+    (m("rows").asInstanceOf[Long], result)
+  }
+
+  /** The error for the malformed parsed row `r`. `seq` is
+    * monotonically_increasing_id — file-order monotone but NOT dense
+    * across input partitions (it jumps by 2^33 per partition), so the
+    * 1-based data row number (header excluded, reference :42) is the count
+    * of rows at-or-before the failure.
+    */
+  private def failure(parsed: DataFrame, r: Row): CsvParseException = {
+    val rowNo = parsed.filter(col("seq") <= r.getAs[Long]("seq")).count()
+    val what =
+      if (r.isNullAt(r.fieldIndex("ts"))) s"timestamp '${r.getAs[String]("raw_ts")}'"
+      else s"float '${r.getAs[String]("raw_proc")}'"
+    CsvParseException(s"Malformed $what at data row $rowNo")
   }
 
   /** LENIENT lake-ingest variant of the same contract: instead of failing
@@ -116,13 +151,13 @@ object RequestCsv {
   def readLenient(spark: SparkSession, path: String): (Dataset[SimRequest], DataFrame) = {
     val parsed = parse(spark, path)
     val quarantined = parsed
-      .filter(badTs || badProc)
+      .filter(bad)
       .select(
         col("user_id"),
         col("raw_ts").as("request_time"),
         col("raw_proc").as("processing_time"),
         when(badTs, "malformed_timestamp").otherwise("malformed_float").as("reason")
       )
-    (typed(parsed.filter(!badTs && !badProc)), quarantined)
+    (typed(parsed.filter(!bad)), quarantined)
   }
 }

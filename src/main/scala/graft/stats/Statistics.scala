@@ -1,6 +1,6 @@
 package graft.stats
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.model.SimCompleted
@@ -12,7 +12,9 @@ import graft.model.SimCompleted
   * completed set; at 100 TB of completed records this is the layer that
   * scales (the sequential sim core does not need to — SURVEY §4.2).
   * NaN (not null) marks empty-aggregate results for `np.nan` parity
-  * (src/statistics.py:64,118-121).
+  * (src/statistics.py:64,118-121). The CLI's whole report — summary plus
+  * API usage — is the one aggregate [[report]]; the four queuing-time
+  * percentiles share one `percentile` buffer.
   */
 object Statistics {
 
@@ -50,11 +52,19 @@ object Statistics {
       col("start_time") - col("arrival_time_in_queue")
     )
 
+  private val summaryInputs: Seq[Column] =
+    Seq(processedPred.as("is_processed"), queuingTime.as("qt"), col("queue"))
+
+  /** Queuing-time percentiles reported by [[summary]], in output order. */
+  private val Percentiles = Seq("p50" -> "0.50", "p75" -> "0.75", "p90" -> "0.90", "p99" -> "0.99")
+
   /** One-row summary (src/statistics.py:102-121,144-152): counts, mean and
     * exact linear-interpolation percentiles of queuing time, per-queue
-    * enqueue totals. A single agg ⇒ one shuffle of partial buffers.
+    * enqueue totals. A single agg ⇒ one shuffle of partial buffers; the
+    * four percentiles come from one `percentile(qt, array(..))` buffer
+    * (`qt_pcts`) that [[summaryCols]] splits.
     */
-  private def summaryAggs: Seq[org.apache.spark.sql.Column] = {
+  private val summaryAggs: Seq[Column] = {
     val nan = lit(Double.NaN)
     Seq(
       sum(when(col("is_processed"), 1L).otherwise(0L)).cast("long")
@@ -62,16 +72,23 @@ object Statistics {
       sum(when(!col("is_processed"), 1L).otherwise(0L)).cast("long")
         .as("total_requests_rejected"),
       coalesce(avg(col("qt")), nan).as("average_queuing_time"),
-      coalesce(expr("percentile(qt, 0.50)"), nan).as("p50"),
-      coalesce(expr("percentile(qt, 0.75)"), nan).as("p75"),
-      coalesce(expr("percentile(qt, 0.90)"), nan).as("p90"),
-      coalesce(expr("percentile(qt, 0.99)"), nan).as("p99"),
+      expr(s"percentile(qt, array(${Percentiles.map(_._2).mkString(", ")}))").as("qt_pcts"),
       sum(when(col("queue") === "priority", 1L).otherwise(0L)).cast("long")
         .as("priority_queue_enqueued_total"),
       sum(when(col("queue") === "normal", 1L).otherwise(0L)).cast("long")
         .as("normal_queue_enqueued_total")
     )
   }
+
+  /** The summary's output columns over the aggregate's: `qt_pcts` split
+    * into `p50..p99`, NaN when no row had a valid queuing time.
+    */
+  private val summaryCols: Seq[Column] =
+    Seq("total_requests_processed", "total_requests_rejected", "average_queuing_time").map(col) ++
+      Percentiles.zipWithIndex.map { case ((name, _), i) =>
+        coalesce(col("qt_pcts")(i), lit(Double.NaN)).as(name)
+      } ++
+      Seq("priority_queue_enqueued_total", "normal_queue_enqueued_total").map(col)
 
   def summary(completedDF: DataFrame): DataFrame = summaryByGroup(completedDF, Nil)
 
@@ -82,15 +99,16 @@ object Statistics {
     */
   def summaryByGroup(completedDF: DataFrame, groupCols: Seq[String]): DataFrame =
     completedDF
-      .select(
-        groupCols.map(col) ++ Seq(
-          processedPred.as("is_processed"),
-          queuingTime.as("qt"),
-          col("queue")
-        ): _*
-      )
+      .select(groupCols.map(col) ++ summaryInputs: _*)
       .groupBy(groupCols.map(col): _*)
       .agg(summaryAggs.head, summaryAggs.tail: _*)
+      .select(groupCols.map(col) ++ summaryCols: _*)
+
+  /** Rows that count toward an endpoint's usage (A4): processed, with an
+    * id inside the `api_1..api_N` domain.
+    */
+  private def apiInDomain(numApis: Int): Column =
+    processedPred && col("used_api_id").isNotNull && col("used_api_id").between(1, numApis)
 
   /** Per-endpoint usage with dense-domain zero-fill (A4,
     * src/statistics.py:126-141): only processed rows with an in-domain id
@@ -103,10 +121,7 @@ object Statistics {
       .range(1, numApis + 1L)
       .select(col("id").cast("int").as("api_id_num"))
     val counts = completedDF
-      .filter(
-        processedPred && col("used_api_id").isNotNull &&
-          col("used_api_id").between(1, numApis)
-      )
+      .filter(apiInDomain(numApis))
       .groupBy(col("used_api_id").as("api_id_num"))
       .agg(count(lit(1)).as("cnt"))
     // Hint-free: both sides are ≤ numApis rows; AQE picks the build side
@@ -118,6 +133,21 @@ object Statistics {
         concat(lit("api_"), col("api_id_num")).as("api_id"),
         coalesce(col("cnt"), lit(0L)).as("n_used")
       )
+  }
+
+  /** The CLI report in one aggregate: [[summary]]'s columns, then one
+    * `api_1..api_N` column per endpoint holding [[apiUsage]]'s count
+    * (zero-filled: `count` of no rows is 0). No key and no join, so over
+    * a single-partition input (the simulation's) it runs in that
+    * partition's task without an exchange.
+    */
+  def report(completedDF: DataFrame, numApis: Int): DataFrame = {
+    val apis = (1 to numApis).map(k => s"api_$k")
+    val apiCounts = (1 to numApis).map(k => count(when(col("api") === k, 1)).as(apis(k - 1)))
+    completedDF
+      .select(summaryInputs :+ when(apiInDomain(numApis), col("used_api_id")).as("api"): _*)
+      .agg(summaryAggs.head, summaryAggs.tail ++ apiCounts: _*)
+      .select(summaryCols ++ apis.map(col): _*)
   }
 
   /** A5 enqueue totals in long format (reference counter semantics:

@@ -47,6 +47,21 @@ class CacheHygieneSpec extends AnyFunSuite {
     assertNoDfCaches("Winnow.overlapPairs")
   }
 
+  test("the CLI leaves no cached DataFrames behind") {
+    spark.catalog.clearCache()
+    val f = java.nio.file.Files.createTempFile("graft_cli_cache", ".csv")
+    java.nio.file.Files.writeString(f,
+      """user_id,request_time,processing_time
+        |u1,2023-01-01T00:00:00.000000Z,1.0
+        |u2,2023-01-01T00:00:00.500000Z,2.0
+        |""".stripMargin)
+    val status = Console.withOut(new java.io.ByteArrayOutputStream()) {
+      graft.cli.Main.run(spark, Array(f.toString, "-w", "2"))
+    }
+    assert(status == 0)
+    assertNoDfCaches("Main.run")
+  }
+
   /** r12 cost-class guard (SURVEY §7.4): both r10 (q243) and r11 (q57)
     * shipped a cache→localCheckpoint swap that was hygiene-NEUTRAL (the
     * leak probes above stayed green) but 1.7–2.2× SLOWER, and only the

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The CLI end to end, in-process: CSV → simulate → printed report
   * (X1, reference main.py:16-159), including the bounded-FIFO rejection
-  * path and the reference's error contract for bad input.
+  * path, the reference's error contract for bad input, the exit status
+  * and the number of Spark jobs one report takes.
   */
 class CliSpec extends AnyFunSuite {
 
@@ -19,11 +20,12 @@ class CliSpec extends AnyFunSuite {
     f.toString
   }
 
-  private def runCapturing(args: String*): (String, String) = {
+  /** Runs the CLI; returns its exit status, stdout and stderr. */
+  private def runCapturing(args: String*): (Int, String, String) = {
     val _ = spark.version // init the shared session OUTSIDE the capture
     val out = new ByteArrayOutputStream()
     val err = new ByteArrayOutputStream()
-    Console.withOut(new PrintStream(out, true, "UTF-8")) {
+    val status = Console.withOut(new PrintStream(out, true, "UTF-8")) {
       Console.withErr(new PrintStream(err, true, "UTF-8")) {
         val prevErr = System.err
         System.setErr(new PrintStream(err, true, "UTF-8"))
@@ -31,7 +33,7 @@ class CliSpec extends AnyFunSuite {
         finally System.setErr(prevErr)
       }
     }
-    (out.toString("UTF-8"), err.toString("UTF-8"))
+    (status, out.toString("UTF-8"), err.toString("UTF-8"))
   }
 
   private val fourRows =
@@ -43,8 +45,9 @@ class CliSpec extends AnyFunSuite {
       |""".stripMargin
 
   test("default priority run prints the full report; everything processes") {
-    val (out, err) = runCapturing(csv(fourRows), "-w", "2")
+    val (status, out, err) = runCapturing(csv(fourRows), "-w", "2")
     assert(!err.contains("Error:"), err)
+    assert(status == 0)
     assert(out.contains("Total requests (input):  4"))
     assert(out.contains("Processed requests:      4"))
     assert(out.contains("Rejected requests:       0"))
@@ -63,7 +66,7 @@ class CliSpec extends AnyFunSuite {
         |u3,2023-01-01T00:00:00.000000Z,5.0
         |u4,2023-01-01T00:00:00.000000Z,5.0
         |""".stripMargin
-    val (out, _) = runCapturing(csv(burst), "-w", "1", "-q", "1", "--fifo")
+    val (_, out, _) = runCapturing(csv(burst), "-w", "1", "-q", "1", "--fifo")
     val rejected = "Rejected requests:\\s+(\\d+)".r
       .findFirstMatchIn(out).map(_.group(1).toInt).getOrElse(-1)
     assert(rejected > 0, s"expected rejections in:\n$out")
@@ -74,16 +77,90 @@ class CliSpec extends AnyFunSuite {
       """user_id,request_time,processing_time
         |u1,not-a-time,1.0
         |""".stripMargin)
-    val (out, err) = runCapturing(bad)
+    val (status, out, err) = runCapturing(bad)
     assert(err.contains("CSV file format is invalid"))
     assert(!out.contains("Simulation statistics"))
+    assert(status == 1)
+    val badFloat = csv(
+      """user_id,request_time,processing_time
+        |u1,2023-01-01T00:00:00.000000Z,1.0
+        |u2,2023-01-01T00:00:01.000000Z,abc
+        |""".stripMargin)
+    val (status2, out2, err2) = runCapturing(badFloat)
+    assert(err2.contains(
+      "Error: CSV file format is invalid. Detail: Malformed float 'abc' at data row 2"), err2)
+    assert(!out2.contains("Simulation statistics"))
+    assert(status2 == 1)
+  }
+
+  test("a malformed row after good rows still prints no report") {
+    val rows = (0 until 20).map(i => f"u$i,2023-01-01T00:00:$i%02d.000000Z,1.0")
+    val bad = csv(("user_id,request_time,processing_time" +: rows :+
+      "u20,2023-01-01T00:00:20.000000Z,nan").mkString("", "\n", "\n"))
+    val (status, out, err) = runCapturing(bad, "-w", "2")
+    assert(err.contains("Detail: Malformed float 'nan' at data row 21"), err)
+    assert(out.isEmpty, out)
+    assert(status == 1)
+  }
+
+  test("header-only CSV prints the no-data line, no report, status 0") {
+    val (status, out, err) = runCapturing(csv("user_id,request_time,processing_time\n"))
+    assert(out.trim == "No request data in CSV; nothing to simulate.", out)
+    assert(err.isEmpty, err)
+    assert(status == 0)
+  }
+
+  test("exit status: 1 after a CSV error, 2 after a bad flag value with the usage line") {
+    val missing = Files.createTempDirectory("graft_cli").resolve("absent.csv").toString
+    val (s1, _, e1) = runCapturing(missing)
+    assert(s1 == 1 && e1.contains(s"Error: CSV file '$missing' not found."), e1)
+    val (s2, _, e2) = runCapturing(csv("user_id,request_time\nu1,2023-01-01T00:00:00Z\n"))
+    assert(s2 == 1 && e2.contains("missing required column(s): processing_time"), e2)
+    for ((flags, msg) <- Seq(
+        Seq("-w", "abc") -> "-w needs an integer, got 'abc'",
+        Seq("-w", "0") -> "numWorkers must be at least 1, got 0",
+        Seq("--fifo", "-q", "x") -> "-q needs an integer, got 'x'")) {
+      val (s, out, e) = runCapturing(csv(fourRows) +: flags: _*)
+      assert(s == 2, s"$flags: $e")
+      assert(e.contains(s"Error: $msg"), e)
+      assert(e.contains(graft.cli.Main.Usage), e)
+      assert(out.isEmpty, out)
+    }
+  }
+
+  test("one report takes at most 2 Spark jobs: the header read and one single-task job") {
+    val sc = spark.sparkContext
+    val group = s"graft-cli-jobs-${System.nanoTime()}"
+    val path = csv(fourRows)
+    sc.setJobGroup(group, "CliSpec job count")
+    val (status, out, _) =
+      try runCapturing(path, "-w", "2")
+      finally sc.clearJobGroup()
+    assert(status == 0 && out.contains("Processed requests:      4"))
+    // The status store fills from the listener bus, in event order: once a
+    // later fence job shows as finished, every job of the group is in it.
+    val fence = s"$group-fence"
+    sc.setJobGroup(fence, "CliSpec fence")
+    try sc.parallelize(Seq(1), 1).count()
+    finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 10000000000L
+    def fenced = sc.statusTracker.getJobIdsForGroup(fence).toSeq.flatMap(sc.statusTracker.getJobInfo(_))
+      .exists(_.status() == org.apache.spark.JobExecutionStatus.SUCCEEDED)
+    while (!fenced && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(fenced, "fence job never reached the status store")
+    val jobs = sc.statusTracker.getJobIdsForGroup(group)
+    assert(jobs.nonEmpty && jobs.length <= 2, s"jobs: ${jobs.toSeq}")
+    val tasks = jobs.toSeq.flatMap(sc.statusTracker.getJobInfo(_))
+      .flatMap(_.stageIds().toSeq).flatMap(sc.statusTracker.getStageInfo(_)).map(_.numTasks())
+    assert(tasks.sum <= 2, s"tasks per stage: $tasks")
   }
 
   test("animation mode prints frame gauges and the same report totals") {
     // the sleep default is 0.7 ms per frame — small enough to run the
     // 4-row fixture unthrottled without touching the env knob
-    val (out, err) = runCapturing(csv(fourRows), "-w", "2", "--animation")
+    val (status, out, err) = runCapturing(csv(fourRows), "-w", "2", "--animation")
     assert(!err.contains("Error:"), err)
+    assert(status == 0)
     assert(out.contains("[t="), "no animation frames printed")
     assert(out.contains("Processed requests:      4"))
   }

@@ -115,6 +115,62 @@ class SourcesSpec extends AnyFunSuite {
     assert(e.message.contains("float"))
   }
 
+  /** A non-finite processing time can be neither simulated nor dropped:
+    * every reader rejects it as a malformed float, at its row.
+    */
+  private def assertRejectsProc(value: String): Unit = {
+    val path = tmpCsv(
+      s"""user_id,request_time,processing_time
+        |user1,2023-01-01T00:00:00.100000Z,1.0
+        |user2,2023-01-01T00:00:00.200000Z,$value
+        |user3,2023-01-01T00:00:00.300000Z,2.0
+        |""".stripMargin)
+    val want = s"Malformed float '$value' at data row 2"
+    val e = intercept[RequestCsv.CsvParseException](RequestCsv.read(spark, path))
+    assert(e.message == want)
+    val e2 = intercept[RequestCsv.CsvParseException](
+      RequestCsv.readWith(spark, path)(ds => SimOperator.simulate(ds, SimConfig()).collect()))
+    assert(e2.message == want)
+    val (clean, quarantined) = RequestCsv.readLenient(spark, path)
+    assert(clean.collect().map(_.userId).toSet == Set("user1", "user3"))
+    assert(quarantined.collect().map(r => r.getAs[String]("user_id") -> r.getAs[String]("reason")).toSeq ==
+      Seq("user2" -> "malformed_float"))
+  }
+
+  test("processing_time nan is a malformed float, never simulated") {
+    assertRejectsProc("nan")
+  }
+
+  test("processing_time Infinity is a malformed float, never dropped silently") {
+    assertRejectsProc("Infinity")
+    assertRejectsProc("-Infinity")
+  }
+
+  test("readWith: one job counts every row and checks the parse inside the caller's action") {
+    val path = tmpCsv(
+      """user_id,request_time,processing_time
+        |user1,2023-01-01T00:00:00.100000Z,1.0
+        |user2,2023-01-01T00:00:00.200000Z,2.0
+        |user3,2023-01-01T00:00:00.300000Z,0.5
+        |""".stripMargin)
+    val (n, rows) = RequestCsv.readWith(spark, path)(_.collect())
+    assert(n == 3)
+    assert(rows.sortBy(_.seq).toSeq == RequestCsv.read(spark, path).collect().sortBy(_.seq).toSeq)
+    val (n0, rows0) = RequestCsv.readWith(spark, tmpCsv("user_id,request_time,processing_time\n"))(_.collect())
+    assert(n0 == 0 && rows0.isEmpty)
+    // the same error as read, row number included, also past a good row
+    val bad = tmpCsv(
+      """user_id,request_time,processing_time
+        |user1,2023-01-01T00:00:00.100000Z,1.0
+        |user2,not_a_datetime_string,1.0
+        |""".stripMargin)
+    val e = intercept[RequestCsv.CsvParseException](RequestCsv.readWith(spark, bad)(_.count()))
+    assert(e.message == intercept[RequestCsv.CsvParseException](RequestCsv.read(spark, bad)).message)
+    assert(e.message == "Malformed timestamp 'not_a_datetime_string' at data row 2")
+    // an action that runs no job over the rows delivers no count: an error
+    intercept[IllegalStateException](RequestCsv.readWith(spark, path)(_ => 0))
+  }
+
   test("missing column → error naming it (test_csv_parser.py:118-121)") {
     val path = tmpCsv(
       """user_id,request_time

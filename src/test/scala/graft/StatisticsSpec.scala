@@ -99,4 +99,28 @@ class StatisticsSpec extends AnyFunSuite {
       .toMap
     assert(usage == Map("api_1" -> 2L, "api_2" -> 1L, "api_3" -> 0L))
   }
+
+  test("report: summary columns then zero-filled api_1..api_N counts, in one aggregate") {
+    import org.apache.spark.sql.Row
+    import spark.implicits._
+    val rows = Seq(
+      row("u1", 0.0, 0.0, 1.0, apiId = Some(1), queue = Some("priority")),
+      row("u2", 0.1, 1.0, 2.0, apiId = Some(1), queue = Some("priority")),
+      row("u3", 0.2, 0.2, 1.2, apiId = Some(2), queue = Some("normal")),
+      row("u4", 0.3, 2.0, 3.0, apiId = Some(99), queue = Some("normal")),
+      row("u5", 0.4, 0.0, -1.0, apiId = Some(3), queue = None)
+    )
+    for (input <- Seq(rows, Seq.empty[SimCompleted])) {
+      val df = Statistics.toDF(spark.createDataset(input))
+      val summary = Statistics.summary(df).collect()(0)
+      val usage = Statistics.apiUsage(df, numApis = 3).orderBy("api_id").collect()
+      val report = Statistics.report(df, numApis = 3)
+      assert(report.columns.toSeq ==
+        Statistics.summary(df).columns.toSeq ++ Seq("api_1", "api_2", "api_3"))
+      val r = report.collect()(0)
+      // Row equality treats NaN as equal to NaN.
+      assert(Row.fromSeq(r.toSeq.take(summary.length)) == summary)
+      assert(r.toSeq.drop(summary.length) == usage.map(_.getAs[Long]("n_used")).toSeq)
+    }
+  }
 }
