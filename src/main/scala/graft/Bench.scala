@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every declared query at the target scale factor
-  * and prints ONE JSON line.
+  * and prints two JSON lines on stdout; it writes no file.
   *
   * One untimed warmup pass (JIT, codegen compilation, parquet footer
   * reads), then TWO timed runs per query with the session state reset
@@ -41,10 +41,6 @@ object Bench {
     // SPARK_GRAFT_ONLY=q1_agg,q66_... : time a subset (iteration tool;
     // the driver never sets it, so the full catalogue runs)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    // Single source of truth for the timing methodology — the loop below
-    // and the archived provenance stamp both read it, so the stamp can
-    // never lie about runs-per-query again (r10 hard-coded 1 vs min-of-2).
-    val timedRuns = 2
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => only.forall(_.contains(q._1)))
     // Warmup pass (untimed).
@@ -59,7 +55,7 @@ object Bench {
       // GC pause or a neighboring-process burst; min-of-2 reports the
       // query's achievable steady-state cost. Session state resets
       // between runs so both pay identical (cold-cache) work.
-      val times = (1 to timedRuns).map { _ =>
+      val times = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).count(); true }
@@ -101,116 +97,6 @@ object Bench {
     // parseable JSON object with the headline total.
     println(s"""{"metric":"per_query","queries":$qs,"sf":"$sfDir"}""")
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"queries":{"all":${fmt(total)}},"errors":$errors,"sf":"$sfDir"}""")
-    // Self-archive the FULL per-query map (full names, not the qNN stdout
-    // shorthand) to a committed file: the driver's stdout capture keeps
-    // only a ~2000-char tail, which destroyed ~70% of the per-query
-    // history every round (BENCH_r07 preserved 142 of 455 timings) and
-    // left round-over-round comparison with a 69-query intersection.
-    // Round number: SPARK_GRAFT_BENCH_ROUND if set, else max committed
-    // BENCH_r*.json + 1 (the driver writes its own file only after this
-    // run — but a RE-run after the driver commit would otherwise archive
-    // under the next round's number). The scan and the write both resolve
-    // against the repo root (nearest ancestor of CWD holding build.sbt),
-    // not bare CWD, and the chosen filename is logged so misnumbering is
-    // visible. SPARK_GRAFT_ONLY subset runs skip the archive — a 2-query
-    // iteration must never clobber the round's full record.
-    if (only.isEmpty) try {
-      var root = new java.io.File(".").getCanonicalFile
-      while (!new java.io.File(root, "build.sbt").exists() &&
-             root.getParentFile != null) root = root.getParentFile
-      // Malformed env values (e.g. "r09") must not abort the archive —
-      // fall back to the BENCH_r*.json scan with a loud warning instead
-      // of losing the round's timing record to a NumberFormatException.
-      val envRound = sys.env.get("SPARK_GRAFT_BENCH_ROUND")
-      val parsed = envRound.flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      if (envRound.nonEmpty && parsed.isEmpty)
-        System.err.println(
-          s"[bench] WARNING: SPARK_GRAFT_BENCH_ROUND='${envRound.get}' is not an " +
-            "integer — falling back to the BENCH_r*.json scan")
-      val round = parsed.getOrElse {
-        val prev = Option(root.listFiles()).getOrElse(Array.empty)
-          .flatMap { f =>
-            "^BENCH_r(\\d+)\\.json$".r.findFirstMatchIn(f.getName).map(_.group(1).toInt)
-          }
-        if (prev.isEmpty) 0 else prev.max + 1
-      }
-      val full = results
-        .map { case (k, v, _) => "\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-      // Provenance: identical HEADs have measured 2× apart on the
-      // md5-heavy tail depending on who ran them (builder in-suite vs
-      // driver cold, r9 q395 3.24 ↔ 6.63 s) — stamp the producing
-      // context so future rounds compare like with like instead of
-      // re-litigating the swing. Producer defaults to "unknown" (NOT
-      // "builder-local": the driver's re-runs don't set the env var and
-      // r10's default let them masquerade as the builder's archive).
-      // Sanitize before the value reaches a FILENAME or the JSON context
-      // (path separators in a mis-set env var must not escape the repo
-      // root; a stray quote must not corrupt the archive JSON).
-      val producerRaw = sys.env.getOrElse("SPARK_GRAFT_BENCH_CONTEXT", "unknown")
-      val producer = {
-        val clean = producerRaw.replaceAll("[^A-Za-z0-9_-]", "_")
-        if (clean.isEmpty) "unknown" else clean.take(64)
-      }
-      var out = new java.io.File(root, f"BENCH_LOCAL_r$round%02d.json").toPath
-      // Never silently clobber an archive produced by a DIFFERENT
-      // context under the same round number — divert to a
-      // producer-suffixed filename so both records survive; if the
-      // suffixed target ALSO exists (two re-runs from the same foreign
-      // context), keep diverting with a numeric bump rather than
-      // overwriting the earlier record.
-      if (java.nio.file.Files.exists(out)) {
-        val prevProducer = "\"producer\":\"([^\"]*)\"".r
-          .findFirstMatchIn(java.nio.file.Files.readString(out)).map(_.group(1))
-        if (prevProducer.exists(_ != producer)) {
-          System.err.println(
-            s"[bench] $out exists with producer='${prevProducer.get}' != " +
-              s"'$producer' — diverting to a suffixed archive")
-          out = new java.io.File(
-            root, f"BENCH_LOCAL_r$round%02d.$producer.json").toPath
-          var bump = 2
-          while (java.nio.file.Files.exists(out) && bump < 100) {
-            out = new java.io.File(
-              root, f"BENCH_LOCAL_r$round%02d.$producer.$bump%d.json").toPath
-            bump += 1
-          }
-          // Exhausting the bump range must not fall through to a silent
-          // overwrite of the .99 archive — fail the archive loudly instead
-          // (the "never silently clobber" contract of this whole block).
-          if (java.nio.file.Files.exists(out))
-            throw new IllegalStateException(
-              s"bump range exhausted; refusing to overwrite $out — set " +
-                "SPARK_GRAFT_BENCH_ROUND or clean up stale archives")
-        }
-      }
-      System.err.println(s"[bench] archiving per-query timings to $out")
-      val host = scala.util.Try(
-        java.net.InetAddress.getLocalHost.getHostName).getOrElse("unknown")
-      // Calibration triple + drift factor (VERDICT r12 ask #4): identical
-      // HEADs have measured 1.1-1.5x apart by producing context, so every
-      // archive carries its own context anchor — three trivial fixed-plan
-      // queries — and the geometric-mean ratio against the PINNED r12
-      // builder-local values. scripts/bench_compare.py uses the triple to
-      // drift-normalize round-over-round deltas; the in-archive factor is
-      // the at-a-glance "how hot was this context" number.
-      val pinnedCalibration = Seq( // BENCH_LOCAL_r12.json, builder-local
-        "q1_agg" -> 0.263, "q2_filter_project" -> 0.225, "q14_datetime" -> 0.150)
-      val calTimes = pinnedCalibration.flatMap { case (n, pin) =>
-        results.collectFirst { case (`n`, t, true) => (n, t, pin) }
-      }
-      val calJson = calTimes.map { case (n, t, _) => s""""$n":${fmt(t)}""" }
-        .mkString("{", ",", "}")
-      val drift =
-        if (calTimes.isEmpty) 1.0
-        else math.exp(calTimes.map { case (_, t, pin) => math.log(t / pin) }.sum / calTimes.size)
-      val ctx =
-        s"""{"producer":"$producer","host":"$host","runs_per_query":$timedRuns,""" +
-          s""""calibration":$calJson,"drift_factor_vs_r12":${fmt(drift)},""" +
-          s""""java":"${System.getProperty("java.version")}"}"""
-      java.nio.file.Files.writeString(
-        out,
-        s"""{"metric":"per_query_full","n":${results.size},"queries":$full,"errors":$errors,"sf":"$sfDir","context":$ctx}""" + "\n")
-    } catch { case e: Throwable => System.err.println(s"[bench] archive skipped: $e") }
     spark.stop()
   }
 }

@@ -1,5 +1,7 @@
 package graft.cli
 
+import java.util.concurrent.locks.LockSupport
+
 import org.apache.spark.sql.{AnalysisException, Dataset, Row, SparkSession}
 
 import graft.model.{FifoConfig, PriorityConfig, SimCompleted, SimConfig, SimRequest}
@@ -35,6 +37,8 @@ object Main {
       System.err.println(Usage)
       sys.exit(2)
     }
+    // A bad flag fails before Spark starts.
+    parseArgs(args).left.foreach(msg => sys.exit(badFlag(msg)))
     val spark = SparkSession
       .builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
@@ -50,33 +54,44 @@ object Main {
     sys.exit(status)
   }
 
+  /** `args` (non-empty) as (csv path, config, animation), or the message
+    * for a bad flag value.
+    */
+  private def parseArgs(args: Array[String]): Either[String, (String, SimConfig, Boolean)] = {
+    def intFlag(names: Set[String]): Option[Int] =
+      args.sliding(2).collectFirst {
+        case Array(f, v) if names(f) =>
+          v.toIntOption.getOrElse(throw new IllegalArgumentException(s"$f needs an integer, got '$v'"))
+      }
+    try {
+      val numWorkers = intFlag(Set("-w", "--num_workers")).getOrElse(1)
+      val queueSize = intFlag(Set("-q", "--queue_size"))
+      val cfg = SimConfig(
+        numWorkers = numWorkers,
+        strategy = if (args.contains("--fifo")) FifoConfig(queueSize) else PriorityConfig()
+      )
+      Right((args(0), cfg, args.contains("--animation")))
+    } catch {
+      case e: IllegalArgumentException => Left(e.getMessage.stripPrefix("requirement failed: "))
+    }
+  }
+
+  private def badFlag(msg: String): Int = {
+    System.err.println(s"Error: $msg")
+    System.err.println(Usage)
+    2
+  }
+
   /** The whole pipeline against a CALLER-OWNED session — separated from
     * `main` so the CLI is end-to-end testable in-process (a test must not
     * let the CLI stop the shared SparkContext). Returns the exit status.
     */
   def run(spark: SparkSession, args: Array[String]): Int = {
     require(args.nonEmpty, "run() needs at least the csv path")
-    val csvFile = args(0)
-    def intFlag(names: Set[String]): Option[Int] =
-      args.sliding(2).collectFirst {
-        case Array(f, v) if names(f) =>
-          v.toIntOption.getOrElse(throw new IllegalArgumentException(s"$f needs an integer, got '$v'"))
-      }
-    val animation = args.contains("--animation")
-    val cfg =
-      try {
-        val numWorkers = intFlag(Set("-w", "--num_workers")).getOrElse(1)
-        val queueSize = intFlag(Set("-q", "--queue_size"))
-        SimConfig(
-          numWorkers = numWorkers,
-          strategy = if (args.contains("--fifo")) FifoConfig(queueSize) else PriorityConfig()
-        )
-      } catch {
-        case e: IllegalArgumentException =>
-          System.err.println(s"Error: ${e.getMessage.stripPrefix("requirement failed: ")}")
-          System.err.println(Usage)
-          return 2
-      }
+    val (csvFile, cfg, animation) = parseArgs(args) match {
+      case Right(parsed) => parsed
+      case Left(msg)     => return badFlag(msg)
+    }
 
     def report(completed: Dataset[SimCompleted]): Row =
       Statistics.report(Statistics.toDF(completed), cfg.numApis).collect()(0)
@@ -125,19 +140,23 @@ object Main {
     * fixed-step loop with per-frame console gauges is a driver-side
     * presentation of the same transition function; wall-clock scale is
     * 24 h simulated = 60 s real (sleep = interval / 1440,
-    * src/simulator.py:44-45). GRAFT_ANIMATION_SLEEP=0 disables pacing
-    * (tests).
+    * src/simulator.py:44-45). Frame k prints no earlier than k / 1440 s
+    * after frame 0 is out: the pause runs to a deadline in nanoseconds,
+    * because `Thread.sleep`'s milliseconds would truncate 0.69 ms to 0.
     */
   private def animate(spark: SparkSession, cfg: SimConfig, rows: Array[SimRequest]): Dataset[SimCompleted] = {
-    val sleepMs =
-      sys.env.get("GRAFT_ANIMATION_SLEEP").map(_.toDouble).getOrElse(1.0 / 1440 * 1000)
+    var start = 0L
+    var frame = 0L
     val out = graft.sim.SimCore
       .runFixedStep(cfg, rows.iterator, interval = 1.0, onFrame = f => {
+        val due = start + (frame * 1e9 / 1440).toLong
+        while (frame > 0 && due - System.nanoTime() > 0) LockSupport.parkNanos(due - System.nanoTime())
         println(
           f"[t=${f.currentTime}%9.2f] pending=${f.pendingCount}%5d queued=${f.queuedCount}%5d " +
             f"active=${f.activeWorkers}%3d/${cfg.numWorkers} completed=${f.completedCount}%5d"
         )
-        if (sleepMs > 0) Thread.sleep(sleepMs.toLong)
+        if (frame == 0) start = System.nanoTime()
+        frame += 1
       })
       .toSeq
     import spark.implicits._

@@ -541,19 +541,8 @@ object Dedup {
       .localCheckpoint()
     var sig = signature(edges)
     var converged = edges.isEmpty
-    var roundExplained = false
     while (!converged) {
-      val round = smallStar(largeStar(edges))
-      // measurement hook (r14): the per-round plan never reaches a
-      // declared query's final frame (the loop checkpoints eagerly), so
-      // the bench plan dumps can't show the round shape — this env-gated
-      // print is how plans/r14/star_round_*.txt was produced
-      if (!roundExplained && sys.env.contains("SPARK_GRAFT_EXPLAIN_STAR_ROUND")) {
-        System.err.println(round.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-        roundExplained = true
-      }
-      val next = round.localCheckpoint()
+      val next = smallStar(largeStar(edges)).localCheckpoint()
       val nextSig = signature(next)
       converged = nextSig == sig
       sig = nextSig

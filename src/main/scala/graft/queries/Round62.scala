@@ -30,7 +30,7 @@ object Round62 {
     * RewriteDistinctAggregates plans that as ONE FileSourceScan + a
     * 9-way Expand — every scanned row multiplied 9×, 5.4M rows through
     * two Exchanges at sf0.1 — and the bench read **2.53 s vs the
-    * 8-branch shape's 0.16 s** (BENCH_LOCAL_r13 baseline vs r12).
+    * 8-branch shape's 0.16 s** (r13's before-optimization bench archive vs r12's).
     * The Expand costs the same 9× row blow-up against a 100 TB
     * lineitem, while the 8 branches each scan ONE column under
     * columnar pruning with partial-aggregated distincts — cheaper at

@@ -129,7 +129,6 @@ object SimCore {
       if (maxSize.exists(q.length >= _)) false
       else { q.append(item); true }
     def dequeue(): Option[T] = if (q.isEmpty) None else Some(q.removeHead())
-    def peek: Option[T] = q.headOption
     def isEmpty: Boolean = q.isEmpty
     def isFull: Boolean = maxSize.exists(q.length >= _)
     def size: Int = q.length
@@ -330,7 +329,7 @@ object SimCore {
     * time; completion and start never happen in the same tick (a completed
     * worker starts its next task on the following fixpoint pass).
     */
-  final class Worker(val id: Int, queue: TaskQueue, api: ApiClient) {
+  final class Worker(queue: TaskQueue, api: ApiClient) {
     var currentTask: Option[InFlight] = None
     var busyUntil: Double = 0.0
 
@@ -403,7 +402,7 @@ object SimCore {
     val api =
       new ApiClient(cfg.numApis, cfg.rpmLimit, cfg.rateWindowSeconds, () => currentTime)
     val workers: Array[Worker] =
-      Array.tabulate(cfg.numWorkers)(i => new Worker(i, queue, api))
+      Array.fill(cfg.numWorkers)(new Worker(queue, api))
     var pi = 0 // next-pending cursor (sorted ⇒ O(1) amortized arrival scan)
     val completed = mutable.ArrayBuffer.empty[InFlight]
 
@@ -533,8 +532,11 @@ object SimCore {
       } else if (nextEvent > e.currentTime) {
         e.currentTime = nextEvent
       } else {
-        // Unreachable after a completed fixpoint (every due completion and
-        // arrival has been drained); mirror the reference's pass-through.
+        // After a completed fixpoint every due completion and arrival has
+        // been drained, so only a NaN event time (a NaN arrival or service
+        // time) lands here; failing beats spinning forever.
+        throw new IllegalStateException(
+          s"simulation cannot advance: current time ${e.currentTime}, next event time $nextEvent")
       }
     }
   }

@@ -13,9 +13,9 @@ import graft.operators.Observe
   *     missing column fails naming it (KeyError analogue, :37-40)
   *   - `request_time` is ISO-8601; trailing `Z` normalizes to UTC (:50-53)
   *   - malformed timestamp / float fails with the 1-based data row number
-  *     (ValueError analogue, :42,69-70); a `processing_time` of NaN or
-  *     ±Infinity counts as a malformed float, since neither can be
-  *     simulated
+  *     (ValueError analogue, :42,69-70); an empty field is malformed
+  *     (`float('')` raises), and a `processing_time` of NaN or ±Infinity
+  *     counts as a malformed float, since neither can be simulated
   *   - header-only file → empty dataset, no error
   *
   * Parse runs distributed (typed casts in a projection); the row-numbered
@@ -70,12 +70,12 @@ object RequestCsv {
     )
   }
 
-  private val badTs = col("ts").isNull && col("raw_ts").isNotNull
-  // Null-safe equality keeps the predicate false, never NULL, on a NULL
-  // `proc`, so `!bad` filters exactly the complement.
-  private val badProc = (col("proc").isNull && col("raw_proc").isNotNull) ||
-    isnan(col("proc")) || col("proc") <=> lit(Double.PositiveInfinity) ||
-    col("proc") <=> lit(Double.NegativeInfinity)
+  // An empty field or a short row reads as NULL, which is malformed too.
+  // Each predicate is true or false, never NULL, so `!bad` filters
+  // exactly the complement.
+  private val badTs = col("ts").isNull
+  private val badProc = col("proc").isNull || isnan(col("proc")) ||
+    abs(col("proc")) === lit(Double.PositiveInfinity)
   private val bad = badTs || badProc
 
   private def typed(parsed: DataFrame): Dataset[SimRequest] =
@@ -130,9 +130,10 @@ object RequestCsv {
     */
   private def failure(parsed: DataFrame, r: Row): CsvParseException = {
     val rowNo = parsed.filter(col("seq") <= r.getAs[Long]("seq")).count()
+    def raw(c: String) = Option(r.getAs[String](c)).getOrElse("")
     val what =
-      if (r.isNullAt(r.fieldIndex("ts"))) s"timestamp '${r.getAs[String]("raw_ts")}'"
-      else s"float '${r.getAs[String]("raw_proc")}'"
+      if (r.isNullAt(r.fieldIndex("ts"))) s"timestamp '${raw("raw_ts")}'"
+      else s"float '${raw("raw_proc")}'"
     CsvParseException(s"Malformed $what at data row $rowNo")
   }
 

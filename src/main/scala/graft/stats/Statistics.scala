@@ -149,14 +149,4 @@ object Statistics {
       .agg(summaryAggs.head, summaryAggs.tail ++ apiCounts: _*)
       .select(summaryCols ++ apis.map(col): _*)
   }
-
-  /** A5 enqueue totals in long format (reference counter semantics:
-    * src/queue_manager.py:121-123,267-276 — rejected rows were never
-    * enqueued and are excluded).
-    */
-  def queueCounts(completedDF: DataFrame): DataFrame =
-    completedDF
-      .filter(col("queue").isNotNull)
-      .groupBy(col("queue"))
-      .agg(count(lit(1)).as("n_enqueued"))
 }

@@ -13,20 +13,12 @@ import graft.sim.SimCore
   *
   * Each group key is an independent scenario whose full engine state
   * (queues, in-flight work, rate-limit ledger, RNG state, virtual clock)
-  * lives in the GroupState between micro-batches. Two per-batch horizon
-  * policies, both deterministic:
-  *
-  *   - `flushPerBatch = true` (default): each batch's arrivals drain to
-  *     completion — the right semantics for a bounded replay (one
-  *     AvailableNow batch ≡ the one-shot batch run, asserted in
-  *     StreamingSimSpec). Across MULTIPLE batches the clock advances to
-  *     each batch's last completion, so a later batch's arrivals that
-  *     fall before it are clamped as late data (episodic semantics).
-  *   - `flushPerBatch = false`: horizon = the batch's max event time —
-  *     exact continuation of the one-shot simulation across batches
-  *     (IncrementalSimSpec's slice-fold contract); work still in flight
-  *     at the horizon completes in later batches, and the tail only
-  *     drains when a final flush batch arrives.
+  * lives in the GroupState between micro-batches. Each batch's arrivals
+  * drain to completion — the right semantics for a bounded replay (one
+  * AvailableNow batch ≡ the one-shot batch run, asserted in
+  * StreamingSimSpec). Across MULTIPLE batches the clock advances to each
+  * batch's last completion, so a later batch's arrivals that fall before
+  * it are clamped as late data (episodic semantics).
   */
 object StreamingSim {
 
@@ -38,20 +30,19 @@ object StreamingSim {
   implicit private val inEnc: Encoder[(String, SimRequest)] =
     Encoders.product[(String, SimRequest)]
 
-  /** Resumable per-scenario simulation (see object doc for the two
-    * horizon policies).
+  private val cfg = SimConfig(numWorkers = 2)
+
+  /** Resumable per-scenario simulation: the batch's arrivals run to
+    * completion on top of the group's saved state.
     */
-  private def simulateGroup(cfg: SimConfig, flushPerBatch: Boolean)(
+  private def simulateGroup(
       key: String,
       rows: Iterator[(String, SimRequest)],
       state: GroupState[SimCore.SimState]
   ): Iterator[(String, SimCompleted)] = {
     val st = state.getOption.getOrElse(SimCore.SimState.initial(cfg))
-    val slice = rows.map(_._2).toVector
-    val horizon =
-      if (flushPerBatch || slice.isEmpty) Double.PositiveInfinity
-      else slice.map(_.simArrivalTime).max
-    val (out, next) = SimCore.runIncremental(cfg, st, slice.iterator, horizon)
+    val (out, next) =
+      SimCore.runIncremental(cfg, st, rows.map(_._2), Double.PositiveInfinity)
     state.update(next)
     out.iterator.map(c => (key, c))
   }
@@ -59,13 +50,7 @@ object StreamingSim {
   /** Per-event-type scenarios simulated statefully over the events stream,
     * drained to completion; returns (scenario, completed…) rows.
     */
-  def run(
-      spark: SparkSession,
-      sfDir: String,
-      cfg: SimConfig = SimConfig(numWorkers = 2),
-      flushPerBatch: Boolean = true,
-      stateParts: Int = 8
-  ): DataFrame = {
+  def run(spark: SparkSession, sfDir: String): DataFrame = {
     val stream = StreamingOps.eventsStream(spark, sfDir)
     val keyed = stream
       .select(
@@ -77,14 +62,13 @@ object StreamingSim {
     val completed = keyed
       .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        simulateGroup(cfg, flushPerBatch)
+        simulateGroup
       )
 
     Drain.toMemory(
       spark,
       "stream_sim",
       completed.toDF("scenario", "completed").select(col("scenario"), col("completed.*")),
-      "append",
-      stateParts)
+      "append")
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import java.io.{ByteArrayOutputStream, PrintStream}
+import java.io.{ByteArrayOutputStream, OutputStream, PrintStream}
 import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,8 +22,16 @@ class CliSpec extends AnyFunSuite {
 
   /** Runs the CLI; returns its exit status, stdout and stderr. */
   private def runCapturing(args: String*): (Int, String, String) = {
-    val _ = spark.version // init the shared session OUTSIDE the capture
     val out = new ByteArrayOutputStream()
+    val (status, err) = runInto(out, args: _*)
+    (status, out.toString("UTF-8"), err)
+  }
+
+  /** Runs the CLI with stdout written to `out`; returns the exit status
+    * and stderr.
+    */
+  private def runInto(out: OutputStream, args: String*): (Int, String) = {
+    val _ = spark.version // init the shared session OUTSIDE the capture
     val err = new ByteArrayOutputStream()
     val status = Console.withOut(new PrintStream(out, true, "UTF-8")) {
       Console.withErr(new PrintStream(err, true, "UTF-8")) {
@@ -33,7 +41,7 @@ class CliSpec extends AnyFunSuite {
         finally System.setErr(prevErr)
       }
     }
-    (status, out.toString("UTF-8"), err.toString("UTF-8"))
+    (status, err.toString("UTF-8"))
   }
 
   private val fourRows =
@@ -93,6 +101,17 @@ class CliSpec extends AnyFunSuite {
     assert(status2 == 1)
   }
 
+  test("an empty processing_time field is a malformed float, not a crash") {
+    val (status, out, err) = runCapturing(csv(
+      """user_id,request_time,processing_time
+        |u1,2023-01-01T00:00:00.000000Z,1.0
+        |u2,2023-01-01T00:00:01.000000Z,
+        |""".stripMargin))
+    assert(err.trim == "Error: CSV file format is invalid. Detail: Malformed float '' at data row 2", err)
+    assert(out.isEmpty, out)
+    assert(status == 1)
+  }
+
   test("a malformed row after good rows still prints no report") {
     val rows = (0 until 20).map(i => f"u$i,2023-01-01T00:00:$i%02d.000000Z,1.0")
     val bad = csv(("user_id,request_time,processing_time" +: rows :+
@@ -128,6 +147,24 @@ class CliSpec extends AnyFunSuite {
     }
   }
 
+  test("a bad flag value exits 2 before Spark starts") {
+    // the real main, in its own JVM: it calls sys.exit, and a Spark start
+    // would show as log lines on stderr
+    val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .toArray.map(_.toString).filter(_.startsWith("--add-opens"))
+    val p = new ProcessBuilder((Seq(javaBin, "-Xmx1g") ++ opens ++ Seq(
+      "-cp", System.getProperty("java.class.path"), "graft.cli.Main", csv(fourRows), "-w", "abc")): _*)
+      .redirectInput(ProcessBuilder.Redirect.from(new java.io.File("/dev/null")))
+      .start()
+    val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
+    val err = new String(p.getErrorStream.readAllBytes(), "UTF-8")
+    assert(p.waitFor(60, java.util.concurrent.TimeUnit.SECONDS))
+    assert(p.exitValue() == 2, err)
+    assert(err.linesIterator.toSeq == Seq("Error: -w needs an integer, got 'abc'", graft.cli.Main.Usage), err)
+    assert(out.isEmpty, out)
+  }
+
   test("one report takes at most 2 Spark jobs: the header read and one single-task job") {
     val sc = spark.sparkContext
     val group = s"graft-cli-jobs-${System.nanoTime()}"
@@ -156,12 +193,30 @@ class CliSpec extends AnyFunSuite {
   }
 
   test("animation mode prints frame gauges and the same report totals") {
-    // the sleep default is 0.7 ms per frame — small enough to run the
-    // 4-row fixture unthrottled without touching the env knob
+    // frames are paced at 1/1440 s each: the 4-row fixture takes ~3 ms
     val (status, out, err) = runCapturing(csv(fourRows), "-w", "2", "--animation")
     assert(!err.contains("Error:"), err)
     assert(status == 0)
     assert(out.contains("[t="), "no animation frames printed")
     assert(out.contains("Processed requests:      4"))
+  }
+
+  test("animation paces frame k no earlier than k / 1440 s after the first") {
+    // arrivals 1440 virtual seconds apart: at least 1441 one-second frames
+    val stamps = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val frames = new OutputStream {
+      def write(b: Int): Unit = ()
+      override def write(b: Array[Byte], off: Int, len: Int): Unit =
+        if (new String(b, off, len, "UTF-8").startsWith("[t=")) stamps += System.nanoTime()
+    }
+    val (status, err) = runInto(frames, csv(
+      """user_id,request_time,processing_time
+        |u1,2023-01-01T00:00:00.000000Z,1.0
+        |u2,2023-01-01T00:24:00.000000Z,1.0
+        |""".stripMargin), "--animation")
+    assert(status == 0, err)
+    assert(stamps.length >= 1441, s"${stamps.length} frames")
+    val elapsed = (stamps.last - stamps.head) / 1e9
+    assert(elapsed >= (stamps.length - 1) / 1440.0, s"${stamps.length} frames in $elapsed s")
   }
 }

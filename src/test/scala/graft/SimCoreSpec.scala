@@ -179,4 +179,21 @@ class SimCoreSpec extends AnyFunSuite {
     val b = run(SimConfig(numWorkers = 3), scala.util.Random.shuffle(rs.toList): _*)
     assert(a == b) // internal stable sort restores canonical order
   }
+
+  test("a NaN arrival or service time fails the run instead of spinning") {
+    // on a daemon thread, so that a spinning core fails the test at the
+    // await instead of hanging the suite
+    for ((what, bad) <- Seq(
+        "processing time" -> req("user2", 0.5, Double.NaN, 1),
+        "arrival time" -> req("user2", Double.NaN, 1.0, 1))) {
+      val outcome = scala.concurrent.Promise[scala.util.Try[Vector[SimCompleted]]]()
+      val t = new Thread(() => outcome.success(scala.util.Try(run(SimConfig(), req("user1", 0.0, 1.0, 0), bad))))
+      t.setDaemon(true)
+      t.start()
+      val result = scala.concurrent.Await.result(outcome.future, scala.concurrent.duration.Duration(10, "s"))
+      val e = result.failed.toOption
+      assert(e.exists(_.isInstanceOf[IllegalStateException]), s"NaN $what: $result")
+      assert(e.get.getMessage.contains("next event time NaN"), e.get.getMessage)
+    }
+  }
 }

@@ -118,14 +118,21 @@ class SourcesSpec extends AnyFunSuite {
   /** A non-finite processing time can be neither simulated nor dropped:
     * every reader rejects it as a malformed float, at its row.
     */
-  private def assertRejectsProc(value: String): Unit = {
+  private def assertRejectsProc(value: String): Unit =
+    assertRejectsRow(s"user2,2023-01-01T00:00:00.200000Z,$value", s"float '$value'", "malformed_float")
+
+  /** Every reader rejects the data row `row2` (user2's, between two good
+    * rows) as malformed `what` at row 2; `readLenient` quarantines it
+    * with `reason`.
+    */
+  private def assertRejectsRow(row2: String, what: String, reason: String): Unit = {
     val path = tmpCsv(
       s"""user_id,request_time,processing_time
         |user1,2023-01-01T00:00:00.100000Z,1.0
-        |user2,2023-01-01T00:00:00.200000Z,$value
+        |$row2
         |user3,2023-01-01T00:00:00.300000Z,2.0
         |""".stripMargin)
-    val want = s"Malformed float '$value' at data row 2"
+    val want = s"Malformed $what at data row 2"
     val e = intercept[RequestCsv.CsvParseException](RequestCsv.read(spark, path))
     assert(e.message == want)
     val e2 = intercept[RequestCsv.CsvParseException](
@@ -134,7 +141,7 @@ class SourcesSpec extends AnyFunSuite {
     val (clean, quarantined) = RequestCsv.readLenient(spark, path)
     assert(clean.collect().map(_.userId).toSet == Set("user1", "user3"))
     assert(quarantined.collect().map(r => r.getAs[String]("user_id") -> r.getAs[String]("reason")).toSeq ==
-      Seq("user2" -> "malformed_float"))
+      Seq("user2" -> reason))
   }
 
   test("processing_time nan is a malformed float, never simulated") {
@@ -144,6 +151,15 @@ class SourcesSpec extends AnyFunSuite {
   test("processing_time Infinity is a malformed float, never dropped silently") {
     assertRejectsProc("Infinity")
     assertRejectsProc("-Infinity")
+  }
+
+  test("an empty processing_time, or a row without one, is a malformed float ''") {
+    assertRejectsRow("user2,2023-01-01T00:00:00.200000Z,", "float ''", "malformed_float")
+    assertRejectsRow("user2,2023-01-01T00:00:00.200000Z", "float ''", "malformed_float")
+  }
+
+  test("an empty request_time is a malformed timestamp ''") {
+    assertRejectsRow("user2,,2.0", "timestamp ''", "malformed_timestamp")
   }
 
   test("readWith: one job counts every row and checks the parse inside the caller's action") {
