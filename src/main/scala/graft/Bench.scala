@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every declared query at the target scale factor
   * and prints two JSON lines on stdout; it writes no file.
   *
@@ -14,15 +12,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // SPARK_GRAFT_ONLY=q1_agg,q66_... times a subset
+    val queries = SparkEntry.selectedQueries()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = SparkEntry.localSession(cpus, None, "ERROR").getOrCreate()
 
     // Isolation between measurements: beyond the cache, the streaming
     // queries leave per-run debris in the shared JVM — memory-sink temp
@@ -38,11 +31,6 @@ object Bench {
       System.gc()
     }
 
-    // SPARK_GRAFT_ONLY=q1_agg,q66_... : time a subset (iteration tool;
-    // the driver never sets it, so the full catalogue runs)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(q => only.forall(_.contains(q._1)))
     // Warmup pass (untimed).
     queries.foreach { case (_, fn) =>
       try fn(spark, sfDir).count()

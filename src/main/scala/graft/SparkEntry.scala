@@ -39,6 +39,48 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     catalogue.map(q => q.name -> q.fn).toMap
 
+  /** The local-session recipe of every entry point: `local[cores]` with
+    * one shuffle partition per core, UTC session time, no UI and the given
+    * log level. Without an `appName`, Spark names the application itself.
+    * Callers add their own settings to the builder before `getOrCreate()`.
+    */
+  def localSession(cores: Int, appName: Option[String], logLevel: String): SparkSession.Builder = {
+    val b = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.log.level", logLevel)
+    appName.fold(b)(b.appName)
+  }
+
+  /** The catalogue in name order, cut to the comma-separated names in
+    * `SPARK_GRAFT_ONLY` when that is set. A name the catalogue does not
+    * have exits 2, naming it, before any query runs.
+    */
+  def selectedQueries(): Seq[(String, (SparkSession, String) => DataFrame)] =
+    select(sys.env.get("SPARK_GRAFT_ONLY")) match {
+      case Right(qs) => qs
+      case Left(unknown) =>
+        System.err.println(s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.mkString(", ")}")
+        sys.exit(2)
+    }
+
+  /** [[selectedQueries]] for the list `only`: the selection, or the names
+    * that are not in the catalogue.
+    */
+  private[graft] def select(
+      only: Option[String]
+  ): Either[Seq[String], Seq[(String, (SparkSession, String) => DataFrame)]] = {
+    val all = queries.toSeq.sortBy(_._1)
+    only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet) match {
+      case None => Right(all)
+      case Some(names) =>
+        val unknown = (names -- all.map(_._1)).toSeq.sorted
+        if (unknown.nonEmpty) Left(unknown) else Right(all.filter(q => names(q._1)))
+    }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */

@@ -39,15 +39,8 @@ object Main {
     }
     // A bad flag fails before Spark starts.
     parseArgs(args).left.foreach(msg => sys.exit(badFlag(msg)))
-    val spark = SparkSession
-      .builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-sim")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val local = graft.SparkEntry.localSession(4, Some("graft-sim"), "WARN")
+    val spark = sys.env.get("SPARK_MASTER").fold(local)(local.master).getOrCreate()
     val status =
       try run(spark, args)
       finally spark.stop()

@@ -560,31 +560,11 @@ object Dedup {
 
   // -------------------------------------------------------------- MinHash
 
-  /** MinHash band signatures: all `numPerm` permutation minima computed
-    * row-locally by the [[graft.functions.MinHashSignature]] expression —
-    * NO shuffle; signatures fall out of the scan that shingled the text —
-    * then `bands` band-hashes of `numPerm/bands` minima each. Output long
-    * format: (doc_id, band_id, band_sig).
-    *
-    * (The previous formulation exploded shingles into a 64-column min
-    * aggregate: one full shuffle of |corpus|·|shingles| rows that this
-    * expression makes unnecessary.)
-    */
-  def minhashBands(shingled: DataFrame, numPerm: Int = 64, bands: Int = 16): DataFrame = {
-    val spark = shingled.sparkSession
-    val fn = s"minhash_sig_$numPerm"
-    graft.functions.MinHashSignature.register(spark, fn, numPerm, seed = 42L)
-    bandsFromSig(
-      shingled.select(col("doc_id"), expr(s"$fn(shingles)").as("sig")),
-      numPerm,
-      bands
-    )
-  }
-
-  /** Band-hash a precomputed `sig` (array of `numPerm` minima) column —
-    * split out so callers can materialize the signature relation and
-    * band-hash from it (a band self-join would otherwise re-evaluate the
-    * numPerm-permutation signature once per join side).
+  /** Band-hash a precomputed `sig` (array of `numPerm` minima) column
+    * into `bands` hashes of `numPerm/bands` minima each, in long format
+    * (doc_id, band_id, band_sig). Callers materialize the signature
+    * relation first: a band self-join would otherwise re-evaluate the
+    * numPerm-permutation signature once per join side.
     */
   def bandsFromSig(sigs: DataFrame, numPerm: Int = 64, bands: Int = 16): DataFrame = {
     require(numPerm % bands == 0, "numPerm must divide into bands")

@@ -1,10 +1,11 @@
 package graft.operators
 
-import java.util.concurrent.atomic.AtomicReference
+import java.util.concurrent.TimeoutException
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 
 /** Pipeline observability WITHOUT extra scans: named aggregate metrics
   * collected while the main action runs, via `Dataset.observe`.
@@ -19,8 +20,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *
   * Metric expressions must be accumulator-safe aggregates (count/sum/
   * min/max/avg over the observed rows — Spark rejects non-aggregates at
-  * analysis time). Delivery is a listener callback, inherently
-  * asynchronous; `withMetrics` bridges that with a bounded wait.
+  * analysis time). Delivery is asynchronous: Spark completes the
+  * [[Observation]]'s future after the job, and `withMetrics` waits for it
+  * with a bound.
   */
 object Observe {
 
@@ -36,26 +38,13 @@ object Observe {
       timeoutMs: Long = 10000L
   )(action: DataFrame => T): (T, Map[String, Any]) = {
     require(metrics.nonEmpty, "at least one metric expression")
-    val spark = df.sparkSession
-    val observed = df.observe(name, metrics.head, metrics.tail: _*)
-    val slot = new AtomicReference[Row](null)
-    val listener = new QueryExecutionListener {
-      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
-        qe.observedMetrics.get(name).foreach(slot.set)
-      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val result = action(observed)
-      val deadline = System.nanoTime() + timeoutMs * 1000000L
-      while (slot.get == null && System.nanoTime() < deadline) Thread.sleep(10)
-      val row = slot.get
-      val collected =
-        if (row == null) Map.empty[String, Any]
-        else row.schema.fieldNames.zip(row.toSeq).toMap
-      (result, collected)
-    } finally {
-      spark.listenerManager.unregister(listener)
-    }
+    val obs = Observation(name)
+    val result = action(df.observe(obs, metrics.head, metrics.tail: _*))
+    // Spark completes the future with an empty row when a job ran the plan
+    // but collected no metrics for it.
+    val row =
+      try Await.result(obs.future, timeoutMs.millis)
+      catch { case _: TimeoutException => Row.empty }
+    (result, if (row.length == 0) Map.empty else row.getValuesMap[Any](row.schema.fieldNames.toSeq))
   }
 }

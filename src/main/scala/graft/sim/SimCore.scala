@@ -386,6 +386,15 @@ object SimCore {
     // stable `sorted(key=sim_arrival_time)` over input order
     // (src/simulator.py:41).
     val pending: Array[SimRequest] = input.toArray.sortBy(r => (r.simArrivalTime, r.seq))
+    // A NaN time stalls the event loop and an infinite one ends it early,
+    // dropping whatever is still queued: refuse both, naming the request.
+    pending.foreach { r =>
+      require(
+        java.lang.Double.isFinite(r.simArrivalTime) && java.lang.Double.isFinite(r.processingTime),
+        s"request seq ${r.seq} has a non-finite time: arrival ${r.simArrivalTime}, " +
+          s"processing ${r.processingTime}"
+      )
+    }
     private val rng = new SplitMixRandom(
       resume.map(_.rngState).filter(_ != 0L).getOrElse(MinHashLike.mix64(cfg.rngSeed))
     )
@@ -533,8 +542,8 @@ object SimCore {
         e.currentTime = nextEvent
       } else {
         // After a completed fixpoint every due completion and arrival has
-        // been drained, so only a NaN event time (a NaN arrival or service
-        // time) lands here; failing beats spinning forever.
+        // been drained, so only a NaN event time lands here, and the Engine
+        // refuses NaN inputs; failing beats spinning forever.
         throw new IllegalStateException(
           s"simulation cannot advance: current time ${e.currentTime}, next event time $nextEvent")
       }

@@ -64,6 +64,18 @@ class CliSpec extends AnyFunSuite {
     assert(out.contains("priority:"), "queue totals block missing")
   }
 
+  test("columns map by header name: another order with an extra column gives the same report") {
+    val rows = fourRows.linesIterator.drop(1).zipWithIndex.map { case (line, i) =>
+      val Array(user, time, proc) = line.split(",")
+      s"$proc,x$i,$user,$time"
+    }
+    val reordered = ("processing_time,extra,user_id,request_time" +: rows.toSeq).mkString("", "\n", "\n")
+    val (status, out, err) = runCapturing(csv(reordered), "-w", "2")
+    assert(status == 0, err)
+    assert(out.contains("Processed requests:      4"), out)
+    assert(out == runCapturing(csv(fourRows), "-w", "2")._2)
+  }
+
   test("--fifo -q 1 with one worker makes rejection reachable and reported") {
     // burst of simultaneous arrivals against a 1-slot queue: at most
     // (in-flight + queued) survive, the rest reject

@@ -180,20 +180,54 @@ class SimCoreSpec extends AnyFunSuite {
     assert(a == b) // internal stable sort restores canonical order
   }
 
+  /** `body` on a daemon thread, so that a spinning core fails the test at
+    * the await instead of hanging the suite.
+    */
+  private def within10s[T](body: => T): scala.util.Try[T] = {
+    val outcome = scala.concurrent.Promise[scala.util.Try[T]]()
+    val t = new Thread(() => outcome.success(scala.util.Try(body)))
+    t.setDaemon(true)
+    t.start()
+    scala.concurrent.Await.result(outcome.future, scala.concurrent.duration.Duration(10, "s"))
+  }
+
   test("a NaN arrival or service time fails the run instead of spinning") {
-    // on a daemon thread, so that a spinning core fails the test at the
-    // await instead of hanging the suite
     for ((what, bad) <- Seq(
         "processing time" -> req("user2", 0.5, Double.NaN, 1),
         "arrival time" -> req("user2", Double.NaN, 1.0, 1))) {
-      val outcome = scala.concurrent.Promise[scala.util.Try[Vector[SimCompleted]]]()
-      val t = new Thread(() => outcome.success(scala.util.Try(run(SimConfig(), req("user1", 0.0, 1.0, 0), bad))))
-      t.setDaemon(true)
-      t.start()
-      val result = scala.concurrent.Await.result(outcome.future, scala.concurrent.duration.Duration(10, "s"))
+      val result = within10s(run(SimConfig(), req("user1", 0.0, 1.0, 0), bad))
       val e = result.failed.toOption
-      assert(e.exists(_.isInstanceOf[IllegalStateException]), s"NaN $what: $result")
-      assert(e.get.getMessage.contains("next event time NaN"), e.get.getMessage)
+      assert(e.exists(_.isInstanceOf[IllegalArgumentException]), s"NaN $what: $result")
+      assert(e.get.getMessage.contains("request seq 1 has a non-finite time"), e.get.getMessage)
     }
+  }
+
+  test("an infinite arrival or service time fails every run mode, naming the request, instead of dropping requests") {
+    val cfg = SimConfig(numWorkers = 1)
+    val rest = Seq(req("user2", 0.5, 1.0, 1), req("user3", 1.0, 1.0, 2))
+    for (bad <- Seq(
+        req("user1", 0.0, Double.PositiveInfinity, 0),
+        req("user1", 0.0, Double.NegativeInfinity, 0),
+        req("user1", Double.PositiveInfinity, 1.0, 0))) {
+      val input = bad +: rest
+      for ((mode, result) <- Seq(
+          "run" -> within10s(SimCore.run(cfg, input.iterator).toVector),
+          "runIncremental" -> within10s(
+            SimCore.runIncremental(cfg, SimCore.SimState.initial(cfg), input.iterator, Double.PositiveInfinity)._1),
+          "runFixedStep" -> within10s(SimCore.runFixedStep(cfg, input.iterator).toVector))) {
+        val e = result.failed.toOption
+        assert(e.exists(_.isInstanceOf[IllegalArgumentException]), s"$mode on $bad: $result")
+        assert(e.get.getMessage.contains("request seq 0 has a non-finite time"), e.get.getMessage)
+      }
+    }
+  }
+
+  test("a negative arrival is enqueued at the starting clock, 0, and keeps its own arrival time") {
+    val out = run(SimConfig(numWorkers = 1), req("early", -5.0, 1.0, 0), req("late", 3.0, 1.0, 1))
+    val early = out.find(_.userId == "early").get
+    val late = out.find(_.userId == "late").get
+    assert(early.simArrivalTime == -5.0)
+    assert(early.arrivalTimeInQueue == 0.0 && early.startTime == 0.0 && early.finishTime == 1.0)
+    assert(late.arrivalTimeInQueue == 3.0 && late.startTime == 3.0 && late.finishTime == 4.0)
   }
 }

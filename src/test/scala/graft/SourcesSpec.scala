@@ -187,6 +187,70 @@ class SourcesSpec extends AnyFunSuite {
     intercept[IllegalStateException](RequestCsv.readWith(spark, path)(_ => 0))
   }
 
+  test("request_time forms: which parse and to what instant (pins today's accept/reject decision)") {
+    // Every reader shares one parse, so readLenient's split into clean and
+    // quarantined rows is read's and readWith's accept/reject decision.
+    // Beyond ISO-8601 proper, today's parse accepts lowercase t/z, a space
+    // separator, a date only, a missing seconds field, surrounding blanks,
+    // unpadded fields and 7-9 fractional digits (truncated to µs); it
+    // rejects 24:00:00, 2023-02-30 and a missing seconds field before Z.
+    val forms: Seq[(String, Option[String])] = Seq(
+      "2023-01-01T00:00:01Z" -> Some("2023-01-01T00:00:01Z"),
+      "2023-01-01T00:00:01" -> Some("2023-01-01T00:00:01Z"),
+      "2023-01-01T00:00:01+00:00" -> Some("2023-01-01T00:00:01Z"),
+      "2023-01-01T00:00:01.1" -> Some("2023-01-01T00:00:01.100Z"),
+      "2023-01-01T00:00:01.12" -> Some("2023-01-01T00:00:01.120Z"),
+      "2023-01-01T00:00:01.123" -> Some("2023-01-01T00:00:01.123Z"),
+      "2023-01-01T00:00:01.1234" -> Some("2023-01-01T00:00:01.123400Z"),
+      "2023-01-01T00:00:01.12345" -> Some("2023-01-01T00:00:01.123450Z"),
+      "2023-01-01T00:00:01.123456" -> Some("2023-01-01T00:00:01.123456Z"),
+      "2023-01-01T00:00:01.1234567" -> Some("2023-01-01T00:00:01.123456Z"),
+      "2023-01-01T00:00:01.12345678" -> Some("2023-01-01T00:00:01.123456Z"),
+      "2023-01-01T00:00:01.123456789" -> Some("2023-01-01T00:00:01.123456Z"),
+      "2023-01-01T00:00:01.1Z" -> Some("2023-01-01T00:00:01.100Z"),
+      "2023-01-01T00:00:01.123456Z" -> Some("2023-01-01T00:00:01.123456Z"),
+      "2023-01-01T00:00:01.123456789Z" -> Some("2023-01-01T00:00:01.123456Z"),
+      "2023-01-01T05:30:01+05:30" -> Some("2023-01-01T00:00:01Z"),
+      "2023-01-01T05:30:01.5+05:30" -> Some("2023-01-01T00:00:01.500Z"),
+      "2022-12-31T16:00:01-08:00" -> Some("2023-01-01T00:00:01Z"),
+      "2023-01-01T05:30:01+0530" -> Some("2023-01-01T00:00:01Z"),
+      "2023-01-01T05:00:01+05" -> Some("2023-01-01T00:00:01Z"),
+      "2023-01-01 00:00:01" -> Some("2023-01-01T00:00:01Z"),
+      "2023-01-01 00:00:01Z" -> Some("2023-01-01T00:00:01Z"),
+      "2023-01-01" -> Some("2023-01-01T00:00:00Z"),
+      "2023-01-01T00:00" -> Some("2023-01-01T00:00:00Z"),
+      "2023-01-01T00:00Z" -> None,
+      "2023-01-01t00:00:01" -> Some("2023-01-01T00:00:01Z"),
+      "2023-01-01T00:00:01z" -> Some("2023-01-01T00:00:01Z"),
+      "2023-01-01t00:00:01z" -> Some("2023-01-01T00:00:01Z"),
+      " 2023-01-01T00:00:01Z" -> Some("2023-01-01T00:00:01Z"),
+      "2023-01-01T00:00:01Z " -> Some("2023-01-01T00:00:01Z"),
+      " 2023-01-01T00:00:01 " -> Some("2023-01-01T00:00:01Z"),
+      "2023-02-30T00:00:00" -> None,
+      "2023-01-01T24:00:00" -> None,
+      "2023-01-01T00:00:60" -> None,
+      "2023-13-01T00:00:00" -> None,
+      "2023-1-1T0:0:1" -> Some("2023-01-01T00:00:01Z"),
+      "20230101T000001" -> None,
+      "2023-01-01T00:00:01." -> Some("2023-01-01T00:00:01Z"),
+      "2023-01-01T00:00:01 UTC" -> Some("2023-01-01T00:00:01Z"),
+      "2023-01-01T00:00:01+00:00Z" -> None,
+      "1672531201" -> None,
+      "not_a_datetime_string" -> None,
+    )
+    val path = tmpCsv(forms.zipWithIndex
+      .map { case ((f, _), i) => s"r$i,$f,1.0" }
+      .mkString("user_id,request_time,processing_time\n", "\n", "\n"))
+    val (clean, quarantined) = RequestCsv.readLenient(spark, path)
+    val parsed = clean.collect().map(r =>
+      r.userId -> r.requestTimeMicros.map(us => java.time.Instant.EPOCH.plusNanos(us * 1000L).toString)).toMap
+    val rejected = quarantined.collect().map(r => r.getAs[String]("user_id") -> r.getAs[String]("reason")).toMap
+    assert(rejected.values.forall(_ == "malformed_timestamp"))
+    val got = forms.indices.map(i => forms(i)._1 -> parsed.getOrElse(s"r$i", None))
+    assert(rejected.size + parsed.size == forms.size)
+    assert(got == forms)
+  }
+
   test("missing column → error naming it (test_csv_parser.py:118-121)") {
     val path = tmpCsv(
       """user_id,request_time

@@ -4,19 +4,12 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all Spark-backed suites. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
+  lazy val spark: SparkSession =
+    SparkEntry.localSession(4, Some("graft-test"), "WARN")
       // the PRODUCTION wiring: optimizer rule + SQL kernel functions come
       // in through the extensions class, so every suite runs the same
       // session shape a cluster deployment configures
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       // Static conf: must be set at session build (bucketed-table specs).
       .config(
         "spark.sql.warehouse.dir",
@@ -27,7 +20,4 @@ object SparkTestSession {
         s"jdbc:derby:;databaseName=${java.nio.file.Files.createTempDirectory("graft_metastore")}/db;create=true"
       )
       .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 }
