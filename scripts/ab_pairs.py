@@ -10,7 +10,8 @@ slows down or speeds up over the runs does not favour one side.
 
 For each end-to-end metric in CHANGE_DIR/BENCHMARK.json it prints each
 side's median and quartiles, the change's wins out of N (ties count for
-neither side), and whether the gap between the medians exceeds the
+neither side), the median over the pairs of the change's value divided by
+the parent's, and whether the gap between the medians exceeds the
 distance between the parent's quartiles: a gain is claimed only with
 wins >= 9/10 of the pairs and a gap beyond that spread. Each run's JSON
 line goes to standard output as it arrives; a run that is not
@@ -116,10 +117,12 @@ def summarize(workload, n, results, bad, metrics):
         wins = sum(1 for a, b in zip(p, c) if (b < a if lower else b > a))
         (p1, pm, p3), (c1, cm, c3) = quartiles(p), quartiles(c)
         gap = (pm - cm) if lower else (cm - pm)
+        ratio = statistics.median(b / a for a, b in zip(p, c))
         resolved = wins >= 0.9 * len(pairs) and gap > p3 - p1
         print(f"{name} ({m['better']} is better): "
               f"parent {pm:.4g} [{p1:.4g}, {p3:.4g}], change {cm:.4g} [{c1:.4g}, {c3:.4g}]; "
-              f"change wins {wins}/{len(pairs)}; median gap {gap:+.4g} in the change's favour "
+              f"change wins {wins}/{len(pairs)}; median per-pair change/parent ratio {ratio:.4g}; "
+              f"median gap {gap:+.4g} in the change's favour "
               f"({100 * gap / pm:+.1f}% of the parent median) vs parent IQR {p3 - p1:.4g}: "
               f"{'gain resolved' if resolved else 'no gain resolved'}")
 

@@ -1,8 +1,9 @@
 package graft.cli
 
+import java.io.FileNotFoundException
 import java.util.concurrent.locks.LockSupport
 
-import org.apache.spark.sql.{AnalysisException, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Dataset, Row, SparkSession}
 
 import graft.model.{FifoConfig, PriorityConfig, SimCompleted, SimConfig, SimRequest}
 import graft.sim.SimOperator
@@ -20,10 +21,12 @@ import graft.stats.Statistics
   * exactly like the original; `--fifo` selects the bounded FIFO discipline
   * where rejection is reachable (SURVEY §4.1).
   *
-  * The report comes from one parse of the CSV in one Spark job: the parse
-  * check and row count ride the job as observed metrics
-  * ([[RequestCsv.readWith]]), and simulation → [[Statistics.report]] →
-  * collect is that job's action. Nothing is cached.
+  * The report comes from one parse of the CSV in one Spark action: the
+  * driver reads the header, the parse check and row count ride the action
+  * as observed metrics ([[RequestCsv.readWith]]), and simulation →
+  * [[Statistics.report]] → collect is the action. The parse runs on every
+  * core; one shuffle hands its rows to the one task that simulates and
+  * aggregates. Nothing is cached.
   *
   * Exit status, unlike the reference's 0 on every error path: 0 after a
   * report (or an empty CSV), 1 after a CSV error, 2 after a bad flag value.
@@ -100,7 +103,7 @@ object Main {
         case e: RequestCsv.CsvParseException =>
           System.err.println(s"Error: CSV file format is invalid. Detail: ${e.message}")
           return 1
-        case e: AnalysisException if e.getMessage.contains("PATH_NOT_FOUND") =>
+        case _: FileNotFoundException =>
           System.err.println(s"Error: CSV file '$csvFile' not found.")
           return 1
       }

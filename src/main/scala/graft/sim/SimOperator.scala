@@ -9,7 +9,7 @@ import graft.model._
   * The simulation is a globally-sequential fold (one shared queue + one
   * shared rate-limit ledger couple all events — reference:
   * src/simulator.py:57, SURVEY §4.2), so a single scenario is pinned to ONE
-  * task via `coalesce(1)` (narrow, no shuffle). Scale-out at 100 TB comes
+  * task behind one shuffle (`repartition(1)`). Scale-out at 100 TB comes
   * from [[simulateScenarios]]: thousands of independent scenarios
   * (parameter sweeps, per-tenant replays) fan out across the cluster with
   * one ordinary shuffle, each group folded independently.
@@ -18,13 +18,15 @@ object SimOperator {
 
   implicit private val completedEnc: Encoder[SimCompleted] = Encoders.product[SimCompleted]
 
-  /** Run one simulation over the whole dataset. Input order is made
-    * deterministic by SimCore's internal stable (simArrivalTime, seq) sort,
-    * so no cluster-side sort is needed — `coalesce(1)` is a narrow
-    * dependency and the fold streams the single partition.
+  /** Run one simulation over the whole dataset. `repartition(1)` hands
+    * every row to one task through one shuffle, so whatever produces `ds`
+    * (a CSV parse, a lake scan) keeps running on every core; a narrow
+    * `coalesce(1)` would pull that work into the fold's task too. The
+    * shuffle's arrival order does not matter: SimCore sorts its input by
+    * (simArrivalTime, seq) itself, so no cluster-side sort is needed.
     */
   def simulate(ds: Dataset[SimRequest], cfg: SimConfig): Dataset[SimCompleted] =
-    ds.coalesce(1).mapPartitions(it => SimCore.run(cfg, it))
+    ds.repartition(1).mapPartitions(it => SimCore.run(cfg, it))
 
   /** Scenario fan-out: one independent simulation per key. Each group is
     * materialized in memory by SimCore (a single scenario's event set must

@@ -1,7 +1,21 @@
 package graft.sources
 
+import java.io.FileNotFoundException
+import java.nio.charset.StandardCharsets.UTF_8
+
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path, PathFilter}
+import org.apache.hadoop.io.{LongWritable, Text}
+import org.apache.hadoop.mapred.{FileInputFormat, FileSplit, JobConf, LineRecordReader, TextInputFormat}
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.{HadoopRDD, RDD}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.model.SimRequest
 import graft.operators.Observe
@@ -16,13 +30,15 @@ import graft.operators.Observe
   *     (ValueError analogue, :42,69-70); an empty field is malformed
   *     (`float('')` raises), and a `processing_time` of NaN or ±Infinity
   *     counts as a malformed float, since neither can be simulated
-  *   - header-only file → empty dataset, no error
+  *   - header-only file → empty dataset, no error; a path that matches no
+  *     file throws [[java.io.FileNotFoundException]]
   *
-  * Parse runs distributed (typed casts in a projection); the row-numbered
-  * error report is only computed on the failure path. [[read]] checks the
-  * whole file before it returns; [[readWith]] checks it inside the
-  * caller's own action, so a reader that consumes the rows once pays for
-  * one scan and one job.
+  * The header is read on the driver and the parse runs distributed, one
+  * split of the lines per core (typed casts in a projection); the
+  * row-numbered error report is only computed on the failure path.
+  * [[read]] checks the whole file before it returns; [[readWith]] checks
+  * it inside the caller's own action, so a reader that consumes the rows
+  * once pays for one scan and one action.
   */
 object RequestCsv {
 
@@ -33,41 +49,139 @@ object RequestCsv {
 
   implicit private val reqEnc: Encoder[SimRequest] = Encoders.product[SimRequest]
 
-  /** Header check plus the typed-cast projection both readers share:
-    * the raw columns ride along for error reports, and `ts` / `proc` are
-    * NULL where the value does not parse.
+  private val Required = Seq("user_id", "request_time", "processing_time")
+
+  /** What the parse reads of a data line: its required fields as strings,
+    * and `seq`.
+    */
+  private val LineSchema =
+    StructType(Required.map(StructField(_, StringType)) :+ StructField("seq", LongType, nullable = false))
+
+  /** Header check plus the typed-cast projection every reader shares: the
+    * raw columns ride along for error reports, and `ts` / `proc` are NULL
+    * where the value does not parse. The header is read on the driver
+    * ([[header]]), so no Spark job infers it; the lines are parsed on
+    * every core ([[dataRows]]).
     */
   private def parse(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read
-      .option("header", "true")
-      .csv(path)
-
-    val required = Seq("user_id", "request_time", "processing_time")
-    val missing = required.filterNot(raw.columns.contains)
+    val conf = spark.sessionState.newHadoopConf()
+    val options = new CSVOptions(Map("header" -> "true"), true, spark.sessionState.conf.sessionLocalTimeZone)
+    val files = inputFiles(conf, path)
+    val columns = header(spark, files, options, conf)
+    val missing = Required.filterNot(columns.contains)
     if (missing.nonEmpty)
       throw CsvParseException(s"CSV is missing required column(s): ${missing.mkString(", ")}")
+    val raw = spark.createDataFrame(
+      dataRows(spark.sparkContext, path, files, conf, options, Required.map(columns.indexOf)), LineSchema)
 
-    // Normalize trailing Z, parse both zoned and naive ISO-8601 (the
-    // reference accepts no-Z values as naive local = UTC here, :54-59).
-    val tsStr = regexp_replace(col("request_time"), "Z$", "+00:00")
+    // Zoned and naive ISO-8601 (the reference accepts no-Z values as naive
+    // local = UTC here, :54-59); a trailing Z is a zero offset (:50-53),
+    // which `XXX` and the lenient fallback both read.
+    val ts = col("request_time")
     raw.select(
       col("user_id"),
-      col("request_time").as("raw_ts"),
+      ts.as("raw_ts"),
       col("processing_time").as("raw_proc"),
       // try_* variants: ANSI mode (Spark 4 default) would otherwise throw
       // mid-task; the reference contract wants a row-numbered error instead.
       coalesce(
-        try_to_timestamp(tsStr, lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")),
-        try_to_timestamp(tsStr, lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
-        try_to_timestamp(col("request_time"), lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")),
-        try_to_timestamp(col("request_time"), lit("yyyy-MM-dd'T'HH:mm:ss")),
+        try_to_timestamp(ts, lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")),
+        try_to_timestamp(ts, lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
+        try_to_timestamp(ts, lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")),
+        try_to_timestamp(ts, lit("yyyy-MM-dd'T'HH:mm:ss")),
         // Lenient ISO-8601 fallback for 1-5 fractional digits
         // (fromisoformat on Python >= 3.11 accepts them, :50-53).
-        try_to_timestamp(tsStr)
+        try_to_timestamp(ts),
+        // Minutes with an offset, which the fallback refuses although it
+        // reads minutes without one (`T00:00Z` as `T00:00`); only rows
+        // every other form rejects get here.
+        try_to_timestamp(ts, lit("yyyy-MM-dd'T'HH:mmXXX"))
       ).as("ts"),
       expr("try_cast(processing_time AS DOUBLE)").as("proc"),
-      monotonically_increasing_id().as("seq")
+      col("seq")
     )
+  }
+
+  /** The files Hadoop's text input format reads for `path` (a file, a
+    * directory of files or a glob, on any Hadoop file system), in path
+    * order: no hidden or `_` files. Throws
+    * [[java.io.FileNotFoundException]] when nothing matches `path`.
+    */
+  private def inputFiles(conf: Configuration, path: String): Seq[Path] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val matched = Option(fs.globStatus(p)).getOrElse(Array.empty)
+    if (matched.isEmpty) throw new FileNotFoundException(path)
+    val visible: PathFilter = f => !f.getName.startsWith("_") && !f.getName.startsWith(".")
+    matched.toSeq
+      .flatMap(s => if (s.isDirectory) fs.listStatus(s.getPath, visible).toSeq.filter(_.isFile) else Seq(s))
+      .map(_.getPath)
+      .sortBy(_.toString)
+  }
+
+  /** The column names of the CSV: the first non-blank line of the first of
+    * `files` that has one, split with Spark's CSV options and named as
+    * Spark's CSV source names a header's columns. Without such a line
+    * there are no columns.
+    */
+  private def header(spark: SparkSession, files: Seq[Path], options: CSVOptions, conf: Configuration): Seq[String] =
+    files.iterator
+      .flatMap(CSVUtils.readHeaderLine(_, options, conf))
+      .nextOption()
+      .fold(Seq.empty[String]) { line =>
+        val names = new CsvParser(options.asParserSettings).parseLine(line)
+        CSVUtils.makeSafeHeader(names, spark.sessionState.conf.caseSensitiveAnalysis, options).toSeq
+      }
+
+  /** The data lines among `lines`: blank lines dropped and, at the start of
+    * a file, the header line too, as Spark's CSV source drops them.
+    */
+  private def dataLines(lines: Iterator[String], fileStart: Boolean): Iterator[String] =
+    (if (fileStart) lines.dropWhile(_.trim.isEmpty).drop(1) else lines).filter(_.trim.nonEmpty)
+
+  private def text(t: Text): String = new String(t.getBytes, 0, t.getLength, UTF_8)
+
+  /** One row of [[LineSchema]] per data line of `files`, read in
+    * `defaultParallelism` splits so the parse runs on every core. Fields
+    * are taken by header position from Spark's CSV tokenizer, NULL when
+    * empty or past the end of a short row, as Spark's CSV reader reads
+    * them. `seq` is the line's 0-based data row number within its file
+    * plus the file's ordinal times 2^33: dense within a file, monotone in
+    * file order. A split that does not start its file counts the data
+    * lines before it by reading the file up to its start with the same
+    * line reader, which yields exactly the lines of the splits before.
+    */
+  private def dataRows(
+      sc: SparkContext,
+      path: String,
+      files: Seq[Path],
+      conf: Configuration,
+      options: CSVOptions,
+      fields: Seq[Int]
+  ): RDD[Row] = {
+    val ordinal = files.map(_.toString).zipWithIndex.toMap
+    val confBc = sc.broadcast(new SerializableConfiguration(conf))
+    val setPath = (jc: JobConf) => FileInputFormat.setInputPaths(jc, new Path(path))
+    new HadoopRDD(sc, confBc, Some(setPath), classOf[TextInputFormat], classOf[LongWritable], classOf[Text],
+      sc.defaultParallelism)
+      .mapPartitionsWithInputSplit { (split, records) =>
+        val s = split.asInstanceOf[FileSplit]
+        val before =
+          if (s.getStart == 0) 0L
+          else {
+            val prefix = new LineRecordReader(confBc.value.value, new FileSplit(s.getPath, 0, s.getStart, Array.empty[String]))
+            val (k, v) = (prefix.createKey(), prefix.createValue())
+            try dataLines(Iterator.continually(prefix.next(k, v)).takeWhile(identity).map(_ => text(v)), true).size
+            finally prefix.close()
+          }
+        val first = (ordinal(s.getPath.toString).toLong << 33) + before
+        val parser = new CsvParser(options.asParserSettings)
+        dataLines(records.map(r => text(r._2)), s.getStart == 0).zipWithIndex.map { case (line, i) =>
+          val tokens = parser.parseLine(line)
+          def field(f: Int) = if (f < tokens.length && tokens(f) != null && tokens(f).nonEmpty) tokens(f) else null
+          Row(field(fields(0)), field(fields(1)), field(fields(2)), first + i)
+        }
+      }
   }
 
   // An empty field or a short row reads as NULL, which is malformed too.
@@ -97,7 +211,7 @@ object RequestCsv {
   }
 
   /** One-action reader: runs `action` on the typed rows of `path` with
-    * malformed rows filtered out and, in the same Spark job, counts every
+    * malformed rows filtered out and, in the same Spark action, counts every
     * data row and records the smallest `seq` of a malformed one (observed
     * metrics on the parsed rows, see [[Observe.withMetrics]]). Returns the
     * data row count with the action's result, or throws the
@@ -122,11 +236,10 @@ object RequestCsv {
     (m("rows").asInstanceOf[Long], result)
   }
 
-  /** The error for the malformed parsed row `r`. `seq` is
-    * monotonically_increasing_id — file-order monotone but NOT dense
-    * across input partitions (it jumps by 2^33 per partition), so the
-    * 1-based data row number (header excluded, reference :42) is the count
-    * of rows at-or-before the failure.
+  /** The error for the malformed parsed row `r`. `seq` is file-order
+    * monotone but NOT dense across input files (it jumps by 2^33 per
+    * file), so the 1-based data row number (header excluded, reference
+    * :42) is the count of rows at-or-before the failure.
     */
   private def failure(parsed: DataFrame, r: Row): CsvParseException = {
     val rowNo = parsed.filter(col("seq") <= r.getAs[Long]("seq")).count()

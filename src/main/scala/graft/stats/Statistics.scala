@@ -14,7 +14,7 @@ import graft.model.SimCompleted
   * NaN (not null) marks empty-aggregate results for `np.nan` parity
   * (src/statistics.py:64,118-121). The CLI's whole report — summary plus
   * API usage — is the one aggregate [[report]]; the four queuing-time
-  * percentiles share one `percentile` buffer.
+  * percentiles are read from one sorted array.
   */
 object Statistics {
 
@@ -56,13 +56,29 @@ object Statistics {
     Seq(processedPred.as("is_processed"), queuingTime.as("qt"), col("queue"))
 
   /** Queuing-time percentiles reported by [[summary]], in output order. */
-  private val Percentiles = Seq("p50" -> "0.50", "p75" -> "0.75", "p90" -> "0.90", "p99" -> "0.99")
+  private val Percentiles = Seq("p50" -> 0.50, "p75" -> 0.75, "p90" -> 0.90, "p99" -> 0.99)
+
+  /** Spark's `percentile` at fraction `p` of the ascending array `sorted`,
+    * computed the way `percentile` computes it: position (n - 1)·p, the
+    * element at its floor if the position is whole or its floor and
+    * ceiling elements are equal, otherwise linear interpolation between
+    * the two; NaN when the array is empty.
+    */
+  private def percentileOf(sorted: Column, p: Double): Column = {
+    val pos = (size(sorted) - 1) * lit(p)
+    val (lo, hi) = (floor(pos), ceil(pos))
+    val (a, b) = (get(sorted, lo.cast("int")), get(sorted, hi.cast("int")))
+    when(size(sorted) === 0, lit(Double.NaN))
+      .when(lo === hi || a === b, a)
+      .otherwise((hi - pos) * a + (pos - lo) * b)
+  }
 
   /** One-row summary (src/statistics.py:102-121,144-152): counts, mean and
     * exact linear-interpolation percentiles of queuing time, per-queue
     * enqueue totals. A single agg ⇒ one shuffle of partial buffers; the
-    * four percentiles come from one `percentile(qt, array(..))` buffer
-    * (`qt_pcts`) that [[summaryCols]] splits.
+    * four percentiles are read by [[summaryCols]] from one ascending array
+    * of the valid queuing times (`qt_sorted`), which costs less than
+    * Spark's `percentile` buffer and gives the same doubles.
     */
   private val summaryAggs: Seq[Column] = {
     val nan = lit(Double.NaN)
@@ -72,7 +88,7 @@ object Statistics {
       sum(when(!col("is_processed"), 1L).otherwise(0L)).cast("long")
         .as("total_requests_rejected"),
       coalesce(avg(col("qt")), nan).as("average_queuing_time"),
-      expr(s"percentile(qt, array(${Percentiles.map(_._2).mkString(", ")}))").as("qt_pcts"),
+      sort_array(collect_list(col("qt"))).as("qt_sorted"),
       sum(when(col("queue") === "priority", 1L).otherwise(0L)).cast("long")
         .as("priority_queue_enqueued_total"),
       sum(when(col("queue") === "normal", 1L).otherwise(0L)).cast("long")
@@ -80,14 +96,12 @@ object Statistics {
     )
   }
 
-  /** The summary's output columns over the aggregate's: `qt_pcts` split
-    * into `p50..p99`, NaN when no row had a valid queuing time.
+  /** The summary's output columns over the aggregate's: `p50..p99` read
+    * from `qt_sorted`, NaN when no row had a valid queuing time.
     */
   private val summaryCols: Seq[Column] =
     Seq("total_requests_processed", "total_requests_rejected", "average_queuing_time").map(col) ++
-      Percentiles.zipWithIndex.map { case ((name, _), i) =>
-        coalesce(col("qt_pcts")(i), lit(Double.NaN)).as(name)
-      } ++
+      Percentiles.map { case (name, p) => percentileOf(col("qt_sorted"), p).as(name) } ++
       Seq("priority_queue_enqueued_total", "normal_queue_enqueued_total").map(col)
 
   def summary(completedDF: DataFrame): DataFrame = summaryByGroup(completedDF, Nil)

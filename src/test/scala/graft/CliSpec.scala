@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The CLI end to end, in-process: CSV → simulate → printed report
   * (X1, reference main.py:16-159), including the bounded-FIFO rejection
   * path, the reference's error contract for bad input, the exit status
-  * and the number of Spark jobs one report takes.
+  * and the shape of the Spark work one report takes.
   */
 class CliSpec extends AnyFunSuite {
 
@@ -177,31 +177,60 @@ class CliSpec extends AnyFunSuite {
     assert(out.isEmpty, out)
   }
 
-  test("one report takes at most 2 Spark jobs: the header read and one single-task job") {
+  test("one report is one query: the parse on every core, one shuffle, the fold in one task") {
+    import org.apache.spark.scheduler._
     val sc = spark.sparkContext
     val group = s"graft-cli-jobs-${System.nanoTime()}"
-    val path = csv(fourRows)
-    sc.setJobGroup(group, "CliSpec job count")
-    val (status, out, _) =
-      try runCapturing(path, "-w", "2")
-      finally sc.clearJobGroup()
-    assert(status == 0 && out.contains("Processed requests:      4"))
-    // The status store fills from the listener bus, in event order: once a
-    // later fence job shows as finished, every job of the group is in it.
     val fence = s"$group-fence"
-    sc.setJobGroup(fence, "CliSpec fence")
-    try sc.parallelize(Seq(1), 1).count()
-    finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 10000000000L
-    def fenced = sc.statusTracker.getJobIdsForGroup(fence).toSeq.flatMap(sc.statusTracker.getJobInfo(_))
-      .exists(_.status() == org.apache.spark.JobExecutionStatus.SUCCEEDED)
-    while (!fenced && System.nanoTime() < deadline) Thread.sleep(10)
-    assert(fenced, "fence job never reached the status store")
-    val jobs = sc.statusTracker.getJobIdsForGroup(group)
-    assert(jobs.nonEmpty && jobs.length <= 2, s"jobs: ${jobs.toSeq}")
-    val tasks = jobs.toSeq.flatMap(sc.statusTracker.getJobInfo(_))
-      .flatMap(_.stageIds().toSeq).flatMap(sc.statusTracker.getStageInfo(_)).map(_.numTasks())
-    assert(tasks.sum <= 2, s"tasks per stage: $tasks")
+    // The SQL execution of each job of the report, the stages its jobs
+    // name, every stage that ran, and the end of a later fence job: the
+    // listener bus delivers events in order, so once the fence job has
+    // ended, every event of the report has arrived.
+    val executions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val named = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    val fenceJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
+          case `group` =>
+            executions.add(String.valueOf(e.properties.getProperty("spark.sql.execution.id")))
+            e.stageIds.foreach(named.add(_))
+          case `fence` => fenceJobs.add(e.jobId)
+          case _       =>
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = ran.add(e.stageInfo)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = if (fenceJobs.contains(e.jobId)) fenced.countDown()
+    }
+    val path = csv(fourRows)
+    val _ = spark.version
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "CliSpec job count")
+      val (status, out, _) =
+        try runCapturing(path, "-w", "2")
+        finally sc.clearJobGroup()
+      assert(status == 0 && out.contains("Processed requests:      4"))
+      sc.setJobGroup(fence, "CliSpec fence")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.clearJobGroup()
+      assert(fenced.await(10, java.util.concurrent.TimeUnit.SECONDS), "fence job never ended")
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    // one action: every job (adaptive execution submits the shuffle's map
+    // stage as a job of its own) belongs to one SQL execution, and no job
+    // infers the header
+    assert(executions.asScala.toSet.size == 1 && !executions.contains("null"), s"executions: $executions")
+    val stages = ran.asScala.filter(s => named.contains(s.stageId)).toSeq.sortBy(_.stageId)
+    val shape = stages.map(s => (s.numTasks, s.taskMetrics.shuffleWriteMetrics.recordsWritten,
+      s.taskMetrics.shuffleReadMetrics.recordsRead))
+    // the parse stage writes the 4 rows to the one shuffle, on at most one
+    // task per core; the fold stage reads them in one task
+    assert(stages.length == 2, s"(tasks, rows written, rows read) per stage: $shape")
+    val Seq((parseTasks, written, _), (foldTasks, _, read)) = shape
+    assert(parseTasks >= 1 && parseTasks <= sc.defaultParallelism && written == 4, shape)
+    assert(foldTasks == 1 && read == 4, shape)
   }
 
   test("animation mode prints frame gauges and the same report totals") {

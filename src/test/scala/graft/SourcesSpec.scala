@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.model.SimConfig
+import graft.model.{SimConfig, SimRequest}
 import graft.sim.SimOperator
 import graft.sources.{DataGen, RequestCsv}
 
@@ -77,7 +77,7 @@ class SourcesSpec extends AnyFunSuite {
         |user3,bad_timestamp_here,3.0
         |""".stripMargin)
     val e = intercept[RequestCsv.CsvParseException](RequestCsv.read(spark, dir.toString).collect())
-    // seq (monotonically_increasing_id) jumps by 2^33 across input files;
+    // seq jumps by 2^33 across input files;
     // the reported row number must be the rank in seq order, never the id.
     val reported = "row (\\d+)".r.findFirstMatchIn(e.message).map(_.group(1).toLong)
     assert(reported.exists(n => n >= 1 && n <= 3), s"got: ${e.message}")
@@ -187,13 +187,89 @@ class SourcesSpec extends AnyFunSuite {
     intercept[IllegalStateException](RequestCsv.readWith(spark, path)(_ => 0))
   }
 
+  private val Header = "user_id,request_time,processing_time"
+  private val twoRows = Seq("u1,2023-01-01T00:00:01Z,1.0", "u2,2023-01-01T00:00:02Z,2.0")
+
+  /** What both strict readers make of `path`: the rows in file order
+    * (`seq` zeroed, since its values depend on the input's partitioning),
+    * or the parse error's message. `read` and `readWith` must agree, and
+    * `readWith`'s count must be the number of rows.
+    */
+  private def outcome(path: String): Either[String, Seq[SimRequest]] = {
+    def strict[T](body: => T): Either[String, T] =
+      try Right(body)
+      catch { case e: RequestCsv.CsvParseException => Left(e.message) }
+    def inOrder(rows: Array[SimRequest]) = rows.sortBy(_.seq).map(_.copy(seq = 0L)).toSeq
+    val viaRead = strict(inOrder(RequestCsv.read(spark, path).collect()))
+    val viaWith = strict(RequestCsv.readWith(spark, path)(_.collect()))
+    viaWith.foreach { case (n, rows) => assert(n == rows.length) }
+    assert(viaWith.map(r => inOrder(r._2)) == viaRead)
+    viaRead
+  }
+
+  private def lines(ls: String*): String = tmpCsv(ls.mkString("", "\n", "\n"))
+  private lazy val plain = outcome(lines(Header +: twoRows: _*))
+
+  test("reader edge cases: blank lines before the header and between rows are skipped") {
+    assert(plain.map(_.map(_.userId)) == Right(Seq("u1", "u2")))
+    assert(outcome(lines(Seq("", "  ", Header) ++ twoRows: _*)) == plain)
+    assert(outcome(lines(Header, "", twoRows(0), " ", "", twoRows(1), "")) == plain)
+    // a blank line is no data row: the bad row after one is still row 2
+    assert(outcome(lines(Header, twoRows(0), "", "u2,2023-01-01T00:00:02Z,x")) ==
+      Left("Malformed float 'x' at data row 2"))
+  }
+
+  test("reader edge cases: CRLF line endings read like LF") {
+    assert(outcome(tmpCsv((Header +: twoRows).mkString("", "\r\n", "\r\n"))) == plain)
+    assert(outcome(tmpCsv((Header +: twoRows).mkString("\r\n"))) == plain)
+  }
+
+  test("reader edge cases: a quoted field keeps its comma") {
+    val rows = outcome(lines(Header, "\"u,1\",2023-01-01T00:00:01Z,1.0", "u2,\"2023-01-01T00:00:02Z\",\"2.0\""))
+    assert(rows.map(_.map(_.userId)) == Right(Seq("u,1", "u2")))
+    assert(rows.map(_.map(_.copy(userId = ""))) == plain.map(_.map(_.copy(userId = ""))))
+  }
+
+  test("reader edge cases: a UTF-8 BOM before the header is not part of the first column's name") {
+    assert(outcome(lines(("\uFEFF" + Header) +: twoRows: _*)) == plain)
+  }
+
+  test("reader edge cases: an empty file has no columns; a header-only file has no rows") {
+    assert(outcome(tmpCsv("")) ==
+      Left("CSV is missing required column(s): user_id, request_time, processing_time"))
+    assert(outcome(tmpCsv(Header)) == Right(Nil))
+    assert(outcome(lines("", Header, "")) == Right(Nil))
+  }
+
+  test("reader edge cases: a directory of two CSVs reads both, each header dropped") {
+    val dir = Files.createTempDirectory("graft_req_dir")
+    Files.writeString(dir.resolve("a.csv"), (Header +: twoRows).mkString("", "\n", "\n"))
+    Files.writeString(dir.resolve("b.csv"), Seq(Header, "u3,2023-01-01T00:00:03Z,3.0").mkString("", "\n", "\n"))
+    val rows = outcome(dir.toString)
+    assert(rows.map(_.map(_.userId).sorted) == Right(Seq("u1", "u2", "u3")))
+  }
+
+  test("reader edge cases: a malformed row near the end of a large file reports its 1-based data row") {
+    // about 130 KB, read in one split per core: the bad row lies in the last
+    val n = 4000
+    val rows = (1 to n).map(i => f"u$i,2023-01-01T${i / 3600}%02d:${i / 60 % 60}%02d:${i % 60}%02dZ,1.0")
+    val good = lines(Header +: rows: _*)
+    assert(outcome(good).map(_.length) == Right(n))
+    // seq is the 0-based data row number, in file order across the splits
+    assert(RequestCsv.read(spark, good).collect().map(r => r.seq -> r.userId).sorted.toSeq ==
+      (0 until n).map(i => i.toLong -> s"u${i + 1}"))
+    val bad = n - 3
+    assert(outcome(lines(Header +: rows.updated(bad - 1, s"u$bad,2023-01-01T00:00:00Z,oops"): _*)) ==
+      Left(s"Malformed float 'oops' at data row $bad"))
+  }
+
   test("request_time forms: which parse and to what instant (pins today's accept/reject decision)") {
     // Every reader shares one parse, so readLenient's split into clean and
     // quarantined rows is read's and readWith's accept/reject decision.
     // Beyond ISO-8601 proper, today's parse accepts lowercase t/z, a space
-    // separator, a date only, a missing seconds field, surrounding blanks,
-    // unpadded fields and 7-9 fractional digits (truncated to µs); it
-    // rejects 24:00:00, 2023-02-30 and a missing seconds field before Z.
+    // separator, a date only, a missing seconds field (with or without Z),
+    // surrounding blanks, unpadded fields and 7-9 fractional digits
+    // (truncated to µs); it rejects 24:00:00 and 2023-02-30.
     val forms: Seq[(String, Option[String])] = Seq(
       "2023-01-01T00:00:01Z" -> Some("2023-01-01T00:00:01Z"),
       "2023-01-01T00:00:01" -> Some("2023-01-01T00:00:01Z"),
@@ -219,7 +295,7 @@ class SourcesSpec extends AnyFunSuite {
       "2023-01-01 00:00:01Z" -> Some("2023-01-01T00:00:01Z"),
       "2023-01-01" -> Some("2023-01-01T00:00:00Z"),
       "2023-01-01T00:00" -> Some("2023-01-01T00:00:00Z"),
-      "2023-01-01T00:00Z" -> None,
+      "2023-01-01T00:00Z" -> Some("2023-01-01T00:00:00Z"),
       "2023-01-01t00:00:01" -> Some("2023-01-01T00:00:01Z"),
       "2023-01-01T00:00:01z" -> Some("2023-01-01T00:00:01Z"),
       "2023-01-01t00:00:01z" -> Some("2023-01-01T00:00:01Z"),

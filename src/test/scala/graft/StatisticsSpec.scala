@@ -60,6 +60,51 @@ class StatisticsSpec extends AnyFunSuite {
     assert(math.abs(s.getAs[Double]("p90") - 9.1) < 1e-9)
   }
 
+  test("percentiles equal SQL percentile bit for bit on random sets with ties, n = 0, 1, 2, …") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // Set k: n valid queuing times (n = k % 4 in the first 40 sets, else
+    // 0..119) drawn from a pool of 1 + k % 7 values (ties and duplicates),
+    // plus rejected rows and rows whose start precedes arrival (both
+    // excluded from the percentiles).
+    val rng = new scala.util.Random(20261020L)
+    val sets = (0 until 300).map { k =>
+      val pool = Seq.fill(1 + k % 7)(rng.nextDouble() * math.pow(10, rng.nextInt(4) - 1))
+      val n = if (k < 40) k % 4 else rng.nextInt(120)
+      val valid = Seq.fill(n)(pool(rng.nextInt(pool.size))).map { qt =>
+        val arrival = rng.nextInt(50) * 0.1
+        row(s"s$k", arrival, arrival + qt, arrival + qt + 1.0)
+      }
+      val excluded = Seq.fill(rng.nextInt(3))(row(s"s$k", 0.5, 0.0, -1.0)) ++
+        Seq.fill(rng.nextInt(2))(row(s"s$k", 2.0, 1.0, 3.0))
+      rng.shuffle(valid ++ excluded)
+    }
+    val df = Statistics.toDF(spark.createDataset(sets.flatten))
+    val names = Seq("p50", "p75", "p90", "p99")
+    val got = Statistics.summaryByGroup(df, Seq("user_id")).collect()
+      .map(r => r.getAs[String]("user_id") -> names.map(r.getAs[Double])).toMap
+    // The reference: Spark's own percentile over the same valid queuing times.
+    val valid = col("finish_time") =!= -1.0 && col("start_time") >= 0 &&
+      col("arrival_time_in_queue") >= 0 && col("start_time") >= col("arrival_time_in_queue")
+    val want = df
+      .select(col("user_id"), when(valid, col("start_time") - col("arrival_time_in_queue")).as("qt"))
+      .groupBy("user_id")
+      .agg(expr("percentile(qt, array(0.50, 0.75, 0.90, 0.99))").as("p"))
+      .collect()
+      .map(r => r.getString(0) -> Option(r.getSeq[Double](1)).getOrElse(Seq.fill(4)(Double.NaN)))
+      .toMap
+    assert(got.keySet == want.keySet && got.size == sets.count(_.nonEmpty))
+    def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToRawLongBits)
+    for ((k, ps) <- want) assert(bits(got(k)) == bits(ps), s"set $k: ${got(k)} vs $ps")
+    // summary (and so report) shares the aggregate with summaryByGroup; a
+    // set without rows has NaN percentiles
+    for (k <- Seq(0, 1, 2, 3, 8, 41, 299)) {
+      val s = summaryOf(sets(k))
+      assert(bits(names.map(s.getAs[Double])) == bits(want.getOrElse(s"s$k", Seq.fill(4)(Double.NaN))),
+        s"set $k alone")
+    }
+  }
+
   test("all rejected → NaN aggregates (tests/test_statistics.py:186-216)") {
     val rows = Seq(
       row("u1", 0.0, 0.0, -1.0, apiId = None),
