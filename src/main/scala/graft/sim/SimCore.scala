@@ -26,6 +26,10 @@ import graft.model._
   * contract rather than replicating CPython's Mersenne-Twister bit stream;
   * goldens that depend on the RNG are recomputed against this contract,
   * SURVEY §7.3b).
+  *
+  * Every run drains: it returns only when no request is pending, queued or
+  * in service. So what one run hands the next ([[SimCore.SimState]]) is
+  * only the clock, the rate-limit ledger and the RNG state.
   */
 object SimCore {
 
@@ -44,7 +48,9 @@ object SimCore {
     def state: Long = s
   }
 
-  /** SplitMix64 finalizer (shared with the MinHash expression family). */
+  /** SplitMix64 finalizer: a copy of `graft.functions.MinHashSignature.mix64`,
+    * kept here so that SimCore stays free of Spark.
+    */
   private[sim] object MinHashLike {
     @inline def mix64(z0: Long): Long = {
       var z = z0
@@ -54,43 +60,21 @@ object SimCore {
     }
   }
 
-  // ----- Resumable-state snapshot model (encodable case classes) -----
-
-  final case class InFlightSnap(
-      req: SimRequest,
-      arrivalTimeInQueue: Double,
-      startTime: Double,
-      usedApiId: Option[Int],
-      queue: Option[String],
-      status: String
-  )
-
-  final case class WorkerSnap(task: Option[InFlightSnap], busyUntil: Double)
-
+  /** What a drained run leaves for the next one (an encodable case class,
+    * so a streaming host can keep it in its GroupState): the virtual clock,
+    * each endpoint's rate-limit ledger with the next endpoint to try, and
+    * the RNG state.
+    */
   final case class SimState(
       currentTime: Double,
-      priorityQ: Seq[InFlightSnap],
-      normalQ: Seq[InFlightSnap],
-      workers: Seq[WorkerSnap],
       apiStamps: Seq[Seq[Double]],
       apiCurrentIndex: Int,
-      rngState: Long,
-      priorityEnqueued: Long,
-      normalEnqueued: Long
+      rngState: Long
   )
 
   object SimState {
-    def initial(cfg: SimConfig): SimState = SimState(
-      currentTime = 0.0,
-      priorityQ = Nil,
-      normalQ = Nil,
-      workers = Seq.fill(cfg.numWorkers)(WorkerSnap(None, 0.0)),
-      apiStamps = Seq.fill(cfg.numApis)(Nil),
-      apiCurrentIndex = 0,
-      rngState = 0L, // 0 ⇒ derive from cfg.rngSeed on first use
-      priorityEnqueued = 0L,
-      normalEnqueued = 0L
-    )
+    def initial(cfg: SimConfig): SimState =
+      SimState(0.0, Seq.fill(cfg.numApis)(Nil), 0, MinHashLike.mix64(cfg.rngSeed))
   }
 
   /** Mutable in-flight record; the engine-internal analogue of the
@@ -103,9 +87,6 @@ object SimCore {
     var usedApiId: Option[Int] = None
     var queue: Option[String] = None
     var status: String = "pending"
-
-    def toSnap: InFlightSnap =
-      InFlightSnap(req, arrivalTimeInQueue, startTime, usedApiId, queue, status)
 
     def toCompleted: SimCompleted = SimCompleted(
       userId = req.userId,
@@ -132,19 +113,6 @@ object SimCore {
     def isEmpty: Boolean = q.isEmpty
     def isFull: Boolean = maxSize.exists(q.length >= _)
     def size: Int = q.length
-    def toSeq: Seq[T] = q.toSeq // head-to-tail, non-destructive
-  }
-
-  object InFlightSnap {
-    def restore(s: InFlightSnap): InFlight = {
-      val inf = new InFlight(s.req)
-      inf.arrivalTimeInQueue = s.arrivalTimeInQueue
-      inf.startTime = s.startTime
-      inf.usedApiId = s.usedApiId
-      inf.queue = s.queue
-      inf.status = s.status
-      inf
-    }
   }
 
   /** Queue facade shared by the FIFO and two-tier priority disciplines. */
@@ -154,15 +122,6 @@ object SimCore {
     def isEmpty: Boolean
     def isFull: Boolean
     def size: Int
-
-    /** Total enqueued per sub-queue, independent of dequeues
-      * (reference: src/queue_manager.py:267-276).
-      */
-    def queueCounts: Map[String, Long]
-
-    /** Snapshot / restore for the resumable streaming host. */
-    def snapshotQueues: (Seq[InFlightSnap], Seq[InFlightSnap])
-    def restoreQueues(priority: Seq[InFlight], normal: Seq[InFlight], pCount: Long, nCount: Long): Unit
   }
 
   /** Plain bounded FIFO discipline — the reference's documented-but-dead
@@ -170,28 +129,15 @@ object SimCore {
     */
   final class FifoStrategy(maxSize: Option[Int]) extends TaskQueue {
     private val q = new FifoQueue[InFlight](maxSize)
-    private var enqueued = 0L
     def enqueue(item: InFlight): Boolean = {
       val ok = q.enqueue(item)
-      if (ok) { enqueued += 1; item.queue = Some("normal") }
+      if (ok) item.queue = Some("normal")
       ok
     }
     def dequeue(): Option[InFlight] = q.dequeue()
     def isEmpty: Boolean = q.isEmpty
     def isFull: Boolean = q.isFull
     def size: Int = q.size
-    def queueCounts: Map[String, Long] =
-      Map("priority_enqueued" -> 0L, "normal_enqueued" -> enqueued)
-    def snapshotQueues: (Seq[InFlightSnap], Seq[InFlightSnap]) =
-      (Nil, q.toSeq.map(_.toSnap))
-    def restoreQueues(priority: Seq[InFlight], normal: Seq[InFlight], pCount: Long, nCount: Long): Unit = {
-      require(
-        priority.isEmpty && pCount == 0L,
-        "cannot restore a priority-strategy snapshot into a FIFO strategy"
-      )
-      normal.foreach(q.enqueue)
-      enqueued = nCount
-    }
   }
 
   /** Two-tier priority routing with probabilistic biased dequeue
@@ -206,8 +152,6 @@ object SimCore {
   ) extends TaskQueue {
     private val priorityQ = new FifoQueue[InFlight]()
     private val normalQ = new FifoQueue[InFlight]()
-    private var priorityEnqueued = 0L
-    private var normalEnqueued = 0L
 
     def enqueue(item: InFlight): Boolean = {
       // Items with a valid processing time below the threshold go priority;
@@ -217,11 +161,9 @@ object SimCore {
         !item.req.processingTime.isNaN && item.req.processingTime < thresholdSeconds
       if (toPriority) {
         priorityQ.enqueue(item)
-        priorityEnqueued += 1
         item.queue = Some("priority")
       } else {
         normalQ.enqueue(item)
-        normalEnqueued += 1
         item.queue = Some("normal")
       }
       true
@@ -250,18 +192,6 @@ object SimCore {
     // its default wiring.
     def isFull: Boolean = false
     def size: Int = priorityQ.size + normalQ.size
-    def queueCounts: Map[String, Long] = Map(
-      "priority_enqueued" -> priorityEnqueued,
-      "normal_enqueued" -> normalEnqueued
-    )
-    def snapshotQueues: (Seq[InFlightSnap], Seq[InFlightSnap]) =
-      (priorityQ.toSeq.map(_.toSnap), normalQ.toSeq.map(_.toSnap))
-    def restoreQueues(priority: Seq[InFlight], normal: Seq[InFlight], pCount: Long, nCount: Long): Unit = {
-      priority.foreach(priorityQ.enqueue)
-      normal.foreach(normalQ.enqueue)
-      priorityEnqueued = pCount
-      normalEnqueued = nCount
-    }
   }
 
   /** Sliding-window rate-limited, fallback-capable API client
@@ -375,7 +305,8 @@ object SimCore {
 
   /** Shared transition engine for both run modes: arrivals drain + worker
     * ticks over the mutable state (queue, workers, rate-limit ledger,
-    * virtual clock).
+    * virtual clock). A fresh engine starts its clock at the first
+    * non-negative arrival, a resumed one at the saved clock.
     */
   private final class Engine(
       cfg: SimConfig,
@@ -395,61 +326,26 @@ object SimCore {
           s"processing ${r.processingTime}"
       )
     }
-    private val rng = new SplitMixRandom(
-      resume.map(_.rngState).filter(_ != 0L).getOrElse(MinHashLike.mix64(cfg.rngSeed))
-    )
+    private val start = resume.getOrElse(SimState.initial(cfg))
+    private val rng = new SplitMixRandom(start.rngState)
     val queue: TaskQueue = cfg.strategy match {
       case FifoConfig(maxSize)          => new FifoStrategy(maxSize)
       case PriorityConfig(thresh, bias) => new PriorityStrategy(thresh, bias, rng)
     }
-    var currentTime: Double = resume match {
-      case Some(s) => s.currentTime
-      case None =>
-        if (pending.nonEmpty && pending(0).simArrivalTime >= 0) pending(0).simArrivalTime
-        else 0.0
-    }
+    var currentTime: Double =
+      if (resume.isEmpty && pending.nonEmpty && pending(0).simArrivalTime >= 0) pending(0).simArrivalTime
+      else start.currentTime
     val api =
       new ApiClient(cfg.numApis, cfg.rpmLimit, cfg.rateWindowSeconds, () => currentTime)
+    api.restore(start.apiStamps, start.apiCurrentIndex)
     val workers: Array[Worker] =
       Array.fill(cfg.numWorkers)(new Worker(queue, api))
     var pi = 0 // next-pending cursor (sorted ⇒ O(1) amortized arrival scan)
     val completed = mutable.ArrayBuffer.empty[InFlight]
 
-    resume.foreach { s =>
-      // Config drift between snapshot producer and consumer would silently
-      // lose in-flight tasks / rate-limit state — refuse instead.
-      require(
-        s.workers.size == cfg.numWorkers,
-        s"snapshot has ${s.workers.size} workers but the config has ${cfg.numWorkers}"
-      )
-      queue.restoreQueues(
-        s.priorityQ.map(InFlightSnap.restore),
-        s.normalQ.map(InFlightSnap.restore),
-        s.priorityEnqueued,
-        s.normalEnqueued
-      )
-      s.workers.zipWithIndex.foreach { case (ws, i) =>
-        workers(i).currentTask = ws.task.map(InFlightSnap.restore)
-        workers(i).busyUntil = ws.busyUntil
-      }
-      api.restore(s.apiStamps, s.apiCurrentIndex)
-    }
-
-    def snapshot: SimState = {
-      val (pq, nq) = queue.snapshotQueues
-      val counts = queue.queueCounts
+    def state: SimState = {
       val (stamps, idx) = api.snapshot
-      SimState(
-        currentTime = currentTime,
-        priorityQ = pq,
-        normalQ = nq,
-        workers = workers.toSeq.map(w => WorkerSnap(w.currentTask.map(_.toSnap), w.busyUntil)),
-        apiStamps = stamps,
-        apiCurrentIndex = idx,
-        rngState = rng.state,
-        priorityEnqueued = counts("priority_enqueued"),
-        normalEnqueued = counts("normal_enqueued")
-      )
+      SimState(currentTime, stamps, idx, rng.state)
     }
 
     def anyWorkerBusy: Boolean = workers.exists(_.currentTask.nonEmpty)
@@ -517,12 +413,10 @@ object SimCore {
     )
   }
 
-  /** Advance the engine through every event with time <= horizon:
-    * fixpoint drains + time-skips (src/simulator.py:75-98,197-258),
-    * stopping before the first event beyond the horizon (in-flight work
-    * with busyUntil > horizon stays live in the engine state).
+  /** Advance the engine through every event until nothing is left:
+    * fixpoint drains + time-skips (src/simulator.py:75-98,197-258).
     */
-  private def advanceUntil(e: Engine, horizon: Double): Unit = {
+  private def drain(e: Engine): Unit = {
     var halted = false
     while (!halted && e.stateRemains) {
       // Fixpoint drain at time T: maximal progress before the time jump.
@@ -534,9 +428,8 @@ object SimCore {
       }
       // Time-skip to the next arrival or completion.
       val nextEvent = e.nextEventTime
-      if (nextEvent.isInfinity || nextEvent > horizon) {
-        // Reference breaks on inf (src/simulator.py:239-247); the horizon
-        // cut is the incremental-streaming extension.
+      if (nextEvent.isInfinity) {
+        // Reference breaks on inf (src/simulator.py:239-247).
         halted = true
       } else if (nextEvent > e.currentTime) {
         e.currentTime = nextEvent
@@ -559,45 +452,31 @@ object SimCore {
     */
   def run(cfg: SimConfig, input: Iterator[SimRequest]): Iterator[SimCompleted] = {
     val e = new Engine(cfg, input)
-    advanceUntil(e, Double.PositiveInfinity)
+    drain(e)
     finish(e.completed)
   }
 
-  /** Resumable increment: continue the simulation from `state` with a new
-    * slice of arrivals, processing everything up to `horizon` (typically
-    * the slice's max event time). Returns the records completed in this
-    * increment (reference final order) and the snapshot to resume from.
+  /** Resumable increment: continue a drained simulation from `state` with
+    * a new batch of arrivals and run it to completion. Returns the records
+    * completed in this increment (reference final order) and the state to
+    * resume from.
     *
-    * Contract: arrivals are event-time ordered across increments, and a
-    * slice boundary must fall BETWEEN distinct event times — splitting a
-    * same-instant arrival group changes bounded-queue admission (the batch
-    * fixpoint drains all same-time arrivals before any worker tick; a
-    * split lets the worker free queue space in between). An arrival
-    * earlier than the resumed clock (late data) is enqueued at the current
-    * virtual time — the same clamping the reference applies to any arrival
-    * whose time has already passed (src/simulator.py:203,212). An
-    * increment with `horizon = +∞` flushes all remaining work.
+    * Chained increments equal one run over all their arrivals when each
+    * batch arrives after the previous batch's last event (an idle gap):
+    * the rate-limit ledger and the RNG state carry over, and nothing else
+    * is live at that point. An arrival earlier than the resumed clock
+    * (late data) is enqueued at the current virtual time — the same
+    * clamping the reference applies to any arrival whose time has already
+    * passed (src/simulator.py:203,212).
     */
   def runIncremental(
       cfg: SimConfig,
       state: SimState,
-      input: Iterator[SimRequest],
-      horizon: Double
+      input: Iterator[SimRequest]
   ): (Vector[SimCompleted], SimState) = {
     val e = new Engine(cfg, input, Some(state))
-    // An arrival beyond the horizon would be silently lost: advanceUntil
-    // stops before it and the snapshot does not carry un-drained pending
-    // requests. Refuse loudly instead.
-    if (e.pending.nonEmpty) {
-      val maxArrival = e.pending.last.simArrivalTime
-      require(
-        maxArrival <= horizon,
-        s"slice contains an arrival at $maxArrival beyond horizon $horizon — " +
-          "pass horizon >= the slice's max event time"
-      )
-    }
-    advanceUntil(e, horizon)
-    (finish(e.completed).toVector, e.snapshot)
+    drain(e)
+    (finish(e.completed).toVector, e.state)
   }
 
   /** Fixed-step ("animation") run (E2, reference src/simulator.py:148-193):

@@ -11,12 +11,12 @@ import graft.sim.SimCore
   * `flatMapGroupsWithState` (SURVEY §2.2 "stateful ops" — the core of the
   * reference, re-expressed on Structured Streaming's state machinery).
   *
-  * Each group key is an independent scenario whose full engine state
-  * (queues, in-flight work, rate-limit ledger, RNG state, virtual clock)
-  * lives in the GroupState between micro-batches. Each batch's arrivals
-  * drain to completion — the right semantics for a bounded replay (one
+  * Each group key is an independent scenario. Each batch's arrivals drain
+  * to completion — the right semantics for a bounded replay (one
   * AvailableNow batch ≡ the one-shot batch run, asserted in
-  * StreamingSimSpec). Across MULTIPLE batches the clock advances to each
+  * StreamingSimSpec) — so no queued or in-service work outlives a batch:
+  * the GroupState keeps only the virtual clock, the rate-limit ledger and
+  * the RNG state. Across MULTIPLE batches the clock advances to each
   * batch's last completion, so a later batch's arrivals that fall before
   * it are clamped as late data (episodic semantics).
   */
@@ -41,8 +41,7 @@ object StreamingSim {
       state: GroupState[SimCore.SimState]
   ): Iterator[(String, SimCompleted)] = {
     val st = state.getOption.getOrElse(SimCore.SimState.initial(cfg))
-    val (out, next) =
-      SimCore.runIncremental(cfg, st, rows.map(_._2), Double.PositiveInfinity)
+    val (out, next) = SimCore.runIncremental(cfg, st, rows.map(_._2))
     state.update(next)
     out.iterator.map(c => (key, c))
   }

@@ -213,7 +213,7 @@ class SimCoreSpec extends AnyFunSuite {
       for ((mode, result) <- Seq(
           "run" -> within10s(SimCore.run(cfg, input.iterator).toVector),
           "runIncremental" -> within10s(
-            SimCore.runIncremental(cfg, SimCore.SimState.initial(cfg), input.iterator, Double.PositiveInfinity)._1),
+            SimCore.runIncremental(cfg, SimCore.SimState.initial(cfg), input.iterator)._1),
           "runFixedStep" -> within10s(SimCore.runFixedStep(cfg, input.iterator).toVector))) {
         val e = result.failed.toOption
         assert(e.exists(_.isInstanceOf[IllegalArgumentException]), s"$mode on $bad: $result")
